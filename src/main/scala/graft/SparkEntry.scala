@@ -2313,13 +2313,10 @@ object SparkEntry {
       Similarity.publishPqIndex(e.where(col("vec_id") % 5 =!= 0), "vec_id",
         "embedding", tbl, nlist = 8, m = 8, codes = 16, rounds = 2,
         corpusFp = s"embeddings[%5!=0]@$dir")
-      graft.sources.Faults.failAt = "pq.append.staged"
-      val torn =
-        try { Similarity.appendPqIndex(batch, "vec_id", "embedding", tbl,
-          newCorpusFp = ivfCorpusFp(dir)); false }
-        catch { case ex: RuntimeException if ex.getMessage.contains("injected") => true }
-        finally { graft.sources.Faults.failAt = null }
-      require(torn, "q315: the staged-crash injection did not fire")
+      graft.sources.Faults.tearAt("pq.append.staged") {
+        Similarity.appendPqIndex(batch, "vec_id", "embedding", tbl,
+          newCorpusFp = ivfCorpusFp(dir))
+      }
       Similarity.appendPqIndex(batch, "vec_id", "embedding", tbl,
         newCorpusFp = ivfCorpusFp(dir))
       Similarity.probePqIndex(s, e.where(col("vec_id") < 5), "vec_id", "embedding",
@@ -3762,13 +3759,10 @@ object SparkEntry {
       val batch = corpus.where(col("doc_id") % 5 === 0)
       Dedup.publishLshIndex(corpus.where(col("doc_id") % 5 =!= 0),
         "doc_id", "text", tbl, corpusFp = s"documents[%7!=0,%5!=0]@$dir")
-      graft.sources.Faults.failAt = "lsh.append.staged"
-      val torn =
-        try { Dedup.appendLshIndex(batch, "doc_id", "text", tbl,
-          newCorpusFp = lshCorpusFp(dir)); false }
-        catch { case e: RuntimeException if e.getMessage.contains("injected") => true }
-        finally { graft.sources.Faults.failAt = null }
-      require(torn, "q314: the staged-crash injection did not fire")
+      graft.sources.Faults.tearAt("lsh.append.staged") {
+        Dedup.appendLshIndex(batch, "doc_id", "text", tbl,
+          newCorpusFp = lshCorpusFp(dir))
+      }
       Dedup.appendLshIndex(batch, "doc_id", "text", tbl,
         newCorpusFp = lshCorpusFp(dir))
       Dedup.probeLshIndex(s, docs.where(col("doc_id") % 7 === 0), "doc_id", "text", tbl,
@@ -3786,13 +3780,10 @@ object SparkEntry {
       val publishedFp = s"documents[%7!=0,%5!=0]@$dir"
       Dedup.publishLshIndex(corpus.where(col("doc_id") % 5 =!= 0),
         "doc_id", "text", tbl, corpusFp = publishedFp)
-      graft.sources.Faults.failAt = "lsh.append.staged"
-      val torn =
-        try { Dedup.appendLshIndex(corpus.where(col("doc_id") % 5 === 0),
-          "doc_id", "text", tbl, newCorpusFp = lshCorpusFp(dir)); false }
-        catch { case e: RuntimeException if e.getMessage.contains("injected") => true }
-        finally { graft.sources.Faults.failAt = null }
-      require(torn, "q316: the staged-crash injection did not fire")
+      graft.sources.Faults.tearAt("lsh.append.staged") {
+        Dedup.appendLshIndex(corpus.where(col("doc_id") % 5 === 0),
+          "doc_id", "text", tbl, newCorpusFp = lshCorpusFp(dir))
+      }
       // compaction drops the orphaned epoch during the rewrite it pays
       // anyway; the strict post-swap audit proves the committed view
       Dedup.compactLshIndex(s, tbl)
@@ -3816,12 +3807,9 @@ object SparkEntry {
         "doc_id", "text", tbl, corpusFp = s"documents[%7!=0,%5!=0]@$dir")
       Dedup.appendLshIndex(corpus.where(col("doc_id") % 5 === 0),
         "doc_id", "text", tbl, newCorpusFp = lshCorpusFp(dir))
-      graft.sources.Faults.failAt = "lsh.compact.buckets.aside"
-      val torn =
-        try { Dedup.compactLshIndex(s, tbl); false }
-        catch { case e: RuntimeException if e.getMessage.contains("injected") => true }
-        finally { graft.sources.Faults.failAt = null }
-      require(torn, "q318: the mid-swap crash injection did not fire")
+      graft.sources.Faults.tearAt("lsh.compact.buckets.aside") {
+        Dedup.compactLshIndex(s, tbl)
+      }
       // retry heals first (restore live from the surviving complete copy,
       // drop the stale staged copy), then compacts both tables + meta and
       // runs the strict post-swap audit
@@ -3869,13 +3857,10 @@ object SparkEntry {
       val corpus = docs.where(col("doc_id") % 7 =!= 0)
       Dedup.publishLshIndex(corpus.where(col("doc_id") % 5 =!= 0),
         "doc_id", "text", tbl, corpusFp = s"documents[%7!=0,%5!=0]@$dir")
-      graft.sources.Faults.failAt = "lsh.append.staged"
-      val torn =
-        try { Dedup.appendLshIndex(corpus.where(col("doc_id") % 5 === 0),
-          "doc_id", "text", tbl, newCorpusFp = lshCorpusFp(dir)); false }
-        catch { case e: RuntimeException if e.getMessage.contains("injected") => true }
-        finally { graft.sources.Faults.failAt = null }
-      require(torn, "q320: the staged-crash injection did not fire")
+      graft.sources.Faults.tearAt("lsh.append.staged") {
+        Dedup.appendLshIndex(corpus.where(col("doc_id") % 5 === 0),
+          "doc_id", "text", tbl, newCorpusFp = lshCorpusFp(dir))
+      }
       // `files` is physical layout (not SQL-replayable); the census proper
       // — committed/orphan rows and epoch counts — goes through the oracle
       Dedup.describeLshIndex(s, tbl)
@@ -3895,13 +3880,10 @@ object SparkEntry {
       Similarity.publishIvfIndex(e.where(col("vec_id") % 5 =!= 0),
         "vec_id", "embedding", tbl, trainRows = 128,
         corpusFp = s"embeddings[%5!=0]@$dir")
-      graft.sources.Faults.failAt = "ivf.append.staged"
-      val torn =
-        try { Similarity.appendIvfIndex(e.where(col("vec_id") % 5 === 0),
-          "vec_id", "embedding", tbl, newCorpusFp = ivfCorpusFp(dir)); false }
-        catch { case ex: RuntimeException if ex.getMessage.contains("injected") => true }
-        finally { graft.sources.Faults.failAt = null }
-      require(torn, "q321: the staged-crash injection did not fire")
+      graft.sources.Faults.tearAt("ivf.append.staged") {
+        Similarity.appendIvfIndex(e.where(col("vec_id") % 5 === 0),
+          "vec_id", "embedding", tbl, newCorpusFp = ivfCorpusFp(dir))
+      }
       Similarity.describeIvfIndex(s, tbl)
         .withColumn("tbl", element_at(split(col("table"), "_"), -1))
         .select(col("tbl"), col("rows_committed"), col("rows_orphan"),
@@ -3918,13 +3900,10 @@ object SparkEntry {
       Similarity.publishPqIndex(e.where(col("vec_id") % 5 =!= 0), "vec_id",
         "embedding", tbl, nlist = 8, m = 8, codes = 16, rounds = 2,
         corpusFp = s"embeddings[%5!=0]@$dir")
-      graft.sources.Faults.failAt = "pq.append.staged"
-      val torn =
-        try { Similarity.appendPqIndex(e.where(col("vec_id") % 5 === 0),
-          "vec_id", "embedding", tbl, newCorpusFp = ivfCorpusFp(dir)); false }
-        catch { case ex: RuntimeException if ex.getMessage.contains("injected") => true }
-        finally { graft.sources.Faults.failAt = null }
-      require(torn, "q322: the staged-crash injection did not fire")
+      graft.sources.Faults.tearAt("pq.append.staged") {
+        Similarity.appendPqIndex(e.where(col("vec_id") % 5 === 0),
+          "vec_id", "embedding", tbl, newCorpusFp = ivfCorpusFp(dir))
+      }
       Similarity.describePqIndex(s, tbl)
         .withColumn("tbl", element_at(split(col("table"), "_"), -1))
         .select(col("tbl"), col("rows_committed"), col("rows_orphan"),
@@ -3942,13 +3921,10 @@ object SparkEntry {
       val batch = e.where(col("vec_id") % 5 === 0)
       Similarity.publishIvfIndex(e.where(col("vec_id") % 5 =!= 0), "vec_id", "embedding",
         tbl, trainRows = 128, corpusFp = s"embeddings[%5!=0]@$dir")
-      graft.sources.Faults.failAt = "ivf.append.staged"
-      val torn =
-        try { Similarity.appendIvfIndex(batch, "vec_id", "embedding", tbl,
-          newCorpusFp = ivfCorpusFp(dir)); false }
-        catch { case ex: RuntimeException if ex.getMessage.contains("injected") => true }
-        finally { graft.sources.Faults.failAt = null }
-      require(torn, "q317: the staged-crash injection did not fire")
+      graft.sources.Faults.tearAt("ivf.append.staged") {
+        Similarity.appendIvfIndex(batch, "vec_id", "embedding", tbl,
+          newCorpusFp = ivfCorpusFp(dir))
+      }
       Similarity.appendIvfIndex(batch, "vec_id", "embedding", tbl,
         newCorpusFp = ivfCorpusFp(dir))
       Similarity.probeIvfIndex(s, e.where(col("vec_id") < 5), "vec_id", "embedding",

@@ -70,16 +70,21 @@ object Par {
     if (w < parts) df.coalesce(w) else df
   }
 
-  /** Await EVERY future's outcome before rethrowing the first failure.
-    * The naive `Await.result(a); Await.result(b)` rethrows `a`'s failure
-    * while `b` may still be writing in the background — the caller's
-    * natural repair (republish, which drops the table and deletes its
-    * warehouse directory) can then race the orphaned detached write and
-    * leave a mangled table. Used by every overlapped index/table write
-    * (LSH/IVF/PQ publish, compaction side writes). */
+  /** Await EVERY future's outcome before rethrowing the first failure
+    * (in argument order), with every other failure attached to it as a
+    * suppressed exception — an overlapped job never fails silently behind
+    * its sibling. The naive `Await.result(a); Await.result(b)` rethrows
+    * `a`'s failure while `b` may still be writing in the background — the
+    * caller's natural repair (republish, which drops the table and deletes
+    * its warehouse directory) can then race the orphaned detached write
+    * and leave a mangled table. Used by every overlapped index/table write
+    * (the [[graft.sources.IndexStore]] lifecycle, compaction side writes). */
   def awaitAllSettled(fs: scala.concurrent.Future[_]*): Unit = {
-    val rs = fs.map(f => scala.util.Try(
-      scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)))
-    rs.foreach(r => r.failed.foreach(e => throw e))
+    val failures = fs.flatMap(f => scala.util.Try(
+      scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)).failed.toOption)
+    failures.headOption.foreach { first =>
+      failures.tail.filter(_ ne first).foreach(first.addSuppressed)
+      throw first
+    }
   }
 }

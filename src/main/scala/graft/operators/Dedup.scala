@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Par, Text, Vectors}
+import graft.sources.{IndexMeta, IndexStore}
 
 /** Document deduplication at corpus scale — exact, MinHash-LSH, SimHash and
   * n-gram-Jaccard variants. All plans are shuffle-frugal:
@@ -636,25 +637,34 @@ object Dedup {
       bands: Int = 4,
       threshold: Double = 0.5): DataFrame = {
     require(numHashes % bands == 0, s"bands $bands must divide numHashes $numHashes")
-    def prep(df: DataFrame) = shingleBase(df, idCol, textCol, shingleN)
-    def bucketsOf(base: DataFrame) = base
-      .select(col("id"), posexplode(Vectors.md5BandKeys(numHashes, bands)(col("shs"))))
-      .select(col("id"), col("pos").as("band"), col("col").as("bk"))
-    val cBase = prep(corpus)
-    val iBase = prep(incoming)
-    val cand = bucketsOf(iBase).withColumnRenamed("id", "incoming_id")
-      .join(bucketsOf(cBase).withColumnRenamed("id", "corpus_id"), Seq("band", "bk"))
+    val cBase = shingleBase(corpus, idCol, textCol, shingleN)
+    val iBase = shingleBase(incoming, idCol, textCol, shingleN)
+    verifiedPairs(bandRows(iBase, numHashes, bands), iBase,
+      bandRows(cBase, numHashes, bands), cBase, threshold)
+  }
+
+  /** (id, band, bk) band-bucket rows of a [[shingleBase]] frame. */
+  private def bandRows(base: DataFrame, numHashes: Int, bands: Int): DataFrame = base
+    .select(col("id"), posexplode(Vectors.md5BandKeys(numHashes, bands)(col("shs"))))
+    .select(col("id"), col("pos").as("band"), col("col").as("bk"))
+
+  /** Incoming/corpus pairs sharing a band bucket, verified by exact
+    * Jaccard — the shared tail of [[minhashLshDelta]] and [[probeLshIndex]],
+    * two physical forms of one semantics. Buckets are (id, band, bk) rows,
+    * sets (id, shs) rows. */
+  private def verifiedPairs(iBuckets: DataFrame, iSets: DataFrame, cBuckets: DataFrame,
+      cSets: DataFrame, threshold: Double): DataFrame =
+    iBuckets.withColumnRenamed("id", "incoming_id")
+      .join(cBuckets.withColumnRenamed("id", "corpus_id"), Seq("band", "bk"))
       .select(col("incoming_id"), col("corpus_id"))
       .distinct()
-    cand
-      .join(iBase.select(col("id").as("incoming_id"), col("shs").as("tok_i")), Seq("incoming_id"))
-      .join(cBase.select(col("id").as("corpus_id"), col("shs").as("tok_c")), Seq("corpus_id"))
+      .join(iSets.select(col("id").as("incoming_id"), col("shs").as("tok_i")), Seq("incoming_id"))
+      .join(cSets.select(col("id").as("corpus_id"), col("shs").as("tok_c")), Seq("corpus_id"))
       .withColumn("inter", size(array_intersect(col("tok_i"), col("tok_c"))).cast("double"))
       .withColumn("jaccard",
         col("inter") / (size(col("tok_i")) + size(col("tok_c")) - col("inter")))
       .where(col("jaccard") >= threshold)
       .select(col("incoming_id"), col("corpus_id"), round(col("jaccard"), 6).as("jaccard"))
-  }
 
   /** PUBLISH a portable minhash-LSH index for a corpus as two BUCKETED
     * tables — the amortize-once layout for ingest-time near-dup at 100 TB:
@@ -669,7 +679,17 @@ object Dedup {
     *
     * Hash family is [[minhashLshPortable]]'s md5 form, so the ENTIRE
     * stored-index pipeline (publish + probe) stays SQL-replayable and the
-    * differential oracle certifies the persisted layout too. */
+    * differential oracle certifies the persisted layout too. The
+    * hash-family parameters ARE part of the index: a probe under a
+    * different (shingleN, numHashes, bands) computes disjoint band keys and
+    * would return a silently near-empty report, so `_meta` stores them and
+    * [[probeLshIndex]] fails fast on a mismatch. `corpusFp` is the
+    * caller-declared corpus identity (source dir + filter description):
+    * two pipelines publishing the SAME table name over DIFFERENT corpus
+    * subsets share every hash-family default, so only the fingerprint can
+    * catch a probe against the wrong corpus. Staged commits, the
+    * single-writer lease, crash points and recovery:
+    * [[graft.sources.IndexStore]]. */
   def publishLshIndex(
       corpus: DataFrame,
       idCol: String,
@@ -681,134 +701,30 @@ object Dedup {
       buckets: Int = 8,
       corpusFp: String = ""): Unit = {
     require(numHashes % bands == 0, s"bands $bands must divide numHashes $numHashes")
-    // publish asserts ownership of the index name (it drops + recreates
-    // the tables), so it also clears a hard-killed writer's stale lease —
-    // a republish never stalls behind a dead JVM's unexpired lease
-    graft.sources.MaintenanceLease.clear(corpus.sparkSession, table)
-    val base = shingleBaseBanded(corpus, idCol, textCol, shingleN, numHashes, bands)
-    val bk = base
-      .select(col("id"), posexplode(col("bks")))
-      .select(col("pos").as("band"), col("col").as("bk"), col("id"))
-    // the two table writes are independent (both read the materialized
-    // base) — overlap their job-commit latency from Futures; crash model
-    // unchanged (publish was never atomic across tables: a tear is a
-    // republish either way, and `_meta` still lands LAST so probes
-    // fail fast on a torn publish). narrowForWrite: task count (= file
-    // count / buckets) derived from data size, identity at scale
-    locally {
-      import scala.concurrent.Future
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val bkF = Future(
-        graft.sources.Bucketing.saveBucketed(
-          Par.narrowForWrite(bk.withColumn("ep", lit(0L))),
-          s"${table}_buckets", "bk", buckets))
-      val docsF = Future(graft.sources.Bucketing.saveBucketed(
-        Par.narrowForWrite(base.select(col("id"), col("shs"), lit(0L).as("ep"))),
-        s"${table}_docs", "id", buckets))
-      // settle BOTH before rethrowing: an early rethrow can race the
-      // sibling's still-running write against the caller's republish repair
-      graft.functions.Par.awaitAllSettled(bkF, docsF)
+    LshStore.publish(corpus.sparkSession, table) {
+      val base = shingleBaseBanded(corpus, idCol, textCol, shingleN, numHashes, bands)
+      (LshMeta(shingleN, numHashes, bands, buckets, corpusFp), lshRows(base))
     }
-    // the hash-family parameters ARE part of the index: a probe under a
-    // different (shingleN, numHashes, bands) computes disjoint band keys
-    // and would return a silently near-empty report — store them so
-    // probeLshIndex can fail fast on a mismatch. corpus_fp is the
-    // caller-declared corpus identity (source dir + filter description):
-    // two pipelines publishing the SAME table name over DIFFERENT corpus
-    // subsets share every hash-family default, so only the fingerprint can
-    // catch a probe against the wrong corpus.
-    writeLshMeta(corpus.sparkSession, table, shingleN, numHashes, bands, buckets,
-      corpusFp, eps = Seq(0L), nextEp = 1L)
   }
 
-  /** LSH `_meta` writer — ONE definition for publish/allocate/commit/
-    * compact, routed through [[graft.sources.Bucketing.saveBucketedAtomic]]:
-    * the COMMIT write is the staged-commit protocol's single visibility
-    * flip, so it must itself be crash-atomic (a plain overwrite has a
-    * DROP-then-recreate destroy window — the r14 verdict's #1 finding). A
-    * kill anywhere inside the swap leaves either the old or the new meta
-    * fully readable after [[graft.sources.Bucketing.healIfTorn]] (which
-    * [[readLshMeta]] runs per-open). `faultTag` arms the in-swap crash
-    * points for the StagedAppendSpec proofs. */
-  private def writeLshMeta(
-      spark: org.apache.spark.sql.SparkSession, table: String,
-      shingleN: Int, numHashes: Int, bands: Int, buckets: Int, corpusFp: String,
-      eps: Seq[Long], nextEp: Long, faultTag: String = null): Unit = {
-    import spark.implicits._
-    graft.sources.Bucketing.saveBucketedAtomic(
-      Seq((shingleN, numHashes, bands, buckets, corpusFp, eps, nextEp,
-          lshLayout(buckets)))
-        .toDF("shingle_n", "num_hashes", "bands", "buckets", "corpus_fp",
-          "eps", "next_ep", "layout"),
-      s"${table}_meta", "shingle_n", 1, faultTag = faultTag)
-  }
+  /** The `_buckets` and `_docs` rows of a [[shingleBaseBanded]] frame. */
+  private def lshRows(base: DataFrame): Map[String, DataFrame] = Map(
+    "buckets" -> base.select(col("id"), posexplode(col("bks")))
+      .select(col("pos").as("band"), col("col").as("bk"), col("id")),
+    "docs" -> base.select(col("id"), col("shs")))
 
-  /** The index's own bucket spec, stored in `_meta` so a surviving
-    * warehouse directory is SELF-DESCRIBING for cross-session recovery:
-    * `<suffix>:<keyCol>:<numBuckets>` per data table
-    * ([[graft.sources.Bucketing.recoverFromLayout]]). [[recoverLshIndex]]
-    * re-registers from this, and a suffix/key mismatch against the family
-    * constant aborts recovery (wrong family / table name). */
-  private def lshLayout(buckets: Int) = s"buckets:bk:$buckets,docs:id:$buckets"
-
-  /** CROSS-SESSION RECOVERY of a published LSH index — the repair for the
-    * one failure [[appendLshIndex]]'s staged commits and
-    * [[graft.sources.Bucketing.saveBucketedAtomic]]'s rename swaps cannot
-    * heal in place: a JVM restart under the default in-memory catalog
-    * loses the CATALOG ENTRIES for `_buckets`/`_docs`/`_meta` while their
-    * warehouse directories (bucketed parquet + committed `_meta` row)
-    * survive intact. Re-adopts each directory as the same MANAGED bucketed
-    * table via [[graft.sources.Bucketing.recoverBucketedTable]] — the
-    * adoption is driver-side metadata ops only (nothing rewritten, O(1)
-    * at 100 TB); the closing STRICT audit is the one linear pass, the
-    * same certification every compaction already pays (vs the pre-r16
-    * repair, a full republish: re-shingle + re-hash + rewrite).
-    *
-    * Order matters: `_meta` first (its bucket spec is the family constant
-    * `("shingle_n", 1)`), because it carries the DATA tables' spec — the
-    * stored `layout` + `buckets` drive their re-registration, and a layout
-    * mismatch against [[LshLayout]] aborts loudly (the directory belongs
-    * to some other family). `expectedCorpusFp`, when non-null, must match
-    * the stored fingerprint — recovering the wrong corpus's index is the
-    * same silent-wrong-results hazard probe validation exists for. Ends
-    * with the STRICT audit (per-doc band-count invariant over committed
-    * rows), so a recovered index is certified before the first probe.
-    * Probes after recovery answer the pre-restart oracle verbatim (q319;
-    * RecoverySpec proves it across a REAL SparkContext restart). Recovery
-    * is maintenance — single-writer, idempotent, crash-retryable. */
+  /** CROSS-SESSION RECOVERY of a published LSH index after a JVM restart
+    * lost the in-memory catalog entries of `_buckets`/`_docs`/`_meta` while
+    * their warehouse directories survived: re-adopts each directory as the
+    * same MANAGED bucketed table (metadata ops only — nothing rewritten,
+    * O(1) at 100 TB) and certifies the result with the strict per-doc
+    * audit. `expectedCorpusFp`, when non-null, must match the stored
+    * fingerprint. Probes after recovery answer the pre-restart oracle
+    * verbatim (q319; RecoverySpec proves it across a REAL SparkContext
+    * restart). Contract: [[graft.sources.IndexStore.recover]]. */
   def recoverLshIndex(spark: org.apache.spark.sql.SparkSession, table: String,
-      expectedCorpusFp: String = null): Unit = {
-    require(
-      graft.sources.Bucketing.recoverBucketedTable(
-        spark, s"${table}_meta", "shingle_n", 1),
-      s"recoverLshIndex: no surviving _meta directory for index '$table' — " +
-        "nothing to recover; republish via publishLshIndex")
-    val m = readLshMeta(spark, table)
-    if (expectedCorpusFp != null)
-      require(m.corpusFp == expectedCorpusFp,
-        s"recoverLshIndex: index '$table' was published over corpus " +
-          s"'${m.corpusFp}' but the caller expects '$expectedCorpusFp'")
-    graft.sources.Bucketing.recoverFromLayout(spark, table,
-      expected = lshLayout(m.buckets), what = "recoverLshIndex")
-    // the audit core takes the meta fields read above — recovery is
-    // single-writer maintenance and nothing between the adoption and here
-    // touches `_meta`, so re-reading it would pay one whole head() job for
-    // the identical row (r18, guide §1.2)
-    assertLshConsistentCore(spark, table, m.bands, m.eps, strict = true)
-  }
-
-  /** Committed-epoch view of an LSH index data table — rows staged by a
-    * torn (crashed-before-commit) append carry an epoch absent from
-    * `_meta.eps` and are invisible to every probe/audit/dup-check (the
-    * [[graft.operators.Similarity]] staged-commit discipline; see
-    * [[appendLshIndex]]). */
-  private def committedLsh(spark: org.apache.spark.sql.SparkSession,
-      table: String, eps: Seq[Long]): DataFrame = {
-    // catalog-lookups-only on the clean path; restores the live name after
-    // a compactor crashed mid-swap so probes self-heal instead of failing
-    graft.sources.Bucketing.healIfTorn(spark, table)
-    spark.table(table).where(col("ep").isin(eps: _*))
-  }
+      expectedCorpusFp: String = null): Unit =
+    LshStore.recover(spark, table, expectedCorpusFp)
 
   /** APPEND a new batch to a published LSH index — the maintenance path of
     * the publish-once/probe-forever layout: the batch is shingled and
@@ -822,221 +738,31 @@ object Dedup {
     * are refused loudly (a duplicate id would duplicate every one of its
     * probe result rows); the ids-only semi-join is batch-sized on the
     * shuffle side. `newCorpusFp` replaces the stored corpus fingerprint —
-    * pass the describing string for corpus ∪ batch.
-    *
-    * SINGLE-WRITER CONTRACT: index maintenance (append/compact) assumes ONE
-    * writer at a time — the epoch allocator is a read-bump-write with no
-    * lock. As of r16 every maintenance entry point runs under the advisory
-    * [[graft.sources.MaintenanceLease]] (a second writer WAITS for the
-    * window, bounded, and a crashed holder's lease expires), so racing
-    * writers normally serialize instead of aborting. The allocator-
-    * collision guards below (re-read after ALLOCATE, re-read before
-    * COMMIT) stay armed as the CORRECTNESS BACKSTOP — the lease is
-    * best-effort (create-exclusive is not atomic on every object store)
-    * and detection-not-exclusion still holds behind it: a loser that
-    * slips past the lease aborts loudly with the index left exactly as
-    * the winner committed it (probes are unrestricted readers
-    * throughout). */
+    * pass the describing string for corpus ∪ batch. The staged batch is
+    * committed only when complete (`bands` band rows per doc row).
+    * Staged-commit and single-writer contract: [[graft.sources.IndexStore]]. */
   def appendLshIndex(
       batch: DataFrame,
       idCol: String,
       textCol: String,
       table: String,
       newCorpusFp: String = ""): Unit =
-    // the advisory lease lets a second writer WAIT for the maintenance
-    // window instead of aborting into the guards (which stay armed below
-    // as the correctness backstop — see MaintenanceLease)
-    graft.sources.MaintenanceLease.withLease(batch.sparkSession, table) {
-      appendLshIndexBody(batch, idCol, textCol, table, newCorpusFp)
+    LshStore.append(batch, table, newCorpusFp) { m =>
+      // shingled after ALLOCATE is launched, so the two overlap
+      lazy val base = shingleBaseBanded(batch, idCol, textCol, m.shingleN,
+        m.numHashes, m.bands)
+      IndexStore.Batch(() => base.select(col("id")), () => lshRows(base))
     }
 
-  private def appendLshIndexBody(
-      batch: DataFrame,
-      idCol: String,
-      textCol: String,
-      table: String,
-      newCorpusFp: String): Unit = {
-    val spark = batch.sparkSession
-    val m = readLshMeta(spark, table)
-    val ep = m.nextEp
-    // ALLOCATE overlapped with the shingle materialization + duplicate
-    // check (all independent; the allocate only has to land before the
-    // stage writes — see the staged-commit contract below)
-    val allocF = {
-      import scala.concurrent.Future
-      import scala.concurrent.ExecutionContext.Implicits.global
-      Future(writeLshMeta(spark, table, m.shingleN, m.numHashes, m.bands,
-        m.buckets, m.corpusFp, m.eps, ep + 1L))
-    }
-    val base = shingleBaseBanded(batch, idCol, textCol, m.shingleN,
-      m.numHashes, m.bands)
-    // duplicate check against COMMITTED rows only — orphans of a torn
-    // earlier attempt must not block its retry (the retry re-stages the
-    // batch under a fresh epoch; the orphans stay invisible forever)
-    val dup = base.select(col("id"))
-      .join(committedLsh(spark, s"${table}_docs", m.eps), Seq("id"), "left_semi")
-      .limit(1).count()
-    graft.functions.Par.awaitAllSettled(allocF)
-    require(dup == 0,
-      s"appendLshIndex: batch contains ids already present in index '$table' — " +
-        "append would duplicate their probe rows; dedup the batch first")
-    val bk = base
-      .select(col("id"), posexplode(col("bks")))
-      .select(col("pos").as("band"), col("col").as("bk"), col("id"))
-    // STAGED COMMIT (r13 verdict item #2) — the tear between the two data
-    // writes is now IMPOSSIBLE to observe, not just loud:
-    //   ALLOCATE  `_meta` bumps next_ep only (crash after = one wasted
-    //             epoch number) — already landed above, overlapped with
-    //             the dup check;
-    //   STAGE     both data writes land carrying the fresh epoch — probes,
-    //             audits and dup-checks filter to `_meta.eps`, so a crash
-    //             during/between/after them leaves probes returning
-    //             EXACTLY the pre-append results;
-    //   COMMIT    `_meta` lands LAST, adding the epoch to `eps` with the
-    //             new fingerprint — the single atomic visibility flip
-    //             (itself a crash-atomic rename swap since r15: a kill
-    //             inside the commit leaves old-or-new meta fully readable,
-    //             never a destroyed table — see [[writeLshMeta]]), taken
-    //             only after the staged batch passes the bands×docs
-    //             completeness check below.
-    // Orphan epochs are garbage-collected by [[compactLshIndex]].
-    graft.sources.Faults.point("lsh.append.allocated")
-    // ALLOCATOR-COLLISION GUARD (single-writer contract, see scaladoc): a
-    // racing append that allocated after our read leaves next_ep != ep+1 —
-    // abort BEFORE staging rather than stage a doomed (or shared) epoch
-    locally {
-      val ne = readLshMeta(spark, table).nextEp
-      require(ne == ep + 1L,
-        s"appendLshIndex: allocator collision on '$table' (next_ep=$ne, " +
-          s"expected ${ep + 1}) — another writer is appending concurrently; " +
-          "index maintenance is single-writer (see scaladoc), retry after it completes")
-    }
-    locally {
-      import scala.concurrent.Future
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val bkF = Future(
-        Par.narrowForWrite(bk.withColumn("ep", lit(ep)))
-          .write.mode("append").bucketBy(m.buckets, "bk").sortBy("bk")
-          .format("parquet").saveAsTable(s"${table}_buckets"))
-      val docsF = Future(
-        Par.narrowForWrite(base.select(col("id"), col("shs"), lit(ep).as("ep")))
-          .write.mode("append").bucketBy(m.buckets, "id").sortBy("id")
-          .format("parquet").saveAsTable(s"${table}_docs"))
-      // settle BOTH before rethrowing: an early rethrow can race the
-      // sibling's still-running write against the caller's republish repair
-      graft.functions.Par.awaitAllSettled(bkF, docsF)
-    }
-    graft.sources.Faults.point("lsh.append.staged")
-    // commit only a COMPLETE staged batch: the per-epoch count relation
-    // (bands × docs rows) is the same invariant the index-wide audit
-    // proves, checked here on exactly the rows about to become visible.
-    // The two counts and the pre-commit guard's meta read touch three
-    // INDEPENDENT tables and all run strictly after the staged writes —
-    // overlap their job latency (r18, guide §2.6). Moving the guard read
-    // ~one job earlier does not change its kind: the guard is the
-    // DETECTION backstop for a racer that slipped past the lease (the
-    // lease is the exclusion mechanism), and it still reads after staging
-    // and before commit — the residual commit-vs-commit window the read
-    // can never close is unchanged.
-    val (sbRows, sdRows, mc) = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val sbF = Future(spark.table(s"${table}_buckets").where(col("ep") === ep).count())
-      val sdF = Future(spark.table(s"${table}_docs").where(col("ep") === ep).count())
-      val mcF = Future(readLshMeta(spark, table))
-      graft.functions.Par.awaitAllSettled(sbF, sdF, mcF)
-      (Await.result(sbF, Duration.Inf), Await.result(sdF, Duration.Inf),
-        Await.result(mcF, Duration.Inf))
-    }
-    require(sbRows == m.bands.toLong * sdRows,
-      s"appendLshIndex: staged batch is incomplete ($sbRows band rows != " +
-        s"${m.bands} bands x $sdRows doc rows) — NOT committed; probes are " +
-        "unaffected, retry the append")
-    // PRE-COMMIT GUARD: the loser of an allocator race must not publish —
-    // a racer that committed first left our epoch in eps (it published the
-    // shared epoch) or bumped next_ep past ours; either way abort loudly
-    // and leave the winner's commit as the index state
-    require(mc.nextEp == ep + 1L && !mc.eps.contains(ep),
-      s"appendLshIndex: lost an append race on '$table' (next_ep=${mc.nextEp}, " +
-        s"eps=${mc.eps.mkString(",")}, ours=$ep) — NOT committed; index " +
-        "maintenance is single-writer (see scaladoc)")
-    // COMMIT — crash-atomic rename swap (faultTag arms the in-swap points)
-    writeLshMeta(spark, table, m.shingleN, m.numHashes, m.bands, m.buckets,
-      newCorpusFp, m.eps :+ ep, ep + 1L, faultTag = "lsh.append.commit")
-  }
-
-  /** Cheap invariant over a published LSH index: by construction every
-    * indexed doc contributes exactly `bands` band rows and exactly 1 docs
-    * row, so `count(_buckets) == bands * count(_docs)`. Writes tear at
-    * whole-table granularity (each write is job-commit atomic), so a torn
-    * [[appendLshIndex]] always breaks this count relation; the repair is a
-    * republish. Two COUNTs — no shuffle, no distinct — so the assert is
-    * nearly free even on a 100 TB index (the duplicate-id guard upstream
-    * rules out the id-collision shapes a count can't see). */
+  /** Consistency audit over a published LSH index. Cheap form: by
+    * construction every indexed doc contributes exactly `bands` band rows
+    * and exactly 1 docs row, so `count(_buckets) == bands * count(_docs)` —
+    * two COUNTs, no shuffle, nearly free even on a 100 TB index. Strict
+    * form: the full per-doc invariant in one pass, which also catches
+    * count-balanced corruption. */
   def assertLshIndexConsistent(spark: org.apache.spark.sql.SparkSession,
-      table: String, strict: Boolean = false): Unit = {
-    val m = readLshMeta(spark, table)
-    assertLshConsistentCore(spark, table, m.bands, m.eps, strict)
-  }
-
-  /** The audit body with the meta fields passed in — lets
-    * [[compactLshIndexBody]] overlap the (read-only, data-tables-only)
-    * strict audit with the `_meta` normalization write; the two touch
-    * different tables (r18, guide §2.6 — the IVF/PQ compacts do the
-    * same, see graft.operators.Similarity). */
-  private def assertLshConsistentCore(spark: org.apache.spark.sql.SparkSession,
-      table: String, bands: Int, eps: Seq[Long], strict: Boolean): Unit = {
-    // audit what probes SEE: epochs staged by a torn append are invisible
-    // by design and must not trip the invariants.
-    // The strict pass SUBSUMES the count relation (every id carrying
-    // exactly `bands` band rows and one docs row, with no unmatched ids
-    // on either side, forces count(_buckets) == bands x count(_docs)), so
-    // it skips the two whole-table counts outright — one linear pass, not
-    // three (r17, guide §1.2: don't compute what a later step re-proves).
-    // The cheap form keeps them, overlapped (independent tables).
-    if (!strict) {
-      val (bRows, dRows) = {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
-        val bF = Future(committedLsh(spark, s"${table}_buckets", eps).count())
-        val dF = Future(committedLsh(spark, s"${table}_docs", eps).count())
-        graft.functions.Par.awaitAllSettled(bF, dF)
-        (Await.result(bF, Duration.Inf), Await.result(dF, Duration.Inf))
-      }
-      require(bRows == bands.toLong * dRows,
-        s"LSH index '$table' is inconsistent: $bRows band rows != ${bands} bands x " +
-          s"$dRows doc rows — likely a torn append; republish via publishLshIndex")
-    }
-    if (strict) {
-      // count-balanced corruption (one doc's band rows duplicated while
-      // another's are missing, or re-keyed to a phantom id) passes the
-      // total-count relation; the strict form proves the FULL per-doc
-      // invariant in ONE pass — a full-outer join between the per-id band
-      // census and the per-id docs census flags every id that (a) misses
-      // docs rows, (b) misses bucket rows, (c) has a band-row count !=
-      // bands, or (d) has a duplicated docs row. BOTH sides are aggregated
-      // per id — an unaggregated docs side would let a duplicated _docs row
-      // slip through (each join copy passes __n == bands on its own), which
-      // the pre-r17 count relation used to catch; aggregating restores full
-      // subsumption of count(_buckets) == bands x count(_docs). One groupBy
-      // per side + one join, maintenance-window cheap.
-      val bCounts = committedLsh(spark, s"${table}_buckets", eps)
-        .groupBy(col("id")).agg(count(lit(1)).as("__n"))
-      val dCounts = committedLsh(spark, s"${table}_docs", eps)
-        .groupBy(col("id")).agg(count(lit(1)).as("__d"))
-      val bad = bCounts.join(dCounts, Seq("id"), "full_outer")
-        .where(col("__n").isNull || col("__d").isNull ||
-          col("__n") =!= bands.toLong || col("__d") =!= 1L)
-        .count()
-      require(bad == 0L,
-        s"LSH index '$table' is corrupt (strict per-doc invariant — catches " +
-          s"even count-balanced tears): $bad ids lack a docs row, " +
-          s"have a duplicated docs row, lack bucket rows, or do not have " +
-          s"exactly ${bands} band rows — republish via publishLshIndex")
-    }
-  }
+      table: String, strict: Boolean = false): Unit =
+    LshStore.assertConsistent(spark, table, strict)
 
   /** Self-serve MAINTENANCE REPORT for a published LSH index: per data
     * table, committed vs orphan rows/epochs (orphans = torn-append leftovers
@@ -1045,11 +771,8 @@ object Dedup {
     * [[compactLshIndex]]; a `files` count far above the bucket spec or a
     * nonzero `rows_orphan` is the signal. */
   def describeLshIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String): DataFrame = {
-    val m = readLshMeta(spark, table)
-    graft.sources.Bucketing.epochReport(
-      spark, Seq(s"${table}_buckets", s"${table}_docs"), m.eps)
-  }
+      table: String): DataFrame =
+    LshStore.describe(spark, table)
 
   /** LSH BUCKET CENSUS — the banding-health diagnostic: per band, the
     * histogram of bucket sizes. The candidate join's cost is
@@ -1081,60 +804,19 @@ object Dedup {
     * `_docs` at the STORED bucket spec — rows, bucketing, fingerprint and
     * hash-family meta all unchanged, so a probe before and after compaction
     * is row-identical (certified by q276's oracle, shared with q250/q261).
-    * Pure maintenance: one distributed read + write per table, staged and
-    * catalog-swapped ([[graft.sources.Bucketing.compactBucketed]]). The
-    * STRICT consistency audit runs after the swap — the table was just
-    * rewritten end-to-end anyway, so the maintenance window is the one
-    * place the per-doc invariant (+ mutual id-subset check) is cheap
-    * relative to the work already done. */
+    * Orphaned epochs are dropped and the STRICT audit runs after the swap —
+    * the table was just rewritten end-to-end anyway, so the maintenance
+    * window is the one place the per-doc invariant is cheap relative to the
+    * work already done ([[graft.sources.IndexStore.compact]]). */
   def compactLshIndex(spark: org.apache.spark.sql.SparkSession, table: String): Unit =
-    graft.sources.MaintenanceLease.withLease(spark, table) {
-      compactLshIndexBody(spark, table)
-    }
-
-  private def compactLshIndexBody(
-      spark: org.apache.spark.sql.SparkSession, table: String): Unit = {
-    val m = readLshMeta(spark, table)
-    // GC orphaned (uncommitted) epochs and normalize every committed row
-    // to epoch 0 during the rewrite — crash-order safe: epoch 0 is always
-    // in the stored eps list, so probes between the data swaps and the
-    // meta normalization below still see every committed row
-    val gc: DataFrame => DataFrame =
-      df => df.where(col("ep").isin(m.eps: _*)).withColumn("ep", lit(0L))
-    // the two compactions are independent recovery units (each keeps its
-    // own __compact/__old staging discipline and repairCompacted is
-    // per-table) — overlap their rewrite + swap latency
-    locally {
-      import scala.concurrent.Future
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val bF = Future(graft.sources.Bucketing
-        .compactBucketed(spark, s"${table}_buckets", "bk", m.buckets, gc,
-          faultTag = "lsh.compact.buckets"))
-      val dF = Future(graft.sources.Bucketing
-        .compactBucketed(spark, s"${table}_docs", "id", m.buckets, gc,
-          faultTag = "lsh.compact.docs"))
-      graft.functions.Par.awaitAllSettled(bF, dF)
-    }
-    // strict audit (reads the two just-swapped data tables, post-compact
-    // eps = Seq(0L) by construction) overlapped with the `_meta`
-    // normalization swap — different tables, independent jobs (r18, §2.6)
-    locally {
-      import scala.concurrent.Future
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val auditF = Future(
-        assertLshConsistentCore(spark, table, m.bands, Seq(0L), strict = true))
-      val metaF = Future(
-        writeLshMeta(spark, table, m.shingleN, m.numHashes, m.bands, m.buckets,
-          m.corpusFp, eps = Seq(0L), nextEp = 1L, faultTag = "lsh.compact.commit"))
-      graft.functions.Par.awaitAllSettled(auditF, metaF)
-    }
-  }
+    LshStore.compact(spark, table)
 
   /** [[publishLshIndex]] only if the index tables are not already in the
     * session catalog — the amortize-once discipline ([[graft.sources.Bucketing.ensureBucketed]]):
     * a repeated pipeline (or the bench) pays the corpus hash + write once
     * and every later call times only the probe, which is the production
-    * steady state. */
+    * steady state. An existing index must have been published over THIS
+    * corpus with THIS hash family. */
   def ensureLshIndex(
       corpus: DataFrame,
       idCol: String,
@@ -1144,54 +826,98 @@ object Dedup {
       numHashes: Int = 16,
       bands: Int = 4,
       buckets: Int = 8,
-      corpusFp: String = ""): Unit = {
-    val cat = corpus.sparkSession.catalog
-    // a swap torn by a crashed compactor must read as "exists" after heal,
-    // not trigger a silent republish over the healable tables
-    Seq(s"${table}_buckets", s"${table}_docs", s"${table}_meta")
-      .foreach(graft.sources.Bucketing.healIfTorn(corpus.sparkSession, _))
-    if (!cat.tableExists(s"${table}_buckets") || !cat.tableExists(s"${table}_docs") ||
-        !cat.tableExists(s"${table}_meta"))
+      corpusFp: String = ""): Unit =
+    LshStore.ensure(corpus.sparkSession, table, corpusFp, (shingleN, numHashes, bands))(
       publishLshIndex(corpus, idCol, textCol, table, shingleN, numHashes, bands, buckets,
-        corpusFp)
-    else
-      // the existing index must have been published over THIS corpus —
-      // hash-family params alone can't tell two corpus subsets apart
-      require(readLshMeta(corpus.sparkSession, table).corpusFp == corpusFp,
-        s"ensureLshIndex: index '$table' exists but was published over a " +
-          s"different corpus (stored fp '${readLshMeta(corpus.sparkSession, table).corpusFp}', " +
-          s"expected '$corpusFp') — drop the tables or use a distinct table name")
-  }
-
-  final case class LshMeta(
-      shingleN: Int, numHashes: Int, bands: Int, buckets: Int, corpusFp: String,
-      eps: Seq[Long], nextEp: Long)
+        corpusFp))
 
   /** Stored parameters + corpus fingerprint + committed-epoch state of a
-    * published index. */
-  private def readLshMeta(
-      spark: org.apache.spark.sql.SparkSession, table: String): LshMeta = {
-    // self-heal a meta swap torn by a crashed writer (catalog lookups only
-    // on the clean path) — probes after a mid-commit kill read whichever
-    // complete copy survived instead of failing TABLE_NOT_FOUND
-    graft.sources.Bucketing.healIfTorn(spark, s"${table}_meta")
-    val m = spark.table(s"${table}_meta").head()
-    LshMeta(m.getInt(0), m.getInt(1), m.getInt(2), m.getInt(3), m.getString(4),
-      m.getSeq[Long](5), m.getLong(6))
+    * published LSH index — the typed `_meta` row. */
+  final case class LshMeta(
+      shingleN: Int, numHashes: Int, bands: Int, buckets: Int, corpusFp: String,
+      eps: Seq[Long] = Seq(0L), nextEp: Long = 1L) extends IndexMeta[LshMeta] {
+    def withEpochs(corpusFp: String, eps: Seq[Long], nextEp: Long): LshMeta =
+      copy(corpusFp = corpusFp, eps = eps, nextEp = nextEp)
+  }
+
+  /** The LSH family of [[graft.sources.IndexStore]]: `_buckets` bucketed by
+    * band key and `_docs` by id, both epoch-gated; the hash family is the
+    * parameter identity. */
+  private object LshStore extends IndexStore[LshMeta]("lsh", "Lsh", "shingle_n",
+      Seq(IndexStore.Table("buckets", "bk", epochGated = true),
+        IndexStore.Table("docs", "id", epochGated = true)),
+      idTable = "docs", idCol = "id")(Encoders.product[LshMeta]) {
+
+    def params(m: LshMeta): Product = (m.shingleN, m.numHashes, m.bands)
+    val paramNames = "(shingle_n, num_hashes, bands)"
+
+    /** Commit only a COMPLETE staged batch: the per-epoch count relation
+      * (bands × docs rows) is the invariant the index-wide audit proves,
+      * checked on exactly the rows about to become visible. */
+    override def stagedCheck(spark: org.apache.spark.sql.SparkSession, table: String,
+        m: LshMeta, ep: Long): Unit = {
+      var (sbRows, sdRows) = (0L, 0L)
+      IndexStore.overlap(
+        () => sbRows = spark.table(s"${table}_buckets").where(col("ep") === ep).count(),
+        () => sdRows = spark.table(s"${table}_docs").where(col("ep") === ep).count())
+      require(sbRows == m.bands.toLong * sdRows,
+        s"appendLshIndex: staged batch is incomplete ($sbRows band rows != " +
+          s"${m.bands} bands x $sdRows doc rows) — NOT committed; probes are " +
+          "unaffected, retry the append")
+    }
+
+    def audit(spark: org.apache.spark.sql.SparkSession, table: String, m: LshMeta,
+        strict: Boolean): Unit = {
+      def committed(sfx: String) = IndexStore.committed(spark, s"${table}_$sfx", m.eps)
+      if (!strict) {
+        // the two whole-table counts touch independent tables — overlapped
+        var (bRows, dRows) = (0L, 0L)
+        IndexStore.overlap(
+          () => bRows = committed("buckets").count(),
+          () => dRows = committed("docs").count())
+        require(bRows == m.bands.toLong * dRows,
+          s"LSH index '$table' is inconsistent: $bRows band rows != ${m.bands} bands x " +
+            s"$dRows doc rows — likely a torn append; republish via publishLshIndex")
+      } else {
+        // The strict pass SUBSUMES the count relation, so it skips the two
+        // counts: a full-outer join between the per-id band census and the
+        // per-id docs census flags every id that (a) misses docs rows, (b)
+        // misses bucket rows, (c) has a band-row count != bands, or (d) has
+        // a duplicated docs row. BOTH sides are aggregated per id — an
+        // unaggregated docs side would let a duplicated _docs row slip
+        // through (each join copy passes __n == bands on its own). One
+        // groupBy per side + one join, maintenance-window cheap.
+        val bCounts = committed("buckets").groupBy(col("id")).agg(count(lit(1)).as("__n"))
+        val dCounts = committed("docs").groupBy(col("id")).agg(count(lit(1)).as("__d"))
+        val bad = bCounts.join(dCounts, Seq("id"), "full_outer")
+          .where(col("__n").isNull || col("__d").isNull ||
+            col("__n") =!= m.bands.toLong || col("__d") =!= 1L)
+          .count()
+        require(bad == 0L,
+          s"LSH index '$table' is corrupt (strict per-doc invariant — catches " +
+            s"even count-balanced tears): $bad ids lack a docs row, " +
+            s"have a duplicated docs row, lack bucket rows, or do not have " +
+            s"exactly ${m.bands} band rows — republish via publishLshIndex")
+      }
+    }
   }
 
   /** Shared shingle-set prep of the PORTABLE md5 LSH family — ONE
     * definition on purpose: [[minhashLshPortable]], [[minhashLshDelta]],
     * [[publishLshIndex]] and [[probeLshIndex]] must shingle bit-identically
     * for the probe≡delta certification (and the SQL oracle) to hold.
-    * Widen → compiled shingling → drop empty sets → materialize (every
-    * caller reads the result at least twice). */
+    * Widen → compiled shingling → drop empty sets ([[shingled]]) →
+    * materialize (every caller reads the result at least twice). */
   private def shingleBase(
+      docs: DataFrame, idCol: String, textCol: String, shingleN: Int): DataFrame =
+    shingled(docs, idCol, textCol, shingleN).localCheckpoint(true)
+
+  /** The unmaterialized (id, shs) shingle sets every md5 LSH path builds on. */
+  private def shingled(
       docs: DataFrame, idCol: String, textCol: String, shingleN: Int): DataFrame =
     Par.widen(docs.select(col(idCol).as("id"), col(textCol).as("__t")))
       .select(col("id"), Vectors.shinglesFast(shingleN)(col("__t")).as("shs"))
       .where(size(col("shs")) > 0)
-      .localCheckpoint(true)
 
   /** [[shingleBase]] with the md5 band keys MATERIALIZED alongside the
     * shingle sets — the index WRITE paths (publish/append) use this so the
@@ -1207,9 +933,7 @@ object Dedup {
   private def shingleBaseBanded(
       docs: DataFrame, idCol: String, textCol: String, shingleN: Int,
       numHashes: Int, bands: Int): DataFrame =
-    Par.widen(docs.select(col(idCol).as("id"), col(textCol).as("__t")))
-      .select(col("id"), Vectors.shinglesFast(shingleN)(col("__t")).as("shs"))
-      .where(size(col("shs")) > 0)
+    shingled(docs, idCol, textCol, shingleN)
       .select(col("id"), col("shs"),
         Vectors.md5BandKeys(numHashes, bands)(col("shs")).as("bks"))
       .localCheckpoint(true)
@@ -1254,14 +978,12 @@ object Dedup {
   private def shingleBandBase(
       docs: DataFrame, idCol: String, textCol: String, shingleN: Int,
       numHashes: Int, bands: Int, withSig: Boolean = false): (DataFrame, Long) = {
-    val shingled = Par.widen(docs.select(col(idCol).as("id"), col(textCol).as("__t")))
-      .select(col("id"), Vectors.shinglesFast(shingleN)(col("__t")).as("shs"))
-      .where(size(col("shs")) > 0)
+    val base = shingled(docs, idCol, textCol, shingleN)
     val proj =
-      if (withSig) shingled.select(col("id"), col("shs"),
+      if (withSig) base.select(col("id"), col("shs"),
         Vectors.md5Signature(numHashes)(col("shs")).as("sig"),
         Vectors.md5BandKeys(numHashes, bands)(col("shs")).as("bks"))
-      else shingled.select(col("id"), col("shs"),
+      else base.select(col("id"), col("shs"),
         Vectors.md5BandKeys(numHashes, bands)(col("shs")).as("bks"))
     val ck = proj.localCheckpoint(false)
     val bksIdx = ck.schema.fieldIndex("bks")
@@ -1365,9 +1087,7 @@ object Dedup {
       numHashes: Int = 16,
       bands: Int = 4): DataFrame = {
     require(numHashes % bands == 0, s"bands $bands must divide numHashes $numHashes")
-    shingleBase(docs, idCol, textCol, shingleN)
-      .select(col("id"), posexplode(Vectors.md5BandKeys(numHashes, bands)(col("shs"))))
-      .select(col("id"), col("pos").as("band"), col("col").as("bk"))
+    bandRows(shingleBase(docs, idCol, textCol, shingleN), numHashes, bands)
   }
 
   /** PROBE a [[publishLshIndex]] index with an incoming batch: hash the
@@ -1393,33 +1113,11 @@ object Dedup {
     // and the probe would return a silently near-empty report. The corpus
     // fingerprint catches the OTHER silent-wrong case: same hash family,
     // same table name, different corpus subset behind it.
-    val m = readLshMeta(spark, table)
-    val stored = (m.shingleN, m.numHashes, m.bands)
-    require(stored == ((shingleN, numHashes, bands)),
-      s"probeLshIndex($shingleN,$numHashes,$bands) does not match index " +
-        s"'$table' published with (shingle_n,num_hashes,bands)=$stored")
-    require(m.corpusFp == corpusFp,
-      s"probeLshIndex: index '$table' was published over corpus " +
-        s"'${m.corpusFp}' but the caller expects '$corpusFp'")
+    val m = LshStore.probeMeta(spark, table, corpusFp, Some((shingleN, numHashes, bands)))
     val iBase = shingleBase(incoming, idCol, textCol, shingleN)
-    val iBk = iBase
-      .select(col("id"), posexplode(Vectors.md5BandKeys(numHashes, bands)(col("shs"))))
-      .select(col("id").as("incoming_id"), col("pos").as("band"), col("col").as("bk"))
-    val cand = iBk
-      .join(committedLsh(spark, s"${table}_buckets", m.eps)
-        .withColumnRenamed("id", "corpus_id"),
-        Seq("band", "bk"))
-      .select(col("incoming_id"), col("corpus_id"))
-      .distinct()
-    cand
-      .join(iBase.select(col("id").as("incoming_id"), col("shs").as("tok_i")), Seq("incoming_id"))
-      .join(committedLsh(spark, s"${table}_docs", m.eps)
-        .select(col("id").as("corpus_id"), col("shs").as("tok_c")), Seq("corpus_id"))
-      .withColumn("inter", size(array_intersect(col("tok_i"), col("tok_c"))).cast("double"))
-      .withColumn("jaccard",
-        col("inter") / (size(col("tok_i")) + size(col("tok_c")) - col("inter")))
-      .where(col("jaccard") >= threshold)
-      .select(col("incoming_id"), col("corpus_id"), round(col("jaccard"), 6).as("jaccard"))
+    verifiedPairs(bandRows(iBase, numHashes, bands), iBase,
+      IndexStore.committed(spark, s"${table}_buckets", m.eps),
+      IndexStore.committed(spark, s"${table}_docs", m.eps), threshold)
   }
 
   /** WARM-START connected components for a GROWING pair graph — the

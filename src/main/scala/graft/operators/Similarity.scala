@@ -1,10 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Vectors
+import graft.sources.{IndexMeta, IndexStore}
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`). Two paths:
@@ -521,7 +522,10 @@ object Similarity {
     *     probes collect this to rebuild the quantizer;
     *   - `<table>_meta`: (dims, nlist, train_rows, rounds, corpus_fp) —
     *     probe fails fast on a family or corpus mismatch (the
-    *     [[Dedup.probeLshIndex]] discipline). */
+    *     [[Dedup.probeLshIndex]] discipline).
+    *
+    * Staged commits, the single-writer lease, crash points and recovery:
+    * [[graft.sources.IndexStore]]. */
   def publishIvfIndex(
       corpus: DataFrame,
       idCol: String,
@@ -533,123 +537,85 @@ object Similarity {
       buckets: Int = 8,
       corpusFp: String = ""): Unit = {
     require(trainRows >= nlist, s"trainRows $trainRows must be >= nlist $nlist")
-    val spark = corpus.sparkSession
-    // publish owns the index name — clear a dead writer's stale lease
-    graft.sources.MaintenanceLease.clear(spark, table)
-    val (qdf, dims) = quantizedBase(corpus, idCol, vecCol)
-    val train = qdf
-      .withColumn("__mk", md5(col("id").cast("string")))
-      .orderBy(col("__mk"), col("id"))
-      .limit(trainRows)
-      .drop("__mk")
-      .localCheckpoint(true)
-    val cents = lloydInt(train, nlist, rounds)
-    val assignF = udf { (q: Seq[Long]) => assignIdxInt(q, cents) }
-    import spark.implicits._
-    val centRows = for { c <- cents.indices; d <- cents(c).indices }
-      yield (c, d, cents(c)(d))
-    // `_assign` (corpus-sized) and `_cents` (model-sized) writes are
-    // independent — overlap their commit latency; `_meta` still lands
-    // LAST so a torn publish fails probe validation. The published rows
-    // carry epoch 0; appends stage later epochs and `_meta.eps` is the
-    // committed-visibility list (see [[appendIvfIndex]]).
-    locally {
-      import scala.concurrent.Future
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val aF = Future(graft.sources.Bucketing.saveBucketed(
-        graft.functions.Par.narrowForWrite(
-          qdf.select(col("id").as("neighbor_id"), col("v").as("cv"),
-            assignF(col("q")).as("c"), lit(0L).as("ep"))),
-        s"${table}_assign", "c", buckets))
-      val cF = Future(graft.sources.Bucketing.saveBucketed(
-        centRows.toDF("c", "d", "cv"), s"${table}_cents", "c", 1))
-      // settle BOTH before rethrowing: an early rethrow can race the
-      // sibling's still-running write against the caller's republish repair
-      graft.functions.Par.awaitAllSettled(aF, cF)
+    IvfStore.publish(corpus.sparkSession, table) {
+      val (qdf, dims) = quantizedBase(corpus, idCol, vecCol)
+      val train = qdf
+        .withColumn("__mk", md5(col("id").cast("string")))
+        .orderBy(col("__mk"), col("id"))
+        .limit(trainRows)
+        .drop("__mk")
+        .localCheckpoint(true)
+      val cents = lloydInt(train, nlist, rounds)
+      (IvfMeta(dims, nlist, trainRows, rounds, buckets, corpusFp),
+        Map("assign" -> ivfRows(qdf, cents), "cents" -> centsFrame(corpus.sparkSession, cents)))
     }
-    writeIvfMeta(spark, table, dims, nlist, trainRows, rounds, buckets, corpusFp,
-      eps = Seq(0L), nextEp = 1L)
   }
 
-  /** IVF `_meta` writer — ONE definition so the allocate/commit writes of
-    * the staged-commit append can never drift from publish's schema.
-    * `eps` is the list of COMMITTED epochs (probes/audits/dup-checks see
-    * only rows whose `ep` is in it); `next_ep` is the allocator. */
-  private def writeIvfMeta(spark: org.apache.spark.sql.SparkSession, table: String,
-      dims: Int, nlist: Int, trainRows: Int, rounds: Int, buckets: Int,
-      corpusFp: String, eps: Seq[Long], nextEp: Long,
-      faultTag: String = null): Unit = {
+  /** `_assign` rows of a quantized frame under centroids `cents`. */
+  private def ivfRows(qdf: DataFrame, cents: Array[Array[Long]]): DataFrame = {
+    val assignF = udf { (q: Seq[Long]) => assignIdxInt(q, cents) }
+    qdf.select(col("id").as("neighbor_id"), col("v").as("cv"), assignF(col("q")).as("c"))
+  }
+
+  /** `_assign` rows of a quantized frame: coarse list + `m` PQ codes. */
+  private def pqRows(qdf: DataFrame, cents: Array[Array[Long]],
+      bks: Array[Array[Array[Long]]], m: Int, sub: Int): DataFrame = {
+    val assignF = udf { (q: Seq[Long]) => assignIdxInt(q, cents) }
+    val encodeF = udf { (q: Seq[Long]) =>
+      Array.tabulate(m)(j => codeOfInt(q, j, sub, bks).toLong)
+    }
+    qdf.select(col("id").as("neighbor_id"), assignF(col("q")).as("c"),
+      encodeF(col("q")).as("cd"))
+  }
+
+  private def centsFrame(spark: org.apache.spark.sql.SparkSession,
+      cents: Array[Array[Long]]): DataFrame = {
     import spark.implicits._
-    // crash-ATOMIC rename swap, never a plain overwrite: the COMMIT meta
-    // write is the staged-commit visibility flip, and saveBucketed's
-    // DROP-then-recreate would destroy `_meta` if the writer died inside
-    // (r14 verdict #1); a kill in any swap window leaves old-or-new meta
-    // fully readable after healIfTorn (run per-open by [[readMetaRow]])
-    graft.sources.Bucketing.saveBucketedAtomic(
-      Seq((dims, nlist, trainRows, rounds, buckets, corpusFp, eps, nextEp,
-          ivfLayout(buckets)))
-        .toDF("dims", "nlist", "train_rows", "rounds", "buckets", "corpus_fp",
-          "eps", "next_ep", "layout"),
-      s"${table}_meta", "dims", 1, faultTag = faultTag)
+    (for { c <- cents.indices; d <- cents(c).indices } yield (c, d, cents(c)(d)))
+      .toDF("c", "d", "cv")
   }
 
-  /** Self-describing bucket spec stored in `_meta` for cross-session
-    * recovery — see [[graft.operators.Dedup.recoverLshIndex]]'s layout
-    * contract ([[graft.sources.Bucketing.recoverFromLayout]]). */
-  private def ivfLayout(buckets: Int) = s"assign:c:$buckets,cents:c:1"
+  private type ModelRows = scala.concurrent.Future[Array[org.apache.spark.sql.Row]]
+
+  /** Launch the collect of a model-sized table (`_cents`, `_books`) — a
+    * tiny single-bucket scan whose cost is pure job latency, so callers
+    * launch it BEFORE the `_meta` read and it hides behind that read and
+    * whatever else precedes its use. Model tables are written once at
+    * publish and never swap-maintained: no heal is needed, and a read-only
+    * future left behind by an earlier failure is harmless. */
+  private def collectModel(spark: org.apache.spark.sql.SparkSession, table: String,
+      sfx: String): ModelRows = {
+    import scala.concurrent.ExecutionContext.Implicits.global
+    scala.concurrent.Future(spark.table(s"${table}_$sfx").collect())
+  }
+
+  private def settled[T](f: scala.concurrent.Future[T]): T = {
+    graft.functions.Par.awaitAllSettled(f)
+    scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Zero)
+  }
+
+  /** The coarse centroids from collected `_cents` rows (c, d, cv). */
+  private def centsOf(rows: ModelRows, nlist: Int, dims: Int): Array[Array[Long]] = {
+    val cents = Array.fill(nlist)(new Array[Long](dims))
+    settled(rows).foreach { r => cents(r.getInt(0))(r.getInt(1)) = r.getLong(2) }
+    cents
+  }
 
   /** CROSS-SESSION RECOVERY of a published IVF index — re-adopts the
     * surviving warehouse directories (`_assign`/`_cents`/`_meta`) as the
     * same managed bucketed tables after a JVM restart lost the in-memory
-    * catalog entries. Metadata ops only (nothing rewritten); `_meta` first
-    * (family-constant spec `("dims", 1)`), then the data tables from its
-    * stored layout; fingerprint-checked when `expectedCorpusFp` is given;
-    * ends with the strict audit. See
-    * [[graft.operators.Dedup.recoverLshIndex]] for the full contract. */
+    * catalog entries; fingerprint-checked when `expectedCorpusFp` is given;
+    * ends with the strict audit. Contract:
+    * [[graft.sources.IndexStore.recover]]. */
   def recoverIvfIndex(spark: org.apache.spark.sql.SparkSession, table: String,
-      expectedCorpusFp: String = null): Unit = {
-    require(
-      graft.sources.Bucketing.recoverBucketedTable(spark, s"${table}_meta", "dims", 1),
-      s"recoverIvfIndex: no surviving _meta directory for index '$table' — " +
-        "nothing to recover; republish via publishIvfIndex")
-    val m = readMetaRow(spark, table)
-    if (expectedCorpusFp != null)
-      require(m.getString(5) == expectedCorpusFp,
-        s"recoverIvfIndex: index '$table' was published over corpus " +
-          s"'${m.getString(5)}' but the caller expects '$expectedCorpusFp'")
-    graft.sources.Bucketing.recoverFromLayout(spark, table,
-      expected = ivfLayout(m.getInt(4)), what = "recoverIvfIndex")
-    // audit core on the meta fields read above — single-writer recovery,
-    // nothing since the adoption touches `_meta` (saves one head() job)
-    assertIvfConsistentCore(spark, table, m.getInt(1), m.getSeq[Long](6),
-      strict = true)
-  }
-
-  /** Open an index's `_meta` row, self-healing a swap torn by a crashed
-    * writer first (catalog lookups only on the clean path) — every probe/
-    * append/audit/compact meta read routes here. */
-  private def readMetaRow(spark: org.apache.spark.sql.SparkSession,
-      table: String): org.apache.spark.sql.Row = {
-    graft.sources.Bucketing.healIfTorn(spark, s"${table}_meta")
-    spark.table(s"${table}_meta").head()
-  }
-
-  /** Committed-epoch view of an index data table: rows staged by a torn
-    * (crashed-before-commit) append carry an epoch absent from `_meta.eps`
-    * and are INVISIBLE here — the staged-commit guarantee every probe,
-    * audit, duplicate-check and compaction reads through. The IN-list is
-    * maintenance-op-sized; each append's files hold a single `ep` value,
-    * so parquet row-group stats skip orphan files wholesale. */
-  private def committedRows(spark: org.apache.spark.sql.SparkSession,
-      table: String, eps: Seq[Long]): DataFrame = {
-    // self-heal a compactor crash mid-swap (catalog lookups only when clean)
-    graft.sources.Bucketing.healIfTorn(spark, table)
-    spark.table(table).where(col("ep").isin(eps: _*))
-  }
+      expectedCorpusFp: String = null): Unit =
+    IvfStore.recover(spark, table, expectedCorpusFp)
 
   /** [[publishIvfIndex]] only if the tables are absent; an existing index
     * must carry THIS corpus's fingerprint (same silent-wrong-corpus guard
-    * as [[Dedup.ensureLshIndex]]). */
+    * as [[Dedup.ensureLshIndex]]) AND the exact published codebook params —
+    * a caller that bumps trainRows/nlist/rounds/buckets must NOT be
+    * silently served the stale codebook. */
   def ensureIvfIndex(
       corpus: DataFrame,
       idCol: String,
@@ -659,33 +625,10 @@ object Similarity {
       nlist: Int = 8,
       rounds: Int = 2,
       buckets: Int = 8,
-      corpusFp: String = ""): Unit = {
-    val cat = corpus.sparkSession.catalog
-    // a swap torn by a crashed writer must read as "exists" after heal,
-    // not trigger a silent republish over healable tables
-    Seq(s"${table}_assign", s"${table}_meta")
-      .foreach(graft.sources.Bucketing.healIfTorn(corpus.sparkSession, _))
-    if (!cat.tableExists(s"${table}_assign") || !cat.tableExists(s"${table}_cents") ||
-        !cat.tableExists(s"${table}_meta"))
+      corpusFp: String = ""): Unit =
+    IvfStore.ensure(corpus.sparkSession, table, corpusFp, (nlist, trainRows, rounds, buckets))(
       publishIvfIndex(corpus, idCol, vecCol, table, trainRows, nlist, rounds, buckets,
-        corpusFp)
-    else {
-      val meta = readMetaRow(corpus.sparkSession, table)
-      val storedFp = meta.getString(5)
-      require(storedFp == corpusFp,
-        s"ensureIvfIndex: index '$table' exists but was published over corpus " +
-          s"'$storedFp', expected '$corpusFp' — drop the tables or rename")
-      // The codebook params are part of the index's identity too: a caller
-      // that bumps trainRows/nlist/rounds/buckets must NOT be silently served
-      // the stale codebook (the exact silent-wrong class corpus_fp catches).
-      val stored = (meta.getInt(1), meta.getInt(2), meta.getInt(3), meta.getInt(4))
-      val asked = (nlist, trainRows, rounds, buckets)
-      require(stored == asked,
-        s"ensureIvfIndex: index '$table' exists with (nlist, train_rows, rounds, " +
-          s"buckets) = $stored but the caller requested $asked — drop the tables " +
-          "to retrain, or pass the published params")
-    }
-  }
+        corpusFp))
 
   /** PROBE a [[publishIvfIndex]] index: rebuild the quantizer from the
     * model-sized `_cents` table, explode each query's `nprobe` nearest
@@ -702,30 +645,13 @@ object Similarity {
       k: Int,
       nprobe: Int = 2,
       corpusFp: String = ""): DataFrame = {
-    // the `_cents` collect and the `_meta` read are two independent
-    // model-sized single-bucket scans whose cost is pure job latency —
-    // overlap them (r18, §2.6; every probe pays both). `_cents` is written
-    // once at publish and never swap-maintained, so the read needs no heal
-    // and no meta fields; a read-only future left behind by a meta-read
-    // failure is harmless.
-    val centsRowsF = {
-      import scala.concurrent.Future
-      import scala.concurrent.ExecutionContext.Implicits.global
-      Future(spark.table(s"${table}_cents").collect())
-    }
-    val meta = readMetaRow(spark, table)
-    val (dims, nlist, storedFp) = (meta.getInt(0), meta.getInt(1), meta.getString(5))
-    require(storedFp == corpusFp,
-      s"probeIvfIndex: index '$table' was published over corpus '$storedFp' " +
-        s"but the caller expects '$corpusFp'")
-    graft.functions.Par.awaitAllSettled(centsRowsF)
-    val cents = Array.fill(nlist)(new Array[Long](dims))
-    scala.concurrent.Await.result(centsRowsF, scala.concurrent.duration.Duration.Zero)
-      .foreach { r => cents(r.getInt(0))(r.getInt(1)) = r.getLong(2) }
+    val centsRows = collectModel(spark, table, "cents")
+    val meta = IvfStore.probeMeta(spark, table, corpusFp)
+    val cents = centsOf(centsRows, meta.nlist, meta.dims)
     // stored-index probe: query batches are small by design — FORCE the
     // broadcast (see broadcastableQueries on why the gate lives elsewhere)
-    ivfRank(committedRows(spark, s"${table}_assign", meta.getSeq[Long](6)),
-      queries, idCol, vecCol, dims, k,
+    ivfRank(IndexStore.committed(spark, s"${table}_assign", meta.eps),
+      queries, idCol, vecCol, meta.dims, k,
       probeUdf(cents, nprobe), broadcastQueries = true)
   }
 
@@ -739,107 +665,25 @@ object Similarity {
     * append(publish(A), B) probes identically to publish(A ∪ B) WITH A's
     * training sample — exactly what the q264 oracle replays. Batch ids
     * already present are refused (a duplicate would duplicate its result
-    * rows); `newCorpusFp` replaces the stored fingerprint. SINGLE-WRITER
-    * maintenance — same contract and collision guards as
-    * [[graft.operators.Dedup.appendLshIndex]]. */
+    * rows); `newCorpusFp` replaces the stored fingerprint. An EMPTY batch
+    * (the quiet ingest tick) only bumps the fingerprint. Staged-commit and
+    * single-writer contract: [[graft.sources.IndexStore]]. */
   def appendIvfIndex(
       batch: DataFrame,
       idCol: String,
       vecCol: String,
       table: String,
       newCorpusFp: String = ""): Unit =
-    // advisory single-writer lease; the staged-commit guards below remain
-    // the correctness backstop (see graft.sources.MaintenanceLease)
-    graft.sources.MaintenanceLease.withLease(batch.sparkSession, table) {
-      appendIvfIndexBody(batch, idCol, vecCol, table, newCorpusFp)
+    IvfStore.append(batch, table, newCorpusFp) {
+      val centsRows = collectModel(batch.sparkSession, table, "cents")
+      meta => {
+        val (qdf, bdims) = quantizedBase(batch, idCol, vecCol)
+        require(bdims == meta.dims || bdims == 0,
+          s"appendIvfIndex: batch dimension $bdims != index '$table' dimension ${meta.dims}")
+        IndexStore.Batch(() => qdf.select(col("id").as("neighbor_id")),
+          () => Map("assign" -> ivfRows(qdf, centsOf(centsRows, meta.nlist, meta.dims))))
+      }
     }
-
-  private def appendIvfIndexBody(
-      batch: DataFrame,
-      idCol: String,
-      vecCol: String,
-      table: String,
-      newCorpusFp: String): Unit = {
-    val spark = batch.sparkSession
-    // `_cents` collect launched FIRST (read-only, publish-time-immutable,
-    // no meta dependency): its job hides behind the meta read + batch
-    // quantization + alloc/dup-check the append pays anyway (r18, §2.6) —
-    // awaited only at the assignment UDF build below
-    val centsRowsF = {
-      import scala.concurrent.Future
-      import scala.concurrent.ExecutionContext.Implicits.global
-      Future(spark.table(s"${table}_cents").collect())
-    }
-    val meta = readMetaRow(spark, table)
-    val (dims, nlist, trainRows, rounds, buckets) =
-      (meta.getInt(0), meta.getInt(1), meta.getInt(2), meta.getInt(3), meta.getInt(4))
-    val (eps, ep) = (meta.getSeq[Long](6), meta.getLong(7))
-    val (qdf, bdims) = quantizedBase(batch, idCol, vecCol)
-    // an EMPTY batch reports dominant dimension 0 (the quiet ingest tick)
-    // — only the fingerprint bump happens, never a spurious dim mismatch
-    require(bdims == dims || bdims == 0,
-      s"appendIvfIndex: batch dimension $bdims != index '$table' dimension $dims")
-    // STAGED COMMIT — the tear is impossible, not just loud (r13 verdict
-    // item #2). Three ordered writes:
-    //   ALLOCATE  `_meta` bumps next_ep only (visibility unchanged; a
-    //             crash after this wastes one epoch number, nothing else);
-    //   STAGE     batch rows land in `_assign` carrying the fresh epoch —
-    //             probes filter to `_meta.eps`, so a crash here (or during
-    //             the write) leaves probes returning EXACTLY the
-    //             pre-append results, and a retry stages under a new epoch;
-    //   COMMIT    `_meta` lands LAST with the epoch added to `eps` and the
-    //             new fingerprint — the single atomic visibility flip.
-    // Orphan epochs are garbage-collected by [[compactIvfIndex]]. The
-    // allocate write only has to land BEFORE the stage write, so it runs
-    // overlapped with the (independent) duplicate-check job and its
-    // latency hides behind work the append pays anyway.
-    val allocF = {
-      import scala.concurrent.Future
-      import scala.concurrent.ExecutionContext.Implicits.global
-      Future(writeIvfMeta(spark, table, dims, nlist, trainRows, rounds, buckets,
-        meta.getString(5), eps, ep + 1L))
-    }
-    // duplicate check against COMMITTED rows only: orphans of a torn
-    // earlier attempt must not block its retry (the retry re-stages under
-    // a fresh epoch; the orphans stay invisible forever)
-    val dup = qdf.select(col("id").as("neighbor_id"))
-      .join(committedRows(spark, s"${table}_assign", eps), Seq("neighbor_id"), "left_semi")
-      .limit(1).count()
-    graft.functions.Par.awaitAllSettled(allocF)
-    require(dup == 0,
-      s"appendIvfIndex: batch contains ids already present in index '$table' — " +
-        "append would duplicate their result rows; dedup the batch first")
-    graft.functions.Par.awaitAllSettled(centsRowsF)
-    val cents = Array.fill(nlist)(new Array[Long](dims))
-    scala.concurrent.Await.result(centsRowsF, scala.concurrent.duration.Duration.Zero)
-      .foreach { r => cents(r.getInt(0))(r.getInt(1)) = r.getLong(2) }
-    val assignF = udf { (q: Seq[Long]) => assignIdxInt(q, cents) }
-    graft.sources.Faults.point("ivf.append.allocated")
-    // ALLOCATOR-COLLISION GUARD (single-writer contract, see
-    // [[graft.operators.Dedup.appendLshIndex]]): a racing append that
-    // allocated after our read leaves next_ep != ep+1 — abort before staging
-    require(readMetaRow(spark, table).getLong(7) == ep + 1L,
-      s"appendIvfIndex: allocator collision on '$table' — another writer is " +
-        "appending concurrently; index maintenance is single-writer, retry " +
-        "after it completes")
-    graft.functions.Par.narrowForWrite(
-        qdf.select(col("id").as("neighbor_id"), col("v").as("cv"),
-          assignF(col("q")).as("c"), lit(ep).as("ep")))
-      .write.mode("append").bucketBy(buckets, "c").sortBy("c")
-      .format("parquet").saveAsTable(s"${table}_assign")
-    graft.sources.Faults.point("ivf.append.staged")
-    // PRE-COMMIT GUARD: the loser of an append race aborts loudly, leaving
-    // the winner's commit as the index state (our staged epoch stays
-    // orphaned-invisible and is GC'd by the next compaction)
-    locally {
-      val mc = readMetaRow(spark, table)
-      require(mc.getLong(7) == ep + 1L && !mc.getSeq[Long](6).contains(ep),
-        s"appendIvfIndex: lost an append race on '$table' — NOT committed; " +
-          "index maintenance is single-writer")
-    }
-    writeIvfMeta(spark, table, dims, nlist, trainRows, rounds, buckets,
-      newCorpusFp, eps :+ ep, ep + 1L, faultTag = "ivf.append.commit")
-  }
 
   /** PUBLISH a stored IVF+PQ index — the FAISS-style production artifact:
     * corpus vectors live in the inverted lists as PQ CODES (`m` small
@@ -854,8 +698,7 @@ object Similarity {
     * `c` (probes join on it exchange-free); `_cents` / `_books` / `_meta`
     * are model-sized. The corpus row count is stored in `_meta` so the
     * probe's adaptive-ADC choice ([[adcMinCandidates]]) costs nothing at
-    * probe time. Independent table writes overlap; `_meta` lands LAST so
-    * a torn publish fails probe validation. */
+    * probe time. Lifecycle: [[graft.sources.IndexStore]]. */
   def publishPqIndex(
       corpus: DataFrame,
       idCol: String,
@@ -868,87 +711,31 @@ object Similarity {
       buckets: Int = 8,
       corpusFp: String = ""): Unit = {
     val spark = corpus.sparkSession
-    // publish owns the index name — clear a dead writer's stale lease
-    graft.sources.MaintenanceLease.clear(spark, table)
-    // one materialization job yields the count AND the smallest-id seed
-    // rows for BOTH trainers (nlist for Lloyd, codes for the PQ books)
-    val (qdf, dims, nRows, init) =
-      quantizedBaseCountedInit(corpus, idCol, vecCol, math.max(nlist, codes))
-    require(dims > 0 && dims % m == 0, s"dim $dims not divisible into $m subspaces")
-    val sub = dims / m
-    // overlapped trainers — see [[trainCoarseAndBooks]]
-    val (cents, bksF) = trainCoarseAndBooks(qdf, nlist, m, codes, sub, rounds, init)
-    val assignF = udf { (q: Seq[Long]) => assignIdxInt(q, cents) }
-    val encodeF = udf { (q: Seq[Long]) =>
-      Array.tabulate(m)(j => codeOfInt(q, j, sub, bksF).toLong)
+    PqStore.publish(spark, table) {
+      // one materialization job yields the count AND the smallest-id seed
+      // rows for BOTH trainers (nlist for Lloyd, codes for the PQ books)
+      val (qdf, dims, nRows, init) =
+        quantizedBaseCountedInit(corpus, idCol, vecCol, math.max(nlist, codes))
+      require(dims > 0 && dims % m == 0, s"dim $dims not divisible into $m subspaces")
+      val sub = dims / m
+      // overlapped trainers — see [[trainCoarseAndBooks]]
+      val (cents, bks) = trainCoarseAndBooks(qdf, nlist, m, codes, sub, rounds, init)
+      import spark.implicits._
+      val books = (for { j <- bks.indices; c <- bks(j).indices; d <- bks(j)(c).indices }
+        yield (j, c, d, bks(j)(c)(d))).toDF("j", "code", "d", "cv")
+      (PqMeta(dims, nlist, m, codes, rounds, buckets, nRows, corpusFp),
+        Map("assign" -> pqRows(qdf, cents, bks, m, sub), "cents" -> centsFrame(spark, cents),
+          "books" -> books))
     }
-    import spark.implicits._
-    val centRows = for { c <- cents.indices; d <- cents(c).indices }
-      yield (c, d, cents(c)(d))
-    val bookRows = for { j <- bksF.indices; c <- bksF(j).indices; d <- bksF(j)(c).indices }
-      yield (j, c, d, bksF(j)(c)(d))
-    locally {
-      import scala.concurrent.Future
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val aF = Future(graft.sources.Bucketing.saveBucketed(
-        graft.functions.Par.narrowForWrite(
-          qdf.select(col("id").as("neighbor_id"), assignF(col("q")).as("c"),
-            encodeF(col("q")).as("cd"), lit(0L).as("ep"))),
-        s"${table}_assign", "c", buckets))
-      val cF = Future(graft.sources.Bucketing.saveBucketed(
-        centRows.toDF("c", "d", "cv"), s"${table}_cents", "c", 1))
-      val bF = Future(graft.sources.Bucketing.saveBucketed(
-        bookRows.toDF("j", "code", "d", "cv"), s"${table}_books", "j", 1))
-      graft.functions.Par.awaitAllSettled(aF, cF, bF)
-    }
-    writePqMeta(spark, table, dims, nlist, m, codes, rounds, buckets, nRows,
-      corpusFp, eps = Seq(0L), nextEp = 1L)
   }
-
-  /** PQ `_meta` writer — ONE definition shared by publish and the
-    * allocate/commit writes of the staged-commit append (see
-    * [[writeIvfMeta]] for the eps/next_ep contract). */
-  private def writePqMeta(spark: org.apache.spark.sql.SparkSession, table: String,
-      dims: Int, nlist: Int, m: Int, codes: Int, rounds: Int, buckets: Int,
-      nRows: Long, corpusFp: String, eps: Seq[Long], nextEp: Long,
-      faultTag: String = null): Unit = {
-    import spark.implicits._
-    // crash-atomic swap — see [[writeIvfMeta]] on why a plain overwrite
-    // would put a destroy window inside the commit flip
-    graft.sources.Bucketing.saveBucketedAtomic(
-      Seq((dims, nlist, m, codes, rounds, buckets, nRows, corpusFp, eps, nextEp,
-          pqLayout(buckets)))
-        .toDF("dims", "nlist", "m", "codes", "rounds", "buckets", "n_rows",
-          "corpus_fp", "eps", "next_ep", "layout"),
-      s"${table}_meta", "dims", 1, faultTag = faultTag)
-  }
-
-  /** Self-describing bucket spec stored in `_meta` for cross-session
-    * recovery — see [[ivfLayout]]. */
-  private def pqLayout(buckets: Int) = s"assign:c:$buckets,cents:c:1,books:j:1"
 
   /** CROSS-SESSION RECOVERY of a published IVF+PQ index — see
-    * [[recoverIvfIndex]] / [[graft.operators.Dedup.recoverLshIndex]] for
-    * the contract; the PQ strict audit additionally re-proves code arity/
-    * range and the `_meta.n_rows` cross-check over the recovered lists. */
+    * [[graft.sources.IndexStore.recover]]; the PQ strict audit additionally
+    * re-proves code arity/range and the `_meta.n_rows` cross-check over the
+    * recovered lists. */
   def recoverPqIndex(spark: org.apache.spark.sql.SparkSession, table: String,
-      expectedCorpusFp: String = null): Unit = {
-    require(
-      graft.sources.Bucketing.recoverBucketedTable(spark, s"${table}_meta", "dims", 1),
-      s"recoverPqIndex: no surviving _meta directory for index '$table' — " +
-        "nothing to recover; republish via publishPqIndex")
-    val m = readMetaRow(spark, table)
-    if (expectedCorpusFp != null)
-      require(m.getString(7) == expectedCorpusFp,
-        s"recoverPqIndex: index '$table' was published over corpus " +
-          s"'${m.getString(7)}' but the caller expects '$expectedCorpusFp'")
-    graft.sources.Bucketing.recoverFromLayout(spark, table,
-      expected = pqLayout(m.getInt(5)), what = "recoverPqIndex")
-    // audit core on the meta fields read above — single-writer recovery,
-    // nothing since the adoption touches `_meta` (saves one head() job)
-    assertPqConsistentCore(spark, table, m.getInt(1), m.getInt(2),
-      m.getInt(3), m.getLong(6), m.getSeq[Long](8), strict = true)
-  }
+      expectedCorpusFp: String = null): Unit =
+    PqStore.recover(spark, table, expectedCorpusFp)
 
   /** [[publishPqIndex]] only if the tables are absent — the amortize-once
     * discipline of [[ensureIvfIndex]]: an existing index must carry THIS
@@ -965,30 +752,10 @@ object Similarity {
       codes: Int = 16,
       rounds: Int = 2,
       buckets: Int = 8,
-      corpusFp: String = ""): Unit = {
-    val cat = corpus.sparkSession.catalog
-    // heal torn swaps before deciding "absent" (see ensureIvfIndex)
-    Seq(s"${table}_assign", s"${table}_meta")
-      .foreach(graft.sources.Bucketing.healIfTorn(corpus.sparkSession, _))
-    if (!cat.tableExists(s"${table}_assign") || !cat.tableExists(s"${table}_cents") ||
-        !cat.tableExists(s"${table}_books") || !cat.tableExists(s"${table}_meta"))
+      corpusFp: String = ""): Unit =
+    PqStore.ensure(corpus.sparkSession, table, corpusFp, (nlist, m, codes, rounds, buckets))(
       publishPqIndex(corpus, idCol, vecCol, table, nlist, m, codes, rounds, buckets,
-        corpusFp)
-    else {
-      val meta = readMetaRow(corpus.sparkSession, table)
-      val storedFp = meta.getString(7)
-      require(storedFp == corpusFp,
-        s"ensurePqIndex: index '$table' exists but was published over corpus " +
-          s"'$storedFp', expected '$corpusFp' — drop the tables or rename")
-      val stored = (meta.getInt(1), meta.getInt(2), meta.getInt(3), meta.getInt(4),
-        meta.getInt(5))
-      val asked = (nlist, m, codes, rounds, buckets)
-      require(stored == asked,
-        s"ensurePqIndex: index '$table' exists with (nlist, m, codes, rounds, " +
-          s"buckets) = $stored but the caller requested $asked — drop the tables " +
-          "to retrain, or pass the published params")
-    }
-  }
+        corpusFp))
 
   /** PROBE a [[publishPqIndex]] index: quantize ONLY the batch (the corpus
     * hash/encode work is amortized in the stored tables), route each query
@@ -1007,30 +774,22 @@ object Similarity {
       k: Int,
       nprobe: Int = 2,
       corpusFp: String = ""): DataFrame = {
-    // launch the two model collects BEFORE the meta read — three
+    // the two model collects launch BEFORE the meta read — three
     // independent model-sized scans, one job latency instead of three
-    // (r18, §2.6; the meta read was already sequentialized ahead of the
-    // overlapped pair, r13)
     val modelRows = collectPqModelRows(spark, table)
-    val meta = readMetaRow(spark, table)
-    val (dims, nlist, m, codes) =
-      (meta.getInt(0), meta.getInt(1), meta.getInt(2), meta.getInt(3))
-    val nRows = meta.getLong(6)
-    val storedFp = meta.getString(7)
-    require(storedFp == corpusFp,
-      s"probePqIndex: index '$table' was published over corpus '$storedFp' " +
-        s"but the caller expects '$corpusFp'")
+    val meta = PqStore.probeMeta(spark, table, corpusFp)
+    val (dims, nlist, m, codes) = (meta.dims, meta.nlist, meta.m, meta.codes)
     val sub = dims / m
-    val (cents, bksF) = buildPqModels(modelRows, dims, nlist, m, codes, sub)
+    val (cents, bksF) = buildPqModels(modelRows, meta)
     val quant = graft.functions.Vectors.fixedPointQuant(1024L)
     val probeF = probeUdf(cents, nprobe)
-    val encoded = committedRows(spark, s"${table}_assign", meta.getSeq[Long](8))
+    val encoded = IndexStore.committed(spark, s"${table}_assign", meta.eps)
     val qside = queries
       .where(col(vecCol).isNotNull && size(col(vecCol)) === dims)
       .select(col(idCol).cast("long").as("query_id"), quant(col(vecCol)).as("qq"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id")).orderBy(col("dist").asc, col("neighbor_id").asc)
-    val expectedCand = nRows.toDouble * nprobe / math.max(1, nlist)
+    val expectedCand = meta.nRows.toDouble * nprobe / math.max(1, nlist)
     // broadcast the QUERY side explicitly: the codes-only lists are so
     // compact that Catalyst's stats would broadcast the CORPUS side and
     // stream the tiny query batch through one task — serializing every
@@ -1061,141 +820,54 @@ object Similarity {
   }
 
   /** APPEND a new batch to a published IVF+PQ index — the maintenance path
-    * of [[publishPqIndex]], completing the lifecycle parity with its LSH
-    * ([[graft.operators.Dedup.appendLshIndex]]) and IVF
-    * ([[appendIvfIndex]]) siblings. The batch is quantized, ROUTED under
-    * the index's STORED centroids and ENCODED under its STORED PQ
-    * codebooks (both read from the model-sized tables; NEITHER is
-    * retrained — appended codes are only comparable under the SAME books,
-    * so codebook drift is handled by explicit republish, never silently).
-    * Because routing and encoding are per-vector deterministic given the
-    * models, append(publish(A), B) probes identically to a one-shot
-    * composed IVF+PQ scan over A ∪ B trained on A — exactly what the q311
-    * oracle replays. Batch ids already present are refused (a duplicate
-    * would duplicate its result rows); `_meta` is rewritten LAST with the
-    * bumped corpus row count (keeping [[probePqIndex]]'s adaptive-ADC
-    * choice honest post-append) and `newCorpusFp`. STAGED COMMIT — same
-    * allocate/stage/commit epoch protocol as [[appendIvfIndex]]: a crash
-    * anywhere before the final `_meta` write leaves probes returning
-    * exactly the pre-append results. SINGLE-WRITER maintenance — same
-    * contract and collision guards as
-    * [[graft.operators.Dedup.appendLshIndex]]. */
+    * of [[publishPqIndex]]. The batch is quantized, ROUTED under the
+    * index's STORED centroids and ENCODED under its STORED PQ codebooks
+    * (NEITHER is retrained — appended codes are only comparable under the
+    * SAME books, so codebook drift is handled by explicit republish, never
+    * silently). Because routing and encoding are per-vector deterministic
+    * given the models, append(publish(A), B) probes identically to a
+    * one-shot composed IVF+PQ scan over A ∪ B trained on A — exactly what
+    * the q311 oracle replays. Batch ids already present are refused; the
+    * commit bumps the stored corpus row count (keeping [[probePqIndex]]'s
+    * adaptive-ADC choice honest post-append) and sets `newCorpusFp`.
+    * Staged-commit and single-writer contract: [[graft.sources.IndexStore]]. */
   def appendPqIndex(
       batch: DataFrame,
       idCol: String,
       vecCol: String,
       table: String,
       newCorpusFp: String = ""): Unit =
-    // advisory single-writer lease; staged-commit guards stay the backstop
-    graft.sources.MaintenanceLease.withLease(batch.sparkSession, table) {
-      appendPqIndexBody(batch, idCol, vecCol, table, newCorpusFp)
+    PqStore.append(batch, table, newCorpusFp) {
+      val modelRows = collectPqModelRows(batch.sparkSession, table)
+      meta => {
+        val (qdf, bdims, bN) = quantizedBaseCounted(batch, idCol, vecCol)
+        require(bdims == meta.dims || bdims == 0,
+          s"appendPqIndex: batch dimension $bdims != index '$table' dimension ${meta.dims}")
+        IndexStore.Batch(() => qdf.select(col("id").as("neighbor_id")),
+          () => {
+            val (cents, bks) = buildPqModels(modelRows, meta)
+            Map("assign" -> pqRows(qdf, cents, bks, meta.m, meta.dims / meta.m))
+          },
+          (pm: PqMeta) => pm.copy(nRows = pm.nRows + bN))
+      }
     }
 
-  private def appendPqIndexBody(
-      batch: DataFrame,
-      idCol: String,
-      vecCol: String,
-      table: String,
-      newCorpusFp: String): Unit = {
-    val spark = batch.sparkSession
-    // model collects launched FIRST (read-only, publish-time-immutable
-    // tables, no meta dependency): their two jobs hide behind the meta
-    // read + batch quantization + alloc/dup-check the append pays anyway
-    // (r18, §2.6) — they are only awaited at the staging write below
-    val modelRows = collectPqModelRows(spark, table)
-    val meta = readMetaRow(spark, table)
-    val (dims, nlist, m, codes, rounds, buckets, nRows) =
-      (meta.getInt(0), meta.getInt(1), meta.getInt(2), meta.getInt(3),
-        meta.getInt(4), meta.getInt(5), meta.getLong(6))
-    val (eps, ep) = (meta.getSeq[Long](8), meta.getLong(9))
-    val (qdf, bdims, bN) = quantizedBaseCounted(batch, idCol, vecCol)
-    // an EMPTY batch reports dominant dimension 0 (the quiet ingest tick)
-    // — only the fingerprint/count bump happens, never a spurious mismatch
-    require(bdims == dims || bdims == 0,
-      s"appendPqIndex: batch dimension $bdims != index '$table' dimension $dims")
-    // ALLOCATE overlapped with the duplicate check (both independent; the
-    // allocate only has to land before the stage write — see appendIvfIndex)
-    val allocF = {
-      import scala.concurrent.Future
-      import scala.concurrent.ExecutionContext.Implicits.global
-      Future(writePqMeta(spark, table, dims, nlist, m, codes, rounds, buckets,
-        nRows, meta.getString(7), eps, ep + 1L))
-    }
-    // committed rows only: orphans of a torn attempt must not block the retry
-    val dup = qdf.select(col("id").as("neighbor_id"))
-      .join(committedRows(spark, s"${table}_assign", eps), Seq("neighbor_id"), "left_semi")
-      .limit(1).count()
-    graft.functions.Par.awaitAllSettled(allocF)
-    require(dup == 0,
-      s"appendPqIndex: batch contains ids already present in index '$table' — " +
-        "append would duplicate their result rows; dedup the batch first")
-    val sub = dims / m
-    val (cents, bksF) = buildPqModels(modelRows, dims, nlist, m, codes, sub)
-    val assignF = udf { (q: Seq[Long]) => assignIdxInt(q, cents) }
-    val encodeF = udf { (q: Seq[Long]) =>
-      Array.tabulate(m)(j => codeOfInt(q, j, sub, bksF).toLong)
-    }
-    // STAGE / COMMIT — see appendIvfIndex for the full contract (the
-    // allocate write already landed, overlapped with the dup check above)
-    graft.sources.Faults.point("pq.append.allocated")
-    // allocator-collision + pre-commit guards — single-writer contract, see
-    // [[graft.operators.Dedup.appendLshIndex]] / [[appendIvfIndex]]
-    require(readMetaRow(spark, table).getLong(9) == ep + 1L,
-      s"appendPqIndex: allocator collision on '$table' — another writer is " +
-        "appending concurrently; index maintenance is single-writer, retry " +
-        "after it completes")
-    graft.functions.Par.narrowForWrite(
-        qdf.select(col("id").as("neighbor_id"), assignF(col("q")).as("c"),
-          encodeF(col("q")).as("cd"), lit(ep).as("ep")))
-      .write.mode("append").bucketBy(buckets, "c").sortBy("c")
-      .format("parquet").saveAsTable(s"${table}_assign")
-    graft.sources.Faults.point("pq.append.staged")
-    locally {
-      val mc = readMetaRow(spark, table)
-      require(mc.getLong(9) == ep + 1L && !mc.getSeq[Long](8).contains(ep),
-        s"appendPqIndex: lost an append race on '$table' — NOT committed; " +
-          "index maintenance is single-writer")
-    }
-    writePqMeta(spark, table, dims, nlist, m, codes, rounds, buckets, nRows + bN,
-      newCorpusFp, eps :+ ep, ep + 1L, faultTag = "pq.append.commit")
-  }
-
-  /** Launch the model-sized `_cents` + `_books` collects of a stored PQ
-    * index as futures — each is a tiny single-bucket scan whose cost is
-    * pure job latency, and every probe/append pays both. Split from the
-    * array-building step (r18) so callers can launch the collects BEFORE
-    * the `_meta` read (the raw rows need no meta fields; the arrays do) —
-    * the two collects then hide behind the meta read and whatever other
-    * work precedes the build (§2.6). Neither table is swap-maintained
-    * (written once at publish), so no heal is needed and a read-only
-    * future left behind by an earlier failure is harmless. */
+  /** Launch the `_cents` + `_books` collects of a stored PQ index (see
+    * [[collectModel]]). */
   private def collectPqModelRows(spark: org.apache.spark.sql.SparkSession,
-      table: String): (scala.concurrent.Future[Array[org.apache.spark.sql.Row]],
-        scala.concurrent.Future[Array[org.apache.spark.sql.Row]]) = {
-    import scala.concurrent.Future
-    import scala.concurrent.ExecutionContext.Implicits.global
-    (Future(spark.table(s"${table}_cents").collect()),
-      Future(spark.table(s"${table}_books").collect()))
-  }
+      table: String): (ModelRows, ModelRows) =
+    (collectModel(spark, table, "cents"), collectModel(spark, table, "books"))
 
   /** Assemble the driver-side PQ model arrays from the collected rows. */
   private def buildPqModels(
-      rows: (scala.concurrent.Future[Array[org.apache.spark.sql.Row]],
-        scala.concurrent.Future[Array[org.apache.spark.sql.Row]]),
-      dims: Int, nlist: Int, m: Int, codes: Int, sub: Int)
-      : (Array[Array[Long]], Array[Array[Array[Long]]]) = {
-    import scala.concurrent.Await
-    import scala.concurrent.duration.Duration
+      rows: (ModelRows, ModelRows),
+      meta: PqMeta): (Array[Array[Long]], Array[Array[Array[Long]]]) = {
     graft.functions.Par.awaitAllSettled(rows._1, rows._2)
-    val cents = Array.fill(nlist)(new Array[Long](dims))
-    Await.result(rows._1, Duration.Zero).foreach { r =>
-      cents(r.getInt(0))(r.getInt(1)) = r.getLong(2)
-    }
-    val bks = Array.fill(m, codes)(new Array[Long](sub))
-    Await.result(rows._2, Duration.Zero).foreach { r =>
+    val bks = Array.fill(meta.m, meta.codes)(new Array[Long](meta.dims / meta.m))
+    settled(rows._2).foreach { r =>
       bks(r.getInt(0))(r.getInt(1))(r.getInt(2)) = r.getLong(3)
     }
-    (cents, bks)
+    (centsOf(rows._1, meta.nlist, meta.dims), bks)
   }
 
   /** Consistency audit over a published IVF+PQ index — the PQ analogue of
@@ -1211,114 +883,29 @@ object Similarity {
     * count — the adaptive-ADC choice reads it, so a stale count after a
     * mangled append is a real (if soft) corruption. */
   def assertPqIndexConsistent(spark: org.apache.spark.sql.SparkSession,
-      table: String, strict: Boolean = false): Unit = {
-    val meta = readMetaRow(spark, table)
-    assertPqConsistentCore(spark, table, meta.getInt(1), meta.getInt(2),
-      meta.getInt(3), meta.getLong(6), meta.getSeq[Long](8), strict)
-  }
-
-  /** The audit body with the meta fields passed in — lets
-    * [[compactPqIndexBody]] overlap the (read-only, `_assign`-only) strict
-    * audit with the `_meta` normalization write (see
-    * [[assertIvfConsistentCore]]). */
-  private def assertPqConsistentCore(spark: org.apache.spark.sql.SparkSession,
-      table: String, nlist: Int, m: Int, codes: Int, nRows: Long,
-      eps: Seq[Long], strict: Boolean): Unit = {
-    // audit what probes SEE: uncommitted epochs are invisible by design
-    val assign = committedRows(spark, s"${table}_assign", eps)
-    if (!strict) {
-      val badC = assign.where(col("c") < 0 || col("c") >= nlist).count()
-      require(badC == 0L,
-        s"PQ index '$table' is corrupt: $badC rows route outside [0, $nlist) " +
-          "— republish via publishPqIndex")
-    } else {
-      val r = assign.agg(
-        count(lit(1)).as("rows"),
-        countDistinct(col("neighbor_id")).as("ids"),
-        sum(when(col("c") < 0 || col("c") >= nlist, 1L).otherwise(0L)).as("badc"),
-        // NULL cd short-circuits to corrupt FIRST: size(NULL)/exists(NULL)
-        // evaluate to NULL, which otherwise(0) would silently pass — the
-        // exact torn-write shape the strict audit is advertised to catch
-        sum(when(col("cd").isNull || size(col("cd")) =!= m ||
-          exists(col("cd"), x => x < 0L || x >= codes.toLong), 1L)
-          .otherwise(0L)).as("badcd"))
-        .head()
-      val (rows, ids) = (r.getLong(0), r.getLong(1))
-      val badC = if (r.isNullAt(2)) 0L else r.getLong(2)
-      val badCd = if (r.isNullAt(3)) 0L else r.getLong(3)
-      require(badC == 0L,
-        s"PQ index '$table' is corrupt: $badC rows route outside [0, $nlist) " +
-          "— republish via publishPqIndex")
-      require(badCd == 0L,
-        s"PQ index '$table' is corrupt: $badCd rows carry a code array that is " +
-          s"not exactly $m codes in [0, $codes) — republish via publishPqIndex")
-      require(ids == rows,
-        s"PQ index '$table' is corrupt: $rows list rows over $ids distinct ids " +
-          "(duplicated ids would duplicate probe results) — republish via publishPqIndex")
-      require(rows == nRows,
-        s"PQ index '$table' is corrupt: _meta.n_rows=$nRows but the lists hold " +
-          s"$rows rows — the adaptive-ADC plan choice would read a stale count; " +
-          "republish via publishPqIndex")
-    }
-  }
+      table: String, strict: Boolean = false): Unit =
+    PqStore.assertConsistent(spark, table, strict)
 
   /** COMPACT an append-maintained IVF+PQ index: rewrite the codes-only
     * `_assign` inverted lists at the STORED bucket spec — rows, models,
     * and fingerprint unchanged, so probes before and after are
     * row-identical (q312's oracle, shared with q311). The STRICT audit
-    * runs after the swap, same discipline as [[compactIvfIndex]] /
-    * [[graft.operators.Dedup.compactLshIndex]]. */
+    * runs after the swap ([[graft.sources.IndexStore.compact]]). */
   def compactPqIndex(spark: org.apache.spark.sql.SparkSession, table: String): Unit =
-    graft.sources.MaintenanceLease.withLease(spark, table) {
-      compactPqIndexBody(spark, table)
-    }
-
-  private def compactPqIndexBody(
-      spark: org.apache.spark.sql.SparkSession, table: String): Unit = {
-    val meta = readMetaRow(spark, table)
-    val (dims, nlist, m, codes, rounds, buckets, nRows, fp) =
-      (meta.getInt(0), meta.getInt(1), meta.getInt(2), meta.getInt(3),
-        meta.getInt(4), meta.getInt(5), meta.getLong(6), meta.getString(7))
-    val eps = meta.getSeq[Long](8)
-    // GC orphaned epochs + normalize committed rows to epoch 0 during the
-    // rewrite (crash-order safe: epoch 0 is always in the stored eps list)
-    graft.sources.Bucketing.compactBucketed(spark, s"${table}_assign", "c", buckets,
-      transform = df => df.where(col("ep").isin(eps: _*))
-        .withColumn("ep", lit(0L)),
-      faultTag = "pq.compact.assign")
-    // strict audit (reads `_assign` only, post-compact eps = Seq(0L) by
-    // construction) overlapped with the `_meta` normalization swap — the
-    // two touch different tables (r18, guide §2.6; see compactIvfIndexBody)
-    locally {
-      import scala.concurrent.Future
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val auditF = Future(assertPqConsistentCore(
-        spark, table, nlist, m, codes, nRows, Seq(0L), strict = true))
-      val metaF = Future(
-        writePqMeta(spark, table, dims, nlist, m, codes, rounds, buckets, nRows, fp,
-          eps = Seq(0L), nextEp = 1L, faultTag = "pq.compact.commit"))
-      graft.functions.Par.awaitAllSettled(auditF, metaF)
-    }
-  }
+    PqStore.compact(spark, table)
 
   /** Self-serve maintenance report for a stored IVF index (committed vs
     * orphan rows/epochs in the inverted lists + data-file count) — see
     * [[graft.sources.Bucketing.epochReport]] /
     * [[graft.operators.Dedup.describeLshIndex]]. */
   def describeIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String): DataFrame = {
-    val meta = readMetaRow(spark, table)
-    graft.sources.Bucketing.epochReport(
-      spark, Seq(s"${table}_assign"), meta.getSeq[Long](6))
-  }
+      table: String): DataFrame =
+    IvfStore.describe(spark, table)
 
   /** [[describeIvfIndex]] for a stored IVF+PQ index. */
   def describePqIndex(spark: org.apache.spark.sql.SparkSession,
-      table: String): DataFrame = {
-    val meta = readMetaRow(spark, table)
-    graft.sources.Bucketing.epochReport(
-      spark, Seq(s"${table}_assign"), meta.getSeq[Long](8))
-  }
+      table: String): DataFrame =
+    PqStore.describe(spark, table)
 
   /** Consistency audit over a published IVF index — the [[graft.operators.Dedup.assertLshIndexConsistent]]
     * analogue. Cheap form: every inverted-list row routes to a legal
@@ -1326,91 +913,108 @@ object Similarity {
     * adds the per-doc invariant: `neighbor_id` is unique across `_assign`
     * (a duplicated id would duplicate probe result rows; the append-time
     * guard enforces this at the seam, the strict audit re-proves it over
-    * the stored table) — one distinct over the id projection. */
+    * the stored table) — one aggregation proves both. */
   def assertIvfIndexConsistent(spark: org.apache.spark.sql.SparkSession,
-      table: String, strict: Boolean = false): Unit = {
-    val meta = readMetaRow(spark, table)
-    assertIvfConsistentCore(spark, table, meta.getInt(1),
-      meta.getSeq[Long](6), strict)
-  }
-
-  /** The audit body with the meta fields passed in — lets
-    * [[compactIvfIndexBody]] run the (read-only, `_assign`-only) strict
-    * audit CONCURRENTLY with the `_meta` normalization write it already
-    * knows the post-state of (guide §2.6: the two jobs touch different
-    * tables and neither reads the other's output). */
-  private def assertIvfConsistentCore(spark: org.apache.spark.sql.SparkSession,
-      table: String, nlist: Int, eps: Seq[Long], strict: Boolean): Unit = {
-    // audit what probes SEE: orphaned (uncommitted) epochs are by design
-    // invisible and must not trip the invariants
-    val assign = committedRows(spark, s"${table}_assign", eps)
-    if (!strict) {
-      val badC = assign.where(col("c") < 0 || col("c") >= nlist).count()
-      require(badC == 0L,
-        s"IVF index '$table' is corrupt: $badC rows route outside [0, $nlist) " +
-          "— republish via publishIvfIndex")
-    } else {
-      // ONE aggregation proves both invariants (routing range + id
-      // uniqueness) — maintenance-window cheap
-      val r = assign.agg(
-        count(lit(1)).as("rows"),
-        countDistinct(col("neighbor_id")).as("ids"),
-        sum(when(col("c") < 0 || col("c") >= nlist, 1L).otherwise(0L)).as("badc"))
-        .head()
-      val (rows, ids, badC) = (r.getLong(0), r.getLong(1),
-        if (r.isNullAt(2)) 0L else r.getLong(2))
-      require(badC == 0L,
-        s"IVF index '$table' is corrupt: $badC rows route outside [0, $nlist) " +
-          "— republish via publishIvfIndex")
-      require(ids == rows,
-        s"IVF index '$table' is corrupt: $rows list rows over $ids distinct ids " +
-          "(duplicated ids would duplicate probe results) — republish via publishIvfIndex")
-    }
-  }
+      table: String, strict: Boolean = false): Unit =
+    IvfStore.assertConsistent(spark, table, strict)
 
   /** COMPACT an append-maintained IVF index: rewrite the `_assign`
     * inverted lists at the STORED bucket spec — rows, centroids, and
     * fingerprint unchanged, so probes before and after are row-identical
     * (q277's oracle, shared with q263/q264). The `_cents`/`_meta` tables
-    * are model-sized and never appended, so only the lists compact. The
-    * STRICT audit runs after the swap — the maintenance window is the one
-    * place the full-table invariant is cheap relative to the rewrite. */
+    * are model-sized and never appended, so only the lists compact; the
+    * STRICT audit runs after the swap ([[graft.sources.IndexStore.compact]]). */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession, table: String): Unit =
-    graft.sources.MaintenanceLease.withLease(spark, table) {
-      compactIvfIndexBody(spark, table)
-    }
+    IvfStore.compact(spark, table)
 
-  private def compactIvfIndexBody(
-      spark: org.apache.spark.sql.SparkSession, table: String): Unit = {
-    val meta = readMetaRow(spark, table)
-    val (dims, nlist, trainRows, rounds, buckets, fp) =
-      (meta.getInt(0), meta.getInt(1), meta.getInt(2), meta.getInt(3),
-        meta.getInt(4), meta.getString(5))
-    val eps = meta.getSeq[Long](6)
-    // the rewrite GCs orphaned epochs (rows staged by torn appends) and
-    // normalizes every committed row to epoch 0 — safe in any crash order:
-    // epoch 0 is always in the stored eps list, so probes between the data
-    // swap and the meta normalization below still see every row
-    graft.sources.Bucketing.compactBucketed(spark, s"${table}_assign", "c", buckets,
-      transform = df => df.where(col("ep").isin(eps: _*))
-        .withColumn("ep", lit(0L)),
-      faultTag = "ivf.compact.assign")
-    // the strict audit reads only the just-swapped `_assign` (post-compact
-    // state: every row at epoch 0) and the meta normalization writes only
-    // `_meta` — independent, so overlap the audit's aggregation job with
-    // the meta swap's write + renames (r18, guide §2.6). Post-state eps is
-    // Seq(0L) by construction, identical to what a post-commit re-read of
-    // _meta would return.
-    locally {
-      import scala.concurrent.Future
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val auditF = Future(
-        assertIvfConsistentCore(spark, table, nlist, Seq(0L), strict = true))
-      val metaF = Future(
-        writeIvfMeta(spark, table, dims, nlist, trainRows, rounds, buckets, fp,
-          eps = Seq(0L), nextEp = 1L, faultTag = "ivf.compact.commit"))
-      graft.functions.Par.awaitAllSettled(auditF, metaF)
+  /** The IVF/PQ audit over the committed `_assign` lists (see
+    * [[assertIvfIndexConsistent]] / [[assertPqIndexConsistent]]); `pq`
+    * carries (m, codes, n_rows) for the PQ-only invariants. */
+  private def auditLists(spark: org.apache.spark.sql.SparkSession, table: String,
+      title: String, nlist: Int, eps: Seq[Long], strict: Boolean,
+      pq: Option[(Int, Int, Long)]): Unit = {
+    // audit what probes SEE: uncommitted epochs are invisible by design
+    val assign = IndexStore.committed(spark, s"${table}_assign", eps)
+    val badRoute = col("c") < 0 || col("c") >= nlist
+    def corrupt(what: String) =
+      s"${title.toUpperCase} index '$table' is corrupt: $what — republish via " +
+        s"publish${title}Index"
+    if (!strict) {
+      val badC = assign.where(badRoute).count()
+      require(badC == 0L, corrupt(s"$badC rows route outside [0, $nlist)"))
+    } else {
+      // NULL cd short-circuits to corrupt FIRST: size(NULL)/exists(NULL)
+      // evaluate to NULL, which otherwise(0) would silently pass — the
+      // exact torn-write shape the strict audit is advertised to catch
+      val badCd = pq.map { case (m, codes, _) =>
+        sum(when(col("cd").isNull || size(col("cd")) =!= m ||
+          exists(col("cd"), x => x < 0L || x >= codes.toLong), 1L).otherwise(0L))
+      }.getOrElse(lit(0L))
+      val r = assign.agg(
+        count(lit(1)).as("rows"),
+        countDistinct(col("neighbor_id")).as("ids"),
+        sum(when(badRoute, 1L).otherwise(0L)).as("badc"),
+        badCd.as("badcd"))
+        .head()
+      def orZero(i: Int) = if (r.isNullAt(i)) 0L else r.getLong(i)
+      val (rows, ids) = (r.getLong(0), r.getLong(1))
+      require(orZero(2) == 0L, corrupt(s"${orZero(2)} rows route outside [0, $nlist)"))
+      pq.foreach { case (m, codes, _) =>
+        require(orZero(3) == 0L, corrupt(s"${orZero(3)} rows carry a code array that " +
+          s"is not exactly $m codes in [0, $codes)"))
+      }
+      require(ids == rows, corrupt(s"$rows list rows over $ids distinct ids " +
+        "(duplicated ids would duplicate probe results)"))
+      pq.foreach { case (_, _, nRows) =>
+        require(rows == nRows, corrupt(s"_meta.n_rows=$nRows but the lists hold $rows " +
+          "rows — the adaptive-ADC plan choice would read a stale count"))
+      }
     }
+  }
+
+  /** Typed `_meta` row of a stored IVF index. */
+  final case class IvfMeta(
+      dims: Int, nlist: Int, trainRows: Int, rounds: Int, buckets: Int, corpusFp: String,
+      eps: Seq[Long] = Seq(0L), nextEp: Long = 1L) extends IndexMeta[IvfMeta] {
+    def withEpochs(corpusFp: String, eps: Seq[Long], nextEp: Long): IvfMeta =
+      copy(corpusFp = corpusFp, eps = eps, nextEp = nextEp)
+  }
+
+  /** Typed `_meta` row of a stored IVF+PQ index. */
+  final case class PqMeta(
+      dims: Int, nlist: Int, m: Int, codes: Int, rounds: Int, buckets: Int, nRows: Long,
+      corpusFp: String, eps: Seq[Long] = Seq(0L), nextEp: Long = 1L)
+      extends IndexMeta[PqMeta] {
+    def withEpochs(corpusFp: String, eps: Seq[Long], nextEp: Long): PqMeta =
+      copy(corpusFp = corpusFp, eps = eps, nextEp = nextEp)
+  }
+
+  private val assignTable = IndexStore.Table("assign", "c", epochGated = true)
+  private val centsTable = IndexStore.Table("cents", "c", epochGated = false)
+
+  /** The IVF family of [[graft.sources.IndexStore]]: epoch-gated `_assign`
+    * lists plus the model-sized `_cents`. */
+  private object IvfStore extends IndexStore[IvfMeta]("ivf", "Ivf", "dims",
+      Seq(assignTable, centsTable), idTable = "assign", idCol = "neighbor_id")(
+      Encoders.product[IvfMeta]) {
+    def params(m: IvfMeta): Product = (m.nlist, m.trainRows, m.rounds, m.buckets)
+    val paramNames = "(nlist, train_rows, rounds, buckets)"
+    def audit(spark: org.apache.spark.sql.SparkSession, table: String, m: IvfMeta,
+        strict: Boolean): Unit =
+      auditLists(spark, table, "Ivf", m.nlist, m.eps, strict, pq = None)
+  }
+
+  /** The IVF+PQ family of [[graft.sources.IndexStore]]: epoch-gated
+    * codes-only `_assign` lists plus the model-sized `_cents` and `_books`. */
+  private object PqStore extends IndexStore[PqMeta]("pq", "Pq", "dims",
+      Seq(assignTable, centsTable, IndexStore.Table("books", "j", epochGated = false)),
+      idTable = "assign", idCol = "neighbor_id")(Encoders.product[PqMeta]) {
+    def params(m: PqMeta): Product = (m.nlist, m.m, m.codes, m.rounds, m.buckets)
+    val paramNames = "(nlist, m, codes, rounds, buckets)"
+    def audit(spark: org.apache.spark.sql.SparkSession, table: String, m: PqMeta,
+        strict: Boolean): Unit =
+      auditLists(spark, table, "Pq", m.nlist, m.eps, strict,
+        pq = Some((m.m, m.codes, m.nRows)))
   }
 
   /** SQL-PORTABLE product quantization: the fixed-point treatment of

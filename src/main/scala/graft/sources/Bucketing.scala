@@ -35,6 +35,18 @@ object Faults {
     if (failAt == name)
       throw new RuntimeException(s"injected fault at crash point '$name'")
   }
+
+  /** Run `body` with crash point `name` armed (always disarmed after) and
+    * require that the fault fired — the torn-maintenance step of the
+    * fault-injection oracle queries. */
+  def tearAt(name: String)(body: => Unit): Unit = {
+    failAt = name
+    val torn =
+      try { body; false }
+      catch { case e: RuntimeException if e.getMessage.contains("injected") => true }
+      finally failAt = null
+    require(torn, s"the crash injection at '$name' did not fire")
+  }
 }
 
 /** Advisory maintenance LEASE for append/compact on published indexes
@@ -309,10 +321,7 @@ object Bucketing {
       buckets: Int, transform: DataFrame => DataFrame = identity,
       faultTag: String = null): Unit = {
     import org.apache.spark.sql.functions.{col, hash, lit, pmod}
-    val tmp = s"${table}__compact"
-    val old = s"${table}__old"
-    // heal any half-finished previous swap first — also clears stale
-    // `__old`/`__compact` leftovers that would collide with the renames
+    // heal any half-finished previous swap first, so the live name resolves
     repairCompacted(spark, table)
     // co-locate each WRITER bucket (pmod(murmur3(key), n)) into one task:
     // the bucketed writer emits one file per (task, bucket), so any
@@ -322,20 +331,12 @@ object Bucketing {
     // repartitioning BY the bucket-id expression does.
     // `transform` lets the index compactions GC orphaned (uncommitted)
     // epochs and normalize the committed ones during the rewrite they
-    // already pay for — identity for plain tables.
-    saveBucketed(
+    // already pay for — identity for plain tables. The stage + swap (and
+    // its `faultTag` crash points) are [[saveBucketedAtomic]]'s.
+    saveBucketedAtomic(
       transform(spark.table(table))
         .repartition(buckets, pmod(hash(col(keyCol)), lit(buckets))),
-      tmp, keyCol, buckets)
-    // `faultTag` arms the same three named in-swap crash points as
-    // [[saveBucketedAtomic]] — specs kill the compactor inside each window
-    // and prove [[repairCompacted]] restores a complete copy
-    if (faultTag != null) Faults.point(s"$faultTag.staged")
-    spark.sql(s"ALTER TABLE $table RENAME TO $old")
-    if (faultTag != null) Faults.point(s"$faultTag.aside")
-    spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
-    if (faultTag != null) Faults.point(s"$faultTag.renamed")
-    spark.sql(s"DROP TABLE $old")
+      table, keyCol, buckets, faultTag)
   }
 
   /** REPAIR a [[compactBucketed]] swap that died mid-sequence. Idempotent;
@@ -373,7 +374,7 @@ object Bucketing {
     * everything needed to re-register the table except the bucket spec,
     * which callers pass back in (the index families store theirs in
     * `_meta` so the whole index is self-describing — see
-    * [[graft.operators.Dedup.recoverLshIndex]]).
+    * [[IndexStore.recover]]).
     *
     * Two phases, both driver-side filesystem METADATA ops (nothing is
     * rewritten — recovering a 100 TB index costs two renames + a CREATE):
@@ -459,42 +460,6 @@ object Bucketing {
         require(fs.rename(adopt, live),
           s"recoverBucketedTable: rename $adopt -> $live failed")
         true
-    }
-  }
-
-  /** Shared tail of the index families' recover* entry points (LSH/IVF/PQ):
-    * after `_meta` itself is re-adopted, read its stored `layout` — the
-    * self-describing bucket spec, a `<suffix>:<keyCol>:<numBuckets>` list —
-    * assert it matches the family's expected spec (a mismatch means the
-    * surviving directory belongs to a DIFFERENT index family or the caller
-    * named the wrong table — recovering it under the wrong spec would
-    * produce silently wrong bucketed joins), and re-adopt every data table
-    * it declares via [[recoverBucketedTable]]. */
-  def recoverFromLayout(spark: SparkSession, table: String,
-      expected: String, what: String): Unit = {
-    val mRow = spark.table(s"${table}_meta").head()
-    val layout = mRow.getString(mRow.fieldIndex("layout"))
-    require(layout == expected,
-      s"$what: '$table' _meta declares layout '$layout' but this family " +
-        s"expects '$expected' — wrong index family or table name")
-    // the data tables are INDEPENDENT (disjoint warehouse dirs + catalog
-    // entries; each adoption is fs/catalog metadata ops plus one
-    // footer-sized schema job), so overlap their adoptions — recovery is
-    // single-writer maintenance, and a failure in any one still settles
-    // the siblings before rethrowing (no half-running adoption left behind
-    // for the caller's republish repair to race)
-    val adoptions = layout.split(',').toSeq.map { entry =>
-      val Array(sfx, key, nb) = entry.split(':')
-      import scala.concurrent.Future
-      import scala.concurrent.ExecutionContext.Implicits.global
-      (sfx, Future(recoverBucketedTable(spark, s"${table}_$sfx", key, nb.toInt)))
-    }
-    graft.functions.Par.awaitAllSettled(adoptions.map(_._2): _*)
-    adoptions.foreach { case (sfx, f) =>
-      require(
-        scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Zero),
-        s"$what: no surviving directory for '${table}_$sfx' — index data " +
-          "lost; republish")
     }
   }
 

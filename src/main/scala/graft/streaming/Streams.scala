@@ -983,17 +983,12 @@ object Streams {
       spark: SparkSession, incoming: DataFrame, indexTable: String,
       batchPreds: Seq[org.apache.spark.sql.Column],
       corpusFp: String = ""): DataFrame = {
-    val sinkSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("incoming_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("corpus_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("jaccard", org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("batch", org.apache.spark.sql.types.LongType)))
-    streamIndexProbe(spark, incoming, batchPreds, sinkSchema, "lshstream") { batch =>
+    streamIndexProbe(spark, incoming, batchPreds,
+        "incoming_id BIGINT, corpus_id BIGINT, jaccard DOUBLE", "lshstream") { batch =>
       graft.operators.Dedup
         .probeLshIndex(batch.sparkSession, batch, "doc_id", "text", indexTable,
           corpusFp = corpusFp)
-    }.select(col("incoming_id"), col("corpus_id"), col("jaccard"))
-      .localCheckpoint(true)
+    }
   }
 
   /** Shared scaffold of the stored-index stream probes: stage `incoming`
@@ -1001,13 +996,14 @@ object Streams {
     * with `maxFilesPerTrigger=1` (one micro-batch per file), run `probe`
     * per batch via `foreachBatch` into a batchId-partitioned sink
     * (idempotent overwrite = exactly-once under replay), and read the
-    * union back. The query subset and batch split are the CALLER's —
-    * this layer owns only the streaming plumbing. */
+    * union back as `columns` (the probe's output, a DDL column list). The
+    * query subset and batch split are the CALLER's — this layer owns only
+    * the streaming plumbing. */
   private def streamIndexProbe(
       spark: SparkSession,
       incoming: DataFrame,
       batchPreds: Seq[org.apache.spark.sql.Column],
-      sinkSchema: org.apache.spark.sql.types.StructType,
+      columns: String,
       tag: String)(probe: DataFrame => DataFrame): DataFrame = {
     import java.nio.file.Files
     require(batchPreds.nonEmpty, "streamIndexProbe needs at least one batch predicate")
@@ -1030,7 +1026,8 @@ object Streams {
         .start()
       try q.processAllAvailable()
       finally q.stop()
-      spark.read.schema(sinkSchema).parquet(sinkDir.toString)
+      spark.read.schema(org.apache.spark.sql.types.StructType.fromDDL(s"$columns, batch BIGINT"))
+        .parquet(sinkDir.toString).drop("batch")
         .localCheckpoint(true)
     } finally {
       rmTree(srcDir)
@@ -1051,18 +1048,12 @@ object Streams {
       spark: SparkSession, incoming: DataFrame, indexTable: String, k: Int,
       batchPreds: Seq[org.apache.spark.sql.Column],
       corpusFp: String = ""): DataFrame = {
-    val sinkSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("query_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("rank", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("neighbor_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("cosine", org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("batch", org.apache.spark.sql.types.LongType)))
-    streamIndexProbe(spark, incoming, batchPreds, sinkSchema, "ivfstream") { batch =>
+    streamIndexProbe(spark, incoming, batchPreds,
+        "query_id BIGINT, rank BIGINT, neighbor_id BIGINT, cosine DOUBLE", "ivfstream") { batch =>
       graft.operators.Similarity
         .probeIvfIndex(batch.sparkSession, batch, "vec_id", "embedding", indexTable,
           k = k, corpusFp = corpusFp)
-    }.select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
-      .localCheckpoint(true)
+    }
   }
 
   /** STREAMING ANN against a PUBLISHED IVF+PQ index
@@ -1080,17 +1071,11 @@ object Streams {
       batchPreds: Seq[org.apache.spark.sql.Column],
       nprobe: Int = 2,
       corpusFp: String = ""): DataFrame = {
-    val sinkSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("query_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("rank", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("neighbor_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("dist", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("batch", org.apache.spark.sql.types.LongType)))
-    streamIndexProbe(spark, incoming, batchPreds, sinkSchema, "pqstream") { batch =>
+    streamIndexProbe(spark, incoming, batchPreds,
+        "query_id BIGINT, rank BIGINT, neighbor_id BIGINT, dist BIGINT", "pqstream") { batch =>
       graft.operators.Similarity
         .probePqIndex(batch.sparkSession, batch, "vec_id", "embedding", indexTable,
           k = k, nprobe = nprobe, corpusFp = corpusFp)
-    }.select(col("query_id"), col("rank"), col("neighbor_id"), col("dist"))
-      .localCheckpoint(true)
+    }
   }
 }

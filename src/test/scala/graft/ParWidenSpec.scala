@@ -50,5 +50,15 @@ class ParWidenSpec extends SparkSpecBase {
     Future { Thread.sleep(200); p.failure(new RuntimeException("first")) }
     val e2 = intercept[RuntimeException] { Par.awaitAllSettled(late, early) }
     assert(e2.getMessage === "first")
+    // every OTHER failure rides along as a suppressed exception, in order
+    val e3 = intercept[RuntimeException] {
+      Par.awaitAllSettled(
+        Future[Unit] { throw new RuntimeException("a") }, Future(1),
+        Future[Unit] { throw new IllegalStateException("b") },
+        Future[Unit] { throw new IllegalArgumentException("c") })
+    }
+    assert(e3.getMessage === "a")
+    assert(e3.getSuppressed.map(_.getMessage).toSeq === Seq("b", "c"))
+    assert(e.getSuppressed.isEmpty)
   }
 }

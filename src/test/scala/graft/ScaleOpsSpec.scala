@@ -18,6 +18,11 @@ class ScaleOpsSpec extends SparkSpecBase {
     def pairsDf(xs: Seq[(String, Long)]) = xs.toDF("g", "v")
   }
 
+  /** A not-yet-existing path inside a fresh temp dir — concurrent runs
+    * never collide. */
+  private def freshPath(name: String): String =
+    java.nio.file.Files.createTempDirectory("graft_test_").resolve(name).toString
+
   // ---- bloom ----
 
   test("bloom: prune keeps every true match (no false negatives)") {
@@ -140,12 +145,8 @@ class ScaleOpsSpec extends SparkSpecBase {
     // 64x64 grid of (a, b) points, 10 files
     val pts = (for { a <- 0 until 64; b <- 0 until 64 } yield (a.toLong, b.toLong))
       .toDF("a", "b")
-    val zPath = "/tmp/graft_test_zorder_grid"
-    val linPath = "/tmp/graft_test_linear_grid"
-    val fs = new org.apache.hadoop.fs.Path("/tmp")
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(zPath), true)
-    fs.delete(new org.apache.hadoop.fs.Path(linPath), true)
+    val zPath = freshPath("zorder_grid")
+    val linPath = freshPath("linear_grid")
     ZOrder.writeZOrdered(pts, zPath, "a", "b", bits = 6, numFiles = 16)
     pts.repartitionByRange(16, col("a"), col("b"))
       .sortWithinPartitions(col("a"), col("b"))
@@ -211,10 +212,7 @@ class ScaleOpsSpec extends SparkSpecBase {
       .toDF("g", "u", "cents")
     val hist = rows.where(col("u") < 7)
     val delta = rows.where(col("u") >= 7)
-    val path = "/tmp/graft_test_aggstate"
-    new org.apache.hadoop.fs.Path("/tmp")
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(path), true)
+    val path = freshPath("aggstate")
     val inc = graft.operators.Incremental.maintainedStats(s, path,
       hist, delta, col("g"), col("u"), col("cents"))
       .collect().map(r => (r.getString(0), (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
@@ -555,10 +553,7 @@ class ScaleOpsSpec extends SparkSpecBase {
     val s = spark
     import s.implicits._
     val pts = (0L until 100L).map(i => (i, i % 7)).toDF("a", "b")
-    val path = "/tmp/graft_test_zorder_rows"
-    new org.apache.hadoop.fs.Path("/tmp")
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-      .delete(new org.apache.hadoop.fs.Path(path), true)
+    val path = freshPath("zorder_rows")
     ZOrder.writeZOrdered(pts, path, "a", "b", bits = 7, numFiles = 4)
     val back = s.read.parquet(path).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
