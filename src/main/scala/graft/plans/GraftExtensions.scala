@@ -1,19 +1,27 @@
 package graft.plans
 
+import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.internal.StaticSQLConf
 import org.apache.spark.sql.types.BooleanType
 
 /** Catalyst extensions for the engine, registered via
   * `spark.sql.extensions=graft.plans.GraftExtensions`.
   *
-  * Currently one rule: [[NanGuardPushdown]] — the "NaN canonicalization
-  * rule" anticipated in SURVEY §4 (custom work item 4).
+  * One optimizer rule, [[NanGuardPushdown]] — the "NaN canonicalization
+  * rule" anticipated in SURVEY §4 (custom work item 4) — the native as-of
+  * join strategy and the codegen vector/string functions. Loading it also
+  * sizes Spark's generated-class cache to graft's working set
+  * ([[GraftExtensions.sizeCodegenCache]]).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    // runs inside getOrCreate: the context exists, the session's shared
+    // state (and with it the SQLConf CodeGenerator sizes from) does not yet
+    org.apache.spark.GraftConf.activeConf.foreach(GraftExtensions.sizeCodegenCache)
     ext.injectOptimizerRule(_ => NanGuardPushdown)
     ext.injectPlannerStrategy(_ => new AsOfJoinStrategy)
     ext.injectFunction((
@@ -37,6 +45,25 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         classOf[JaroWinkler].getName, "jaro_winkler"),
       (args: Seq[Expression]) => JaroWinkler(args(0), args(1))))
   }
+}
+
+object GraftExtensions {
+  /** Entries for Spark's generated-class cache. Spark's default of 100 is
+    * split over 4 LRU segments (25 each), while one pass of graft's
+    * ordered-series + near-dup ops compiles 186 distinct classes and one
+    * call of every benchmarked operator about 640 — so under the default a
+    * class is evicted before its next use and each repeated series pass
+    * recompiles ~160 of them (~11 ms apiece in Janino). 1024 leaves 256 per
+    * segment: the whole catalogue stays resident. */
+  val CodegenCacheEntries = 1024
+
+  /** Set `spark.sql.codegen.cache.maxEntries` to [[CodegenCacheEntries]]
+    * unless the user set it. It is a static conf read ONCE, when
+    * `CodeGenerator` first initializes, so this only takes effect when the
+    * first graft session is built before any query has compiled code in
+    * the JVM; otherwise the existing cache is kept as it is. */
+  def sizeCodegenCache(conf: SparkConf): SparkConf =
+    conf.setIfMissing(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key, CodegenCacheEntries.toString)
 }
 
 /** Restores parquet predicate pushdown through the NaN→null canonicalization

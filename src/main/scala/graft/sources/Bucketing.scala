@@ -2,14 +2,6 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Bucketed tables: pre-shuffle co-location so repeated joins/aggregations
-  * on the same key run with NO exchange — the standard way to amortize the
-  * big-fact-join shuffle at 100 TB (write once bucketed by the join key;
-  * every later join on that key is exchange-free).
-  *
-  * The reference has no storage layer at all (in-memory arrays); this is
-  * part of the additive Spark-native surface, SURVEY §2.1.
-  */
 /** Driver-side crash points for the staged-commit index seams: a spec sets
   * `failAt` to a named point and the next maintenance call dies EXACTLY
   * there, so the crash-ordering contract (uncommitted epochs are invisible
@@ -173,14 +165,16 @@ object MaintenanceLease {
   }
 }
 
+/** Bucketed tables: pre-shuffle co-location so repeated joins/aggregations
+  * on the same key run with NO exchange — the standard way to amortize the
+  * big-fact-join shuffle at 100 TB (write once bucketed by the join key;
+  * every later join on that key is exchange-free).
+  *
+  * The reference has no storage layer at all (in-memory arrays); this is
+  * part of the additive Spark-native surface, SURVEY §2.1.
+  */
 object Bucketing {
 
-  /** Save `df` as a bucketed managed table (overwriting), bucketed+sorted by
-    * `keyCol` into `buckets` files per partition. */
-  /** Delete `table`'s managed warehouse directory if it exists on disk —
-    * the in-memory catalog is per-session but the managed location isn't,
-    * so a prior session's directory survives as an orphan that collides
-    * with both `saveAsTable` and `ALTER TABLE ... RENAME` into the name. */
   private def managedDir(spark: SparkSession, table: String): org.apache.hadoop.fs.Path =
     new org.apache.hadoop.fs.Path(
       spark.conf.get("spark.sql.warehouse.dir") + "/" + table.toLowerCase)
@@ -189,12 +183,18 @@ object Bucketing {
     new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"))
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  /** Delete `table`'s managed warehouse directory if it exists on disk —
+    * the in-memory catalog is per-session but the managed location isn't,
+    * so a prior session's directory survives as an orphan that collides
+    * with both `saveAsTable` and `ALTER TABLE ... RENAME` into the name. */
   private def deleteManagedDir(spark: SparkSession, table: String): Unit = {
     val loc = managedDir(spark, table)
     val fs = hadoopFs(spark)
     if (fs.exists(loc)) fs.delete(loc, true)
   }
 
+  /** Save `df` as a bucketed managed table (overwriting), bucketed+sorted by
+    * `keyCol` into `buckets` files per partition. */
   def saveBucketed(df: DataFrame, table: String, keyCol: String, buckets: Int): Unit = {
     val spark = df.sparkSession
     // the in-memory catalog is per-session but the managed location isn't:
@@ -555,14 +555,6 @@ object Partitioned {
         .write.mode("overwrite").partitionBy(partCol).parquet(path)
   }
 
-  /** TARGETED DELETE over a Hive-partitioned layout — the
-    * right-to-be-forgotten rewrite: only partitions that actually CONTAIN
-    * matching rows are rewritten (dynamic partition overwrite); untouched
-    * partitions keep their files byte-identical, so at 100 TB a
-    * single-user purge rewrites that user's few partitions, not the
-    * table. Partitions whose every row matches produce no output under
-    * dynamic overwrite and are removed explicitly. Returns the affected
-    * partition values (model-sized — one value per partition). */
   /** Distinct partition values of `df.partCol` as strings, sorted. NULL
     * partition values are refused loudly: Hive's
     * `__HIVE_DEFAULT_PARTITION__` escape is not modeled here and a null
@@ -617,6 +609,14 @@ object Partitioned {
     }
   }
 
+  /** TARGETED DELETE over a Hive-partitioned layout — the
+    * right-to-be-forgotten rewrite: only partitions that actually CONTAIN
+    * matching rows are rewritten (dynamic partition overwrite); untouched
+    * partitions keep their files byte-identical, so at 100 TB a
+    * single-user purge rewrites that user's few partitions, not the
+    * table. Partitions whose every row matches produce no output under
+    * dynamic overwrite and are removed explicitly. Returns the affected
+    * partition values (model-sized — one value per partition). */
   def targetedDelete(
       spark: SparkSession,
       path: String,
