@@ -90,19 +90,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // OrderedScan sizes bucket exchanges up to 256 partitions; keep them on
-      // the bypass-merge shuffle writer (no map-side sort, no map-side spill)
-      .config("spark.shuffle.sort.bypassMergeThreshold", 2048)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.builder(cpus.toInt).getOrCreate()
     // ERROR, not WARN: the driver keeps only the LAST 2000 chars of stdout
     // and a WARN (e.g. WindowExec on a tiny carry window) landing between
     // the last query and the metric line eats ~170 chars of the budget the

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Physical-plan quality audit over every `SparkEntry` query: counts the
   * plan features that decide 100 TB behavior (exchanges, broadcast vs
   * sort-merge joins, whole-stage-codegen spans, parquet pushdown) and flags
@@ -12,19 +10,12 @@ import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = LocalSession.builder(8)
       // AQE wraps the whole plan in an AdaptiveSparkPlanExec LEAF, hiding
       // every operator from tree traversal and codegen markers from the
       // string — the audit inspects the STATIC shape, so turn it off here
       // (production sessions keep it on; it only ever improves these plans)
       .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -552,19 +552,7 @@ object ScaleDrill {
     val x = sys.env.getOrElse("SPARK_GRAFT_DRILL_X", "20").toInt
     val budget = sys.env.getOrElse("SPARK_GRAFT_DRILL_BUDGET_SEC", "120").toDouble
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // OrderedScan sizes bucket exchanges up to 256 partitions; keep them on
-      // the bypass-merge shuffle writer (no map-side sort, no map-side spill)
-      .config("spark.shuffle.sort.bypassMergeThreshold", 2048)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.builder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // x=1 pass first: the per-op BASELINE the scale ratio divides by, and
     // the JIT/codegen warmup that keeps the amplified pass honest

@@ -9,18 +9,7 @@ object Verify {
     // optional: further args restrict which queries run (local iteration)
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // OrderedScan sizes bucket exchanges up to 256 partitions; keep them on
-      // the bypass-merge shuffle writer (no map-side sort, no map-side spill)
-      .config("spark.shuffle.sort.bypassMergeThreshold", 2048)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession.builder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val failed = try run(spark, sfDir, outDir, only) finally spark.stop()
     if (failed.nonEmpty) {
@@ -30,9 +19,13 @@ object Verify {
   }
 
   /** Dump every query in `only` (all when empty) and `oracle_sql.json`
-    * into `outDir`; returns the names of the queries that threw. */
+    * into `outDir`; returns the names of the queries that threw. A name in
+    * `only` that no query declares is an `IllegalArgumentException` before
+    * anything runs. */
   def run(spark: SparkSession, sfDir: String, outDir: String,
       only: Set[String]): Seq[String] = {
+    val undeclared = (only -- SparkEntry.queries.keySet).toSeq.sorted
+    require(undeclared.isEmpty, s"undeclared queries: ${undeclared.mkString(" ")}")
     new java.io.File(outDir).mkdirs()
     val failed = SparkEntry.queries.toSeq.flatMap { case (name, fn) =>
       if (only.nonEmpty && !only(name)) None

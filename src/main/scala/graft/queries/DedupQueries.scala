@@ -1,0 +1,1293 @@
+package graft
+package queries
+
+import org.apache.spark.sql.functions._
+
+import graft.functions.Text
+import graft.operators._
+import graft.queries.QueryKit._
+
+/** Deduplication: exact, MinHash/SimHash/Jaccard near-dup, containment,
+  * semantic dedup, duplicate clusters and the dedup data-card panels. */
+object DedupQueries extends QueryFamily {
+
+  // ---- dedup: exact (hash-groupBy on normalized fingerprint) ----
+  Q("q36_dedup_exact", oracle =
+      """SELECT md5(regexp_replace(lower(text), '[^a-z0-9]', '', 'g')) AS fp,
+        |min(doc_id) AS keep_id, count(*) AS n_dups
+        |FROM documents GROUP BY 1""".stripMargin) { (s, dir) =>
+      Dedup.exact(t(s, dir, "documents"), "doc_id", "text")
+  }
+
+  // ---- dedup: brute-force token-set Jaccard (the LSH baseline) ----
+  Q("q41_jaccard_pairs", oracle =
+      """WITH t AS (SELECT doc_id, list_distinct(string_split(trim(text),' ')) AS tok
+        |           FROM documents WHERE doc_id < 100)
+        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+        |round(len(list_intersect(a.tok, b.tok))::DOUBLE
+        |  / (len(a.tok) + len(b.tok) - len(list_intersect(a.tok, b.tok))), 6) AS jaccard
+        |FROM t a, t b
+        |WHERE a.doc_id < b.doc_id
+        |AND len(list_intersect(a.tok, b.tok))::DOUBLE
+        |  / (len(a.tok) + len(b.tok) - len(list_intersect(a.tok, b.tok))) >= 0.9""".stripMargin) { (s, dir) =>
+      Dedup.tokenJaccardPairs(
+        t(s, dir, "documents").where(col("doc_id") < 100), "doc_id", "text", 0.9)
+  }
+
+  // ---- dedup: MinHash-LSH near-dup candidates at PRODUCTION banding
+  //      width (32 hashes × 8 bands) — md5-portable hash family, so the
+  //      whole shingle→minhash→band→bucket-join→verify pipeline is
+  //      hash-verified against the SQL oracle; the compiled-xxhash fast
+  //      path keeps its spec coverage (PipelineSpec) ----
+  Q("q42_minhash_lsh", oracle =
+      // q42: q113's md5 MinHash pipeline at the production banding width —
+      // 32 seeds in 8 bands of 4, Jaccard threshold 0.4
+      """WITH w AS (SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents),
+        |shl AS (SELECT doc_id, list_transform(range(1, len(w)-1),
+        |        i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]) AS shs
+        |        FROM w WHERE len(w) >= 3),
+        |sh AS (SELECT doc_id, unnest(shs) AS sh FROM shl),
+        |seeds AS (SELECT unnest(range(0, 32)) AS s),
+        |mh AS (SELECT doc_id, s, min(md5(s::VARCHAR || ':' || sh)) AS m
+        |       FROM sh, seeds GROUP BY 1, 2),
+        |bk AS (SELECT doc_id, s // 4 AS band, md5(string_agg(m, '|' ORDER BY s)) AS bk
+        |       FROM mh GROUP BY 1, 2),
+        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+        |         FROM bk a JOIN bk b ON a.band = b.band AND a.bk = b.bk
+        |         WHERE a.doc_id < b.doc_id),
+        |sets AS (SELECT doc_id, list_distinct(shs) AS tok FROM shl)
+        |SELECT c.id_a, c.id_b,
+        |round(len(list_intersect(a.tok, b.tok))::DOUBLE
+        |  / (len(a.tok) + len(b.tok) - len(list_intersect(a.tok, b.tok))), 6) AS jaccard
+        |FROM cand c JOIN sets a ON c.id_a = a.doc_id JOIN sets b ON c.id_b = b.doc_id
+        |WHERE len(list_intersect(a.tok, b.tok))::DOUBLE
+        |  / (len(a.tok) + len(b.tok) - len(list_intersect(a.tok, b.tok))) >= 0.4""".stripMargin) { (s, dir) =>
+      Dedup.minhashLshPortable(t(s, dir, "documents"), "doc_id", "text",
+        shingleN = 3, numHashes = 32, bands = 8, threshold = 0.4)
+  }
+
+  // ---- dedup: SimHash near-dup pairs over the FULL corpus, md5-portable
+  //      bit votes — blocked candidates vs the oracle's brute-force
+  //      all-pairs scan = fingerprint math AND exact pigeonhole recall
+  //      certified cross-engine; the MurmurHash3 fast path keeps its
+  //      spec coverage (ExtendedOpsSpec exact-recall test) ----
+  Q("q43_simhash", oracle =
+      // q43: same md5 fingerprint + brute-force-all-pairs oracle as q118,
+      // over the FULL corpus (no id filter) — certifies the pigeonhole
+      // blocking's exact recall at the production table size
+      simhashOracleSql) { (s, dir) =>
+      Dedup.simhashPortable(t(s, dir, "documents"), "doc_id", "text", maxHamming = 8)
+  }
+
+  // ---- curation at scale: PARAGRAPH-level dedup with document
+  //      reconstruction (MassiveText recipe) — keep-first on the global
+  //      paragraph hash, reassemble surviving paragraphs per doc;
+  //      paragraphs here are 10-word windows (synthetic text has no
+  //      newlines; real corpora pass split(text, '\n\n')) ----
+  Q("q154_paragraph_dedup", oracle =
+      """WITH d AS (SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents),
+        |p AS (SELECT doc_id, i AS pos, array_to_string(w[i*10+1 : i*10+10], ' ') AS para
+        |      FROM d, unnest(range(0, greatest(1, CAST(ceil(len(w) / 10.0) AS BIGINT))))
+        |        AS t(i)),
+        |k AS (SELECT doc_id, pos, para,
+        |        CASE WHEN row_number() OVER (PARTITION BY md5(para)
+        |                                     ORDER BY doc_id, pos) = 1
+        |             THEN 1 ELSE 0 END AS keep
+        |      FROM p)
+        |SELECT doc_id,
+        |  coalesce(string_agg(para, ' ' ORDER BY pos) FILTER (WHERE keep = 1), '')
+        |    AS clean_text,
+        |  count(*) AS n_paras, CAST(sum(keep) AS BIGINT) AS n_kept
+        |FROM k GROUP BY doc_id""".stripMargin) { (s, dir) =>
+      val docs = t(s, dir, "documents")
+      Dedup.paragraphDedup(docs, "doc_id",
+        Text.chunkArray(10, 0)(col("text")))
+  }
+
+  // ---- curation at scale: SEMANTIC dedup (SemDeDup) — cluster-bounded
+  //      within-cluster cosine pruning, fully fixed-point (integer
+  //      argmin assignment, cross-multiplied threshold test in
+  //      decimal128) — the density-following alternative to banded LSH ----
+  Q("q156_semantic_dedup", oracle =
+      """WITH q AS (SELECT vec_id,
+        |    list_transform(embedding, x -> CAST(floor(x::DOUBLE * 1024) AS BIGINT)) AS e
+        |    FROM embeddings WHERE embedding IS NOT NULL AND len(embedding) = 64),
+        |c AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, e AS ce
+        |      FROM q ORDER BY vec_id LIMIT 8),
+        |tok AS (SELECT vec_id, unnest(e) AS x, generate_subscripts(e, 1) AS i FROM q),
+        |ctok AS (SELECT cid, unnest(ce) AS cx, generate_subscripts(ce, 1) AS i FROM c),
+        |dist AS (SELECT t.vec_id, c.cid,
+        |           CAST(sum((t.x - c.cx) * (t.x - c.cx)) AS BIGINT) AS d
+        |         FROM tok t JOIN ctok c ON t.i = c.i GROUP BY 1, 2),
+        |asg AS (SELECT vec_id, cid AS cluster FROM
+        |          (SELECT vec_id, cid,
+        |             row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
+        |           FROM dist)
+        |        WHERE rn = 1),
+        |nrm AS (SELECT vec_id, CAST(sum(x * x) AS BIGINT) AS nn FROM tok GROUP BY 1),
+        |pr AS (SELECT a.cluster, a.vec_id AS id_a, b.vec_id AS id_b
+        |       FROM asg a JOIN asg b ON a.cluster = b.cluster AND a.vec_id < b.vec_id),
+        |dp AS (SELECT pr.cluster, pr.id_a, pr.id_b,
+        |         CAST(sum(ta.x * tb.x) AS BIGINT) AS dotv
+        |       FROM pr JOIN tok ta ON ta.vec_id = pr.id_a
+        |                JOIN tok tb ON tb.vec_id = pr.id_b AND ta.i = tb.i
+        |       GROUP BY 1, 2, 3)
+        |SELECT dp.cluster, dp.id_a, dp.id_b, dp.dotv
+        |FROM dp JOIN nrm na ON na.vec_id = dp.id_a
+        |        JOIN nrm nb ON nb.vec_id = dp.id_b
+        |WHERE dp.dotv > 0
+        |  AND CAST(dp.dotv AS HUGEINT) * dp.dotv * 100
+        |      >= CAST(na.nn AS HUGEINT) * nb.nn * 16""".stripMargin) { (s, dir) =>
+      Dedup.semanticDedup(t(s, dir, "embeddings"), "vec_id", "embedding",
+        k = 8, thrNum = 4, thrDen = 10)
+  }
+
+  // ---- curation at scale: DELTA semantic dedup (ingest shape) — the
+  //      incoming batch assigns to the corpus's frozen seed centroids and
+  //      compares within-cluster against corpus vectors only (never a
+  //      corpus self-join); fixed-point end to end ----
+  Q("q160_delta_semantic", oracle =
+      """WITH qa AS (SELECT vec_id,
+        |    list_transform(embedding, x -> CAST(floor(x::DOUBLE * 1024) AS BIGINT)) AS e
+        |    FROM embeddings WHERE embedding IS NOT NULL AND len(embedding) = 64),
+        |cor AS (SELECT * FROM qa WHERE vec_id % 2 = 0),
+        |inc AS (SELECT * FROM qa WHERE vec_id % 2 = 1),
+        |c AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, e AS ce
+        |      FROM cor ORDER BY vec_id LIMIT 8),
+        |tok AS (SELECT vec_id, unnest(e) AS x, generate_subscripts(e, 1) AS i FROM qa),
+        |ctok AS (SELECT cid, unnest(ce) AS cx, generate_subscripts(ce, 1) AS i FROM c),
+        |dist AS (SELECT t.vec_id, c.cid,
+        |           CAST(sum((t.x - c.cx) * (t.x - c.cx)) AS BIGINT) AS d
+        |         FROM tok t JOIN ctok c ON t.i = c.i GROUP BY 1, 2),
+        |asg AS (SELECT vec_id, cid AS cluster FROM
+        |          (SELECT vec_id, cid,
+        |             row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
+        |           FROM dist)
+        |        WHERE rn = 1),
+        |nrm AS (SELECT vec_id, CAST(sum(x * x) AS BIGINT) AS nn FROM tok GROUP BY 1),
+        |pr AS (SELECT a.cluster, a.vec_id AS inc_id, b.vec_id AS cor_id
+        |       FROM asg a JOIN asg b ON a.cluster = b.cluster
+        |       WHERE a.vec_id % 2 = 1 AND b.vec_id % 2 = 0),
+        |dp AS (SELECT pr.cluster, pr.inc_id, pr.cor_id,
+        |         CAST(sum(ta.x * tb.x) AS BIGINT) AS dotv
+        |       FROM pr JOIN tok ta ON ta.vec_id = pr.inc_id
+        |                JOIN tok tb ON tb.vec_id = pr.cor_id AND ta.i = tb.i
+        |       GROUP BY 1, 2, 3)
+        |SELECT dp.cluster, dp.inc_id, dp.cor_id, dp.dotv
+        |FROM dp JOIN nrm na ON na.vec_id = dp.inc_id
+        |        JOIN nrm nb ON nb.vec_id = dp.cor_id
+        |WHERE dp.dotv > 0
+        |  AND CAST(dp.dotv AS HUGEINT) * dp.dotv * 100
+        |      >= CAST(na.nn AS HUGEINT) * nb.nn * 16""".stripMargin) { (s, dir) =>
+      val vecs = t(s, dir, "embeddings")
+      Dedup.semanticDedupDelta(
+        vecs.where(col("vec_id") % 2 === 0), vecs.where(col("vec_id") % 2 === 1),
+        "vec_id", "embedding", k = 8, thrNum = 4, thrDen = 10)
+  }
+
+  // ---- curation capstone: MULTI-SIGNAL dedup — the union of the TEXT
+  //      similarity graph (portable minhash pairs) and the EMBEDDING
+  //      similarity graph (SemDeDup pairs, vec_id ≡ doc_id) feeds ONE
+  //      connected-components pass; an entity is dropped if EITHER
+  //      signal links it to an earlier one (the image-text pair-curation
+  //      shape); survivor census by lang ----
+  Q("q179_multisignal_dedup", oracle =
+      """WITH RECURSIVE wd AS (SELECT doc_id, string_split(trim(text), ' ') AS w
+        |                     FROM documents),
+        |shl AS (SELECT doc_id, list_transform(range(1, len(w)-1),
+        |        i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]) AS shs
+        |        FROM wd WHERE len(w) >= 3),
+        |sh AS (SELECT doc_id, unnest(shs) AS sh FROM shl),
+        |seeds AS (SELECT unnest(range(0, 16)) AS s),
+        |mh AS (SELECT doc_id, s, min(md5(s::VARCHAR || ':' || sh)) AS m
+        |       FROM sh, seeds GROUP BY 1, 2),
+        |bk AS (SELECT doc_id, s // 4 AS band, md5(string_agg(m, '|' ORDER BY s)) AS bk
+        |       FROM mh GROUP BY 1, 2),
+        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+        |         FROM bk a JOIN bk b ON a.band = b.band AND a.bk = b.bk
+        |         WHERE a.doc_id < b.doc_id),
+        |sets AS (SELECT doc_id, list_distinct(shs) AS tok FROM shl),
+        |tp AS (SELECT c.id_a, c.id_b
+        |       FROM cand c JOIN sets a ON c.id_a = a.doc_id
+        |                   JOIN sets b ON c.id_b = b.doc_id
+        |       WHERE len(list_intersect(a.tok, b.tok))::DOUBLE
+        |         / (len(a.tok) + len(b.tok) - len(list_intersect(a.tok, b.tok))) >= 0.5),
+        |qv AS (SELECT vec_id,
+        |    list_transform(embedding, x -> CAST(floor(x::DOUBLE * 1024) AS BIGINT)) AS e
+        |    FROM embeddings WHERE embedding IS NOT NULL AND len(embedding) = 64),
+        |cc AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, e AS ce
+        |       FROM qv ORDER BY vec_id LIMIT 8),
+        |tokv AS (SELECT vec_id, unnest(e) AS x, generate_subscripts(e, 1) AS i FROM qv),
+        |ctokv AS (SELECT cid, unnest(ce) AS cx, generate_subscripts(ce, 1) AS i FROM cc),
+        |dist AS (SELECT t.vec_id, c.cid,
+        |           CAST(sum((t.x - c.cx) * (t.x - c.cx)) AS BIGINT) AS d
+        |         FROM tokv t JOIN ctokv c ON t.i = c.i GROUP BY 1, 2),
+        |asg AS (SELECT vec_id, cid AS cluster FROM
+        |          (SELECT vec_id, cid,
+        |             row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
+        |           FROM dist)
+        |        WHERE rn = 1),
+        |nrm AS (SELECT vec_id, CAST(sum(x * x) AS BIGINT) AS nn FROM tokv GROUP BY 1),
+        |prv AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b
+        |        FROM asg a JOIN asg b ON a.cluster = b.cluster AND a.vec_id < b.vec_id),
+        |dpv AS (SELECT prv.id_a, prv.id_b, CAST(sum(ta.x * tb.x) AS BIGINT) AS dotv
+        |        FROM prv JOIN tokv ta ON ta.vec_id = prv.id_a
+        |                 JOIN tokv tb ON tb.vec_id = prv.id_b AND ta.i = tb.i
+        |        GROUP BY 1, 2),
+        |sp AS (SELECT dpv.id_a, dpv.id_b
+        |       FROM dpv JOIN nrm na ON na.vec_id = dpv.id_a
+        |                JOIN nrm nb ON nb.vec_id = dpv.id_b
+        |       WHERE dpv.dotv > 0
+        |         AND CAST(dpv.dotv AS HUGEINT) * dpv.dotv * 100
+        |             >= CAST(na.nn AS HUGEINT) * nb.nn * 16),
+        |up AS (SELECT id_a, id_b FROM tp UNION SELECT id_a, id_b FROM sp),
+        |edges AS (SELECT id_a AS a, id_b AS b FROM up
+        |          UNION SELECT id_b, id_a FROM up),
+        |walk(id, label) AS (
+        |  SELECT a, a FROM edges
+        |  UNION
+        |  SELECT e.a, w2.label FROM edges e JOIN walk w2 ON e.b = w2.id),
+        |comp AS (SELECT id, min(label) AS cluster FROM walk GROUP BY id),
+        |dropped AS (SELECT id FROM comp WHERE cluster <> id)
+        |SELECT d.lang, count(*) AS n_after FROM documents d
+        |WHERE d.doc_id NOT IN (SELECT id FROM dropped)
+        |GROUP BY d.lang""".stripMargin) { (s, dir) =>
+      val docs = t(s, dir, "documents")
+      // The two signal pipelines are independent DAGs, but each materializes
+      // eagerly through internal localCheckpoints — built sequentially they
+      // serialize ~1.5s of scheduler-idle time (profiled r8: 5.7s → 4s).
+      // Submitting them from two threads lets the FIFO scheduler overlap
+      // their stages across the 32 cores (the cluster story is identical:
+      // concurrent jobs share the executor pool).
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.ExecutionContext.Implicits.global
+      val textPairsF = Future(Dedup.minhashLshPortable(docs, "doc_id", "text",
+        shingleN = 3, numHashes = 16, bands = 4, threshold = 0.5)
+        .select(col("id_a"), col("id_b")).localCheckpoint(true))
+      val semPairsF = Future(Dedup.semanticDedup(t(s, dir, "embeddings"),
+        "vec_id", "embedding", k = 8, thrNum = 4, thrDen = 10)
+        .select(col("id_a"), col("id_b")).localCheckpoint(true))
+      val textPairs = Await.result(textPairsF, scala.concurrent.duration.Duration.Inf)
+      val semPairs = Await.result(semPairsF, scala.concurrent.duration.Duration.Inf)
+      // no .distinct() here: components() canonicalizes (both-direction
+      // union + distinct) anyway — a pre-distinct is a redundant shuffle
+      val drop = Dedup.components(textPairs.unionAll(semPairs))
+        .where(col("id") =!= col("cluster"))
+        .select(col("id").cast("long").as("doc_id"))
+      docs.join(drop, Seq("doc_id"), "left_anti")
+        .groupBy(col("lang")).agg(count(lit(1)).as("n_after"))
+  }
+
+  // ---- graph: triangle census on the near-dup graph (Suri-
+  //      Vassilvitskii degree-ordered orientation — wedge fan-out capped
+  //      at O(√E) per node, so the biggest dup cluster can't explode the
+  //      shuffle); a triangle = three mutually-similar docs ----
+  Q("q191_triangle_census", oracle =
+      """WITH t AS (SELECT doc_id, list_distinct(string_split(trim(text),' ')) AS tok
+        |           FROM documents WHERE doc_id < 400),
+        |e AS (SELECT a.doc_id AS ea, b.doc_id AS eb FROM t a, t b
+        |      WHERE a.doc_id < b.doc_id
+        |      AND len(list_intersect(a.tok, b.tok))::DOUBLE
+        |        / (len(a.tok) + len(b.tok) - len(list_intersect(a.tok, b.tok))) >= 0.9),
+        |deg AS (SELECT v, count(*) AS d FROM
+        |        (SELECT ea AS v FROM e UNION ALL SELECT eb FROM e) GROUP BY 1),
+        |o AS (SELECT CASE WHEN (da.d, e.ea) < (db.d, e.eb) THEN e.ea ELSE e.eb END AS u,
+        |             CASE WHEN (da.d, e.ea) < (db.d, e.eb) THEN e.eb ELSE e.ea END AS w
+        |      FROM e JOIN deg da ON da.v = e.ea JOIN deg db ON db.v = e.eb),
+        |tri AS (SELECT o1.u, o1.w AS v, o2.w FROM o o1
+        |        JOIN o o2 ON o2.u = o1.w
+        |        JOIN o o3 ON o3.u = o1.u AND o3.w = o2.w),
+        |nodes AS (SELECT u AS node FROM tri UNION ALL SELECT v FROM tri
+        |          UNION ALL SELECT w FROM tri)
+        |SELECT node, count(*) AS n_tri FROM nodes GROUP BY 1""".stripMargin) { (s, dir) =>
+      val edges = Dedup.tokenJaccardPairs(
+        t(s, dir, "documents").where(col("doc_id") < 400), "doc_id", "text", 0.9)
+      Graphs.triangleCounts(edges, "id_a", "id_b")
+  }
+
+  // ---- entity resolution: fuzzy match on the DISTINCT-value domain
+  //      (vocabulary-sized, like BPE-on-the-word-table) — Levenshtein ≤ 2
+  //      pairs of part names with the row-multiplicity weight the merge
+  //      would touch; length-bound candidate pruning ----
+  Q("q192_fuzzy_entity", oracle =
+      """WITH n AS (SELECT p_name AS v, count(*) AS c FROM part GROUP BY 1)
+        |SELECT a.v AS name_a, b.v AS name_b,
+        |  levenshtein(a.v, b.v) AS dist, a.c * b.c AS n_pairs
+        |FROM n a, n b
+        |WHERE a.v < b.v AND levenshtein(a.v, b.v) <= 2""".stripMargin) { (s, dir) =>
+      Dedup.fuzzyBlockedPairs(t(s, dir, "part"), "p_name", maxDist = 2)
+  }
+
+  // ---- curation at scale: SEMANTIC dedup APPLIED — SemDeDup pairs →
+  //      connected components → drop non-representatives; per-label
+  //      census of the survivors (the q120 composition over the
+  //      embedding graph) ----
+  Q("q166_semantic_apply", oracle =
+      """WITH RECURSIVE q AS (SELECT vec_id,
+        |    list_transform(embedding, x -> CAST(floor(x::DOUBLE * 1024) AS BIGINT)) AS e
+        |    FROM embeddings WHERE embedding IS NOT NULL AND len(embedding) = 64),
+        |c AS (SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, e AS ce
+        |      FROM q ORDER BY vec_id LIMIT 8),
+        |tok AS (SELECT vec_id, unnest(e) AS x, generate_subscripts(e, 1) AS i FROM q),
+        |ctok AS (SELECT cid, unnest(ce) AS cx, generate_subscripts(ce, 1) AS i FROM c),
+        |dist AS (SELECT t.vec_id, c.cid,
+        |           CAST(sum((t.x - c.cx) * (t.x - c.cx)) AS BIGINT) AS d
+        |         FROM tok t JOIN ctok c ON t.i = c.i GROUP BY 1, 2),
+        |asg AS (SELECT vec_id, cid AS cluster FROM
+        |          (SELECT vec_id, cid,
+        |             row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
+        |           FROM dist)
+        |        WHERE rn = 1),
+        |nrm AS (SELECT vec_id, CAST(sum(x * x) AS BIGINT) AS nn FROM tok GROUP BY 1),
+        |pr AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b
+        |       FROM asg a JOIN asg b ON a.cluster = b.cluster AND a.vec_id < b.vec_id),
+        |dp AS (SELECT pr.id_a, pr.id_b, CAST(sum(ta.x * tb.x) AS BIGINT) AS dotv
+        |       FROM pr JOIN tok ta ON ta.vec_id = pr.id_a
+        |                JOIN tok tb ON tb.vec_id = pr.id_b AND ta.i = tb.i
+        |       GROUP BY 1, 2),
+        |pairs AS (SELECT dp.id_a, dp.id_b
+        |          FROM dp JOIN nrm na ON na.vec_id = dp.id_a
+        |                  JOIN nrm nb ON nb.vec_id = dp.id_b
+        |          WHERE dp.dotv > 0
+        |            AND CAST(dp.dotv AS HUGEINT) * dp.dotv * 100
+        |                >= CAST(na.nn AS HUGEINT) * nb.nn * 16),
+        |edges AS (SELECT id_a AS a, id_b AS b FROM pairs
+        |          UNION SELECT id_b, id_a FROM pairs),
+        |walk(id, label) AS (
+        |  SELECT a, a FROM edges
+        |  UNION
+        |  SELECT e.a, w2.label FROM edges e JOIN walk w2 ON e.b = w2.id),
+        |comp AS (SELECT id, min(label) AS cluster FROM walk GROUP BY id),
+        |dropped AS (SELECT id FROM comp WHERE cluster <> id)
+        |SELECT e.label, count(*) AS n_after FROM embeddings e
+        |WHERE e.vec_id NOT IN (SELECT id FROM dropped)
+        |GROUP BY e.label""".stripMargin) { (s, dir) =>
+      val vecs = t(s, dir, "embeddings")
+      val pairs = Dedup.semanticDedup(vecs, "vec_id", "embedding",
+        k = 8, thrNum = 4, thrDen = 10)
+        .select(col("id_a"), col("id_b"))
+      val drop = Dedup.components(pairs)
+        .where(col("id") =!= col("cluster"))
+        .select(col("id").cast("long").as("vec_id"))
+      vecs.join(drop, Seq("vec_id"), "left_anti")
+        .groupBy(col("label"))
+        .agg(count(lit(1)).as("n_after"))
+  }
+
+  // ---- dedup: character n-gram Jaccard (noisy-text variant) ----
+  Q("q81_char_ngram_jaccard", oracle =
+      """WITH t AS (SELECT doc_id,
+        |  list_distinct(list_transform(range(1, strlen(text)-1), i -> substr(text, i, 3))) AS tok
+        |  FROM documents WHERE doc_id < 60 AND strlen(text) >= 3)
+        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+        |round(len(list_intersect(a.tok, b.tok))::DOUBLE
+        |  / (len(a.tok) + len(b.tok) - len(list_intersect(a.tok, b.tok))), 6) AS jaccard
+        |FROM t a, t b
+        |WHERE a.doc_id < b.doc_id
+        |AND len(list_intersect(a.tok, b.tok))::DOUBLE
+        |  / (len(a.tok) + len(b.tok) - len(list_intersect(a.tok, b.tok))) >= 0.5""".stripMargin) { (s, dir) =>
+      Dedup.charNgramJaccardPairs(
+        t(s, dir, "documents").where(col("doc_id") < 60), "doc_id", "text", 3, 0.5)
+  }
+
+  // ---- curation at scale: exact-substring duplicate-span census (Lee
+  //      et al. ExactSubstr re-expressed relationally) — ids-only span
+  //      shuffle, md5(slice) computed map-side, fixed-point dup ppm ----
+  Q("q138_dup_spans", oracle =
+      """WITH d AS (SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents),
+        |win AS (SELECT doc_id, md5(array_to_string(w[i:i+19], ' ')) AS h
+        |        FROM d, unnest(range(1, len(w) - 18)) AS t(i)
+        |        WHERE len(w) >= 20),
+        |dup AS (SELECT h FROM win GROUP BY h HAVING count(DISTINCT doc_id) >= 2)
+        |SELECT doc_id, count(*) AS n_windows,
+        |  CAST(sum(CASE WHEN h IN (SELECT h FROM dup) THEN 1 ELSE 0 END) AS BIGINT) AS n_dup,
+        |  (CAST(sum(CASE WHEN h IN (SELECT h FROM dup) THEN 1 ELSE 0 END) AS BIGINT)
+        |   * 1000000) // count(*) AS dup_ppm
+        |FROM win GROUP BY doc_id""".stripMargin) { (s, dir) =>
+      Dedup.exactSubstringSpans(t(s, dir, "documents"), "doc_id", "text", n = 20)
+  }
+
+  // ---- curation at scale: DELTA near-dup (ingest shape) — incoming
+  //      batch's portable-LSH buckets join the corpus's (never a corpus
+  //      self-join); exact-Jaccard verified, whole pipeline hash-checked ----
+  Q("q147_delta_neardup", oracle =
+      """WITH w AS (SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents),
+        |shl AS (SELECT doc_id, list_transform(range(1, len(w)-1),
+        |        i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]) AS shs
+        |        FROM w WHERE len(w) >= 3),
+        |sh AS (SELECT doc_id, unnest(shs) AS sh FROM shl),
+        |seeds AS (SELECT unnest(range(0, 16)) AS s),
+        |mh AS (SELECT doc_id, s, min(md5(s::VARCHAR || ':' || sh)) AS m
+        |       FROM sh, seeds GROUP BY 1, 2),
+        |bk AS (SELECT doc_id, s // 4 AS band, md5(string_agg(m, '|' ORDER BY s)) AS bk
+        |       FROM mh GROUP BY 1, 2),
+        |cand AS (SELECT DISTINCT a.doc_id AS incoming_id, b.doc_id AS corpus_id
+        |         FROM bk a JOIN bk b ON a.band = b.band AND a.bk = b.bk
+        |         WHERE a.doc_id % 2 = 0 AND b.doc_id % 2 = 1),
+        |sets AS (SELECT doc_id, list_distinct(shs) AS tok FROM shl)
+        |SELECT c.incoming_id, c.corpus_id,
+        |round(len(list_intersect(a.tok, b.tok))::DOUBLE
+        |  / (len(a.tok) + len(b.tok) - len(list_intersect(a.tok, b.tok))), 6) AS jaccard
+        |FROM cand c JOIN sets a ON c.incoming_id = a.doc_id JOIN sets b ON c.corpus_id = b.doc_id
+        |WHERE len(list_intersect(a.tok, b.tok))::DOUBLE
+        |  / (len(a.tok) + len(b.tok) - len(list_intersect(a.tok, b.tok))) >= 0.5""".stripMargin) { (s, dir) =>
+      val docs = t(s, dir, "documents")
+      Dedup.minhashLshDelta(
+        docs.where(col("doc_id") % 2 === 1), docs.where(col("doc_id") % 2 === 0),
+        "doc_id", "text")
+  }
+
+  // ---- curation at scale: DELTA exact dedup (ingest shape) — dedup an
+  //      incoming batch within itself, then LEFT ANTI join its
+  //      fingerprints against the corpus; the batch mixes fresh docs,
+  //      corpus copies (must drop) and internal copies (must collapse) ----
+  Q("q146_delta_dedup", oracle =
+      """WITH inc0 AS (
+        |  SELECT doc_id, text FROM documents WHERE doc_id % 4 = 0
+        |  UNION ALL SELECT doc_id + 10000, text FROM documents WHERE doc_id % 8 = 1
+        |  UNION ALL SELECT doc_id + 40000, text FROM documents WHERE doc_id % 8 = 0),
+        |fpb AS (SELECT md5(regexp_replace(lower(text), '[^a-z0-9]', '', 'g')) AS fp,
+        |        min(doc_id) AS keep_id FROM inc0 GROUP BY 1),
+        |cor AS (SELECT DISTINCT md5(regexp_replace(lower(text), '[^a-z0-9]', '', 'g')) AS fp
+        |        FROM documents WHERE doc_id % 4 != 0)
+        |SELECT keep_id, fp FROM fpb WHERE fp NOT IN (SELECT fp FROM cor)""".stripMargin) { (s, dir) =>
+      val docs = t(s, dir, "documents")
+      val corpus = docs.where(col("doc_id") % 4 =!= 0)
+      val incoming = docs.where(col("doc_id") % 4 === 0)
+        .select(col("doc_id"), col("text"))
+        .unionAll(docs.where(col("doc_id") % 8 === 1)
+          .select((col("doc_id") + 10000).as("doc_id"), col("text")))
+        .unionAll(docs.where(col("doc_id") % 8 === 0)
+          .select((col("doc_id") + 40000).as("doc_id"), col("text")))
+      Dedup.exactDelta(corpus, incoming, "doc_id", "text")
+  }
+
+  // ---- dedup: CONTAINMENT near-dup (Broder 1997's asymmetric measure)
+  //      — |A∩B| DIV |A| catches a short doc wholly quoted inside a long
+  //      one (Jaccard ≈ |A|/|B| → misses it); same md5 band candidates,
+  //      one verify join scores both directions ----
+  Q("q266_containment_neardup", oracle = containmentOracleSql) { (s, dir) =>
+      Dedup.containmentNearDup(t(s, dir, "documents"), "doc_id", "text",
+        shingleN = 3, numHashes = 16, bands = 4, thresholdPpm = 800000L)
+  }
+
+  // ---- the hot-bucket CAP certification: same containment pass with
+  //      the cap pinned LOW (64) via the per-call parameter — the capped
+  //      candidate generation (oversize-key anti-join) must be
+  //      result-identical to q266's whenever no bucket exceeds the cap,
+  //      which the q285 census proves for this corpus; oracle SHARED
+  //      with q266 ----
+  Q("q295_containment_capped", oracle =
+      // q295 = q266 under a pinned (non-triggering) bucket cap — identical
+      // results certify the capped candidate path end-to-end
+      containmentOracleSql) { (s, dir) =>
+      Dedup.containmentNearDup(t(s, dir, "documents"), "doc_id", "text",
+        shingleN = 3, numHashes = 16, bands = 4, thresholdPpm = 800000L,
+        maxBucket = Some(64))
+  }
+
+  // ---- the hot-bucket cap ACTUALLY TRIGGERING: containment with the
+  //      cap pinned BELOW the corpus's max bucket size (census: size-3
+  //      buckets at sf0.01, size-4 at sf0.001 — cap 2 drops them), so
+  //      the anti-join branch runs for real and pairs whose every
+  //      shared bucket is oversize vanish; the oracle replays the drop
+  //      rule (candidates require a shared bucket of size ≤ cap), so
+  //      the TRIGGERED semantics are hash-certified — r11's q295 could
+  //      only certify the non-triggering case ----
+  Q("q309_containment_cap_hit", oracle =
+      // q309 = q266 with the cap pinned BELOW the corpus max bucket size:
+      // the oracle replays the drop rule itself (a candidate pair needs a
+      // shared bucket of size <= 2), certifying the TRIGGERED capped path
+      """WITH w AS (SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents),
+        |shl AS (SELECT doc_id, list_transform(range(1, len(w)-1),
+        |        i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]) AS shs
+        |        FROM w WHERE len(w) >= 3),
+        |sh AS (SELECT doc_id, unnest(shs) AS sh FROM shl),
+        |seeds AS (SELECT unnest(range(0, 16)) AS s),
+        |mh AS (SELECT doc_id, s, min(md5(s::VARCHAR || ':' || sh)) AS m
+        |       FROM sh, seeds GROUP BY 1, 2),
+        |bk AS (SELECT doc_id, s // 4 AS band, md5(string_agg(m, '|' ORDER BY s)) AS bk
+        |       FROM mh GROUP BY 1, 2),
+        |sz AS (SELECT band, bk, count(*) AS n FROM bk GROUP BY 1, 2),
+        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+        |         FROM bk a JOIN bk b ON a.band = b.band AND a.bk = b.bk
+        |         JOIN sz s ON a.band = s.band AND a.bk = s.bk
+        |         WHERE a.doc_id < b.doc_id AND s.n <= 2),
+        |sets AS (SELECT doc_id, list_distinct(shs) AS tok FROM shl),
+        |sc AS (SELECT c.id_a, c.id_b,
+        |         len(list_intersect(a.tok, b.tok))::BIGINT AS inter,
+        |         len(a.tok)::BIGINT AS na, len(b.tok)::BIGINT AS nb
+        |       FROM cand c JOIN sets a ON c.id_a = a.doc_id
+        |                   JOIN sets b ON c.id_b = b.doc_id),
+        |u AS (SELECT id_a AS contained_id, id_b AS container_id,
+        |        inter * 1000000 // na AS containment_ppm FROM sc
+        |      UNION ALL
+        |      SELECT id_b, id_a, inter * 1000000 // nb FROM sc)
+        |SELECT contained_id, container_id, containment_ppm
+        |FROM u WHERE containment_ppm >= 800000""".stripMargin) { (s, dir) =>
+      Dedup.containmentNearDup(t(s, dir, "documents"), "doc_id", "text",
+        shingleN = 3, numHashes = 16, bands = 4, thresholdPpm = 800000L,
+        maxBucket = Some(2))
+  }
+
+  // ---- data-card: containment HUB docs — the docs that subsume the
+  //      most others (the boilerplate templates themselves), top-10 by
+  //      contained count with deterministic id ties; the window ranks
+  //      the pair-bounded container census, never corpus rows ----
+  Q("q275_containment_hubs", oracle =
+      """WITH w AS (SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents),
+        |shl AS (SELECT doc_id, list_transform(range(1, len(w)-1),
+        |        i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]) AS shs
+        |        FROM w WHERE len(w) >= 3),
+        |sh AS (SELECT doc_id, unnest(shs) AS sh FROM shl),
+        |seeds AS (SELECT unnest(range(0, 16)) AS s),
+        |mh AS (SELECT doc_id, s, min(md5(s::VARCHAR || ':' || sh)) AS m
+        |       FROM sh, seeds GROUP BY 1, 2),
+        |bk AS (SELECT doc_id, s // 4 AS band, md5(string_agg(m, '|' ORDER BY s)) AS bk
+        |       FROM mh GROUP BY 1, 2),
+        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+        |         FROM bk a JOIN bk b ON a.band = b.band AND a.bk = b.bk
+        |         WHERE a.doc_id < b.doc_id),
+        |sets AS (SELECT doc_id, list_distinct(shs) AS tok FROM shl),
+        |sc AS (SELECT c.id_a, c.id_b,
+        |         len(list_intersect(a.tok, b.tok))::BIGINT AS inter,
+        |         len(a.tok)::BIGINT AS na, len(b.tok)::BIGINT AS nb
+        |       FROM cand c JOIN sets a ON c.id_a = a.doc_id
+        |                   JOIN sets b ON c.id_b = b.doc_id),
+        |u AS (SELECT id_a AS contained_id, id_b AS container_id,
+        |        inter * 1000000 // na AS containment_ppm FROM sc
+        |      UNION ALL
+        |      SELECT id_b, id_a, inter * 1000000 // nb FROM sc),
+        |f AS (SELECT * FROM u WHERE containment_ppm >= 500000),
+        |census AS (SELECT container_id, count(*) AS n_contained,
+        |             CAST(sum(containment_ppm) // count(*) AS BIGINT) AS mean_containment_ppm
+        |           FROM f GROUP BY 1),
+        |r AS (SELECT container_id, n_contained, mean_containment_ppm,
+        |        row_number() OVER (ORDER BY n_contained DESC, container_id ASC) AS rank
+        |      FROM census)
+        |SELECT rank, container_id, n_contained, mean_containment_ppm
+        |FROM r WHERE rank <= 10""".stripMargin) { (s, dir) =>
+      val pairs = Dedup.containmentNearDup(t(s, dir, "documents"), "doc_id", "text",
+        shingleN = 3, numHashes = 16, bands = 4, thresholdPpm = 500000L)
+      val census = pairs.groupBy(col("container_id"))
+        .agg(count(lit(1)).as("n_contained"),
+          expr("sum(containment_ppm) DIV count(1)").as("mean_containment_ppm"))
+      val w = org.apache.spark.sql.expressions.Window
+        .orderBy(col("n_contained").desc, col("container_id").asc)
+      census.withColumn("rank", row_number().over(w).cast("long"))
+        .where(col("rank") <= 10)
+        .select(col("rank"), col("container_id"), col("n_contained"),
+          col("mean_containment_ppm"))
+  }
+
+  // ---- data-card: DEDUP IMPACT report — docs/tokens kept per source
+  //      under subsumption pruning (q268's survivor set): the
+  //      what-did-dedup-cost-me panel every curation paper reports ----
+  Q("q273_dedup_impact", oracle =
+      """WITH w AS (SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents),
+        |shl AS (SELECT doc_id, list_transform(range(1, len(w)-1),
+        |        i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]) AS shs
+        |        FROM w WHERE len(w) >= 3),
+        |sh AS (SELECT doc_id, unnest(shs) AS sh FROM shl),
+        |seeds AS (SELECT unnest(range(0, 16)) AS s),
+        |mh AS (SELECT doc_id, s, min(md5(s::VARCHAR || ':' || sh)) AS m
+        |       FROM sh, seeds GROUP BY 1, 2),
+        |bk AS (SELECT doc_id, s // 4 AS band, md5(string_agg(m, '|' ORDER BY s)) AS bk
+        |       FROM mh GROUP BY 1, 2),
+        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+        |         FROM bk a JOIN bk b ON a.band = b.band AND a.bk = b.bk
+        |         WHERE a.doc_id < b.doc_id),
+        |sets AS (SELECT doc_id, list_distinct(shs) AS tok FROM shl),
+        |sc AS (SELECT c.id_a, c.id_b,
+        |         len(list_intersect(a.tok, b.tok))::BIGINT AS inter,
+        |         len(a.tok)::BIGINT AS na, len(b.tok)::BIGINT AS nb
+        |       FROM cand c JOIN sets a ON c.id_a = a.doc_id
+        |                   JOIN sets b ON c.id_b = b.doc_id),
+        |drops AS (SELECT id_a AS did FROM sc
+        |          WHERE inter * 1000000 // na >= 800000
+        |            AND (nb > na OR (nb = na AND id_b < id_a))
+        |          UNION
+        |          SELECT id_b FROM sc
+        |          WHERE inter * 1000000 // nb >= 800000
+        |            AND (na > nb OR (na = nb AND id_a < id_b))),
+        |d AS (SELECT doc_id, source,
+        |        len(list_filter(string_split(trim(text), ' '), g -> g <> ''))::BIGINT AS ntok,
+        |        CASE WHEN doc_id IN (SELECT did FROM drops) THEN 0 ELSE 1 END AS kept
+        |      FROM documents)
+        |SELECT source, count(*) AS n_docs,
+        |  CAST(sum(kept) AS BIGINT) AS n_kept,
+        |  CAST(sum(ntok) AS BIGINT) AS tokens_total,
+        |  CAST(sum(ntok * kept) AS BIGINT) AS tokens_kept
+        |FROM d GROUP BY 1""".stripMargin) { (s, dir) =>
+      val docs = t(s, dir, "documents")
+      val kept = Dedup.containmentDedup(docs, "doc_id", "text",
+        shingleN = 3, numHashes = 16, bands = 4, thresholdPpm = 800000L)
+        .withColumn("__kept", lit(1L))
+      docs
+        .select(col("doc_id"), col("source"),
+          size(filter(Text.tokens(col("text")), g => g =!= "")).cast("long").as("__ntok"))
+        .join(kept, Seq("doc_id"), "left_outer")
+        .groupBy(col("source"))
+        .agg(count(lit(1)).as("n_docs"),
+          sum(coalesce(col("__kept"), lit(0L))).as("n_kept"),
+          sum(col("__ntok")).as("tokens_total"),
+          sum(col("__ntok") * coalesce(col("__kept"), lit(0L))).as("tokens_kept"))
+  }
+
+  // ---- data-card: cross-source CONTAINMENT FLOW matrix — which sources
+  //      subsume which (directed, unlike q257's symmetric dup matrix):
+  //      boilerplate/quote flow direction between feeds ----
+  Q("q272_containment_matrix", oracle =
+      """WITH w AS (SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents),
+        |shl AS (SELECT doc_id, list_transform(range(1, len(w)-1),
+        |        i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]) AS shs
+        |        FROM w WHERE len(w) >= 3),
+        |sh AS (SELECT doc_id, unnest(shs) AS sh FROM shl),
+        |seeds AS (SELECT unnest(range(0, 16)) AS s),
+        |mh AS (SELECT doc_id, s, min(md5(s::VARCHAR || ':' || sh)) AS m
+        |       FROM sh, seeds GROUP BY 1, 2),
+        |bk AS (SELECT doc_id, s // 4 AS band, md5(string_agg(m, '|' ORDER BY s)) AS bk
+        |       FROM mh GROUP BY 1, 2),
+        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+        |         FROM bk a JOIN bk b ON a.band = b.band AND a.bk = b.bk
+        |         WHERE a.doc_id < b.doc_id),
+        |sets AS (SELECT doc_id, list_distinct(shs) AS tok FROM shl),
+        |sc AS (SELECT c.id_a, c.id_b,
+        |         len(list_intersect(a.tok, b.tok))::BIGINT AS inter,
+        |         len(a.tok)::BIGINT AS na, len(b.tok)::BIGINT AS nb
+        |       FROM cand c JOIN sets a ON c.id_a = a.doc_id
+        |                   JOIN sets b ON c.id_b = b.doc_id),
+        |u AS (SELECT id_a AS contained_id, id_b AS container_id,
+        |        inter * 1000000 // na AS containment_ppm FROM sc
+        |      UNION ALL
+        |      SELECT id_b, id_a, inter * 1000000 // nb FROM sc),
+        |f AS (SELECT * FROM u WHERE containment_ppm >= 500000)
+        |SELECT d1.source AS src_contained, d2.source AS src_container,
+        |  count(*) AS n_pairs,
+        |  CAST(sum(containment_ppm) // count(*) AS BIGINT) AS mean_containment_ppm
+        |FROM f JOIN documents d1 ON f.contained_id = d1.doc_id
+        |       JOIN documents d2 ON f.container_id = d2.doc_id
+        |GROUP BY 1, 2""".stripMargin) { (s, dir) =>
+      val docs = t(s, dir, "documents")
+      val pairs = Dedup.containmentNearDup(docs, "doc_id", "text",
+        shingleN = 3, numHashes = 16, bands = 4, thresholdPpm = 500000L)
+      val src = docs.select(col("doc_id"), col("source"))
+      pairs
+        .join(src.select(col("doc_id").as("contained_id"), col("source").as("src_contained")),
+          Seq("contained_id"))
+        .join(src.select(col("doc_id").as("container_id"), col("source").as("src_container")),
+          Seq("container_id"))
+        .groupBy(col("src_contained"), col("src_container"))
+        .agg(count(lit(1)).as("n_pairs"),
+          expr("sum(containment_ppm) DIV count(1)").as("mean_containment_ppm"))
+  }
+
+  // ---- ingest dedup: CONTAINMENT DELTA — "is this new doc already
+  //      subsumed by the corpus": incoming batch hashed independently,
+  //      band join to corpus, only incoming-in-corpus scored ----
+  Q("q271_containment_delta", oracle =
+      """WITH w AS (SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents),
+        |shl AS (SELECT doc_id, list_transform(range(1, len(w)-1),
+        |        i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]) AS shs
+        |        FROM w WHERE len(w) >= 3),
+        |sh AS (SELECT doc_id, unnest(shs) AS sh FROM shl),
+        |seeds AS (SELECT unnest(range(0, 16)) AS s),
+        |mh AS (SELECT doc_id, s, min(md5(s::VARCHAR || ':' || sh)) AS m
+        |       FROM sh, seeds GROUP BY 1, 2),
+        |bk AS (SELECT doc_id, s // 4 AS band, md5(string_agg(m, '|' ORDER BY s)) AS bk
+        |       FROM mh GROUP BY 1, 2),
+        |cand AS (SELECT DISTINCT a.doc_id AS incoming_id, b.doc_id AS corpus_id
+        |         FROM bk a JOIN bk b ON a.band = b.band AND a.bk = b.bk
+        |         WHERE a.doc_id % 7 = 0 AND b.doc_id % 7 != 0),
+        |sets AS (SELECT doc_id, list_distinct(shs) AS tok FROM shl)
+        |SELECT c.incoming_id, c.corpus_id,
+        |  len(list_intersect(i.tok, t.tok)) * 1000000 // len(i.tok) AS containment_ppm
+        |FROM cand c JOIN sets i ON c.incoming_id = i.doc_id
+        |            JOIN sets t ON c.corpus_id = t.doc_id
+        |WHERE len(list_intersect(i.tok, t.tok)) * 1000000 // len(i.tok) >= 800000""".stripMargin) { (s, dir) =>
+      val docs = t(s, dir, "documents")
+      Dedup.containmentDelta(
+        docs.where(col("doc_id") % 7 =!= 0), docs.where(col("doc_id") % 7 === 0),
+        "doc_id", "text", shingleN = 3, numHashes = 16, bands = 4,
+        thresholdPpm = 800000L)
+  }
+
+  // ---- dedup TRUST panel: MinHash estimator CALIBRATION — per
+  //      candidate pair, signature-coordinate agreement (the estimate)
+  //      vs exact Jaccard, bucketed by agreement count; calibration skew
+  //      exposes hash-family/shingling drift before recall degrades ----
+  Q("q269_minhash_calibration", oracle =
+      """WITH w AS (SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents),
+        |shl AS (SELECT doc_id, list_transform(range(1, len(w)-1),
+        |        i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]) AS shs
+        |        FROM w WHERE len(w) >= 3),
+        |sh AS (SELECT doc_id, unnest(shs) AS sh FROM shl),
+        |seeds AS (SELECT unnest(range(0, 16)) AS s),
+        |mh AS (SELECT doc_id, s, min(md5(s::VARCHAR || ':' || sh)) AS m
+        |       FROM sh, seeds GROUP BY 1, 2),
+        |bk AS (SELECT doc_id, s // 4 AS band, md5(string_agg(m, '|' ORDER BY s)) AS bk
+        |       FROM mh GROUP BY 1, 2),
+        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+        |         FROM bk a JOIN bk b ON a.band = b.band AND a.bk = b.bk
+        |         WHERE a.doc_id < b.doc_id),
+        |est AS (SELECT c.id_a, c.id_b,
+        |          count(*) FILTER (a.m = b.m)::BIGINT AS est_matches
+        |        FROM cand c JOIN mh a ON a.doc_id = c.id_a
+        |                    JOIN mh b ON b.doc_id = c.id_b AND a.s = b.s
+        |        GROUP BY 1, 2),
+        |sets AS (SELECT doc_id, list_distinct(shs) AS tok FROM shl),
+        |jac AS (SELECT e.id_a, e.id_b, e.est_matches,
+        |          len(list_intersect(a.tok, b.tok)) * 1000000
+        |            // (len(a.tok) + len(b.tok) - len(list_intersect(a.tok, b.tok))) AS jac_ppm
+        |        FROM est e JOIN sets a ON e.id_a = a.doc_id
+        |                   JOIN sets b ON e.id_b = b.doc_id)
+        |SELECT est_matches, count(*) AS n_pairs,
+        |  CAST(sum(jac_ppm) // count(*) AS BIGINT) AS mean_jaccard_ppm,
+        |  min(jac_ppm) AS min_jaccard_ppm, max(jac_ppm) AS max_jaccard_ppm
+        |FROM jac GROUP BY 1""".stripMargin) { (s, dir) =>
+      Dedup.minhashCalibration(t(s, dir, "documents"), "doc_id", "text",
+        shingleN = 3, numHashes = 16, bands = 4)
+  }
+
+  // ---- dedup-apply: SUBSUMPTION PRUNE — q266's greedy deterministic
+  //      apply form: drop docs contained (>=0.8) in a LARGER doc, ties
+  //      keep the lower id; shingle-free docs always survive ----
+  Q("q268_containment_dedup", oracle =
+      """WITH w AS (SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents),
+        |shl AS (SELECT doc_id, list_transform(range(1, len(w)-1),
+        |        i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]) AS shs
+        |        FROM w WHERE len(w) >= 3),
+        |sh AS (SELECT doc_id, unnest(shs) AS sh FROM shl),
+        |seeds AS (SELECT unnest(range(0, 16)) AS s),
+        |mh AS (SELECT doc_id, s, min(md5(s::VARCHAR || ':' || sh)) AS m
+        |       FROM sh, seeds GROUP BY 1, 2),
+        |bk AS (SELECT doc_id, s // 4 AS band, md5(string_agg(m, '|' ORDER BY s)) AS bk
+        |       FROM mh GROUP BY 1, 2),
+        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+        |         FROM bk a JOIN bk b ON a.band = b.band AND a.bk = b.bk
+        |         WHERE a.doc_id < b.doc_id),
+        |sets AS (SELECT doc_id, list_distinct(shs) AS tok FROM shl),
+        |sc AS (SELECT c.id_a, c.id_b,
+        |         len(list_intersect(a.tok, b.tok))::BIGINT AS inter,
+        |         len(a.tok)::BIGINT AS na, len(b.tok)::BIGINT AS nb
+        |       FROM cand c JOIN sets a ON c.id_a = a.doc_id
+        |                   JOIN sets b ON c.id_b = b.doc_id),
+        |drops AS (SELECT id_a AS did FROM sc
+        |          WHERE inter * 1000000 // na >= 800000
+        |            AND (nb > na OR (nb = na AND id_b < id_a))
+        |          UNION
+        |          SELECT id_b FROM sc
+        |          WHERE inter * 1000000 // nb >= 800000
+        |            AND (na > nb OR (na = nb AND id_a < id_b)))
+        |SELECT doc_id FROM documents
+        |WHERE doc_id NOT IN (SELECT did FROM drops)""".stripMargin) { (s, dir) =>
+      Dedup.containmentDedup(t(s, dir, "documents"), "doc_id", "text",
+        shingleN = 3, numHashes = 16, bands = 4, thresholdPpm = 800000L)
+  }
+
+  // ---- dedup: HAMMING RADIUS census — pair counts per simhash distance
+  //      within radius 8 (exact recall via pigeonhole blocks, q43's
+  //      machinery): the panel that picks maxHamming before a simhash
+  //      dedup pass — where does the near-dup mass actually sit? ----
+  Q("q288_hamming_census", oracle =
+      // q288: the same simhash machinery, aggregated into the radius census
+      simhashOracleSql.replace(
+      "SELECT id_a, id_b, hamming FROM ham WHERE hamming <= 8",
+      "SELECT hamming, count(*) AS n_pairs FROM ham WHERE hamming <= 8 GROUP BY 1")) { (s, dir) =>
+      Dedup.simhashPortable(t(s, dir, "documents"), "doc_id", "text", maxHamming = 8)
+        .groupBy(col("hamming"))
+        .agg(count(lit(1)).as("n_pairs"))
+  }
+
+  // ---- dedup: LSH BUCKET CENSUS — per-band histogram of bucket sizes,
+  //      the banding-health audit (candidate-join cost is Σ size², so a
+  //      hot bucket is THE near-dup scale hazard); run before committing
+  //      a hash family at corpus scale ----
+  Q("q285_lsh_bucket_census", oracle =
+      // q285: the q256 banding CTEs aggregated into a per-band size census
+      """WITH w AS (SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents),
+        |shl AS (SELECT doc_id, list_transform(range(1, len(w)-1),
+        |        i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]) AS shs
+        |        FROM w WHERE len(w) >= 3),
+        |sh AS (SELECT doc_id, unnest(shs) AS sh FROM shl),
+        |seeds AS (SELECT unnest(range(0, 16)) AS s),
+        |mh AS (SELECT doc_id, s, min(md5(s::VARCHAR || ':' || sh)) AS m
+        |       FROM sh, seeds GROUP BY 1, 2),
+        |bk AS (SELECT doc_id, s // 4 AS band, md5(string_agg(m, '|' ORDER BY s)) AS bk
+        |       FROM mh GROUP BY 1, 2),
+        |cs AS (SELECT band, bk, count(*)::BIGINT AS sz FROM bk GROUP BY 1, 2)
+        |SELECT band, sz, count(*)::BIGINT AS n_buckets FROM cs GROUP BY 1, 2""".stripMargin) { (s, dir) =>
+      Dedup.lshBucketCensus(t(s, dir, "documents"), "doc_id", "text")
+  }
+
+  // ---- data-card: dedup CLUSTER COHESION — per near-dup cluster
+  //      (q101's components over q42's verified pairs): docs, scored
+  //      pairs, and MEAN intra-cluster Jaccard. Low cohesion on a big
+  //      cluster = a banding-collapse smell worth auditing before the
+  //      prune. Per-pair ppm rounded once → order-free integer mean ----
+  Q("q281_cluster_cohesion", oracle =
+      // q281: q256's component machinery + per-pair ppm (round once, then
+      // integer sums) — mean intra-cluster Jaccard per cluster
+      """WITH RECURSIVE w AS (SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents),
+        |shl AS (SELECT doc_id, list_transform(range(1, len(w)-1),
+        |        i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]) AS shs
+        |        FROM w WHERE len(w) >= 3),
+        |sh AS (SELECT doc_id, unnest(shs) AS sh FROM shl),
+        |seeds AS (SELECT unnest(range(0, 16)) AS s),
+        |mh AS (SELECT doc_id, s, min(md5(s::VARCHAR || ':' || sh)) AS m
+        |       FROM sh, seeds GROUP BY 1, 2),
+        |bk AS (SELECT doc_id, s // 4 AS band, md5(string_agg(m, '|' ORDER BY s)) AS bk
+        |       FROM mh GROUP BY 1, 2),
+        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+        |         FROM bk a JOIN bk b ON a.band = b.band AND a.bk = b.bk
+        |         WHERE a.doc_id < b.doc_id),
+        |sets AS (SELECT doc_id, list_distinct(shs) AS tok FROM shl),
+        |pairs AS (SELECT c.id_a, c.id_b,
+        |            round(round(len(list_intersect(a.tok, b.tok))::DOUBLE
+        |              / (len(a.tok) + len(b.tok) - len(list_intersect(a.tok, b.tok))), 6)
+        |              * 1e6)::BIGINT AS ppm
+        |          FROM cand c JOIN sets a ON c.id_a = a.doc_id
+        |                      JOIN sets b ON c.id_b = b.doc_id
+        |          WHERE len(list_intersect(a.tok, b.tok))::DOUBLE
+        |            / (len(a.tok) + len(b.tok) - len(list_intersect(a.tok, b.tok))) >= 0.5),
+        |edges AS (SELECT id_a AS a, id_b AS b FROM pairs
+        |          UNION SELECT id_b, id_a FROM pairs),
+        |walk(id, label) AS (
+        |  SELECT a, a FROM edges
+        |  UNION
+        |  SELECT e.a, w2.label FROM edges e JOIN walk w2 ON e.b = w2.id),
+        |comp AS (SELECT id, min(label) AS cluster FROM walk GROUP BY id),
+        |cs AS (SELECT cluster, count(*)::BIGINT AS n_docs FROM comp GROUP BY 1),
+        |coh AS (SELECT c.cluster, count(*)::BIGINT AS n_pairs,
+        |          sum(p.ppm)::BIGINT AS sum_ppm
+        |        FROM pairs p JOIN comp c ON p.id_a = c.id
+        |        GROUP BY 1)
+        |SELECT cs.cluster, cs.n_docs, coh.n_pairs,
+        |  coh.sum_ppm // coh.n_pairs AS mean_jaccard_ppm
+        |FROM cs JOIN coh ON cs.cluster = coh.cluster""".stripMargin) { (s, dir) =>
+      val pairs = Dedup.minhashLshPortable(t(s, dir, "documents"), "doc_id", "text")
+        .localCheckpoint(true)
+      val comp = Dedup.components(pairs)
+      val sizes = comp.groupBy(col("cluster")).agg(count(lit(1)).as("n_docs"))
+      val coh = pairs
+        .withColumn("ppm", round(col("jaccard") * lit(1e6)).cast("long"))
+        .join(comp.select(col("id").as("id_a"), col("cluster")), Seq("id_a"))
+        .groupBy(col("cluster"))
+        .agg(count(lit(1)).as("n_pairs"), sum(col("ppm")).as("sum_ppm"))
+      sizes.join(coh, Seq("cluster"))
+        .select(col("cluster"), col("n_docs"), col("n_pairs"),
+          expr("sum_ppm DIV n_pairs").as("mean_jaccard_ppm"))
+  }
+
+  // ---- curation: near-dup dedup APPLIED — portable-minhash pairs →
+  //      connected components → min-id representative kept, other
+  //      cluster members dropped; per-lang before/after census ----
+  Q("q120_dedup_apply", oracle =
+      s"""WITH RECURSIVE $tokSql,
+        |shl AS (SELECT doc_id, list_transform(range(1, len(ws)-1),
+        |        i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]) AS shs
+        |        FROM toks WHERE len(ws) >= 3),
+        |sh AS (SELECT doc_id, unnest(shs) AS sh FROM shl),
+        |seeds AS (SELECT unnest(range(0, 16)) AS s),
+        |mh AS (SELECT doc_id, s, min(md5(s::VARCHAR || ':' || sh)) AS m
+        |       FROM sh, seeds GROUP BY 1, 2),
+        |bk AS (SELECT doc_id, s // 4 AS band, md5(string_agg(m, '|' ORDER BY s)) AS bk
+        |       FROM mh GROUP BY 1, 2),
+        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+        |         FROM bk a JOIN bk b ON a.band = b.band AND a.bk = b.bk
+        |         WHERE a.doc_id < b.doc_id),
+        |sets AS (SELECT doc_id, list_distinct(shs) AS tok FROM shl),
+        |pairs AS (SELECT c.id_a, c.id_b
+        |          FROM cand c JOIN sets a ON c.id_a = a.doc_id
+        |                      JOIN sets b ON c.id_b = b.doc_id
+        |          WHERE len(list_intersect(a.tok, b.tok))::DOUBLE
+        |            / (len(a.tok) + len(b.tok) - len(list_intersect(a.tok, b.tok))) >= 0.8),
+        |edges AS (SELECT id_a AS a, id_b AS b FROM pairs
+        |          UNION SELECT id_b, id_a FROM pairs),
+        |walk(id, label) AS (
+        |  SELECT a, a FROM edges
+        |  UNION
+        |  SELECT e.a, w2.label FROM edges e JOIN walk w2 ON e.b = w2.id),
+        |comp AS (SELECT id, min(label) AS cluster FROM walk GROUP BY id),
+        |dropped AS (SELECT id FROM comp WHERE cluster <> id)
+        |SELECT d.lang, count(*) AS n_after, CAST(sum(t.n_tok) AS BIGINT) AS tokens_after
+        |FROM documents d JOIN toks t USING (doc_id)
+        |WHERE d.doc_id NOT IN (SELECT id FROM dropped)
+        |GROUP BY d.lang""".stripMargin) { (s, dir) =>
+      val docs = t(s, dir, "documents")
+      val pairs = Dedup.minhashLshPortable(docs, "doc_id", "text",
+        shingleN = 3, numHashes = 16, bands = 4, threshold = 0.8)
+        .select(col("id_a"), col("id_b"))
+      val drop = Dedup.components(pairs)
+        .where(col("id") =!= col("cluster"))
+        .select(col("id").cast("long").as("doc_id"))
+      docs.join(drop, Seq("doc_id"), "left_anti")
+        .groupBy(col("lang"))
+        .agg(count(lit(1)).as("n_after"),
+          sum(Text.tokenCount(col("text"))).cast("long").as("tokens_after"))
+  }
+
+  // ---- dedup: SimHash with md5-portable bit votes — the blocked
+  //      candidate plan is verified against the oracle's brute-force
+  //      all-pairs scan, certifying fingerprint math AND exact recall
+  //      of the pigeonhole blocking cross-engine (q43 keeps the
+  //      MurmurHash3 production path, rows-only) ----
+  Q("q118_simhash_portable", oracle =
+      """WITH w AS (SELECT doc_id, string_split(trim(text), ' ') AS w
+        |           FROM documents WHERE doc_id < 300),
+        |tok AS (SELECT doc_id, unnest(w) AS t FROM w),
+        |h AS (SELECT doc_id, substr(md5(t), 1, 16) AS hx FROM tok),
+        |d AS (SELECT doc_id, p.p, strpos('0123456789abcdef', substr(hx, p.p + 1, 1)) - 1 AS dv
+        |      FROM h, (SELECT unnest(range(0, 16)) AS p) p),
+        |b AS (SELECT doc_id, d.p * 4 + j.j AS bit,
+        |      CASE WHEN (dv >> j.j) & 1 = 1 THEN 1 ELSE -1 END AS c
+        |      FROM d, (SELECT unnest(range(0, 4)) AS j) j),
+        |bits AS (SELECT doc_id, bit, CASE WHEN sum(c) > 0 THEN 1 ELSE 0 END AS v
+        |         FROM b GROUP BY 1, 2),
+        |fpd AS (SELECT doc_id, bit // 4 AS p,
+        |        CAST(sum(CASE WHEN v = 1 THEN 1 << (bit % 4) ELSE 0 END) AS INT) AS digit
+        |        FROM bits GROUP BY 1, 2),
+        |fph AS (SELECT doc_id, string_agg(substr('0123456789abcdef', digit + 1, 1), '' ORDER BY p) AS fph
+        |        FROM fpd GROUP BY 1),
+        |pr AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.fph AS ha, b.fph AS hb
+        |       FROM fph a, fph b WHERE a.doc_id < b.doc_id),
+        |ham AS (SELECT id_a, id_b, CAST(sum(bit_count(
+        |        xor(strpos('0123456789abcdef', substr(ha, p.p + 1, 1)) - 1,
+        |            strpos('0123456789abcdef', substr(hb, p.p + 1, 1)) - 1))) AS BIGINT) AS hamming
+        |        FROM pr, (SELECT unnest(range(0, 16)) AS p) p GROUP BY 1, 2)
+        |SELECT id_a, id_b, hamming FROM ham WHERE hamming <= 8""".stripMargin) { (s, dir) =>
+      Dedup.simhashPortable(
+        t(s, dir, "documents").where(col("doc_id") < 300), "doc_id", "text",
+        maxHamming = 8)
+  }
+
+  // ---- dedup: MinHash-LSH with an md5-portable hash family — the FULL
+  //      approximate pipeline (shingle→minhash→band→bucket-join→verify)
+  //      hash-verified value-by-value against the SQL oracle (q42 keeps
+  //      the compiled-xxhash production path, rows-only) ----
+  Q("q113_minhash_portable", oracle =
+      """WITH w AS (SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents),
+        |shl AS (SELECT doc_id, list_transform(range(1, len(w)-1),
+        |        i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]) AS shs
+        |        FROM w WHERE len(w) >= 3),
+        |sh AS (SELECT doc_id, unnest(shs) AS sh FROM shl),
+        |seeds AS (SELECT unnest(range(0, 16)) AS s),
+        |mh AS (SELECT doc_id, s, min(md5(s::VARCHAR || ':' || sh)) AS m
+        |       FROM sh, seeds GROUP BY 1, 2),
+        |bk AS (SELECT doc_id, s // 4 AS band, md5(string_agg(m, '|' ORDER BY s)) AS bk
+        |       FROM mh GROUP BY 1, 2),
+        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+        |         FROM bk a JOIN bk b ON a.band = b.band AND a.bk = b.bk
+        |         WHERE a.doc_id < b.doc_id),
+        |sets AS (SELECT doc_id, list_distinct(shs) AS tok FROM shl)
+        |SELECT c.id_a, c.id_b,
+        |round(len(list_intersect(a.tok, b.tok))::DOUBLE
+        |  / (len(a.tok) + len(b.tok) - len(list_intersect(a.tok, b.tok))), 6) AS jaccard
+        |FROM cand c JOIN sets a ON c.id_a = a.doc_id JOIN sets b ON c.id_b = b.doc_id
+        |WHERE len(list_intersect(a.tok, b.tok))::DOUBLE
+        |  / (len(a.tok) + len(b.tok) - len(list_intersect(a.tok, b.tok))) >= 0.5""".stripMargin) { (s, dir) =>
+      Dedup.minhashLshPortable(t(s, dir, "documents"), "doc_id", "text",
+        shingleN = 3, numHashes = 16, bands = 4, threshold = 0.5)
+  }
+
+  // ---- pipeline: near-dup clusters = connected components over the
+  //      exact-Jaccard pair graph (keep id==cluster as representative) ----
+  Q("q101_dedup_clusters", oracle =
+      """WITH RECURSIVE t AS (SELECT doc_id, list_distinct(string_split(trim(text),' ')) AS tok
+        |           FROM documents WHERE doc_id < 100),
+        |pairs AS (
+        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b
+        |  FROM t a, t b
+        |  WHERE a.doc_id < b.doc_id
+        |  AND len(list_intersect(a.tok, b.tok))::DOUBLE
+        |    / (len(a.tok) + len(b.tok) - len(list_intersect(a.tok, b.tok))) >= 0.9),
+        |edges AS (SELECT id_a AS a, id_b AS b FROM pairs
+        |          UNION SELECT id_b, id_a FROM pairs),
+        |walk(id, label) AS (
+        |  SELECT a, a FROM edges
+        |  UNION
+        |  SELECT e.a, w.label FROM edges e JOIN walk w ON e.b = w.id)
+        |SELECT id AS doc_id, min(label) AS cluster FROM walk GROUP BY id""".stripMargin) { (s, dir) =>
+      val docs = t(s, dir, "documents").where(col("doc_id") < 100)
+      val pairs = Dedup.tokenJaccardPairs(docs, "doc_id", "text", 0.9)
+      Dedup.components(pairs)
+        .select(col("id").cast("long").as("doc_id"),
+          col("cluster").cast("long").as("cluster"))
+  }
+
+  // ---- dedup: token-set CONTAINMENT pairs (doc-in-doc, the shape
+  //      Jaccard misses) — inverted-index candidates on rare tokens
+  //      (df cap scales with corpus size: max(100, ndocs/5)), exact
+  //      array_intersect verify, integer ppm threshold ----
+  Q("q199_containment", oracle =
+      """WITH tok AS (SELECT doc_id,
+        |  list_distinct(string_split(trim(text), ' ')) AS tok FROM documents),
+        |tk AS (SELECT doc_id, tok FROM tok WHERE len(tok) > 0),
+        |ex AS (SELECT doc_id, unnest(tok) AS t FROM tk),
+        |rare AS (SELECT t FROM ex GROUP BY t HAVING count(*) BETWEEN 2 AND
+        |  greatest(100, (SELECT count(*) FROM documents) // 5)),
+        |re AS (SELECT ex.doc_id, ex.t FROM ex JOIN rare USING (t)),
+        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+        |  FROM re a JOIN re b USING (t) WHERE a.doc_id < b.doc_id),
+        |p AS (SELECT id_a, id_b, ta.tok AS ta, tb.tok AS tb FROM cand
+        |  JOIN tk ta ON ta.doc_id = cand.id_a
+        |  JOIN tk tb ON tb.doc_id = cand.id_b),
+        |m AS (SELECT id_a, id_b, CAST(len(ta) AS BIGINT) AS n_a,
+        |  CAST(len(tb) AS BIGINT) AS n_b,
+        |  CAST(len(list_intersect(ta, tb)) AS BIGINT) AS inter FROM p)
+        |SELECT id_a, id_b, n_a, n_b, inter,
+        |  inter * 1000000 // least(n_a, n_b) AS cont_ppm FROM m
+        |WHERE inter * 1000000 // least(n_a, n_b) >= 600000""".stripMargin) { (s, dir) =>
+      val docs = t(s, dir, "documents")
+      val cap = math.max(100L, docs.count() / 5)
+      Dedup.containmentPairs(docs, "doc_id", "text", 600000L, maxDf = cap)
+  }
+
+  // ---- dedup: sorted-neighborhood blocking (merge/purge) — rank the
+  //      distinct p_name domain via the OrderedScan stitch, equi-join on
+  //      rank bands (window 10), Levenshtein ≤ 2 — the O(domain·w)
+  //      windowed complement of q192's length-banded cross ----
+  Q("q201_sorted_neighborhood", oracle =
+      """WITH n AS (SELECT p_name AS v, count(*) AS c FROM part GROUP BY 1),
+        |r AS (SELECT v, c, row_number() OVER (ORDER BY v) - 1 AS r FROM n)
+        |SELECT a.v AS name_a, b.v AS name_b, levenshtein(a.v, b.v) AS dist,
+        |  a.c * b.c AS n_pairs
+        |FROM r a JOIN r b ON b.r > a.r AND b.r - a.r <= 10
+        |WHERE levenshtein(a.v, b.v) <= 2""".stripMargin) { (s, dir) =>
+      Dedup.sortedNeighborhoodPairs(t(s, dir, "part"), "p_name",
+        window = 10, maxDist = 2)
+  }
+
+  // ---- dedup: Fellegi-Sunter record-linkage score histogram —
+  //      (nation, segment) blocking, three agreement fields with fixed
+  //      micro log-likelihood prior weights (exact-integer scores);
+  //      the merge/purge review distribution ----
+  Q("q231_linkage_scores", oracle =
+      """WITH c AS (SELECT c_custkey AS id, c_nationkey AS b0, c_mktsegment AS b1,
+        |    CAST(round(c_acctbal * 100) AS BIGINT) // 100000 AS f0,
+        |    substr(c_name, -2, 2) AS f1,
+        |    c_acctbal >= 0 AS f2
+        |  FROM customer)
+        |SELECT (CASE WHEN l.f0 IS NOT DISTINCT FROM r.f0
+        |          THEN 2197225 ELSE -2197225 END
+        |      + CASE WHEN l.f1 IS NOT DISTINCT FROM r.f1
+        |          THEN 4553877 ELSE -2985682 END
+        |      + CASE WHEN l.f2 IS NOT DISTINCT FROM r.f2
+        |          THEN 672944 ELSE -3218876 END) AS score_micro,
+        |  CAST(count(*) AS BIGINT) AS n_pairs
+        |FROM c l JOIN c r ON l.b0 IS NOT DISTINCT FROM r.b0
+        |  AND l.b1 IS NOT DISTINCT FROM r.b1 AND l.id < r.id
+        |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
+      Dedup.linkageScoreHistogram(t(s, dir, "customer"), "c_custkey",
+        Seq(col("c_nationkey"), col("c_mktsegment")),
+        Seq(
+          // thousand-dollar balance bucket: m=.9/u=.1 → ±ln 9
+          (expr("CAST(round(c_acctbal * 100) AS BIGINT) DIV 100000"),
+            2197225L, -2197225L),
+          // customer-number suffix (last 2 digits): m=.95/u=.01
+          (expr("substr(c_name, -2, 2)"), 4553877L, -2985682L),
+          // balance sign: m=.98/u=.5
+          (col("c_acctbal") >= 0, 672944L, -3218876L)))
+  }
+
+  // ---- data-card panel: DUPLICATE-CLUSTER SIZE DISTRIBUTION — how much
+  //      of the corpus sits in 2-dup / 3-dup / N-dup clusters (the
+  //      figure every dataset paper reports); components → cluster
+  //      census → size histogram, all map-side-partial aggs ----
+  Q("q256_cluster_sizes", oracle =
+      """WITH RECURSIVE w AS (SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents),
+        |shl AS (SELECT doc_id, list_transform(range(1, len(w)-1),
+        |        i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]) AS shs
+        |        FROM w WHERE len(w) >= 3),
+        |sh AS (SELECT doc_id, unnest(shs) AS sh FROM shl),
+        |seeds AS (SELECT unnest(range(0, 16)) AS s),
+        |mh AS (SELECT doc_id, s, min(md5(s::VARCHAR || ':' || sh)) AS m
+        |       FROM sh, seeds GROUP BY 1, 2),
+        |bk AS (SELECT doc_id, s // 4 AS band, md5(string_agg(m, '|' ORDER BY s)) AS bk
+        |       FROM mh GROUP BY 1, 2),
+        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+        |         FROM bk a JOIN bk b ON a.band = b.band AND a.bk = b.bk
+        |         WHERE a.doc_id < b.doc_id),
+        |sets AS (SELECT doc_id, list_distinct(shs) AS tok FROM shl),
+        |pairs AS (SELECT c.id_a, c.id_b
+        |          FROM cand c JOIN sets a ON c.id_a = a.doc_id
+        |                      JOIN sets b ON c.id_b = b.doc_id
+        |          WHERE len(list_intersect(a.tok, b.tok))::DOUBLE
+        |            / (len(a.tok) + len(b.tok) - len(list_intersect(a.tok, b.tok))) >= 0.5),
+        |edges AS (SELECT id_a AS a, id_b AS b FROM pairs
+        |          UNION SELECT id_b, id_a FROM pairs),
+        |walk(id, label) AS (
+        |  SELECT a, a FROM edges
+        |  UNION
+        |  SELECT e.a, w2.label FROM edges e JOIN walk w2 ON e.b = w2.id),
+        |comp AS (SELECT id, min(label) AS cluster FROM walk GROUP BY id),
+        |cs AS (SELECT cluster, count(*) AS sz FROM comp GROUP BY 1)
+        |SELECT sz, count(*) AS n_clusters, CAST(sz * count(*) AS BIGINT) AS docs_in
+        |FROM cs GROUP BY 1""".stripMargin) { (s, dir) =>
+      val pairs = Dedup.minhashLshPortable(t(s, dir, "documents"), "doc_id", "text",
+        shingleN = 3, numHashes = 16, bands = 4, threshold = 0.5)
+        .select(col("id_a"), col("id_b"))
+      Dedup.components(pairs)
+        .groupBy(col("cluster")).agg(count(lit(1)).as("sz"))
+        .groupBy(col("sz")).agg(count(lit(1)).as("n_clusters"))
+        .withColumn("docs_in", col("sz") * col("n_clusters"))
+  }
+
+  // ---- data-card panel: CROSS-SOURCE duplication matrix — which crawls
+  //      duplicate each other (directs dedup priority and licensing
+  //      review); near-dup pairs annotated with both sides' sources,
+  //      symmetrized to an unordered (src_lo, src_hi) census ----
+  Q("q257_cross_source_dups", oracle =
+      """WITH w AS MATERIALIZED (SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents),
+        |shl AS MATERIALIZED (SELECT doc_id, list_transform(range(1, len(w)-1),
+        |        i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]) AS shs
+        |        FROM w WHERE len(w) >= 3),
+        |sh AS (SELECT doc_id, unnest(shs) AS sh FROM shl),
+        |seeds AS (SELECT unnest(range(0, 16)) AS s),
+        |mh AS (SELECT doc_id, s, min(md5(s::VARCHAR || ':' || sh)) AS m
+        |       FROM sh, seeds GROUP BY 1, 2),
+        |bk AS (SELECT doc_id, s // 4 AS band, md5(string_agg(m, '|' ORDER BY s)) AS bk
+        |       FROM mh GROUP BY 1, 2),
+        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+        |         FROM bk a JOIN bk b ON a.band = b.band AND a.bk = b.bk
+        |         WHERE a.doc_id < b.doc_id),
+        |sets AS (SELECT doc_id, list_distinct(shs) AS tok FROM shl),
+        |pairs AS (SELECT c.id_a, c.id_b
+        |          FROM cand c JOIN sets a ON c.id_a = a.doc_id
+        |                      JOIN sets b ON c.id_b = b.doc_id
+        |          WHERE len(list_intersect(a.tok, b.tok))::DOUBLE
+        |            / (len(a.tok) + len(b.tok) - len(list_intersect(a.tok, b.tok))) >= 0.5)
+        |SELECT least(da.source, db.source) AS src_lo,
+        |  greatest(da.source, db.source) AS src_hi,
+        |  count(*) AS n_pairs
+        |FROM pairs p JOIN documents da ON p.id_a = da.doc_id
+        |             JOIN documents db ON p.id_b = db.doc_id
+        |GROUP BY 1, 2""".stripMargin) { (s, dir) =>
+      val docs = t(s, dir, "documents")
+      val pairs = Dedup.minhashLshPortable(docs, "doc_id", "text",
+        shingleN = 3, numHashes = 16, bands = 4, threshold = 0.5)
+        .select(col("id_a"), col("id_b"))
+      val src = docs.select(col("doc_id"), col("source"))
+      pairs
+        .join(src.select(col("doc_id").as("id_a"), col("source").as("s_a")), Seq("id_a"))
+        .join(src.select(col("doc_id").as("id_b"), col("source").as("s_b")), Seq("id_b"))
+        .select(least(col("s_a"), col("s_b")).as("src_lo"),
+          greatest(col("s_a"), col("s_b")).as("src_hi"))
+        .groupBy(col("src_lo"), col("src_hi"))
+        .agg(count(lit(1)).as("n_pairs"))
+  }
+
+  // ---- graph curation: k-CORE of the near-dup similarity graph — the
+  //      dense-cluster detector (template farms survive the peel; stray
+  //      pairs don't). Iterative peel, rounds bounded by degeneracy
+  //      depth; the oracle replays a fixed unrolled ladder (the peel is
+  //      idempotent at the fixed point, so spare rounds are no-ops) ----
+  Q("q254_kcore", oracle =
+      // q254: the peel is replayed as 5 unrolled rounds — measured
+      // convergence is 2 rounds at every SF (1 peel + 1 confirm) and the
+      // peel is idempotent at the fixed point, so the spare rounds are no-ops
+      """WITH w AS MATERIALIZED (SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents),
+        |shl AS MATERIALIZED (SELECT doc_id, list_transform(range(1, len(w)-1),
+        |        i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]) AS shs
+        |        FROM w WHERE len(w) >= 3),
+        |sh AS MATERIALIZED (SELECT doc_id, unnest(shs) AS sh FROM shl),
+        |seeds AS MATERIALIZED (SELECT unnest(range(0, 16)) AS s),
+        |mh AS MATERIALIZED (SELECT doc_id, s, min(md5(s::VARCHAR || ':' || sh)) AS m
+        |       FROM sh, seeds GROUP BY 1, 2),
+        |bk AS MATERIALIZED (SELECT doc_id, s // 4 AS band, md5(string_agg(m, '|' ORDER BY s)) AS bk
+        |       FROM mh GROUP BY 1, 2),
+        |cand AS MATERIALIZED (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+        |         FROM bk a JOIN bk b ON a.band = b.band AND a.bk = b.bk
+        |         WHERE a.doc_id < b.doc_id),
+        |sets AS MATERIALIZED (SELECT doc_id, list_distinct(shs) AS tok FROM shl),
+        |pairs AS MATERIALIZED (SELECT c.id_a, c.id_b
+        |          FROM cand c JOIN sets a ON c.id_a = a.doc_id
+        |                      JOIN sets b ON c.id_b = b.doc_id
+        |          WHERE len(list_intersect(a.tok, b.tok))::DOUBLE
+        |            / (len(a.tok) + len(b.tok) - len(list_intersect(a.tok, b.tok))) >= 0.5),
+        |e0 AS MATERIALIZED (SELECT id_a AS a, id_b AS b FROM pairs
+        |       UNION SELECT id_b, id_a FROM pairs),
+        |k1 AS MATERIALIZED (SELECT a FROM e0 GROUP BY a HAVING count(*) >= 2),
+        |e1 AS MATERIALIZED (SELECT e.a, e.b FROM e0 e JOIN k1 x ON e.a = x.a JOIN k1 y ON e.b = y.a),
+        |k2 AS MATERIALIZED (SELECT a FROM e1 GROUP BY a HAVING count(*) >= 2),
+        |e2 AS MATERIALIZED (SELECT e.a, e.b FROM e1 e JOIN k2 x ON e.a = x.a JOIN k2 y ON e.b = y.a),
+        |k3 AS MATERIALIZED (SELECT a FROM e2 GROUP BY a HAVING count(*) >= 2),
+        |e3 AS MATERIALIZED (SELECT e.a, e.b FROM e2 e JOIN k3 x ON e.a = x.a JOIN k3 y ON e.b = y.a),
+        |k4 AS MATERIALIZED (SELECT a FROM e3 GROUP BY a HAVING count(*) >= 2),
+        |e4 AS MATERIALIZED (SELECT e.a, e.b FROM e3 e JOIN k4 x ON e.a = x.a JOIN k4 y ON e.b = y.a),
+        |k5 AS MATERIALIZED (SELECT a FROM e4 GROUP BY a HAVING count(*) >= 2),
+        |e5 AS MATERIALIZED (SELECT e.a, e.b FROM e4 e JOIN k5 x ON e.a = x.a JOIN k5 y ON e.b = y.a)
+        |SELECT a AS doc_id, count(*) AS core_degree FROM e5 GROUP BY 1""".stripMargin) { (s, dir) =>
+      val pairs = Dedup.minhashLshPortable(t(s, dir, "documents"), "doc_id", "text",
+        shingleN = 3, numHashes = 16, bands = 4, threshold = 0.5)
+      // maxIter = 5 on purpose: the SQL oracle replays a FIXED 5-round
+      // unrolled ladder, so a graph that genuinely needed more peel rounds
+      // must fail LOUDLY here (kCore requires convergence within maxIter)
+      // rather than surface as a confusing oracle hash mismatch
+      Graphs.kCore(pairs, "id_a", "id_b", k = 2, maxIter = 5)
+        .select(col("id").cast("long").as("doc_id"), col("core_degree"))
+  }
+
+  // ---- dedup-apply, the INCREMENTAL form: yesterday's cluster labels
+  //      enter as star edges and only the new batch's pairs (batch-self
+  //      LSH + batch×corpus delta) propagate — convergence bounded by the
+  //      NEW edges' diameter, not the historical graph's. The oracle
+  //      recomputes components over the FULL pair graph, certifying that
+  //      warm-start and full recompute reach the same fixed point ----
+  Q("q251_incremental_components", oracle =
+      // q251: warm-start == full recompute — the oracle walks the COMPLETE
+      // pair graph (old-self ∪ new-self ∪ cross = all full-corpus pairs,
+      // since banding is per-doc deterministic)
+      """WITH RECURSIVE w AS (SELECT doc_id, string_split(trim(text), ' ') AS w FROM documents),
+        |shl AS (SELECT doc_id, list_transform(range(1, len(w)-1),
+        |        i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]) AS shs
+        |        FROM w WHERE len(w) >= 3),
+        |sh AS (SELECT doc_id, unnest(shs) AS sh FROM shl),
+        |seeds AS (SELECT unnest(range(0, 16)) AS s),
+        |mh AS (SELECT doc_id, s, min(md5(s::VARCHAR || ':' || sh)) AS m
+        |       FROM sh, seeds GROUP BY 1, 2),
+        |bk AS (SELECT doc_id, s // 4 AS band, md5(string_agg(m, '|' ORDER BY s)) AS bk
+        |       FROM mh GROUP BY 1, 2),
+        |cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+        |         FROM bk a JOIN bk b ON a.band = b.band AND a.bk = b.bk
+        |         WHERE a.doc_id < b.doc_id),
+        |sets AS (SELECT doc_id, list_distinct(shs) AS tok FROM shl),
+        |pairs AS (SELECT c.id_a, c.id_b
+        |          FROM cand c JOIN sets a ON c.id_a = a.doc_id
+        |                      JOIN sets b ON c.id_b = b.doc_id
+        |          WHERE len(list_intersect(a.tok, b.tok))::DOUBLE
+        |            / (len(a.tok) + len(b.tok) - len(list_intersect(a.tok, b.tok))) >= 0.8),
+        |edges AS (SELECT id_a AS a, id_b AS b FROM pairs
+        |          UNION SELECT id_b, id_a FROM pairs),
+        |walk(id, label) AS (
+        |  SELECT a, a FROM edges
+        |  UNION
+        |  SELECT e.a, w2.label FROM edges e JOIN walk w2 ON e.b = w2.id),
+        |comp AS (SELECT id, min(label) AS cluster FROM walk GROUP BY id),
+        |dropped AS (SELECT id FROM comp WHERE cluster <> id)
+        |SELECT d.lang, count(*) AS n_after, CAST(sum(d.n_chars) AS BIGINT) AS chars_after
+        |FROM documents d
+        |WHERE d.doc_id NOT IN (SELECT id FROM dropped)
+        |GROUP BY d.lang""".stripMargin) { (s, dir) =>
+      val docs = t(s, dir, "documents")
+      // banding is per-doc deterministic, so hashing the corpus ONCE and
+      // splitting the pair set by id group yields exactly (old-self pairs,
+      // new-batch pairs) — the pair sets a production system gets from its
+      // stored index (q250) + the batch's own hashes, without re-shingling
+      // either side per phase
+      val pairsAll = Dedup.minhashLshPortable(docs, "doc_id", "text",
+        shingleN = 3, numHashes = 16, bands = 4, threshold = 0.8)
+        .select(col("id_a"), col("id_b")).localCheckpoint(true)
+      val oldPairs = pairsAll
+        .where(col("id_a") % 3 =!= 0 && col("id_b") % 3 =!= 0)
+      val newPairs = pairsAll
+        .where(col("id_a") % 3 === 0 || col("id_b") % 3 === 0)
+      val labels0 = Dedup.components(oldPairs)
+      val labels = Dedup.componentsIncremental(labels0, newPairs)
+      val drop = labels.where(col("id") =!= col("cluster"))
+        .select(col("id").cast("long").as("doc_id"))
+      docs.join(drop, Seq("doc_id"), "left_anti")
+        .groupBy(col("lang"))
+        .agg(count(lit(1)).as("n_after"), sum(col("n_chars")).as("chars_after"))
+  }
+}

@@ -35,15 +35,7 @@ object SparkSpecBase {
     * get the rebuilt session from here. */
   def session: SparkSession = synchronized {
     if (cached == null || cached.sparkContext.isStopped) {
-      cached = SparkSession.builder()
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", 4)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-        .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+      cached = LocalSession.builder(4).getOrCreate()
       cached.sparkContext.setLogLevel("WARN")
     }
     cached

@@ -7,6 +7,9 @@ Reads each <out>/<name> parquet (Spark result) and runs the matching
 oracle_sql.json query in DuckDB with tables registered as views over
 <sf_dir>/*.parquet. Compares: schema (column names), row count, and values
 (columns sorted by name, rows sorted by all columns; floats to 1e-9 rel tol).
+Every query declares its oracle, so a dumped result with no oracle entry
+fails, and so does a checked name (every oracle entry when no subset is
+given) with no dumped result.
 """
 import json, sys, glob, os
 import duckdb
@@ -38,16 +41,19 @@ def norm(df):
                 df[c] = df[c].astype(str)
     return df.sort_values(by=list(df.columns), na_position="first").reset_index(drop=True)
 
-fails, passes, skips = [], 0, 0
-for name in sorted(os.listdir(out_dir)):
+fails, passes = [], 0
+dumped = {name for name in os.listdir(out_dir)
+          if os.path.isdir(os.path.join(out_dir, name))}
+for name in sorted((only or set(oracle)) - dumped):
+    fails.append(name)
+    print(f"FAIL  {name}: no dumped result")
+for name in sorted(dumped):
     path = os.path.join(out_dir, name)
-    if not os.path.isdir(path):
-        continue
     if only and name not in only:
         continue
     if name not in oracle:
-        skips += 1
-        print(f"SKIP  {name} (no oracle — rows-only)")
+        fails.append(name)
+        print(f"FAIL  {name}: dumped result but no oracle entry")
         continue
     try:
         got = norm(pd.concat([pd.read_parquet(p) for p in glob.glob(f"{path}/*.parquet")]))
@@ -95,5 +101,5 @@ for name in sorted(os.listdir(out_dir)):
         passes += 1
         print(f"PASS  {name} ({len(got)} rows)")
 
-print(f"\n{passes} passed, {len(fails)} failed, {skips} rows-only")
+print(f"\n{passes} passed, {len(fails)} failed")
 sys.exit(1 if fails else 0)
