@@ -5,6 +5,16 @@ object Bench {
   private def n3(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
+  /** The queries whose `qNN` id is in `only` (every query when None). An
+    * id no query declares is an `IllegalArgumentException` naming every
+    * such id — a typo must not silently time nothing. */
+  private[graft] def selectOnly[A](declared: Map[String, A], only: Option[Set[String]]): Map[String, A] = {
+    import graft.queries.Query.prefix
+    val unknown = only.toSeq.flatMap(_ -- declared.keySet.map(prefix)).sorted
+    require(unknown.isEmpty, s"SPARK_GRAFT_BENCH_ONLY: unknown query ids: ${unknown.mkString(" ")}")
+    declared.filter { case (name, _) => only.forall(_.contains(prefix(name))) }
+  }
+
   /** Assemble the driver-visible tail line: per-query entries slowest-first
     * (bare-number keys, integer ms) until `lineBudget` bytes, the rest
     * declared in `qomit`. The budget is enforced against the ACTUAL wrapper
@@ -169,9 +179,7 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val reps = sys.env.get("SPARK_GRAFT_BENCH_REPS").map(_.toInt).getOrElse(1)
-    val selectedReal = SparkEntry.queries.filter { case (name, _) =>
-      only.forall(_.contains(name.takeWhile(_ != '_')))
-    }
+    val selectedReal = selectOnly(SparkEntry.queries, only)
     // fault injection for auditing the -1 error sentinel end-to-end:
     // SPARK_GRAFT_BENCH_FAULT=qNN makes that query throw instantly — the
     // record must show "qNN":-1 + qerr, never a plausible fast timing.

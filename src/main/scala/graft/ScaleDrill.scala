@@ -511,18 +511,8 @@ object ScaleDrill {
         val srcDir = ndDir.resolve("src")
         java.nio.file.Files.createDirectories(srcDir)
         val inc = docs.select(col("doc_id"), col("text"))
-        (0 until 4).foreach { b =>
-          val tmp = ndDir.resolve(s"tmp$b")
-          inc.where(pmod(col("doc_id"), lit(4)) === b).coalesce(1)
-            .write.mode("overwrite").parquet(tmp.toString)
-          val part = new java.io.File(tmp.toString).listFiles()
-            .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
-            .head
-          val dst = srcDir.resolve(f"b$b%02d.parquet")
-          java.nio.file.Files.move(part.toPath, dst)
-          dst.toFile.setLastModified(1000000L * (b + 1)) // arrival order
-          org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
-        }
+        streaming.Streams.stageBatchFiles(inc,
+          (0 until 4).map(b => pmod(col("doc_id"), lit(4)) === b), srcDir, "drill_nd")
         quiesce()
         mx.reset(sc)
         val t0 = System.nanoTime()

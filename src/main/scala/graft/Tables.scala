@@ -56,9 +56,8 @@ object Tables {
     * footer schema depends only on the files plus the two parquet-reader
     * confs that change how timestamp columns surface — both are in the
     * key, so a session with different settings can never read a stale
-    * entry. (Keying by session held every per-query stream session —
-    * e.g. the RocksDB-tagged children of statefulUserTotalsRocksDb —
-    * strongly forever AND missed the cache for them; this key leaks
+    * entry. (Keying by session would hold every per-call stream session
+    * strongly forever AND miss the cache for them; this key leaks
     * nothing and hits for every session.) */
   private val schemaMemo =
     new java.util.concurrent.ConcurrentHashMap[(String, String, String, String), StructType]()

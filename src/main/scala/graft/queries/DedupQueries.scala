@@ -260,6 +260,7 @@ object DedupQueries extends QueryFamily {
       // their stages across the 32 cores (the cluster story is identical:
       // concurrent jobs share the executor pool).
       import scala.concurrent.{Await, Future}
+      import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
       val textPairsF = Future(Dedup.minhashLshPortable(docs, "doc_id", "text",
         shingleN = 3, numHashes = 16, bands = 4, threshold = 0.5)
@@ -267,8 +268,9 @@ object DedupQueries extends QueryFamily {
       val semPairsF = Future(Dedup.semanticDedup(t(s, dir, "embeddings"),
         "vec_id", "embedding", k = 8, thrNum = 4, thrDen = 10)
         .select(col("id_a"), col("id_b")).localCheckpoint(true))
-      val textPairs = Await.result(textPairsF, scala.concurrent.duration.Duration.Inf)
-      val semPairs = Await.result(semPairsF, scala.concurrent.duration.Duration.Inf)
+      graft.functions.Par.awaitAllSettled(textPairsF, semPairsF)
+      val textPairs = Await.result(textPairsF, Duration.Zero)
+      val semPairs = Await.result(semPairsF, Duration.Zero)
       // no .distinct() here: components() canonicalizes (both-direction
       // union + distinct) anyway — a pre-distinct is a redundant shuffle
       val drop = Dedup.components(textPairs.unionAll(semPairs))

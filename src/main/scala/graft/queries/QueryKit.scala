@@ -43,25 +43,21 @@ private[graft] object QueryKit {
   // two dirs sharing one warehouse would silently alias their index tables
   // (the _meta corpus_fp check would still catch it, but the name should
   // not collide in the first place)
-  def lshIndexTable(dir: String): String = {
+  private def indexTable(family: String, dir: String): String = {
     val d = java.security.MessageDigest.getInstance("MD5").digest(dir.getBytes("UTF-8"))
-    s"graft_lsh_idx_${d.map("%02x".format(_)).mkString}"
+    s"graft_${family}_idx_${d.map("%02x".format(_)).mkString}"
   }
+
+  def lshIndexTable(dir: String): String = indexTable("lsh", dir)
 
   // the corpus identity recorded in the index _meta and re-asserted at
   // every ensure/probe: same table name + same hash family over a
   // DIFFERENT subset is the silent-wrong-corpus case only this catches
   def lshCorpusFp(dir: String): String = s"documents[doc_id%7!=0]@$dir"
 
-  def ivfIndexTable(dir: String): String = {
-    val d = java.security.MessageDigest.getInstance("MD5").digest(dir.getBytes("UTF-8"))
-    s"graft_ivf_idx_${d.map("%02x".format(_)).mkString}"
-  }
+  def ivfIndexTable(dir: String): String = indexTable("ivf", dir)
   def ivfCorpusFp(dir: String): String = s"embeddings@$dir"
-  def pqIndexTable(dir: String): String = {
-    val d = java.security.MessageDigest.getInstance("MD5").digest(dir.getBytes("UTF-8"))
-    s"graft_pq_idx_${d.map("%02x".format(_)).mkString}"
-  }
+  def pqIndexTable(dir: String): String = indexTable("pq", dir)
 
   /** Daily order totals — the ordered "time series" backing series ops. */
   def daily(s: SparkSession, dir: String): KSeries =

@@ -1120,6 +1120,7 @@ object TextQueries extends QueryFamily {
       // cut-sampling jobs at construction — build them concurrently so the
       // scheduler overlaps their stages (the q179 discipline)
       import scala.concurrent.{Await, Future}
+      import scala.concurrent.duration.Duration
       import scala.concurrent.ExecutionContext.Implicits.global
       val raF = Future(OrderedScan.rowNumber(
           d.select(col("doc_id"), enc(col("n_chars")).as("__k")), "__k", "__r")
@@ -1128,9 +1129,9 @@ object TextQueries extends QueryFamily {
           d.select(col("doc_id"), enc(Text.tokenCount(col("text"))).as("__k")),
           "__k", "__r")
         .select(col("doc_id"), (col("__r") + 1L).as("rank")))
-      val ra = Await.result(raF, scala.concurrent.duration.Duration.Inf)
-      val rb = Await.result(rbF, scala.concurrent.duration.Duration.Inf)
-      Similarity.rrfFuse(ra, rb, "doc_id", "rank", k = 60, topN = 20)
+      graft.functions.Par.awaitAllSettled(raF, rbF)
+      Similarity.rrfFuse(Await.result(raF, Duration.Zero), Await.result(rbF, Duration.Zero),
+        "doc_id", "rank", k = 60, topN = 20)
   }
 
   // ---- text: pairwise KL drift between per-source unigram LMs —

@@ -1,9 +1,14 @@
 package graft.streaming
 
+import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, GraftShim, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, StreamingQueryProgress}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 import graft.Tables
 
@@ -12,47 +17,63 @@ import graft.Tables
   *
   * The same tumbling/session aggregations exposed as batch operators run
   * unchanged as streams: `readStream` → watermark → windowed agg. For local
-  * verification the stream is driven synchronously to completion over the
-  * parquet input (`processAllAvailable`) into a memory sink — the query
-  * plan is identical to what a Kafka-fed cluster deployment would run.
+  * verification each stream is driven synchronously until its input is
+  * drained — the query plan is identical to what a Kafka-fed cluster
+  * deployment would run.
+  *
+  * Every op is one [[run]]: a [[Source]], a plan over its streaming frame
+  * and a [[Sink]]. The run's contract, stated once:
+  *  - Session: the stream runs in ONE child session built per call
+  *    (shared SparkContext, own SQLConf: the caller's runtime conf, shuffle
+  *    width 8, the state store the op asks for). The caller's conf is
+  *    never mutated, so concurrent queries on it are never raced.
+  *  - Replay: `foreachBatch` is at-least-once (a failed batch REPLAYS with
+  *    the same checkpointed batchId), so every per-batch write overwrites
+  *    its own `batch=<id>` partition ([[BatchSink]]), and a batch that reads
+  *    its sink back sees only the OTHER batches' partitions — a replay
+  *    rewrites the same files from the same pre-batch state.
+  *  - Cleanup: staged input, sink and checkpoint directories are deleted
+  *    when the run ends, on success or failure, as is the memory-sink
+  *    table; only caller-owned directories (`resumeAt`) survive.
+  *  - Result: the sink is read back through a declared schema (well-defined
+  *    on an empty sink), pinned by `localCheckpoint` and re-rooted in the
+  *    CALLER's session, so downstream composition never touches the
+  *    throwaway stream session and repeated calls accumulate neither sink
+  *    tables nor temp dirs.
   */
 object Streams {
 
   private val nameCounter = new AtomicInteger(0)
 
-  /** Isolated child session for a verification stream: local streams carry
-    * tiny per-batch state, so the session's batch-sized shuffle width just
-    * multiplies state-store open/commit overhead — but mutating the
-    * caller's session-global conf would race any concurrent query on it.
-    * The child (shared SparkContext, own SQLConf) inherits the caller's
-    * runtime conf (ANSI, nanosAsLong, …) minus the shuffle width. */
-  /** New session (shared SparkContext, own SQLConf) inheriting the
-    * caller's runtime conf — static entries throw AnalysisException on set
-    * and are skipped. */
-  private def sessionWithConfs(spark: SparkSession): SparkSession = {
-    val s2 = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      try s2.conf.set(k, v) catch { case _: org.apache.spark.sql.AnalysisException => () }
-    }
-    s2
-  }
+  private def rocksDbToggled(spark: SparkSession): Boolean =
+    spark.conf.getOption("spark.graft.streaming.stateStore").exists(_.equalsIgnoreCase("rocksdb"))
 
-  private[graft] def isolatedStreamSession(spark: SparkSession): SparkSession = {
-    val stream = sessionWithConfs(spark)
+  /** The child session a stream of `spark`'s runs in, on the state store
+    * `spark.graft.streaming.stateStore` selects. */
+  private[graft] def isolatedStreamSession(spark: SparkSession): SparkSession =
+    streamSession(spark, rocksDbToggled(spark))
+
+  /** Local streams carry tiny per-batch state, so the caller's batch-sized
+    * shuffle width would just multiply state-store open/commit overhead.
+    *
+    * At 100 TB the stateful queries (dedup-by-id, funnel state machines,
+    * session windows) hold per-key state for every live key in the
+    * watermark horizon — on the default HDFS-backed in-memory provider that
+    * state lives on-heap and OOMs executors long before the data does.
+    * `rocksDb` routes state to the embedded RocksDB provider (off-heap,
+    * spills to local SSD, incremental checkpoints) with NO query change —
+    * the plan, results and watermark semantics are identical (asserted in
+    * RocksDbStateSpec). The toggle's default stays in-memory: for the local
+    * verification streams state is tiny and RocksDB's per-batch
+    * open/commit overhead would only slow the suite. */
+  private def streamSession(spark: SparkSession, rocksDb: Boolean): SparkSession = {
+    val stream = spark.newSession()
+    // static entries throw on set and are skipped
+    spark.conf.getAll.foreach { case (k, v) =>
+      try stream.conf.set(k, v) catch { case _: AnalysisException => () }
+    }
     stream.conf.set("spark.sql.shuffle.partitions", "8")
-    // At 100 TB the stateful queries (dedup-by-id, funnel state machines,
-    // session windows) hold per-key state for every live key in the
-    // watermark horizon — on the default HDFS-backed in-memory provider
-    // that state lives on-heap and OOMs executors long before the data
-    // does. `spark.graft.streaming.stateStore=rocksdb` routes state to the
-    // embedded RocksDB provider (off-heap, spills to local SSD, incremental
-    // checkpoints to the checkpoint location) with NO query change — the
-    // plan, results, and watermark semantics are identical (asserted in
-    // RocksDbStateSpec). Default stays in-memory: for the local
-    // verification streams state is tiny and RocksDB's per-batch
-    // open/commit overhead would only slow the suite.
-    if (spark.conf.getOption("spark.graft.streaming.stateStore")
-          .exists(_.equalsIgnoreCase("rocksdb"))) {
+    if (rocksDb) {
       stream.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       // changelog checkpointing ships per-batch deltas instead of full
@@ -64,119 +85,160 @@ object Streams {
     stream
   }
 
-  /** The file-stream source requires a DIRECTORY; expose the single
-    * events.parquet file through a temp dir (symlink). Caller must delete
-    * via [[dropStagedSourceDir]]. */
-  private def stageSourceDir(dir: String): java.nio.file.Path = {
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_stream_src")
-    java.nio.file.Files.createSymbolicLink(
-      srcDir.resolve("events.parquet"),
-      java.nio.file.Paths.get(s"$dir/events.parquet"))
-    srcDir
-  }
-
-  private def dropStagedSourceDir(srcDir: java.nio.file.Path): Unit = {
-    java.nio.file.Files.deleteIfExists(srcDir.resolve("events.parquet"))
-    java.nio.file.Files.deleteIfExists(srcDir)
-  }
-
-  /** events stream off the staged dir; ts arrives either as INT64 nanos
-    * (read as long under nanosAsLong) or as timestamp[us] without timezone
-    * (TIMESTAMP_NTZ) depending on the generator vintage → normalized to a
-    * real (instant) timestamp; watermarks reject NTZ. Session timezone is
-    * UTC, so the NTZ cast preserves the stored micros exactly. */
-  private def eventsStream(
-      stream: SparkSession, batchSchema: org.apache.spark.sql.types.StructType,
-      srcDir: java.nio.file.Path): DataFrame = {
-    val raw = stream.readStream.schema(batchSchema).parquet(srcDir.toString)
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        raw.withColumn("ts",
-          col("ts").cast(org.apache.spark.sql.types.TimestampType))
-      case _ => raw
+  /** Temp directories that live exactly as long as one [[withScratch]] block. */
+  private final class Scratch {
+    val dirs = ArrayBuffer.empty[Path]
+    def apply(tag: String): Path = {
+      val d = Files.createTempDirectory(s"graft_$tag")
+      dirs += d
+      d
     }
+  }
+
+  private def withScratch[A](body: Scratch => A): A = {
+    val scratch = new Scratch
+    try body(scratch)
+    finally scratch.dirs.foreach(rmTree)
+  }
+
+  /** What a stream reads. */
+  private sealed trait Source
+
+  /** `dir`'s events.parquet linked `copies` times into one staged directory
+    * (the file source needs a DIRECTORY; a second link is an upstream
+    * redelivery of every event). */
+  private final case class EventsOf(dir: String, copies: Int = 1) extends Source
+
+  /** `incoming`, staged as one arrival-ordered file per predicate
+    * ([[stageBatchFiles]]) and read one file per trigger. */
+  private final case class Staged(incoming: DataFrame, preds: Seq[Column]) extends Source {
+    require(preds.nonEmpty, "a staged stream needs at least one batch predicate")
+  }
+
+  /** The parquet files already under `path`, `perTrigger` per micro-batch. */
+  private final case class FilesAt(path: String, schema: StructType, perTrigger: Int)
+    extends Source
+
+  /** Where a stream writes. */
+  private sealed trait Sink
+
+  /** Memory sink in output `mode`. */
+  private final case class Memory(mode: String) extends Sink
+
+  /** Parquet file sink in append mode — the production exactly-once output
+    * path (checkpointed offsets + file manifest); `columns` is its DDL. */
+  private final case class ParquetFiles(columns: String) extends Sink
+
+  /** `foreachBatch` — the escape hatch for targets Structured Streaming has
+    * no native sink for: `body(batch, batchId, sink)` runs per micro-batch
+    * against one [[BatchSink]] of `columns`. */
+  private final case class Batches(columns: String, mode: String = "append")(
+      val body: (DataFrame, Long, BatchSink) => Unit) extends Sink
+
+  /** The idempotent `batch=<id>` overwrite sink under `dir` (dynamic
+    * partition overwrite / MERGE-on-batchId are the table-format analogs),
+    * read back as the DDL `columns` plus the `batch` partition column. */
+  private final case class BatchSink(dir: String, columns: String) {
+    def write(rows: DataFrame, batchId: Long): Unit =
+      rows.write.mode("overwrite").parquet(s"$dir/batch=$batchId")
+
+    def read(s: SparkSession): DataFrame =
+      s.read.schema(StructType.fromDDL(s"$columns, batch BIGINT")).parquet(dir)
+
+    /** The sink as batch `batchId` must see it: on a replay the sink already
+      * holds batch=batchId, and treating it as seen would anti-join the
+      * replayed rows to an empty overwrite (silent data loss). */
+    def seenBefore(s: SparkSession, batchId: Long): DataFrame =
+      read(s).where(col("batch") =!= batchId)
+  }
+
+  /** Run `plan` over `source` into `sink` to completion and return the sink
+    * read back (after `readBack`) in the caller's session, plus the
+    * [[progressMetrics]] of the run. `rocksDb` forces the RocksDB state
+    * store; otherwise the caller's toggle decides. `resumeAt` = caller-owned
+    * (sink, checkpoint) directories that outlive the run, so a later run at
+    * the same pair resumes the stream. */
+  private def run(
+      spark: SparkSession, source: Source, sink: Sink, rocksDb: Boolean = false,
+      resumeAt: Option[(String, String)] = None,
+      readBack: DataFrame => DataFrame = identity)(
+      plan: DataFrame => DataFrame): (DataFrame, Map[String, Long]) = withScratch { scratch =>
+    val stream = streamSession(spark, rocksDb || rocksDbToggled(spark))
+    val input = source match {
+      case EventsOf(dir, copies) =>
+        val src = scratch("stream_src")
+        (0 until copies).foreach(i => Files.createSymbolicLink(
+          src.resolve(s"events_$i.parquet"), Paths.get(s"$dir/events.parquet")))
+        normalizeTs(stream.readStream.schema(Tables.rawSchema(spark, dir, "events"))
+          .parquet(src.toString))
+      case Staged(incoming, preds) =>
+        val src = scratch("stream_src")
+        stageBatchFiles(incoming, preds, src, "stream")
+        stream.readStream.schema(incoming.schema)
+          .option("maxFilesPerTrigger", 1L).parquet(src.toString)
+      case FilesAt(path, schema, perTrigger) =>
+        stream.readStream.schema(schema)
+          .option("maxFilesPerTrigger", perTrigger.toLong).parquet(path)
+    }
+    val (out, chk) = resumeAt.getOrElse(
+      (scratch("stream_sink").toString, scratch("stream_chk").toString))
+    val name = s"graft_stream_${nameCounter.incrementAndGet()}"
+    val writer = plan(input).writeStream.option("checkpointLocation", chk)
+    try {
+      val q = (sink match {
+        case Memory(mode) => writer.outputMode(mode).format("memory").queryName(name)
+        case ParquetFiles(_) => writer.outputMode("append").format("parquet").option("path", out)
+        case b: Batches =>
+          val to = BatchSink(out, b.columns)
+          writer.outputMode(b.mode)
+            .foreachBatch((batch: DataFrame, batchId: Long) => b.body(batch, batchId, to))
+      }).start()
+      val metrics =
+        try { q.processAllAvailable(); progressMetrics(q.recentProgress.toSeq) }
+        finally q.stop()
+      val rows = sink match {
+        case Memory(_) => stream.table(name)
+        case ParquetFiles(columns) => stream.read.schema(StructType.fromDDL(columns)).parquet(out)
+        case b: Batches => BatchSink(out, b.columns).read(stream)
+      }
+      // the checkpointed RDD is context-level, so re-rooting its plan in
+      // the caller's session is free (no row conversion, stats kept)
+      val pinned = readBack(rows).localCheckpoint(true)
+      (GraftShim.ofRows(spark, pinned.queryExecution.analyzed), metrics)
+    } finally stream.catalog.dropTempView(name)
+  }
+
+  /** The measured record of a drained stream, over its data-bearing
+    * batches: their count, wall-clock each (`batch_ms_<i>`), summed
+    * state-store commit time and peak state rows / memory. */
+  private def progressMetrics(progress: Seq[StreamingQueryProgress]): Map[String, Long] = {
+    val data = progress.filter(_.numInputRows > 0)
+    val sos = data.flatMap(_.stateOperators.toSeq)
+    Map(
+      "batches" -> data.size.toLong,
+      "state_commit_ms" -> sos.map(_.commitTimeMs).sum,
+      "state_rows_peak" -> (sos.map(_.numRowsTotal) :+ 0L).max,
+      "state_mem_peak_bytes" -> (sos.map(_.memoryUsedBytes) :+ 0L).max) ++
+      data.zipWithIndex.map { case (p, i) => s"batch_ms_$i" -> p.batchDuration }
+  }
+
+  /** ts arrives either as INT64 nanos (read as long under nanosAsLong) or as
+    * timestamp[us] without timezone (TIMESTAMP_NTZ) depending on the
+    * generator vintage → normalized to a real (instant) timestamp;
+    * watermarks reject NTZ. Session timezone is UTC, so the NTZ cast
+    * preserves the stored micros exactly. */
+  private def normalizeTs(raw: DataFrame): DataFrame = raw.schema("ts").dataType match {
+    case LongType => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+    case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
+    case _ => raw
   }
 
   /** Run a streaming aggregation over the events table to completion and
     * return the result as a batch DataFrame. */
   private def runToCompletion(
-      spark: SparkSession, dir: String, outputMode: String = "complete")(
-      agg: DataFrame => DataFrame): DataFrame = {
-    val batchSchema = graft.Tables.rawSchema(spark, dir, "events")
-    val srcDir = stageSourceDir(dir)
-    val stream = isolatedStreamSession(spark)
-    val events = eventsStream(stream, batchSchema, srcDir)
-    val name = s"graft_stream_${nameCounter.incrementAndGet()}"
-    try {
-      val q = agg(events).writeStream
-        .outputMode(outputMode)
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      // localCheckpoint pins the rows off the memory sink, so the sink table
-      // and scratch dir can be released — repeated calls in a long-lived
-      // session no longer accumulate sink tables (driver memory) or temp dirs.
-      // The checkpointed RDD is context-level, so re-rooting the result in
-      // the CALLER's session is free and keeps downstream composition in one
-      // session.
-      val chk = stream.table(name).localCheckpoint(true)
-      spark.createDataFrame(chk.rdd, chk.schema)
-    } finally {
-      stream.catalog.dropTempView(name)
-      dropStagedSourceDir(srcDir)
-    }
-  }
-
-  /** Tumbling windows through a PARQUET FILE SINK in append mode — the
-    * production exactly-once output path (checkpointed offsets + file
-    * manifest), where a window row is emitted ONLY once the watermark has
-    * passed its end (late-window finalization; complete-mode memory sinks
-    * never exercise this). Windows still open when the input is exhausted
-    * are deliberately unemitted — the batch-oracle twin is the same
-    * aggregation filtered to `window_end <= max(ts) - delay`. Returns the
-    * sink's contents read back; scratch dirs cleaned up. */
-  def tumblingFileSink(
-      spark: SparkSession, dir: String, windowLen: String): DataFrame = {
-    val batchSchema = graft.Tables.rawSchema(spark, dir, "events")
-    val srcDir = stageSourceDir(dir)
-    val sinkDir = java.nio.file.Files.createTempDirectory("graft_stream_fsink")
-    val chkDir = java.nio.file.Files.createTempDirectory("graft_stream_fchk")
-    val stream = isolatedStreamSession(spark)
-    try {
-      val events = eventsStream(stream, batchSchema, srcDir)
-      val q = events
-        .withWatermark("ts", "1 hour")
-        .groupBy(window(col("ts"), windowLen), col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(col("value")).as("total"))
-        .select(unix_timestamp(col("window.start")).as("k"),
-          col("event_type"), col("n"), round(col("total"), 4).as("total"))
-        .writeStream
-        .outputMode("append")
-        .format("parquet")
-        .option("path", sinkDir.toString)
-        .option("checkpointLocation", chkDir.toString)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      // explicit schema: when NO window finalized (input shorter than
-      // windowLen + delay) the sink dir holds only _spark_metadata and a
-      // schema-inferring read would throw instead of returning empty
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("k", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("event_type", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("n", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("total", org.apache.spark.sql.types.DoubleType)))
-      spark.read.schema(outSchema).parquet(sinkDir.toString).localCheckpoint(true)
-    } finally {
-      dropStagedSourceDir(srcDir)
-      rmTree(chkDir)
-      rmTree(sinkDir)
-    }
-  }
+      spark: SparkSession, dir: String, outputMode: String = "complete",
+      rocksDb: Boolean = false)(agg: DataFrame => DataFrame): DataFrame =
+    run(spark, EventsOf(dir), Memory(outputMode), rocksDb)(agg)._1
 
   /** Stage `incoming` as one single-file batch per predicate under
     * `srcDir`, named `bNN.parquet` with MONOTONE mtimes (= arrival order
@@ -187,19 +249,19 @@ object Streams {
     * the staging pays ~one job latency instead of |preds| (r17: staging
     * runs INSIDE the timed ingest/probe queries; profiled ~0.1-0.15 s of
     * sequential job latency per extra batch file at sf0.1). */
-  private def stageBatchFiles(
+  private[graft] def stageBatchFiles(
       incoming: DataFrame,
-      preds: Seq[org.apache.spark.sql.Column],
-      srcDir: java.nio.file.Path,
+      preds: Seq[Column],
+      srcDir: Path,
       tag: String): Unit = {
     import scala.concurrent.Future
     import scala.concurrent.ExecutionContext.Implicits.global
     val fs = preds.zipWithIndex.map { case (pred, b) =>
       Future {
-        val tmp = java.nio.file.Files.createTempDirectory(s"graft_${tag}_tmp")
+        val tmp = Files.createTempDirectory(s"graft_${tag}_tmp")
         incoming.where(pred).coalesce(1).write.mode("overwrite").parquet(tmp.toString)
         val dst = srcDir.resolve(f"b$b%02d.parquet")
-        java.nio.file.Files.move(findPartFile(tmp), dst)
+        Files.move(findPartFile(tmp), dst)
         // arrival order rides on mtime — fail LOUDLY if the filesystem
         // refuses to set it, otherwise batch order silently becomes
         // nondeterministic (order-dependent flaky results)
@@ -215,8 +277,8 @@ object Streams {
   /** Locate the single part file of a coalesce(1) write — the
     * `Files.list` stream MUST be closed (it holds a directory fd; the
     * previous inline form leaked one per staged batch). */
-  private def findPartFile(dir: java.nio.file.Path): java.nio.file.Path = {
-    val s = java.nio.file.Files.list(dir)
+  private def findPartFile(dir: Path): Path = {
+    val s = Files.list(dir)
     try {
       import scala.jdk.CollectionConverters._
       s.iterator().asScala.find(_.toString.endsWith(".parquet"))
@@ -224,75 +286,59 @@ object Streams {
     } finally s.close()
   }
 
-  private def rmTree(p: java.nio.file.Path): Unit = {
+  private def rmTree(p: Path): Unit = {
     import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p)) {
-      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
+    if (Files.exists(p)) {
+      Files.walk(p).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
     }
   }
 
+  /** Per-type tumbling-window counts/sums behind a 1 h watermark. */
+  private def tumblingTotals(windowLen: String)(events: DataFrame): DataFrame =
+    events
+      .withWatermark("ts", "1 hour")
+      .groupBy(window(col("ts"), windowLen), col("event_type"))
+      .agg(count(lit(1)).as("n"), sum(col("value")).as("total"))
+      .select(
+        unix_timestamp(col("window.start")).as("k"),
+        col("event_type"), col("n"), round(col("total"), 4).as("total"))
+
+  /** Tumbling windows through a PARQUET FILE SINK in append mode — the
+    * production exactly-once output path (checkpointed offsets + file
+    * manifest), where a window row is emitted ONLY once the watermark has
+    * passed its end (late-window finalization; complete-mode memory sinks
+    * never exercise this). Windows still open when the input is exhausted
+    * are deliberately unemitted — the batch-oracle twin is the same
+    * aggregation filtered to `window_end <= max(ts) - delay`. Returns the
+    * sink's contents read back (empty, not an error, when no window
+    * finalized). */
+  def tumblingFileSink(
+      spark: SparkSession, dir: String, windowLen: String): DataFrame =
+    run(spark, EventsOf(dir),
+        ParquetFiles("k BIGINT, event_type STRING, n BIGINT, total DOUBLE"))(
+      tumblingTotals(windowLen))._1
+
   /** `foreachBatch` sink — the escape hatch for targets Structured
     * Streaming has no native sink for (JDBC upserts, MERGE into a table
-    * format, multi-table writes). Exactly-once recipe: foreachBatch is
-    * at-least-once (a failed batch REPLAYS with the same checkpointed
-    * batchId), so the write must be IDEMPOTENT in the batchId — here each
-    * micro-batch overwrites its own deterministic `batch=<id>` directory,
-    * so a replay rewrites the same files instead of appending duplicates
-    * (dynamic partition overwrite / MERGE-on-batchId are the table-format
-    * analogs). Update-mode per-type running totals land one snapshot per
-    * batch; reading back the LATEST batch per type reproduces the batch
-    * aggregate exactly — the parity check of q133. */
-  def foreachBatchTypeTotals(spark: SparkSession, dir: String): DataFrame = {
-    val batchSchema = graft.Tables.rawSchema(spark, dir, "events")
-    val srcDir = stageSourceDir(dir)
-    val sinkDir = java.nio.file.Files.createTempDirectory("graft_stream_feb")
-    val chkDir = java.nio.file.Files.createTempDirectory("graft_stream_febchk")
-    val stream = isolatedStreamSession(spark)
-    try {
-      val events = eventsStream(stream, batchSchema, srcDir)
-      val agg = events.groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("total"))
-      val q = agg.writeStream
-        .outputMode("update")
-        .option("checkpointLocation", chkDir.toString)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.write.mode("overwrite").parquet(s"$sinkDir/batch=$batchId")
-        }
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      // explicit schema incl. the discovered `batch` partition column — an
-      // inference-free read stays well-defined on an empty sink
-      val outSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("event_type", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("n", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("total", org.apache.spark.sql.types.DoubleType),
-        org.apache.spark.sql.types.StructField("batch", org.apache.spark.sql.types.LongType)))
-      spark.read.schema(outSchema).parquet(sinkDir.toString)
-        .groupBy(col("event_type"))
+    * format, multi-table writes), made exactly-once by the idempotent
+    * `batch=<id>` overwrite. Update-mode per-type running totals land one
+    * snapshot per batch; reading back the LATEST batch per type reproduces
+    * the batch aggregate exactly — the parity check of q133. */
+  def foreachBatchTypeTotals(spark: SparkSession, dir: String): DataFrame =
+    run(spark, EventsOf(dir),
+      Batches("event_type STRING, n BIGINT, total DOUBLE", mode = "update")(
+        (batch, batchId, sink) => sink.write(batch, batchId)),
+      readBack = _.groupBy(col("event_type"))
         .agg(max_by(col("n"), col("batch")).as("n"),
-          max_by(col("total"), col("batch")).as("total"))
-        .localCheckpoint(true)
-    } finally {
-      dropStagedSourceDir(srcDir)
-      rmTree(chkDir)
-      rmTree(sinkDir)
-    }
-  }
+          max_by(col("total"), col("batch")).as("total"))) { events =>
+      events.groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("total"))
+    }._1
 
   /** Tumbling-window counts/sums per event type with a watermark —
     * the streaming twin of Resample.sampleTime. */
   def tumblingByType(spark: SparkSession, dir: String, windowLen: String): DataFrame =
-    runToCompletion(spark, dir) { events =>
-      events
-        .withWatermark("ts", "1 hour")
-        .groupBy(window(col("ts"), windowLen), col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(col("value")).as("total"))
-        .select(
-          unix_timestamp(col("window.start")).as("k"),
-          col("event_type"), col("n"), round(col("total"), 4).as("total"))
-    }
+    runToCompletion(spark, dir)(tumblingTotals(windowLen))
 
   /** Sliding (overlapping) windows — each event contributes to
     * windowLen/slide windows; the streaming twin of Series.windowDist. */
@@ -368,33 +414,16 @@ object Streams {
     * exactly the guarantee this operator is specified for, where q173's
     * unbounded `dropDuplicates` would retain state forever). The batch
     * oracle is plain DISTINCT-by-id totals. */
-  def atLeastOnceDedupTotals(spark: SparkSession, dir: String): DataFrame = {
-    val batchSchema = graft.Tables.rawSchema(spark, dir, "events")
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_stream_alo")
-    val target = java.nio.file.Paths.get(s"$dir/events.parquet")
-    java.nio.file.Files.createSymbolicLink(srcDir.resolve("events.parquet"), target)
-    java.nio.file.Files.createSymbolicLink(srcDir.resolve("events_redelivery.parquet"), target)
-    val stream = isolatedStreamSession(spark)
-    val name = s"graft_stream_${nameCounter.incrementAndGet()}"
-    try {
-      val q = eventsStream(stream, batchSchema, srcDir)
+  def atLeastOnceDedupTotals(spark: SparkSession, dir: String): DataFrame =
+    run(spark, EventsOf(dir, copies = 2), Memory("append")) { events =>
+      events
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark("event_id")
         .select(col("event_type"), col("value"))
-        .writeStream.outputMode("append").format("memory").queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      val chk = stream.table(name).localCheckpoint(true)
-      spark.createDataFrame(chk.rdd, chk.schema)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(expr("CAST(round(value * 100) AS BIGINT)")).as("v_cents"))
-    } finally {
-      stream.catalog.dropTempView(name)
-      rmTree(srcDir)
-    }
-  }
+    }._1
+      .groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n"),
+        sum(expr("CAST(round(value * 100) AS BIGINT)")).as("v_cents"))
 
   /** Streaming-ingest dedup — the streaming twin of `Dedup.exact`: drop
     * duplicate content keys as they arrive, BEFORE they reach storage (the
@@ -433,6 +462,17 @@ object Streams {
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("total"))
     }
 
+  /** Per-user gap sessions behind a 1 h watermark (see [[sessionCounts]]). */
+  private def sessionTotals(gap: String)(events: DataFrame): DataFrame =
+    events
+      .withWatermark("ts", "1 hour")
+      .groupBy(session_window(col("ts"), gap), col("user_id"))
+      .agg(count(lit(1)).as("n"), sum(col("value")).as("total"))
+      .select(
+        unix_micros(col("session_window.start")).as("sess_start"),
+        unix_micros(col("session_window.end")).as("sess_end"),
+        col("user_id"), col("n"), round(col("total"), 4).as("total"))
+
   /** Gap-based SESSION windows per user — the streaming form of
     * windowWhile's "new window when the key jumps" semantics: a session
     * holds an event iff it lands strictly before the previous event's ts +
@@ -444,86 +484,18 @@ object Streams {
     * grouping key exactly like the aggregation shuffle. Micro timestamps
     * (unix_micros / epoch_us) keep boundary values integer-exact. */
   def sessionCounts(spark: SparkSession, dir: String, gap: String): DataFrame =
-    runToCompletion(spark, dir, outputMode = "append") { events =>
-      events
-        .withWatermark("ts", "1 hour")
-        .groupBy(session_window(col("ts"), gap), col("user_id"))
-        .agg(count(lit(1)).as("n"), sum(col("value")).as("total"))
-        .select(
-          unix_micros(col("session_window.start")).as("sess_start"),
-          unix_micros(col("session_window.end")).as("sess_end"),
-          col("user_id"), col("n"), round(col("total"), 4).as("total"))
-    }
+    runToCompletion(spark, dir, outputMode = "append")(sessionTotals(gap))
 
-  /** Arbitrary-state streaming: per-user running (count, sum) via
-    * mapGroupsWithState — the Structured Streaming home of the reference's
-    * per-group custom reducers (SURVEY §2.10) and the building block for
-    * windowWhile-style session logic on unbounded streams. State lives in the
-    * state store (checkpointed, partitioned by group key at scale). */
-  def statefulUserTotals(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val updates = runToCompletion(spark, dir, outputMode = "update") { events =>
-      events
-        .select(col("user_id").cast("long").as("user_id"), col("value").cast("double").as("value"))
-        .as[(Long, Double)]
-        .groupByKey(_._1)
-        .mapGroupsWithState[(Long, Double), (Long, Long, Double)](
-          org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
-          case (user, rows, state) =>
-            val (cnt0, sum0) = state.getOption.getOrElse((0L, 0.0))
-            var cnt = cnt0
-            var total = sum0
-            rows.foreach { case (_, v) => cnt += 1; total += v }
-            state.update((cnt, total))
-            (user, cnt, total)
-        }
-        .toDF("user_id", "n_events", "sum_value")
-    }
-    // with >1 micro-batch the memory sink holds one update per batch per
-    // user; the final state is the row with the largest count
-    updates.groupBy(col("user_id"))
-      .agg(max(col("n_events")).as("n_events"),
-        round(max_by(col("sum_value"), col("n_events")), 4).as("sum_value"))
-  }
-
-  /** [[statefulUserTotals]] with per-key state routed to the RocksDB state
-    * store (the 100 TB configuration — off-heap state, changelog
-    * checkpoints; see [[isolatedStreamSession]]). Results are by
-    * construction identical to the in-memory provider's; running it as its
-    * own oracle-checked query keeps the production state path continuously
-    * verified, not just spec'd. */
-  def statefulUserTotalsRocksDb(spark: SparkSession, dir: String): DataFrame = {
-    val tagged = sessionWithConfs(spark)
-    tagged.conf.set("spark.graft.streaming.stateStore", "rocksdb")
-    statefulUserTotals(tagged, dir)
-  }
-
-  /** ScaleDrill hook: the [[statefulUserTotals]] mapGroupsWithState kernel
-    * under the ROCKSDB provider against an arbitrary pre-staged events
-    * directory (amplified input), forced through multiple micro-batches
-    * (`maxFilesPerTrigger`), returning the final per-user rows PLUS the
-    * state-store metrics the drill asserts on — summed commit ms, peak
-    * state rows, peak state memory — read from the query's progress events.
-    * This is the measured leg of the "RocksDB state scales" claim that
-    * q249/q258/q259 certify only at test SF. */
-  private[graft] def drillStatefulRocksDb(
-      spark: SparkSession, eventsDir: String, maxFilesPerTrigger: Int):
-      (DataFrame, Map[String, Long]) = {
-    import spark.implicits._
-    val tagged = sessionWithConfs(spark)
-    tagged.conf.set("spark.graft.streaming.stateStore", "rocksdb")
-    val stream = isolatedStreamSession(tagged)
-    val batchSchema = stream.read.parquet(eventsDir).schema
-    val raw = stream.readStream.schema(batchSchema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(eventsDir)
-    val updates = raw
-      .select(col("user_id").cast("long").as("user_id"),
-        col("value").cast("double").as("value"))
+  /** The q249 kernel: per-user running (count, sum) in `mapGroupsWithState`
+    * state, one update row per user per micro-batch. */
+  private def userTotalUpdates(events: DataFrame): DataFrame = {
+    val s = events.sparkSession
+    import s.implicits._
+    events
+      .select(col("user_id").cast("long").as("user_id"), col("value").cast("double").as("value"))
       .as[(Long, Double)]
       .groupByKey(_._1)
-      .mapGroupsWithState[(Long, Double), (Long, Long, Double)](
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
+      .mapGroupsWithState[(Long, Double), (Long, Long, Double)](GroupStateTimeout.NoTimeout) {
         case (user, rows, state) =>
           val (cnt0, sum0) = state.getOption.getOrElse((0L, 0.0))
           var cnt = cnt0
@@ -533,49 +505,60 @@ object Streams {
           (user, cnt, total)
       }
       .toDF("user_id", "n_events", "sum_value")
-    val name = s"graft_stream_${nameCounter.incrementAndGet()}"
-    try {
-      val q = updates.writeStream
-        .outputMode("update").format("memory").queryName(name).start()
-      val metrics = try {
-        q.processAllAvailable()
-        val sos = q.recentProgress.toSeq.flatMap(_.stateOperators.toSeq)
-        Map(
-          "state_commit_ms" -> sos.map(_.commitTimeMs).sum,
-          "state_rows_peak" -> (sos.map(_.numRowsTotal) :+ 0L).max,
-          "state_mem_peak_bytes" -> (sos.map(_.memoryUsedBytes) :+ 0L).max,
-          "batches" -> q.recentProgress.count(_.numInputRows > 0).toLong)
-      } finally q.stop()
-      val chk = stream.table(name)
-        .groupBy(col("user_id"))
-        .agg(max(col("n_events")).as("n_events"),
-          round(max_by(col("sum_value"), col("n_events")), 4).as("sum_value"))
-        .localCheckpoint(true)
-      (spark.createDataFrame(chk.rdd, chk.schema), metrics)
-    } finally stream.catalog.dropTempView(name)
   }
+
+  /** With >1 micro-batch the sink holds one update per batch per user; the
+    * final state is the row with the largest count. */
+  private def finalUserTotals(updates: DataFrame): DataFrame =
+    updates.groupBy(col("user_id"))
+      .agg(max(col("n_events")).as("n_events"),
+        round(max_by(col("sum_value"), col("n_events")), 4).as("sum_value"))
+
+  /** Arbitrary-state streaming: per-user running (count, sum) via
+    * mapGroupsWithState — the Structured Streaming home of the reference's
+    * per-group custom reducers (SURVEY §2.10) and the building block for
+    * windowWhile-style session logic on unbounded streams. State lives in the
+    * state store (checkpointed, partitioned by group key at scale). */
+  def statefulUserTotals(spark: SparkSession, dir: String): DataFrame =
+    finalUserTotals(runToCompletion(spark, dir, outputMode = "update")(userTotalUpdates))
+
+  /** [[statefulUserTotals]] with per-key state routed to the RocksDB state
+    * store (the 100 TB configuration — off-heap state, changelog
+    * checkpoints). Results are by construction identical to the in-memory
+    * provider's; running it as its own oracle-checked query keeps the
+    * production state path continuously verified, not just spec'd. */
+  def statefulUserTotalsRocksDb(spark: SparkSession, dir: String): DataFrame =
+    finalUserTotals(
+      runToCompletion(spark, dir, outputMode = "update", rocksDb = true)(userTotalUpdates))
+
+  /** ScaleDrill hook: the [[statefulUserTotals]] mapGroupsWithState kernel
+    * under the ROCKSDB provider against an arbitrary pre-staged events
+    * directory (amplified input), forced through multiple micro-batches
+    * (`maxFilesPerTrigger`), returning the final per-user rows PLUS the
+    * state-store metrics the drill asserts on ([[progressMetrics]]). This
+    * is the measured leg of the "RocksDB state scales" claim that
+    * q249/q258/q259 certify only at test SF. */
+  private[graft] def drillStatefulRocksDb(
+      spark: SparkSession, eventsDir: String, maxFilesPerTrigger: Int):
+      (DataFrame, Map[String, Long]) =
+    run(spark, FilesAt(eventsDir, spark.read.parquet(eventsDir).schema, maxFilesPerTrigger),
+      Memory("update"), rocksDb = true, readBack = finalUserTotals)(userTotalUpdates)
 
   /** [[sessionCounts]] with session-window state in RocksDB — a DIFFERENT
     * state-store code path than [[statefulUserTotalsRocksDb]]'s
     * mapGroupsWithState (session merge reads, updates and removes windows
     * per key in the store), so the scale configuration of gap-sessionization
     * gets its own oracle-checked query rather than inheriting q249's. */
-  def sessionCountsRocksDb(spark: SparkSession, dir: String, gap: String): DataFrame = {
-    val tagged = sessionWithConfs(spark)
-    tagged.conf.set("spark.graft.streaming.stateStore", "rocksdb")
-    sessionCounts(tagged, dir, gap)
-  }
+  def sessionCountsRocksDb(spark: SparkSession, dir: String, gap: String): DataFrame =
+    runToCompletion(spark, dir, outputMode = "append", rocksDb = true)(sessionTotals(gap))
 
   /** [[tumblingByType]] with streaming-AGGREGATION state in RocksDB —
     * the third distinct state manager (StreamingAggregationStateManager's
     * key→agg-buffer rows; q249 covers arbitrary mapGroups state, q258 the
     * session-window merge path). Together the three oracle-checked flavors
     * pin every stateful-operator family to the scale store. */
-  def tumblingByTypeRocksDb(spark: SparkSession, dir: String, windowLen: String): DataFrame = {
-    val tagged = sessionWithConfs(spark)
-    tagged.conf.set("spark.graft.streaming.stateStore", "rocksdb")
-    tumblingByType(tagged, dir, windowLen)
-  }
+  def tumblingByTypeRocksDb(spark: SparkSession, dir: String, windowLen: String): DataFrame =
+    runToCompletion(spark, dir, rocksDb = true)(tumblingTotals(windowLen))
 
   /** STREAMING funnel — the ordered k-step funnel of
     * [[graft.operators.Events.funnel]] as a per-entity state machine:
@@ -612,8 +595,7 @@ object Streams {
           col("event_type"))
         .as[(Long, Long, String)]
         .groupByKey(_._1)
-        .mapGroupsWithState[(Int, Long), (Long, Int)](
-          org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
+        .mapGroupsWithState[(Int, Long), (Long, Int)](GroupStateTimeout.NoTimeout) {
           case (user, rows, state) =>
             var (stage, lastUs) = state.getOption.getOrElse((0, Long.MinValue))
             rows.toSeq.sortBy(r => (r._2, r._3)).foreach { case (_, us, tp) =>
@@ -635,15 +617,20 @@ object Streams {
       finalStage.agg(countCols.head, countCols.tail: _*), steps)
   }
 
+  /** The three id-ordered arrival batches of the ingest fixtures: two
+    * ranges of originals, then the +10000 copies. */
+  private def idRanges: Seq[Column] = Seq(
+    col("doc_id") < 250, col("doc_id") >= 250 && col("doc_id") < 10000,
+    col("doc_id") >= 10000)
+
   /** STREAMING INGESTION dedup — the full accumulation loop of a crawl
     * pipeline: documents arrive in ordered micro-batches (one file per
     * trigger); each batch exact-dedups WITHIN itself, LEFT ANTI joins its
     * fingerprints against everything the sink has accumulated, and appends
-    * only the survivors under a batchId-keyed overwrite (the exactly-once
-    * recipe of [[foreachBatchTypeTotals]] — a replayed batch rewrites the
-    * same files). The corpus-so-far never re-shuffles: only its
-    * fingerprint column is read back per batch, exactly the
-    * `Dedup.exactDelta` contract driven by a stream.
+    * only the survivors to its own `batch=<id>` partition. The
+    * corpus-so-far never re-shuffles: only its fingerprint column is read
+    * back per batch, exactly the `Dedup.exactDelta` contract driven by a
+    * stream.
     *
     * Because batches arrive in ascending doc_id ranges (mtime-ordered
     * files, maxFilesPerTrigger=1), first-arrival-wins equals the global
@@ -652,63 +639,21 @@ object Streams {
     * interleaves duplicate copies (ids +10000) that arrive AFTER their
     * originals and must all be dropped by the anti-join. */
   def ingestDedupDocs(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
-    val docs = graft.Tables.raw(spark, dir, "documents")
+    val docs = Tables.raw(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
     val incoming = docs.unionAll(
       docs.where(col("doc_id") % 5 === 0)
         .select((col("doc_id") + 10000).as("doc_id"), col("text")))
-    val srcDir = Files.createTempDirectory("graft_ingest_src")
-    val sinkDir = Files.createTempDirectory("graft_ingest_sink")
-    val chkDir = Files.createTempDirectory("graft_ingest_chk")
-    val stream = isolatedStreamSession(spark)
-    try {
-      // three ordered batch files: two ranges of originals, then the copies
-      val ranges: Seq[org.apache.spark.sql.Column] = Seq(
-        col("doc_id") < 250, col("doc_id") >= 250 && col("doc_id") < 10000,
-        col("doc_id") >= 10000)
-      stageBatchFiles(incoming, ranges, srcDir, "ingest")
-      val sinkSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("fp", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("keep_id", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("batch", org.apache.spark.sql.types.LongType)))
-      val src = stream.readStream
-        .schema(incoming.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir.toString)
-      val q = src.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", chkDir.toString)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val s = batch.sparkSession
-          val newFp = batch
-            .groupBy(graft.functions.Text.fingerprint(col("text")).as("fp"))
-            .agg(min(col("doc_id")).as("keep_id"))
-          // exclude THIS batch's partition from the seen-set: on a replay
-          // after a failure the sink already holds batch=batchId, and
-          // treating its fingerprints as "seen" would anti-join the
-          // replayed rows to an empty overwrite (silent data loss) — the
-          // idempotent rewrite must see exactly the pre-batch state
-          val seen = s.read.schema(sinkSchema).parquet(sinkDir.toString)
-            .where(col("batch") =!= batchId)
-            .select(col("fp"))
-          newFp.join(seen, Seq("fp"), "left_anti")
-            .write.mode("overwrite").parquet(s"$sinkDir/batch=$batchId")
-        }
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      spark.read.schema(sinkSchema).parquet(sinkDir.toString)
-        .select(col("keep_id"), col("fp"))
-        .localCheckpoint(true)
-    } finally {
-      dropStagedIngestDir(srcDir)
-      rmTree(chkDir)
-      rmTree(sinkDir)
-    }
+    run(spark, Staged(incoming, idRanges),
+      Batches("fp STRING, keep_id BIGINT") { (batch, batchId, sink) =>
+        val newFp = batch
+          .groupBy(graft.functions.Text.fingerprint(col("text")).as("fp"))
+          .agg(min(col("doc_id")).as("keep_id"))
+        val seen = sink.seenBefore(batch.sparkSession, batchId).select(col("fp"))
+        sink.write(newFp.join(seen, Seq("fp"), "left_anti"), batchId)
+      },
+      readBack = _.select(col("keep_id"), col("fp")))(identity)._1
   }
-
-  private def dropStagedIngestDir(srcDir: java.nio.file.Path): Unit = rmTree(srcDir)
 
   /** STREAMING near-dup dedup of the stream AGAINST ITSELF — greedy
     * first-wins over LSH band-bucket cells ([[graft.operators.Dedup
@@ -724,46 +669,16 @@ object Streams {
     * At 100 TB-ingest scale the claimed-cells state is the bucketed-index
     * shape ([[graft.operators.Dedup.publishLshIndex]]'s `_buckets` table):
     * cells-of-batch shuffle against it, never the corpus. Here the seen
-    * set is a batch-partitioned parquet sink with the idempotent-replay
-    * discipline of [[ingestDedupDocs]] (a replayed batch excludes its own
-    * partition from the seen set, then overwrites it).
+    * set is a batch-partitioned parquet sink read with the replay
+    * discipline of [[BatchSink.seenBefore]].
     *
-    * Input staging: documents plus near-dup copies (every doc_id % 5 == 0
-    * doc re-arrives as doc_id + 10000 with one appended token) in three
-    * id-ordered batch files. Output: (keep_id, batch) survivors. */
-  def ingestNearDupDocs(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
-    val (srcDir, incomingSchema) = stageNearDupInput(spark, dir)
-    val cellDir = Files.createTempDirectory("graft_neardup_cells")
-    val keepDir = Files.createTempDirectory("graft_neardup_keep")
-    val chkDir = Files.createTempDirectory("graft_neardup_chk")
-    val stream = isolatedStreamSession(spark)
-    try {
-      val keepSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("keep_id", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("batch", org.apache.spark.sql.types.LongType)))
-      val src = stream.readStream
-        .schema(incomingSchema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir.toString)
-      val q = src.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", chkDir.toString)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          nearDupBatch(batch, batchId, cellDir.toString, keepDir.toString)
-        }
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      spark.read.schema(keepSchema).parquet(keepDir.toString)
-        .select(col("keep_id"), col("batch"))
-        .localCheckpoint(true)
-    } finally {
-      dropStagedIngestDir(srcDir)
-      rmTree(chkDir)
-      rmTree(cellDir)
-      rmTree(keepDir)
-    }
+    * Input: [[nearDupIncoming]] in three id-ordered batch files. Output:
+    * (keep_id, batch) survivors. */
+  def ingestNearDupDocs(spark: SparkSession, dir: String): DataFrame = withScratch { scratch =>
+    val cellDir = scratch("neardup_cells").toString
+    run(spark, Staged(nearDupIncoming(spark, dir), idRanges),
+      Batches("keep_id BIGINT")((batch, batchId, keep) =>
+        nearDupBatch(batch, batchId, cellDir, keep.dir)))(identity)._1
   }
 
   /** One [[ingestNearDupDocs]] micro-batch against the two sinks —
@@ -774,17 +689,11 @@ object Streams {
     * would anti-join the replayed survivors to an empty overwrite). */
   private[graft] def nearDupBatch(
       batch: DataFrame, batchId: Long, cellDir: String, keepDir: String): Unit = {
-    val s = batch.sparkSession
-    val cellSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("band", org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("bk", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("batch", org.apache.spark.sql.types.LongType)))
+    val cellSink = BatchSink(cellDir, "band INT, bk STRING")
     val cells = graft.operators.Dedup
       .bandBuckets(batch, "doc_id", "text").localCheckpoint(true)
-    // pre-batch state only: a replayed batch must not see its own claims
-    // (same silent-loss hazard as ingestDedupDocs)
-    val seen = s.read.schema(cellSchema).parquet(cellDir)
-      .where(col("batch") =!= batchId).select(col("band"), col("bk"))
+    val seen = cellSink.seenBefore(batch.sparkSession, batchId)
+      .select(col("band"), col("bk"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("band"), col("bk")).orderBy(col("id"))
     val bad = cells
@@ -801,37 +710,28 @@ object Streams {
     locally {
       import scala.concurrent.Future
       import scala.concurrent.ExecutionContext.Implicits.global
-      val keepF = Future(batch.select(col("doc_id"))
-        .join(bad.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left_anti")
-        .select(col("doc_id").as("keep_id"))
-        .write.mode("overwrite").parquet(s"$keepDir/batch=$batchId"))
-      val cellF = Future(cells.select(col("band"), col("bk")).distinct()
-        .write.mode("overwrite").parquet(s"$cellDir/batch=$batchId"))
+      val keepF = Future(BatchSink(keepDir, "keep_id BIGINT").write(
+        batch.select(col("doc_id"))
+          .join(bad.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left_anti")
+          .select(col("doc_id").as("keep_id")), batchId))
+      val cellF = Future(
+        cellSink.write(cells.select(col("band"), col("bk")).distinct(), batchId))
       graft.functions.Par.awaitAllSettled(keepF, cellF)
     }
   }
 
-  /** Stage the near-dup ingest fixture: documents plus near-dup copies
-    * (every doc_id % 5 == 0 doc re-arrives as doc_id + 10000 with one
-    * appended token) as three id-ordered batch files with monotone mtimes
-    * (arrival order). Shared by [[ingestNearDupDocs]] and
-    * [[ingestNearDupDocsKeyed]] so the two implementations answer the
-    * same oracle over the same staged input. Caller deletes the dir. */
-  private def stageNearDupInput(spark: SparkSession, dir: String):
-      (java.nio.file.Path, org.apache.spark.sql.types.StructType) = {
-    import java.nio.file.Files
-    val docs = graft.Tables.raw(spark, dir, "documents")
+  /** The near-dup ingest fixture: documents plus near-dup copies (every
+    * doc_id % 5 == 0 doc re-arrives as doc_id + 10000 with one appended
+    * token). Shared by [[ingestNearDupDocs]] and [[ingestNearDupDocsKeyed]]
+    * so the two implementations answer the same oracle over the same
+    * staged input. */
+  private def nearDupIncoming(spark: SparkSession, dir: String): DataFrame = {
+    val docs = Tables.raw(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
-    val incoming = docs.unionAll(
+    docs.unionAll(
       docs.where(col("doc_id") % 5 === 0)
         .select((col("doc_id") + 10000).as("doc_id"),
           concat(col("text"), lit(" dup0")).as("text")))
-    val srcDir = Files.createTempDirectory("graft_neardup_src")
-    val ranges: Seq[org.apache.spark.sql.Column] = Seq(
-      col("doc_id") < 250, col("doc_id") >= 250 && col("doc_id") < 10000,
-      col("doc_id") >= 10000)
-    stageBatchFiles(incoming, ranges, srcDir, "neardup")
-    (srcDir, incoming.schema)
   }
 
   /** [[ingestNearDupDocs]] with the claimed-cells state in KEYED STREAMING
@@ -856,115 +756,74 @@ object Streams {
     * Replay safety is the state store's own versioned-commit contract
     * (a replayed batch re-reads the pre-batch store version), plus the
     * idempotent batch-partitioned keep sink. */
-  def ingestNearDupDocsKeyed(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Files
-    val (srcDir, schema) = stageNearDupInput(spark, dir)
-    val keepDir = Files.createTempDirectory("graft_neardupk_keep")
-    val chkDir = Files.createTempDirectory("graft_neardupk_chk")
-    try runNearDupKeyed(spark, srcDir.toString, schema,
-      keepDir.toString, chkDir.toString, maxFilesPerTrigger = 1)._1
-    finally {
-      dropStagedIngestDir(srcDir)
-      rmTree(chkDir)
-      rmTree(keepDir)
-    }
-  }
+  def ingestNearDupDocsKeyed(spark: SparkSession, dir: String): DataFrame =
+    nearDupKeyed(spark, Staged(nearDupIncoming(spark, dir), idRanges), resumeAt = None)._1
 
-  /** The keyed-state near-dup stream itself — shared by
-    * [[ingestNearDupDocsKeyed]] (oracle query q308) and the ScaleDrill
-    * kernel (which stages its own amplified input and asserts the
-    * per-batch timings this returns are flat in batch index). Returns the
-    * (keep_id, batch) survivors plus metrics: per-batch wall-clock
-    * (`batch_ms_<i>`), state-store commit total and peak rows/memory. */
+  /** The keyed-state near-dup stream over the files under `srcPath` —
+    * shared by the ScaleDrill kernel (which stages its own amplified input
+    * and asserts the per-batch timings this returns are flat in batch
+    * index) and the checkpoint-resume specs: the (keep, checkpoint) dirs
+    * are the caller's. Returns the (keep_id, batch) survivors plus
+    * [[progressMetrics]]. */
   private[graft] def runNearDupKeyed(
       spark: SparkSession,
       srcPath: String,
-      schema: org.apache.spark.sql.types.StructType,
+      schema: StructType,
       keepPath: String,
       chkPath: String,
-      maxFilesPerTrigger: Int): (DataFrame, Map[String, Long]) = {
+      maxFilesPerTrigger: Int): (DataFrame, Map[String, Long]) =
+    nearDupKeyed(spark, FilesAt(srcPath, schema, maxFilesPerTrigger),
+      resumeAt = Some((keepPath, chkPath)))
+
+  private def nearDupKeyed(
+      spark: SparkSession, source: Source,
+      resumeAt: Option[(String, String)]): (DataFrame, Map[String, Long]) =
     // keyed per-cell state is the RocksDB case by design: at stream scale
     // the claim set is every distinct cell ever seen — off-heap or bust
-    val tagged = sessionWithConfs(spark)
-    tagged.conf.set("spark.graft.streaming.stateStore", "rocksdb")
-    val stream = isolatedStreamSession(tagged)
-    import stream.implicits._
-    val src = stream.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      .parquet(srcPath)
-    // widen BEFORE the md5 kernel — the streaming analogue of Par.widen:
-    // a trigger of few fat single-row-group files scans as 1-2 partitions,
-    // serializing the shingle+md5 band-key kernel on as many cores (the
-    // r12 drill's stream_neardup_keyed batches spent ~95% of their time
-    // exactly here — state-store commits were 1.5 s of an 86 s run at
-    // 50×). One extra exchange of the raw batch text buys a full-width
-    // kernel; triggers that already arrive as many files can turn it off
-    // (spark.graft.streaming.widen=false) to skip the exchange.
-    val widened =
-      if (stream.conf.get("spark.graft.streaming.widen", "true").toBoolean)
-        src.repartition(stream.sparkContext.defaultParallelism)
-      else src
-    // same md5 band-key family as Dedup.bandBuckets — inlined as pure
-    // projections (streaming frames cannot checkpoint); `pos|key` strings
-    // key the state groups
-    val bks = graft.functions.Vectors.md5BandKeys(16, 4)(
-      graft.functions.Vectors.shinglesFast(3)(col("text")))
-    val cells = widened
-      .select(col("doc_id").as("id"), bks.as("bks"))
-      .select(col("id"), posexplode(
-        when(size(col("bks")) > 0, col("bks"))
-          .otherwise(array(concat(lit("solo:"), col("id").cast("string"))))))
-      .select(col("id"), concat(col("pos").cast("string"), lit("|"), col("col")).as("cell"))
-      .as[(Long, String)]
-    val flags = cells
-      .groupByKey(_._2)
-      .flatMapGroupsWithState[Boolean, (Long, Boolean)](
-        org.apache.spark.sql.streaming.OutputMode.Append,
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout) {
-        case (_, rows, state) =>
-          val ids = rows.map(_._1).toArray
-          val claimedBefore = state.exists
-          var minId = Long.MaxValue
-          var i = 0
-          while (i < ids.length) { if (ids(i) < minId) minId = ids(i); i += 1 }
-          state.update(true) // mark-all: every toucher claims the cell
-          val mn = minId
-          ids.iterator.map(id => (id, !claimedBefore && id == mn))
-      }
-      .toDF("id", "ok")
-    val q = flags.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", chkPath)
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
+    run(spark, source,
+      Batches("keep_id BIGINT") { (flags, batchId, keep) =>
         // a doc survives iff EVERY one of its cells approved it
-        b.groupBy(col("id"))
+        keep.write(flags.groupBy(col("id"))
           .agg(bool_and(col("ok")).as("all_ok"))
           .where(col("all_ok"))
-          .select(col("id").as("keep_id"))
-          .write.mode("overwrite").parquet(s"$keepPath/batch=$batchId")
-        ()
-      }
-      .start()
-    val metrics = try {
-      q.processAllAvailable()
-      val progress = q.recentProgress.toSeq.filter(_.numInputRows > 0)
-      val sos = progress.flatMap(_.stateOperators.toSeq)
-      Map(
-        "batches" -> progress.size.toLong,
-        "state_commit_ms" -> sos.map(_.commitTimeMs).sum,
-        "state_rows_peak" -> (sos.map(_.numRowsTotal) :+ 0L).max,
-        "state_mem_peak_bytes" -> (sos.map(_.memoryUsedBytes) :+ 0L).max) ++
-        progress.zipWithIndex.map { case (p, i) => s"batch_ms_$i" -> p.batchDuration }
-    } finally q.stop()
-    val keepSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("keep_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("batch", org.apache.spark.sql.types.LongType)))
-    val out = spark.read.schema(keepSchema).parquet(keepPath)
-      .select(col("keep_id"), col("batch"))
-      .localCheckpoint(true)
-    (out, metrics)
-  }
+          .select(col("id").as("keep_id")), batchId)
+      },
+      rocksDb = true, resumeAt = resumeAt) { src =>
+      val stream = src.sparkSession
+      import stream.implicits._
+      // same md5 band-key family as Dedup.bandBuckets — inlined as pure
+      // projections (streaming frames cannot checkpoint); `pos|key` strings
+      // key the state groups
+      val bks = graft.functions.Vectors.md5BandKeys(16, 4)(
+        graft.functions.Vectors.shinglesFast(3)(col("text")))
+      // widen BEFORE the md5 kernel — the streaming analogue of Par.widen:
+      // a trigger of few fat single-row-group files scans as 1-2
+      // partitions, serializing the shingle+md5 band-key kernel on as many
+      // cores (the r12 drill's stream_neardup_keyed batches spent ~95% of
+      // their time exactly here — state-store commits were 1.5 s of an
+      // 86 s run at 50×)
+      src.repartition(stream.sparkContext.defaultParallelism)
+        .select(col("doc_id").as("id"), bks.as("bks"))
+        .select(col("id"), posexplode(
+          when(size(col("bks")) > 0, col("bks"))
+            .otherwise(array(concat(lit("solo:"), col("id").cast("string"))))))
+        .select(col("id"), concat(col("pos").cast("string"), lit("|"), col("col")).as("cell"))
+        .as[(Long, String)]
+        .groupByKey(_._2)
+        .flatMapGroupsWithState[Boolean, (Long, Boolean)](
+          OutputMode.Append, GroupStateTimeout.NoTimeout) {
+          case (_, rows, state) =>
+            val ids = rows.map(_._1).toArray
+            val claimedBefore = state.exists
+            var minId = Long.MaxValue
+            var i = 0
+            while (i < ids.length) { if (ids(i) < minId) minId = ids(i); i += 1 }
+            state.update(true) // mark-all: every toucher claims the cell
+            val mn = minId
+            ids.iterator.map(id => (id, !claimedBefore && id == mn))
+        }
+        .toDF("id", "ok")
+    }
 
   /** STREAMING near-dup flagging against a PUBLISHED LSH index
     * ([[graft.operators.Dedup.publishLshIndex]]) — the full ingest-time
@@ -977,64 +836,31 @@ object Streams {
     * the differential oracle recomputes. Managed tables live in the
     * SparkContext-shared external catalog, so the isolated stream session
     * sees the caller-published index. Output: (incoming_id, corpus_id,
-    * jaccard) across all batches; sink is batchId-partitioned with the
-    * idempotent-overwrite replay discipline of [[ingestDedupDocs]]. */
+    * jaccard) across all batches. */
   def streamLshIndexProbe(
       spark: SparkSession, incoming: DataFrame, indexTable: String,
-      batchPreds: Seq[org.apache.spark.sql.Column],
+      batchPreds: Seq[Column],
       corpusFp: String = ""): DataFrame = {
     streamIndexProbe(spark, incoming, batchPreds,
-        "incoming_id BIGINT, corpus_id BIGINT, jaccard DOUBLE", "lshstream") { batch =>
+        "incoming_id BIGINT, corpus_id BIGINT, jaccard DOUBLE") { batch =>
       graft.operators.Dedup
         .probeLshIndex(batch.sparkSession, batch, "doc_id", "text", indexTable,
           corpusFp = corpusFp)
     }
   }
 
-  /** Shared scaffold of the stored-index stream probes: stage `incoming`
-    * as ONE arrival-ordered file per predicate in `batchPreds`, stream them
-    * with `maxFilesPerTrigger=1` (one micro-batch per file), run `probe`
-    * per batch via `foreachBatch` into a batchId-partitioned sink
-    * (idempotent overwrite = exactly-once under replay), and read the
-    * union back as `columns` (the probe's output, a DDL column list). The
-    * query subset and batch split are the CALLER's — this layer owns only
-    * the streaming plumbing. */
+  /** Shared scaffold of the stored-index stream probes: `incoming` streams
+    * one micro-batch per predicate in `batchPreds`, `probe` runs per batch
+    * and its output (the DDL `columns`) is read back as the union over
+    * batches. The query subset and batch split are the CALLER's. */
   private def streamIndexProbe(
       spark: SparkSession,
       incoming: DataFrame,
-      batchPreds: Seq[org.apache.spark.sql.Column],
-      columns: String,
-      tag: String)(probe: DataFrame => DataFrame): DataFrame = {
-    import java.nio.file.Files
-    require(batchPreds.nonEmpty, "streamIndexProbe needs at least one batch predicate")
-    val srcDir = Files.createTempDirectory(s"graft_${tag}_src")
-    val sinkDir = Files.createTempDirectory(s"graft_${tag}_sink")
-    val chkDir = Files.createTempDirectory(s"graft_${tag}_chk")
-    val stream = isolatedStreamSession(spark)
-    try {
-      stageBatchFiles(incoming, batchPreds, srcDir, tag)
-      val src = stream.readStream
-        .schema(incoming.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(srcDir.toString)
-      val q = src.writeStream
-        .outputMode("append")
-        .option("checkpointLocation", chkDir.toString)
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-          probe(batch).write.mode("overwrite").parquet(s"$sinkDir/batch=$batchId")
-        }
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      spark.read.schema(org.apache.spark.sql.types.StructType.fromDDL(s"$columns, batch BIGINT"))
-        .parquet(sinkDir.toString).drop("batch")
-        .localCheckpoint(true)
-    } finally {
-      rmTree(srcDir)
-      rmTree(chkDir)
-      rmTree(sinkDir)
-    }
-  }
+      batchPreds: Seq[Column],
+      columns: String)(probe: DataFrame => DataFrame): DataFrame =
+    run(spark, Staged(incoming, batchPreds),
+      Batches(columns)((batch, batchId, sink) => sink.write(probe(batch), batchId)),
+      readBack = _.drop("batch"))(identity)._1
 
   /** STREAMING ANN flagging against a PUBLISHED IVF index
     * ([[graft.operators.Similarity.publishIvfIndex]]) — the embedding twin
@@ -1046,10 +872,10 @@ object Streams {
     * cosine) across all batches. */
   def streamIvfIndexProbe(
       spark: SparkSession, incoming: DataFrame, indexTable: String, k: Int,
-      batchPreds: Seq[org.apache.spark.sql.Column],
+      batchPreds: Seq[Column],
       corpusFp: String = ""): DataFrame = {
     streamIndexProbe(spark, incoming, batchPreds,
-        "query_id BIGINT, rank BIGINT, neighbor_id BIGINT, cosine DOUBLE", "ivfstream") { batch =>
+        "query_id BIGINT, rank BIGINT, neighbor_id BIGINT, cosine DOUBLE") { batch =>
       graft.operators.Similarity
         .probeIvfIndex(batch.sparkSession, batch, "vec_id", "embedding", indexTable,
           k = k, corpusFp = corpusFp)
@@ -1065,14 +891,14 @@ object Streams {
     * union-over-batches ≡ the one-shot [[graft.operators.Similarity.probePqIndex]],
     * which is exactly what the q313 oracle (shared verbatim with
     * q111/q310) recomputes. Output: (query_id, rank, neighbor_id, dist)
-    * across all batches; batchId-partitioned idempotent-overwrite sink. */
+    * across all batches. */
   def streamPqIndexProbe(
       spark: SparkSession, incoming: DataFrame, indexTable: String, k: Int,
-      batchPreds: Seq[org.apache.spark.sql.Column],
+      batchPreds: Seq[Column],
       nprobe: Int = 2,
       corpusFp: String = ""): DataFrame = {
     streamIndexProbe(spark, incoming, batchPreds,
-        "query_id BIGINT, rank BIGINT, neighbor_id BIGINT, dist BIGINT", "pqstream") { batch =>
+        "query_id BIGINT, rank BIGINT, neighbor_id BIGINT, dist BIGINT") { batch =>
       graft.operators.Similarity
         .probePqIndex(batch.sparkSession, batch, "vec_id", "embedding", indexTable,
           k = k, nprobe = nprobe, corpusFp = corpusFp)

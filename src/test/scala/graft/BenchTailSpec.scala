@@ -138,4 +138,15 @@ class BenchTailSpec extends AnyFunSuite {
     val clean = Bench.tailLine(rs, 0, "\"load\":[0.01,0.01]", 0.8)
     assert(!clean.contains("hotn"))
   }
+
+  test("SPARK_GRAFT_BENCH_ONLY ids are checked: an unknown id throws, naming every one") {
+    val declared = Map("q01_a" -> 1, "q02_b" -> 2, "q10_c" -> 3)
+    assert(Bench.selectOnly(declared, None) === declared)
+    assert(Bench.selectOnly(declared, Some(Set("q02"))) === Map("q02_b" -> 2))
+    // "q1" is a textual prefix of q10 but no query's id
+    val e = intercept[IllegalArgumentException] {
+      Bench.selectOnly(declared, Some(Set("q02", "q1", "q99")))
+    }
+    assert(e.getMessage.endsWith("unknown query ids: q1 q99"))
+  }
 }

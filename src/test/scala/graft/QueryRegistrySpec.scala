@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.queries.Query
+import graft.queries.{Query, QueryKit}
 
 /** The query registry on its own: one declaration per query, each with an
   * oracle, unique names and `qNN` prefixes. Needs no Spark session. */
@@ -43,5 +43,12 @@ class QueryRegistrySpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       Query.index(Seq(Query("q1_a", " ", body)))
     }
+  }
+
+  test("index table names are stable: existing warehouses are found by name") {
+    val dir = "testdata/sf0.01"
+    assert(QueryKit.lshIndexTable(dir) === "graft_lsh_idx_15d7d44e7a473cfe2b79b6d016e13ef2")
+    assert(QueryKit.ivfIndexTable(dir) === "graft_ivf_idx_15d7d44e7a473cfe2b79b6d016e13ef2")
+    assert(QueryKit.pqIndexTable(dir) === "graft_pq_idx_15d7d44e7a473cfe2b79b6d016e13ef2")
   }
 }

@@ -96,4 +96,18 @@ class RocksDbStateSpec extends SparkSpecBase {
     assert(rocks === mem)
     assert(rocks.nonEmpty)
   }
+
+  test("RocksDB-forced ops return frames rooted in the caller's session") {
+    val base = 1700000000000L
+    val rows = (0 until 120).map { i =>
+      (new java.sql.Timestamp(base + i * 61000L), "e", (i % 7).toDouble, i.toLong % 3)
+    }
+    val dir = stageEvents(rows)
+    val frames = Seq(
+      Streams.statefulUserTotalsRocksDb(spark, dir),
+      Streams.sessionCountsRocksDb(spark, dir, "30 minutes"),
+      Streams.tumblingByTypeRocksDb(spark, dir, "1 hour"))
+    frames.foreach(df => assert(df.sparkSession eq spark))
+    assert(frames.head.count() === 3L)
+  }
 }

@@ -14,13 +14,7 @@ class StreamFloorProbeSpec extends SparkSpecBase {
     }
     // warm the context
     streaming.Streams.tumblingByType(spark, dir, "1 hour").count()
-    val cloneMs = (1 to 5).map(_ => ms {
-      val s2 = spark.newSession()
-      spark.conf.getAll.foreach { case (k, v) =>
-        try s2.conf.set(k, v)
-        catch { case _: org.apache.spark.sql.AnalysisException => () }
-      }
-    })
+    val cloneMs = (1 to 5).map(_ => ms(streaming.Streams.isolatedStreamSession(spark)))
     val queryMs = (1 to 3).map(_ => ms {
       streaming.Streams.tumblingByType(spark, dir, "1 hour").count()
     })
