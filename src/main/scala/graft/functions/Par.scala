@@ -1,8 +1,26 @@
 package graft.functions
 
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
+import scala.util.{Failure, Success, Try}
+
 import org.apache.spark.sql.DataFrame
 
-/** Parallelism helpers for CPU-bound per-row kernels. */
+/** Parallelism helpers: widening CPU-bound per-row kernels, narrowing
+  * writes, and the ONE way graft overlaps independent Spark jobs.
+  *
+  * OVERLAP CONTRACT ([[both]], [[all]]). Every branch but the last is
+  * forked onto the global `ExecutionContext`; the LAST branch runs on the
+  * calling thread, so a call never parks its caller while pool threads do
+  * all the work, and a nested overlap inside a branch (LSH's staged check
+  * inside the append, a PQ probe's model collects beside its meta read)
+  * cannot starve the pool. Every branch SETTLES before the call returns or
+  * throws: the first failure in argument order is rethrown with every other
+  * failure attached as a suppressed exception ([[awaitAllSettled]]), so no
+  * branch is still writing when the caller's error handling (a lease
+  * release, a republish) runs. Results come back typed, in argument order.
+  * Spark's scheduler runs the branches' jobs side by side, so their
+  * latencies hide behind each other. */
 object Par {
 
   /** Widen a NARROW input before a CPU-heavy per-row kernel (md5 minhash
@@ -77,14 +95,31 @@ object Par {
     * `a`'s failure while `b` may still be writing in the background — the
     * caller's natural repair (republish, which drops the table and deletes
     * its warehouse directory) can then race the orphaned detached write
-    * and leave a mangled table. Used by every overlapped index/table write
-    * (the [[graft.sources.IndexStore]] lifecycle, compaction side writes). */
-  def awaitAllSettled(fs: scala.concurrent.Future[_]*): Unit = {
-    val failures = fs.flatMap(f => scala.util.Try(
-      scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)).failed.toOption)
+    * and leave a mangled table. The primitive under [[both]] and [[all]]. */
+  def awaitAllSettled(fs: Future[_]*): Unit = {
+    val failures = fs.flatMap(f => Try(Await.result(f, Duration.Inf)).failed.toOption)
     failures.headOption.foreach { first =>
       failures.tail.filter(_ ne first).foreach(first.addSuppressed)
       throw first
     }
+  }
+
+  /** Run `bodies` overlapped under the contract above; their results in
+    * argument order. */
+  def all[A](bodies: Seq[() => A]): Seq[A] = {
+    val forked = bodies.dropRight(1).map(b => Future(b())(ExecutionContext.global))
+    val last = bodies.lastOption.map { b =>
+      Future.fromTry(try Success(b()) catch { case t: Throwable => Failure(t) })
+    }
+    val settled = forked ++ last
+    awaitAllSettled(settled: _*)
+    settled.map(_.value.get.get)
+  }
+
+  /** `a` and `b` overlapped under the contract above (`b` on the calling
+    * thread). */
+  def both[A, B](a: => A, b: => B): (A, B) = {
+    val Seq(ra, rb) = all[Any](Seq(() => a, () => b))
+    (ra.asInstanceOf[A], rb.asInstanceOf[B])
   }
 }

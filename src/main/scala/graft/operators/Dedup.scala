@@ -748,7 +748,7 @@ object Dedup {
       table: String,
       newCorpusFp: String = ""): Unit =
     LshStore.append(batch, table, newCorpusFp) { m =>
-      // shingled after ALLOCATE is launched, so the two overlap
+      // shingled by the duplicate check, which overlaps ALLOCATE
       lazy val base = shingleBaseBanded(batch, idCol, textCol, m.shingleN,
         m.numHashes, m.bands)
       IndexStore.Batch(() => base.select(col("id")), () => lshRows(base))
@@ -856,10 +856,9 @@ object Dedup {
       * checked on exactly the rows about to become visible. */
     override def stagedCheck(spark: org.apache.spark.sql.SparkSession, table: String,
         m: LshMeta, ep: Long): Unit = {
-      var (sbRows, sdRows) = (0L, 0L)
-      IndexStore.overlap(
-        () => sbRows = spark.table(s"${table}_buckets").where(col("ep") === ep).count(),
-        () => sdRows = spark.table(s"${table}_docs").where(col("ep") === ep).count())
+      val (sbRows, sdRows) = Par.both(
+        spark.table(s"${table}_buckets").where(col("ep") === ep).count(),
+        spark.table(s"${table}_docs").where(col("ep") === ep).count())
       require(sbRows == m.bands.toLong * sdRows,
         s"appendLshIndex: staged batch is incomplete ($sbRows band rows != " +
           s"${m.bands} bands x $sdRows doc rows) — NOT committed; probes are " +
@@ -871,10 +870,7 @@ object Dedup {
       def committed(sfx: String) = IndexStore.committed(spark, s"${table}_$sfx", m.eps)
       if (!strict) {
         // the two whole-table counts touch independent tables — overlapped
-        var (bRows, dRows) = (0L, 0L)
-        IndexStore.overlap(
-          () => bRows = committed("buckets").count(),
-          () => dRows = committed("docs").count())
+        val (bRows, dRows) = Par.both(committed("buckets").count(), committed("docs").count())
         require(bRows == m.bands.toLong * dRows,
           s"LSH index '$table' is inconsistent: $bRows band rows != ${m.bands} bands x " +
             s"$dRows doc rows — likely a torn append; republish via publishLshIndex")

@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.Vectors
+import graft.functions.{Par, Vectors}
 import graft.sources.{IndexMeta, IndexStore}
 
 /** Approximate-nearest-neighbor search over an embedding column
@@ -240,7 +240,7 @@ object Similarity {
     // and keeping them would make the precollected smallest-id seeds (heap
     // skips nulls) disagree with lloydInt's orderBy(id).limit fallback
     // (sorts nulls FIRST). One filter, both init paths bit-identical.
-    val ck = graft.functions.Par.widen(corpus
+    val ck = Par.widen(corpus
         .where(col(vecCol).isNotNull)
         .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
         .where(col("id").isNotNull))
@@ -575,29 +575,19 @@ object Similarity {
       .toDF("c", "d", "cv")
   }
 
-  private type ModelRows = scala.concurrent.Future[Array[org.apache.spark.sql.Row]]
-
-  /** Launch the collect of a model-sized table (`_cents`, `_books`) — a
-    * tiny single-bucket scan whose cost is pure job latency, so callers
-    * launch it BEFORE the `_meta` read and it hides behind that read and
-    * whatever else precedes its use. Model tables are written once at
-    * publish and never swap-maintained: no heal is needed, and a read-only
-    * future left behind by an earlier failure is harmless. */
-  private def collectModel(spark: org.apache.spark.sql.SparkSession, table: String,
-      sfx: String): ModelRows = {
-    import scala.concurrent.ExecutionContext.Implicits.global
-    scala.concurrent.Future(spark.table(s"${table}_$sfx").collect())
-  }
-
-  private def settled[T](f: scala.concurrent.Future[T]): T = {
-    graft.functions.Par.awaitAllSettled(f)
-    scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Zero)
-  }
+  /** Collect a model-sized table (`_cents`, `_books`) — a tiny
+    * single-bucket scan whose cost is pure job latency, so callers overlap
+    * it with the `_meta` read or the batch quantization ([[Par.both]]).
+    * Model tables are written once at publish and never swap-maintained:
+    * no heal is needed. */
+  private def modelRows(spark: org.apache.spark.sql.SparkSession, table: String,
+      sfx: String): Array[Row] =
+    spark.table(s"${table}_$sfx").collect()
 
   /** The coarse centroids from collected `_cents` rows (c, d, cv). */
-  private def centsOf(rows: ModelRows, nlist: Int, dims: Int): Array[Array[Long]] = {
+  private def centsOf(rows: Array[Row], nlist: Int, dims: Int): Array[Array[Long]] = {
     val cents = Array.fill(nlist)(new Array[Long](dims))
-    settled(rows).foreach { r => cents(r.getInt(0))(r.getInt(1)) = r.getLong(2) }
+    rows.foreach { r => cents(r.getInt(0))(r.getInt(1)) = r.getLong(2) }
     cents
   }
 
@@ -645,8 +635,8 @@ object Similarity {
       k: Int,
       nprobe: Int = 2,
       corpusFp: String = ""): DataFrame = {
-    val centsRows = collectModel(spark, table, "cents")
-    val meta = IvfStore.probeMeta(spark, table, corpusFp)
+    val (centsRows, meta) =
+      Par.both(modelRows(spark, table, "cents"), IvfStore.probeMeta(spark, table, corpusFp))
     val cents = centsOf(centsRows, meta.nlist, meta.dims)
     // stored-index probe: query batches are small by design — FORCE the
     // broadcast (see broadcastableQueries on why the gate lives elsewhere)
@@ -674,15 +664,14 @@ object Similarity {
       vecCol: String,
       table: String,
       newCorpusFp: String = ""): Unit =
-    IvfStore.append(batch, table, newCorpusFp) {
-      val centsRows = collectModel(batch.sparkSession, table, "cents")
-      meta => {
-        val (qdf, bdims) = quantizedBase(batch, idCol, vecCol)
-        require(bdims == meta.dims || bdims == 0,
-          s"appendIvfIndex: batch dimension $bdims != index '$table' dimension ${meta.dims}")
-        IndexStore.Batch(() => qdf.select(col("id").as("neighbor_id")),
-          () => Map("assign" -> ivfRows(qdf, centsOf(centsRows, meta.nlist, meta.dims))))
-      }
+    IvfStore.append(batch, table, newCorpusFp) { meta =>
+      val (centsRows, (qdf, bdims)) = Par.both(
+        modelRows(batch.sparkSession, table, "cents"), quantizedBase(batch, idCol, vecCol))
+      require(bdims == meta.dims || bdims == 0,
+        s"appendIvfIndex: batch dimension $bdims != index '$table' dimension ${meta.dims}")
+      val cents = centsOf(centsRows, meta.nlist, meta.dims)
+      IndexStore.Batch(() => qdf.select(col("id").as("neighbor_id")),
+        () => Map("assign" -> ivfRows(qdf, cents)))
     }
 
   /** PUBLISH a stored IVF+PQ index — the FAISS-style production artifact:
@@ -774,13 +763,13 @@ object Similarity {
       k: Int,
       nprobe: Int = 2,
       corpusFp: String = ""): DataFrame = {
-    // the two model collects launch BEFORE the meta read — three
-    // independent model-sized scans, one job latency instead of three
-    val modelRows = collectPqModelRows(spark, table)
-    val meta = PqStore.probeMeta(spark, table, corpusFp)
+    // the two model collects overlap the meta read — three independent
+    // model-sized scans, one job latency instead of three
+    val (rows, meta) = Par.both(pqModelRows(spark, table),
+      PqStore.probeMeta(spark, table, corpusFp))
     val (dims, nlist, m, codes) = (meta.dims, meta.nlist, meta.m, meta.codes)
     val sub = dims / m
-    val (cents, bksF) = buildPqModels(modelRows, meta)
+    val (cents, bksF) = buildPqModels(rows, meta)
     val quant = graft.functions.Vectors.fixedPointQuant(1024L)
     val probeF = probeUdf(cents, nprobe)
     val encoded = IndexStore.committed(spark, s"${table}_assign", meta.eps)
@@ -837,34 +826,29 @@ object Similarity {
       vecCol: String,
       table: String,
       newCorpusFp: String = ""): Unit =
-    PqStore.append(batch, table, newCorpusFp) {
-      val modelRows = collectPqModelRows(batch.sparkSession, table)
-      meta => {
-        val (qdf, bdims, bN) = quantizedBaseCounted(batch, idCol, vecCol)
-        require(bdims == meta.dims || bdims == 0,
-          s"appendPqIndex: batch dimension $bdims != index '$table' dimension ${meta.dims}")
-        IndexStore.Batch(() => qdf.select(col("id").as("neighbor_id")),
-          () => {
-            val (cents, bks) = buildPqModels(modelRows, meta)
-            Map("assign" -> pqRows(qdf, cents, bks, meta.m, meta.dims / meta.m))
-          },
-          (pm: PqMeta) => pm.copy(nRows = pm.nRows + bN))
-      }
+    PqStore.append(batch, table, newCorpusFp) { meta =>
+      val (rows, (qdf, bdims, bN)) = Par.both(pqModelRows(batch.sparkSession, table),
+        quantizedBaseCounted(batch, idCol, vecCol))
+      require(bdims == meta.dims || bdims == 0,
+        s"appendPqIndex: batch dimension $bdims != index '$table' dimension ${meta.dims}")
+      val (cents, bks) = buildPqModels(rows, meta)
+      IndexStore.Batch(() => qdf.select(col("id").as("neighbor_id")),
+        () => Map("assign" -> pqRows(qdf, cents, bks, meta.m, meta.dims / meta.m)),
+        (pm: PqMeta) => pm.copy(nRows = pm.nRows + bN))
     }
 
-  /** Launch the `_cents` + `_books` collects of a stored PQ index (see
-    * [[collectModel]]). */
-  private def collectPqModelRows(spark: org.apache.spark.sql.SparkSession,
-      table: String): (ModelRows, ModelRows) =
-    (collectModel(spark, table, "cents"), collectModel(spark, table, "books"))
+  /** The `_cents` and `_books` rows of a stored PQ index, collected
+    * overlapped. */
+  private def pqModelRows(spark: org.apache.spark.sql.SparkSession,
+      table: String): (Array[Row], Array[Row]) =
+    Par.both(modelRows(spark, table, "cents"), modelRows(spark, table, "books"))
 
   /** Assemble the driver-side PQ model arrays from the collected rows. */
   private def buildPqModels(
-      rows: (ModelRows, ModelRows),
+      rows: (Array[Row], Array[Row]),
       meta: PqMeta): (Array[Array[Long]], Array[Array[Array[Long]]]) = {
-    graft.functions.Par.awaitAllSettled(rows._1, rows._2)
     val bks = Array.fill(meta.m, meta.codes)(new Array[Long](meta.dims / meta.m))
-    settled(rows._2).foreach { r =>
+    rows._2.foreach { r =>
       bks(r.getInt(0))(r.getInt(1))(r.getInt(2)) = r.getLong(3)
     }
     (centsOf(rows._1, meta.nlist, meta.dims), bks)
@@ -1057,21 +1041,15 @@ object Similarity {
     * ([[pqBooksInt]]) CONCURRENTLY over the same materialized base: the two
     * trainers are independent given `qdf` (each is `rounds` sequential
     * narrow aggregate jobs over cached checkpoint blocks), so overlapping
-    * them from futures halves the training-phase job latency every
+    * them ([[Par.both]]) halves the training-phase job latency every
     * IVF+PQ entry pays (one-shot q111 and publishPqIndex/q310-q312 both).
     * Results are the exact arrays the sequential form produced — each
     * trainer is deterministic and they share no mutable state. */
   private def trainCoarseAndBooks(qdf: DataFrame, nlist: Int, m: Int,
       codes: Int, sub: Int, rounds: Int, init: Array[Array[Long]])
-      : (Array[Array[Long]], Array[Array[Array[Long]]]) = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val cF = Future(lloydInt(qdf, nlist, rounds, Some(init.take(nlist))))
-    val bF = Future(pqBooksInt(qdf, m, codes, sub, rounds, Some(init.take(codes))))
-    graft.functions.Par.awaitAllSettled(cF, bF)
-    (Await.result(cF, Duration.Zero), Await.result(bF, Duration.Zero))
-  }
+      : (Array[Array[Long]], Array[Array[Array[Long]]]) =
+    Par.both(lloydInt(qdf, nlist, rounds, Some(init.take(nlist))),
+      pqBooksInt(qdf, m, codes, sub, rounds, Some(init.take(codes))))
 
   private def pqBooksInt(
       qdf: DataFrame, m: Int, codes: Int, sub: Int, rounds: Int,

@@ -3,7 +3,7 @@ package queries
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.Text
+import graft.functions.{Par, Text}
 import graft.operators._
 import graft.queries.QueryKit._
 
@@ -259,18 +259,13 @@ object DedupQueries extends QueryFamily {
       // Submitting them from two threads lets the FIFO scheduler overlap
       // their stages across the 32 cores (the cluster story is identical:
       // concurrent jobs share the executor pool).
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val textPairsF = Future(Dedup.minhashLshPortable(docs, "doc_id", "text",
-        shingleN = 3, numHashes = 16, bands = 4, threshold = 0.5)
-        .select(col("id_a"), col("id_b")).localCheckpoint(true))
-      val semPairsF = Future(Dedup.semanticDedup(t(s, dir, "embeddings"),
-        "vec_id", "embedding", k = 8, thrNum = 4, thrDen = 10)
-        .select(col("id_a"), col("id_b")).localCheckpoint(true))
-      graft.functions.Par.awaitAllSettled(textPairsF, semPairsF)
-      val textPairs = Await.result(textPairsF, Duration.Zero)
-      val semPairs = Await.result(semPairsF, Duration.Zero)
+      val (textPairs, semPairs) = Par.both(
+        Dedup.minhashLshPortable(docs, "doc_id", "text",
+          shingleN = 3, numHashes = 16, bands = 4, threshold = 0.5)
+          .select(col("id_a"), col("id_b")).localCheckpoint(true),
+        Dedup.semanticDedup(t(s, dir, "embeddings"),
+          "vec_id", "embedding", k = 8, thrNum = 4, thrDen = 10)
+          .select(col("id_a"), col("id_b")).localCheckpoint(true))
       // no .distinct() here: components() canonicalizes (both-direction
       // union + distinct) anyway — a pre-distinct is a redundant shuffle
       val drop = Dedup.components(textPairs.unionAll(semPairs))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.{Bloom, CustomAggs, Sketches, Vectors => V}
+import graft.functions.{Bloom, CustomAggs, Par, Sketches, Vectors => V}
 import graft.operators._
 import graft.queries.QueryKit._
 import graft.sources.ZOrder
@@ -996,17 +996,12 @@ object OpsQueries extends QueryFamily {
       // the two audited edges are independent and each materializes its
       // key domains eagerly — overlap the edges' checkpoint jobs (§2.6);
       // the union/sort plan below is built from the settled results
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val aF = Future(Diff.fkAudit("orders.custkey",
-        t(s, dir, "orders"), "o_custkey", t(s, dir, "customer"), "c_custkey"))
-      val bF = Future(Diff.fkAudit("lineitem.orderkey",
-        t(s, dir, "lineitem"), "l_orderkey", t(s, dir, "orders"), "o_orderkey"))
-      graft.functions.Par.awaitAllSettled(aF, bF)
-      Await.result(aF, Duration.Zero)
-        .unionByName(Await.result(bF, Duration.Zero))
-        .orderBy(col("fk"))
+      val (a, b) = Par.both(
+        Diff.fkAudit("orders.custkey",
+          t(s, dir, "orders"), "o_custkey", t(s, dir, "customer"), "c_custkey"),
+        Diff.fkAudit("lineitem.orderkey",
+          t(s, dir, "lineitem"), "l_orderkey", t(s, dir, "orders"), "o_orderkey"))
+      a.unionByName(b).orderBy(col("fk"))
   }
 
   // ---- stats: per-source mean GLOBAL percent rank of document length

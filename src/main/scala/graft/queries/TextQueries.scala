@@ -1119,19 +1119,11 @@ object TextQueries extends QueryFamily {
       // the two ranking ladders are independent and each runs eager
       // cut-sampling jobs at construction — build them concurrently so the
       // scheduler overlaps their stages (the q179 discipline)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val raF = Future(OrderedScan.rowNumber(
-          d.select(col("doc_id"), enc(col("n_chars")).as("__k")), "__k", "__r")
-        .select(col("doc_id"), (col("__r") + 1L).as("rank")))
-      val rbF = Future(OrderedScan.rowNumber(
-          d.select(col("doc_id"), enc(Text.tokenCount(col("text"))).as("__k")),
-          "__k", "__r")
-        .select(col("doc_id"), (col("__r") + 1L).as("rank")))
-      graft.functions.Par.awaitAllSettled(raF, rbF)
-      Similarity.rrfFuse(Await.result(raF, Duration.Zero), Await.result(rbF, Duration.Zero),
-        "doc_id", "rank", k = 60, topN = 20)
+      val rank = (metric: Column) =>
+        OrderedScan.rowNumber(d.select(col("doc_id"), enc(metric).as("__k")), "__k", "__r")
+          .select(col("doc_id"), (col("__r") + 1L).as("rank"))
+      val (ra, rb) = Par.both(rank(col("n_chars")), rank(Text.tokenCount(col("text"))))
+      Similarity.rrfFuse(ra, rb, "doc_id", "rank", k = 60, topN = 20)
   }
 
   // ---- text: pairwise KL drift between per-source unigram LMs —

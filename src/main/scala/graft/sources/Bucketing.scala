@@ -586,22 +586,16 @@ object Partitioned {
     // independent of the write, so overlap its collect with the write's
     // job + commit (r18, §2.6); the prune itself still runs strictly
     // after both (it deletes directories the write may be committing)
-    val survivingF = {
-      import scala.concurrent.Future
-      import scala.concurrent.ExecutionContext.Implicits.global
-      Future(partValues(out, partCol, "rewrite output").toSet)
-    }
-    // rebalance by the partition column (same §6 rationale as
-    // [[ensurePartitionedDir]]): without it each of the checkpoint's
-    // tasks emits one file per partition value it holds — tasks × values
-    // near-empty files whose per-file commit cost dominates the rewrite
-    out.hint("rebalance", partCol)
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partCol).parquet(path)
-    graft.functions.Par.awaitAllSettled(survivingF)
-    val surviving =
-      scala.concurrent.Await.result(survivingF, scala.concurrent.duration.Duration.Zero)
+    val (surviving, _) = graft.functions.Par.both(
+      partValues(out, partCol, "rewrite output").toSet,
+      // rebalance by the partition column (same §6 rationale as
+      // [[ensurePartitionedDir]]): without it each of the checkpoint's
+      // tasks emits one file per partition value it holds — tasks × values
+      // near-empty files whose per-file commit cost dominates the rewrite
+      out.hint("rebalance", partCol)
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partCol).parquet(path))
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     affected.filterNot(surviving).foreach { v =>

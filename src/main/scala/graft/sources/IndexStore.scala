@@ -1,9 +1,5 @@
 package graft.sources
 
-import scala.concurrent.{Await, Future}
-import scala.concurrent.ExecutionContext.Implicits.global
-import scala.concurrent.duration.Duration
-
 import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, struct}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -27,8 +23,9 @@ trait IndexMeta[M] {
   * compact, cross-session recover, ensure, describe, and the committed-rows
   * view every probe and audit reads. A family declares its tables, its
   * typed `_meta` case class and a few hooks (audit, parameter identity,
-  * optional staged check); the order of every step, its overlaps, guards
-  * and crash points live here once.
+  * the append's `prepare`, optional staged check); the order of every step,
+  * its overlaps ([[graft.functions.Par]]), guards and crash points live
+  * here once.
   *
   * STORAGE. An index `t` is the bucketed managed tables `t_<suffix>` its
   * family declares plus `t_meta`, a one-row table holding the typed meta
@@ -43,9 +40,14 @@ trait IndexMeta[M] {
   *
   * STAGED COMMIT. Only rows whose `ep` is in `_meta.eps` are visible to
   * probes, audits and duplicate checks ([[IndexStore.committed]]). An
-  * append runs three ordered writes:
+  * append reads the stored meta inside the lease and hands it to the
+  * family's `prepare: M => Batch[M]`, which readies the batch (IVF and PQ
+  * collect their stored models there beside the batch quantization; LSH
+  * leaves its shingling to the duplicate check), then runs three ordered
+  * writes:
   *   - ALLOCATE: `_meta` bumps `next_ep` only (a crash after it wastes one
-  *     epoch number, nothing else);
+  *     epoch number, nothing else); it overlaps the committed-rows duplicate
+  *     check and settles before the append goes on or throws;
   *   - STAGE: the batch rows land in every epoch-gated table carrying the
   *     fresh epoch — a crash during, between or after these writes leaves
   *     probes returning exactly the pre-append results, and the retry is
@@ -144,34 +146,32 @@ abstract class IndexStore[M <: Product with IndexMeta[M]](
   def publish(spark: SparkSession, table: String)(build: => (M, Map[String, DataFrame])): Unit = {
     MaintenanceLease.clear(spark, table)
     val (m, frames) = build
-    overlap(tables.map { t =>
+    Par.all(tables.map { t =>
       val df = frames(t.suffix)
       () => Bucketing.saveBucketed(
         if (t.epochGated) Par.narrowForWrite(df.withColumn("ep", lit(0L))) else df,
         name(table, t), t.key, bucketsOf(t, m))
-    }: _*)
+    })
     writeMeta(spark, table, m)
   }
 
-  /** APPEND under the staged-commit protocol. `open` runs first inside the
-    * lease (launch model reads there); the function it returns prepares the
-    * batch under the stored meta before ALLOCATE. */
+  /** APPEND under the staged-commit protocol: `prepare` readies the batch
+    * under the stored meta inside the lease, before ALLOCATE. */
   def append(batch: DataFrame, table: String, newCorpusFp: String)(
-      open: => M => Batch[M]): Unit = {
+      prepare: M => Batch[M]): Unit = {
     val spark = batch.sparkSession
     val entry = s"append${title}Index"
     MaintenanceLease.withLease(spark, table) {
-      val prepare = open
       val m = readMeta(spark, table)
       val ep = m.nextEp
       val b = prepare(m)
-      // ALLOCATE overlapped with the batch encoding and the duplicate check;
-      // it only has to land before the stage writes
-      val allocF = Future(writeMeta(spark, table, m.withEpochs(m.corpusFp, m.eps, ep + 1L)))
-      // committed rows only: orphans of a torn attempt must not block its retry
-      val dup = b.ids().join(committed(spark, s"${table}_$idTable", m.eps), Seq(idCol),
-        "left_semi").limit(1).count()
-      Par.awaitAllSettled(allocF)
+      // ALLOCATE overlapped with the duplicate check (for LSH it also
+      // shingles the batch; committed rows only: orphans of a torn attempt
+      // must not block its retry); both settle before either is acted on
+      val (_, dup) = Par.both(
+        writeMeta(spark, table, m.withEpochs(m.corpusFp, m.eps, ep + 1L)),
+        b.ids().join(committed(spark, s"${table}_$idTable", m.eps), Seq(idCol),
+          "left_semi").limit(1).count())
       require(dup == 0,
         s"$entry: batch contains ids already present in index '$table' — append " +
           "would duplicate their probe rows; dedup the batch first")
@@ -184,18 +184,15 @@ abstract class IndexStore[M <: Product with IndexMeta[M]](
         s"$entry: allocator collision on '$table' (next_ep=$ne, expected ${ep + 1}) — " +
           "another writer is appending concurrently; index maintenance is " +
           "single-writer, retry after it completes")
-      overlap(gated.map { t =>
+      Par.all(gated.map { t =>
         () => Par.narrowForWrite(rows(t.suffix).withColumn("ep", lit(ep)))
           .write.mode("append").bucketBy(m.buckets, t.key).sortBy(t.key)
           .format("parquet").saveAsTable(name(table, t))
-      }: _*)
+      })
       Faults.point(s"$family.append.staged")
-      val checkF = Future(stagedCheck(spark, table, m, ep))
-      val mcF = Future(readMeta(spark, table))
-      Par.awaitAllSettled(checkF, mcF)
       // PRE-COMMIT GUARD: a racer that committed first left our epoch in eps
       // or bumped next_ep past ours — leave the winner's commit standing
-      val mc = Await.result(mcF, Duration.Zero)
+      val (_, mc) = Par.both(stagedCheck(spark, table, m, ep), readMeta(spark, table))
       require(mc.nextEp == ep + 1L && !mc.eps.contains(ep),
         s"$entry: lost an append race on '$table' (next_ep=${mc.nextEp}, " +
           s"eps=${mc.eps.mkString(",")}, ours=$ep) — NOT committed; index " +
@@ -214,14 +211,13 @@ abstract class IndexStore[M <: Product with IndexMeta[M]](
       val m = readMeta(spark, table)
       val gc: DataFrame => DataFrame =
         df => df.where(col("ep").isin(m.eps: _*)).withColumn("ep", lit(0L))
-      overlap(gated.map { t =>
+      Par.all(gated.map { t =>
         () => Bucketing.compactBucketed(spark, name(table, t), t.key, m.buckets, gc,
           faultTag = s"$family.compact.${t.suffix}")
-      }: _*)
+      })
       val done = m.withEpochs(m.corpusFp, Seq(0L), 1L)
-      overlap(
-        () => audit(spark, table, done, strict = true),
-        () => writeMeta(spark, table, done, faultTag = s"$family.compact.commit"))
+      Par.both(audit(spark, table, done, strict = true),
+        writeMeta(spark, table, done, faultTag = s"$family.compact.commit"))
     }
 
   /** CROSS-SESSION RECOVERY after a restart lost the catalog entries but
@@ -245,11 +241,11 @@ abstract class IndexStore[M <: Product with IndexMeta[M]](
         s"'${layout(m)}' — wrong index family or table name")
     // the tables' adoptions are independent (disjoint directories and
     // catalog entries): overlap them, settling all before any rethrow
-    overlap(tables.map { t =>
+    Par.all(tables.map { t =>
       () => require(
         Bucketing.recoverBucketedTable(spark, name(table, t), t.key, bucketsOf(t, m)),
         s"$entry: no surviving directory for '${name(table, t)}' — index data lost; republish")
-    }: _*)
+    })
     audit(spark, table, m, strict = true)
   }
 
@@ -303,7 +299,7 @@ object IndexStore {
   /** A batch prepared for [[IndexStore.append]]: `ids` is the one-column
     * frame the duplicate check joins on the family's id column, `rows` one
     * frame per gated table (without `ep`), and `commit` the family's own
-    * meta update at COMMIT. Both thunks run after ALLOCATE is launched. */
+    * meta update at COMMIT. `ids` runs beside ALLOCATE, `rows` after it. */
   final case class Batch[M](
       ids: () => DataFrame,
       rows: () => Map[String, DataFrame],
@@ -316,8 +312,4 @@ object IndexStore {
     Bucketing.healIfTorn(spark, table)
     spark.table(table).where(col("ep").isin(eps: _*))
   }
-
-  /** Run `bodies` concurrently, settling every one before rethrowing. */
-  def overlap(bodies: (() => Unit)*): Unit =
-    Par.awaitAllSettled(bodies.map(b => Future(b())): _*)
 }

@@ -254,11 +254,9 @@ object Streams {
       preds: Seq[Column],
       srcDir: Path,
       tag: String): Unit = {
-    import scala.concurrent.Future
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fs = preds.zipWithIndex.map { case (pred, b) =>
-      Future {
-        val tmp = Files.createTempDirectory(s"graft_${tag}_tmp")
+    graft.functions.Par.all(preds.zipWithIndex.map { case (pred, b) => () =>
+      val tmp = Files.createTempDirectory(s"graft_${tag}_tmp")
+      try {
         incoming.where(pred).coalesce(1).write.mode("overwrite").parquet(tmp.toString)
         val dst = srcDir.resolve(f"b$b%02d.parquet")
         Files.move(findPartFile(tmp), dst)
@@ -268,10 +266,8 @@ object Streams {
         require(dst.toFile.setLastModified(1000000L * (b + 1)),
           s"stageBatchFiles: cannot set mtime on $dst — file-stream arrival " +
             "order would be nondeterministic on this filesystem")
-        rmTree(tmp)
-      }
-    }
-    graft.functions.Par.awaitAllSettled(fs: _*)
+      } finally rmTree(tmp)
+    })
   }
 
   /** Locate the single part file of a coalesce(1) write — the
@@ -707,17 +703,12 @@ object Streams {
     // recomputes both from the pre-batch state and overwrites. Order-free
     // ⇒ overlap the two independent sink writes (r17: ~0.1 s of job
     // latency per micro-batch at sf0.1, paid once per batch otherwise)
-    locally {
-      import scala.concurrent.Future
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val keepF = Future(BatchSink(keepDir, "keep_id BIGINT").write(
+    graft.functions.Par.both(
+      BatchSink(keepDir, "keep_id BIGINT").write(
         batch.select(col("doc_id"))
           .join(bad.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left_anti")
-          .select(col("doc_id").as("keep_id")), batchId))
-      val cellF = Future(
-        cellSink.write(cells.select(col("band"), col("bk")).distinct(), batchId))
-      graft.functions.Par.awaitAllSettled(keepF, cellF)
-    }
+          .select(col("doc_id").as("keep_id")), batchId),
+      cellSink.write(cells.select(col("band"), col("bk")).distinct(), batchId))
   }
 
   /** The near-dup ingest fixture: documents plus near-dup copies (every

@@ -431,4 +431,40 @@ class StagedAppendSpec extends SparkSpecBase {
       "committed rows must be exactly the published corpus")
     dropAll("graft_dx_ivf")
   }
+
+  test("LSH append: a batch that fails inside the duplicate check leaves no job running and the lease free") {
+    val docs = lshDocs
+    val a = docs.where(col("doc_id") % 4 =!= 0)
+    val b = docs.where(col("doc_id") % 4 === 0)
+    val incoming = docs.where(col("doc_id") < 4)
+      .select((col("doc_id") + 1000L).as("doc_id"), col("text"))
+    def probe(tbl: String, fp: String) = rowsOf(Dedup.probeLshIndex(
+      spark, incoming, "doc_id", "text", tbl, threshold = 0.3, corpusFp = fp))
+    dropAll("graft_af_lsh"); dropAll("graft_af_ctl")
+    Dedup.publishLshIndex(a, "doc_id", "text", "graft_af_lsh", buckets = 2, corpusFp = "A")
+    // `text` fails inside the batch's shingling job, which the duplicate
+    // check runs while ALLOCATE's meta write is in flight beside it
+    val boom = udf((id: Long) =>
+      if (id >= 0) throw new IllegalStateException(s"text udf failed on $id") else "")
+    val bad = spark.range(5000L, 5004L)
+      .select(col("id").as("doc_id"), boom(col("id")).as("text"))
+    val e = intercept[Exception] {
+      Dedup.appendLshIndex(bad, "doc_id", "text", "graft_af_lsh", "AX")
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("text udf failed")), s"wrong failure: $e")
+    org.apache.spark.LifecycleBus.drain(spark.sparkContext)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty,
+      "a job of the failed append was still running after it threw")
+    val lease = new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir") + "/graft_af_lsh__lease")
+    assert(!lease.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(lease),
+      "the failed append left its maintenance lease behind")
+    Dedup.appendLshIndex(b, "doc_id", "text", "graft_af_lsh", "AB")
+    Dedup.publishLshIndex(docs, "doc_id", "text", "graft_af_ctl", buckets = 2, corpusFp = "AB")
+    assert(probe("graft_af_lsh", "AB") === probe("graft_af_ctl", "AB"),
+      "append after the failed one != fresh publish")
+    Dedup.assertLshIndexConsistent(spark, "graft_af_lsh", strict = true)
+    dropAll("graft_af_lsh"); dropAll("graft_af_ctl")
+  }
 }

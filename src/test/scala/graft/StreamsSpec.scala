@@ -353,4 +353,21 @@ class StreamsSpec extends SparkSpecBase {
     assert(resumed === fresh)
     assert(resumed === Set((1L, 0L), (3L, 0L), (21L, 1L), (31L, 2L)))
   }
+
+  test("stageBatchFiles removes every per-file temp directory when a staging write fails") {
+    val tag = s"leak${System.nanoTime}"
+    val src = java.nio.file.Files.createTempDirectory("graft_streams_stage")
+    val incoming = spark.range(0L, 40L).toDF("doc_id")
+    // one predicate stages fine, the other fails inside its write job
+    intercept[Exception] {
+      Streams.stageBatchFiles(incoming,
+        Seq(col("doc_id") % 2 === 0, raise_error(lit("staging predicate failed")).isNull),
+        src, tag)
+    }
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    val left = tmp.listFiles().map(_.getName).filter(_.startsWith(s"graft_${tag}_tmp"))
+    assert(left.isEmpty, s"staging left temp directories behind: ${left.mkString(", ")}")
+    src.toFile.listFiles().foreach(_.delete())
+    src.toFile.delete()
+  }
 }
