@@ -198,6 +198,8 @@ object AsOf {
     // it means "broadcast-sized" must be ENFORCED, not assumed: pointed at a
     // corpus-sized table this would OOM the driver instead of erroring.
     // Tunable via spark.graft.broadcastAsOf.maxRows for bigger driver heaps.
+    // The guard rides on the collect itself: at most maxRows + 1 rows come
+    // back, and one more than maxRows means the side is too big.
     val maxRows = spark.conf
       .getOption("spark.graft.broadcastAsOf.maxRows")
       .map(v => try v.trim.toLong catch {
@@ -205,11 +207,8 @@ object AsOf {
           s"spark.graft.broadcastAsOf.maxRows must be a long, got '$v'")
       })
       .getOrElse(10000000L)
-    val dataRows = right.count()
-    require(dataRows <= maxRows,
-      s"AsOf.broadcastJoin collects the data side to the driver and it has " +
-      s"$dataRows rows (limit $maxRows, conf spark.graft.broadcastAsOf.maxRows); " +
-      "use AsOf.join (the shuffle form) for a corpus-sized data side")
+    require(maxRows >= 0L && maxRows < Int.MaxValue,
+      s"spark.graft.broadcastAsOf.maxRows must be in [0, ${Int.MaxValue - 1}], got $maxRows")
 
     // driver-side build: sort by key, then fill each column along the
     // lookup direction (the reference's fill-before-reindex,
@@ -217,7 +216,12 @@ object AsOf {
     val projected = right.select(
       col(rightKey).cast("long").as("__k") +: valueCols.map(col): _*)
     val schema = projected.schema
-    val rows = projected.collect().sortBy(_.getLong(0))
+    val capped = projected.limit(maxRows.toInt + 1).collect()
+    require(capped.length <= maxRows,
+      s"AsOf.broadcastJoin collects the data side to the driver and it has " +
+      s"more than $maxRows rows (conf spark.graft.broadcastAsOf.maxRows); " +
+      "use AsOf.join (the shuffle form) for a corpus-sized data side")
+    val rows = capped.sortBy(_.getLong(0))
     val keys = rows.map(_.getLong(0))
     val bcKeys = spark.sparkContext.broadcast(keys)
     val smaller = direction == Lookup.NearestSmaller

@@ -714,14 +714,14 @@ object Dedup {
     "docs" -> base.select(col("id"), col("shs")))
 
   /** CROSS-SESSION RECOVERY of a published LSH index after a JVM restart
-    * lost the in-memory catalog entries of `_buckets`/`_docs`/`_meta` while
-    * their warehouse directories survived: re-adopts each directory as the
-    * same MANAGED bucketed table (metadata ops only — nothing rewritten,
-    * O(1) at 100 TB) and certifies the result with the strict per-doc
-    * audit. `expectedCorpusFp`, when non-null, must match the stored
-    * fingerprint. Probes after recovery answer the pre-restart oracle
-    * verbatim (q319; RecoverySpec proves it across a REAL SparkContext
-    * restart). Contract: [[graft.sources.IndexStore.recover]]. */
+    * lost the in-memory catalog entries of `_buckets`/`_docs` while their
+    * warehouse directories survived: reads the `_meta` file and re-adopts
+    * each directory as the same MANAGED bucketed table (metadata ops only —
+    * nothing rewritten, O(1) at 100 TB) and certifies the result with the
+    * strict per-doc audit. `expectedCorpusFp`, when non-null, must match
+    * the stored fingerprint. Probes after recovery answer the pre-restart
+    * oracle verbatim (q319; RecoverySpec proves it across a REAL
+    * SparkContext restart). Contract: [[graft.sources.IndexStore.recover]]. */
   def recoverLshIndex(spark: org.apache.spark.sql.SparkSession, table: String,
       expectedCorpusFp: String = null): Unit =
     LshStore.recover(spark, table, expectedCorpusFp)
@@ -843,7 +843,7 @@ object Dedup {
   /** The LSH family of [[graft.sources.IndexStore]]: `_buckets` bucketed by
     * band key and `_docs` by id, both epoch-gated; the hash family is the
     * parameter identity. */
-  private object LshStore extends IndexStore[LshMeta]("lsh", "Lsh", "shingle_n",
+  private[graft] object LshStore extends IndexStore[LshMeta]("lsh", "Lsh",
       Seq(IndexStore.Table("buckets", "bk", epochGated = true),
         IndexStore.Table("docs", "id", epochGated = true)),
       idTable = "docs", idCol = "id")(Encoders.product[LshMeta]) {

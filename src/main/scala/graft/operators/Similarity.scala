@@ -577,7 +577,8 @@ object Similarity {
 
   /** Collect a model-sized table (`_cents`, `_books`) — a tiny
     * single-bucket scan whose cost is pure job latency, so callers overlap
-    * it with the `_meta` read or the batch quantization ([[Par.both]]).
+    * it with the other model collect or the batch quantization
+    * ([[Par.both]]).
     * Model tables are written once at publish and never swap-maintained:
     * no heal is needed. */
   private def modelRows(spark: org.apache.spark.sql.SparkSession, table: String,
@@ -592,10 +593,10 @@ object Similarity {
   }
 
   /** CROSS-SESSION RECOVERY of a published IVF index — re-adopts the
-    * surviving warehouse directories (`_assign`/`_cents`/`_meta`) as the
-    * same managed bucketed tables after a JVM restart lost the in-memory
-    * catalog entries; fingerprint-checked when `expectedCorpusFp` is given;
-    * ends with the strict audit. Contract:
+    * surviving warehouse directories (`_assign`/`_cents`) under the `_meta`
+    * file's layout as the same managed bucketed tables after a JVM restart
+    * lost the in-memory catalog entries; fingerprint-checked when
+    * `expectedCorpusFp` is given; ends with the strict audit. Contract:
     * [[graft.sources.IndexStore.recover]]. */
   def recoverIvfIndex(spark: org.apache.spark.sql.SparkSession, table: String,
       expectedCorpusFp: String = null): Unit =
@@ -635,9 +636,8 @@ object Similarity {
       k: Int,
       nprobe: Int = 2,
       corpusFp: String = ""): DataFrame = {
-    val (centsRows, meta) =
-      Par.both(modelRows(spark, table, "cents"), IvfStore.probeMeta(spark, table, corpusFp))
-    val cents = centsOf(centsRows, meta.nlist, meta.dims)
+    val meta = IvfStore.probeMeta(spark, table, corpusFp)
+    val cents = centsOf(modelRows(spark, table, "cents"), meta.nlist, meta.dims)
     // stored-index probe: query batches are small by design — FORCE the
     // broadcast (see broadcastableQueries on why the gate lives elsewhere)
     ivfRank(IndexStore.committed(spark, s"${table}_assign", meta.eps),
@@ -763,10 +763,8 @@ object Similarity {
       k: Int,
       nprobe: Int = 2,
       corpusFp: String = ""): DataFrame = {
-    // the two model collects overlap the meta read — three independent
-    // model-sized scans, one job latency instead of three
-    val (rows, meta) = Par.both(pqModelRows(spark, table),
-      PqStore.probeMeta(spark, table, corpusFp))
+    val meta = PqStore.probeMeta(spark, table, corpusFp)
+    val rows = pqModelRows(spark, table)
     val (dims, nlist, m, codes) = (meta.dims, meta.nlist, meta.m, meta.codes)
     val sub = dims / m
     val (cents, bksF) = buildPqModels(rows, meta)
@@ -905,9 +903,10 @@ object Similarity {
   /** COMPACT an append-maintained IVF index: rewrite the `_assign`
     * inverted lists at the STORED bucket spec — rows, centroids, and
     * fingerprint unchanged, so probes before and after are row-identical
-    * (q277's oracle, shared with q263/q264). The `_cents`/`_meta` tables
-    * are model-sized and never appended, so only the lists compact; the
-    * STRICT audit runs after the swap ([[graft.sources.IndexStore.compact]]). */
+    * (q277's oracle, shared with q263/q264). The `_cents` table and the
+    * `_meta` file are model-sized and never appended, so only the lists
+    * compact; the STRICT audit runs after the swap
+    * ([[graft.sources.IndexStore.compact]]). */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession, table: String): Unit =
     IvfStore.compact(spark, table)
 
@@ -978,7 +977,7 @@ object Similarity {
 
   /** The IVF family of [[graft.sources.IndexStore]]: epoch-gated `_assign`
     * lists plus the model-sized `_cents`. */
-  private object IvfStore extends IndexStore[IvfMeta]("ivf", "Ivf", "dims",
+  private[graft] object IvfStore extends IndexStore[IvfMeta]("ivf", "Ivf",
       Seq(assignTable, centsTable), idTable = "assign", idCol = "neighbor_id")(
       Encoders.product[IvfMeta]) {
     def params(m: IvfMeta): Product = (m.nlist, m.trainRows, m.rounds, m.buckets)
@@ -990,7 +989,7 @@ object Similarity {
 
   /** The IVF+PQ family of [[graft.sources.IndexStore]]: epoch-gated
     * codes-only `_assign` lists plus the model-sized `_cents` and `_books`. */
-  private object PqStore extends IndexStore[PqMeta]("pq", "Pq", "dims",
+  private[graft] object PqStore extends IndexStore[PqMeta]("pq", "Pq",
       Seq(assignTable, centsTable, IndexStore.Table("books", "j", epochGated = false)),
       idTable = "assign", idCol = "neighbor_id")(Encoders.product[PqMeta]) {
     def params(m: PqMeta): Product = (m.nlist, m.m, m.codes, m.rounds, m.buckets)

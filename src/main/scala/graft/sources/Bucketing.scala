@@ -175,11 +175,11 @@ object MaintenanceLease {
   */
 object Bucketing {
 
-  private def managedDir(spark: SparkSession, table: String): org.apache.hadoop.fs.Path =
+  private[sources] def managedDir(spark: SparkSession, table: String): org.apache.hadoop.fs.Path =
     new org.apache.hadoop.fs.Path(
       spark.conf.get("spark.sql.warehouse.dir") + "/" + table.toLowerCase)
 
-  private def hadoopFs(spark: SparkSession): org.apache.hadoop.fs.FileSystem =
+  private[sources] def hadoopFs(spark: SparkSession): org.apache.hadoop.fs.FileSystem =
     new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"))
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
@@ -217,10 +217,10 @@ object Bucketing {
     * (either the old contents or the new), and [[repairCompacted]] /
     * [[healIfTorn]] restores the live name from whichever copy survived —
     * the write either fully happened or fully didn't. This is the required
-    * path for every table whose loss is not a cheap rebuild — in particular
-    * the index `_meta` tables, whose COMMIT write is the staged-commit
-    * protocol's "single atomic visibility flip" (see
-    * [[graft.operators.Dedup.appendLshIndex]]).
+    * path for every data table whose loss is not a cheap rebuild (the index
+    * compactions go through it). The index `_meta` no longer does: it is a
+    * file swapped by the same rename-aside sequence on the filesystem, with
+    * no Spark job ([[IndexStore]]).
     *
     * `faultTag`, when non-null, arms three named crash points inside the
     * swap (`<tag>.staged` after the stage write, `<tag>.aside` after the
@@ -258,8 +258,8 @@ object Bucketing {
   /** Heal a torn [[saveBucketedAtomic]]/[[compactBucketed]] swap, if (and
     * only if) the LIVE table is actually missing — on the clean path this
     * is one in-memory catalog lookup, so READERS of swap-maintained tables
-    * (index probes opening `_meta`) call it per-open and a crash inside a
-    * swap is self-healing at the next read, not just at the next
+    * (index probes opening their data tables) call it per-open and a crash
+    * inside a swap is self-healing at the next read, not just at the next
     * maintenance call.
     *
     * NON-DESTRUCTIVE by design (r15 advice): `__old`/`__compact` entries
@@ -372,8 +372,8 @@ object Bucketing {
     * each file name, which is where Spark's bucketed reader gets bucket
     * membership from) survive intact under `<warehouse>/<table>`, carrying
     * everything needed to re-register the table except the bucket spec,
-    * which callers pass back in (the index families store theirs in
-    * `_meta` so the whole index is self-describing — see
+    * which callers pass back in (the index families store theirs in the
+    * `_meta` file so the whole index is self-describing — see
     * [[IndexStore.recover]]).
     *
     * Two phases, both driver-side filesystem METADATA ops (nothing is

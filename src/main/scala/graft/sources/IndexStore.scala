@@ -1,8 +1,13 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Encoder, Encoders, Row, SparkSession}
-import org.apache.spark.sql.functions.{col, lit, struct}
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.{IntNode, LongNode, TextNode}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
 
 import graft.functions.Par
 
@@ -28,15 +33,21 @@ trait IndexMeta[M] {
   * here once.
   *
   * STORAGE. An index `t` is the bucketed managed tables `t_<suffix>` its
-  * family declares plus `t_meta`, a one-row table holding the typed meta
-  * (written and read by column NAME: camelCase field `corpusFp` is column
-  * `corpus_fp`) followed by a `layout` column. `layout` is the index's own
-  * bucket spec, `<suffix>:<key>:<buckets>` per table, derived from the
+  * family declares plus its meta: ONE small JSON file,
+  * `<warehouse>/t_meta/meta.json`, written and read through the Hadoop
+  * `FileSystem` the [[MaintenanceLease]] uses — no Spark job, no SQL
+  * execution, no catalog entry. The file is one object keyed by column
+  * name (camelCase field `corpusFp` is key `corpus_fp`) in field order,
+  * followed by a `layout` key; it is decoded by key and JSON type, and a
+  * missing or mistyped key fails loudly naming it. `layout` is the index's
+  * own bucket spec, `<suffix>:<key>:<buckets>` per table, derived from the
   * declaration — a surviving warehouse directory is self-describing, which
   * is what [[recover]] re-registers from. Epoch-gated tables hold the corpus
   * rows, bucketed `buckets` ways, every row carrying the epoch `ep` that
   * staged it; the others are model tables written once at publish into one
-  * bucket.
+  * bucket. A `t_meta` directory holding `part-*` parquet files instead is
+  * the one-row bucketed table earlier warehouses were written with;
+  * [[recover]] migrates it to the file once.
   *
   * STAGED COMMIT. Only rows whose `ep` is in `_meta.eps` are visible to
   * probes, audits and duplicate checks ([[IndexStore.committed]]). An
@@ -46,17 +57,20 @@ trait IndexMeta[M] {
   * leaves its shingling to the duplicate check), then runs three ordered
   * writes:
   *   - ALLOCATE: `_meta` bumps `next_ep` only (a crash after it wastes one
-  *     epoch number, nothing else); it overlaps the committed-rows duplicate
-  *     check and settles before the append goes on or throws;
+  *     epoch number, nothing else); the committed-rows duplicate check runs
+  *     after it;
   *   - STAGE: the batch rows land in every epoch-gated table carrying the
   *     fresh epoch — a crash during, between or after these writes leaves
   *     probes returning exactly the pre-append results, and the retry is
   *     the repair (it stages under a new epoch);
   *   - COMMIT: `_meta` lands last with the epoch added to `eps` and the new
-  *     fingerprint — the single visibility flip, itself a crash-atomic
-  *     rename swap ([[Bucketing.saveBucketedAtomic]]), so a kill inside it
-  *     leaves old-or-new meta fully readable after [[Bucketing.healIfTorn]],
-  *     which every meta and data open runs.
+  *     fingerprint — the single visibility flip. Every meta write is a
+  *     crash-atomic file swap: write `meta.json.tmp`, rename the live file
+  *     to `meta.json.old`, rename the tmp file in, delete `.old`. A kill
+  *     inside it leaves old-or-new meta fully readable: every meta read
+  *     first restores a missing live file from `.old`, else promotes `.tmp`,
+  *     and never deletes either (a writer may be mid-swap); the next meta
+  *     write clears stale leftovers under the single-writer contract.
   * Orphaned epochs are garbage-collected by [[compact]], which rewrites the
   * gated tables keeping committed rows at epoch 0 and resets `eps` to [0].
   *
@@ -79,13 +93,11 @@ trait IndexMeta[M] {
   * normalisation.
   *
   * A family names its crash points with `family`, its entry points in
-  * messages with `title` (`appendLshIndex`), the `_meta` bucket column with
-  * `metaKey`, and the duplicate check's table and id column with `idTable`
-  * and `idCol`. */
+  * messages with `title` (`appendLshIndex`), and the duplicate check's
+  * table and id column with `idTable` and `idCol`. */
 abstract class IndexStore[M <: Product with IndexMeta[M]](
     family: String,
     title: String,
-    metaKey: String,
     tables: Seq[IndexStore.Table],
     idTable: String,
     idCol: String)(implicit enc: Encoder[M]) {
@@ -101,7 +113,7 @@ abstract class IndexStore[M <: Product with IndexMeta[M]](
   def paramNames: String
 
   /** Extra completeness check on epoch `ep`'s staged rows, run before the
-    * commit (overlapped with the pre-commit guard read). */
+    * commit's pre-commit guard read. */
   def stagedCheck(spark: SparkSession, table: String, m: M, ep: Long): Unit = ()
 
   private val gated = tables.filter(_.epochGated)
@@ -113,27 +125,49 @@ abstract class IndexStore[M <: Product with IndexMeta[M]](
 
   private val fields = enc.schema.fields
   private def column(field: String) = field.replaceAll("([A-Z])", "_$1").toLowerCase
-  private val metaSchema = StructType(
-    fields.map(f => f.copy(name = column(f.name))) :+ StructField("layout", StringType))
-  private val storedEnc = Encoders.tuple(enc, Encoders.STRING)
+  private val keys = fields.map(f => column(f.name)) :+ "layout"
+  private val types = fields.map(_.dataType) :+ StringType
+  private val ctor = enc.clsTag.runtimeClass.getConstructors
+    .find(_.getParameterCount == fields.length)
+    .getOrElse(throw new IllegalArgumentException(
+      s"${enc.clsTag.runtimeClass.getName} has no constructor over its ${fields.length} fields"))
+
+  /** The file form: one JSON object, keys in field order, then `layout`. */
+  private def encode(m: M, layout: String): Array[Byte] = {
+    val o = Json.createObjectNode()
+    keys.zip(types).zip(m.productIterator.toSeq :+ layout).foreach {
+      case ((k, t), v) => o.set[JsonNode](k, toJson(t, v))
+    }
+    Json.writeValueAsBytes(o)
+  }
+
+  /** The typed meta and the stored layout string, decoded by key. */
+  private def decode(what: String, bytes: Array[Byte]): (M, String) = {
+    val o = try Json.readTree(bytes) catch {
+      case e: java.io.IOException =>
+        throw new IllegalStateException(s"$what is not JSON: ${e.getMessage}", e)
+    }
+    require(o != null && o.isObject, s"$what is not a JSON object")
+    val vs = keys.zip(types).map { case (k, t) => fromJson(what, k, t, o.get(k)) }
+    (ctor.newInstance(vs.init: _*).asInstanceOf[M], vs.last.asInstanceOf[String])
+  }
 
   private def writeMeta(spark: SparkSession, table: String, m: M,
       faultTag: String = null): Unit =
-    Bucketing.saveBucketedAtomic(
-      spark.createDataFrame(
-        java.util.List.of(Row.fromSeq(m.productIterator.toSeq :+ layout(m))), metaSchema),
-      s"${table}_meta", metaKey, 1, faultTag = faultTag)
+    swapIn(spark, table, encode(m, layout(m)), faultTag)
 
   /** The typed meta and the stored layout string, in one read. */
   private def readStored(spark: SparkSession, table: String): (M, String) = {
-    Bucketing.healIfTorn(spark, s"${table}_meta")
-    spark.table(s"${table}_meta")
-      .select(struct(fields.map(f => col(column(f.name)).as(f.name)).toSeq: _*).as("_1"),
-        col("layout").as("_2"))
-      .as(storedEnc).head()
+    val path = metaFile(spark, table)
+    require(healMeta(spark, table),
+      s"index '$table' has no _meta file ($path) — publish it, or recover it " +
+        s"from a surviving warehouse via recover${title}Index")
+    decode(s"index '$table' _meta file $path", readBytes(spark, path))
   }
 
-  private def readMeta(spark: SparkSession, table: String): M = readStored(spark, table)._1
+  /** The stored meta — the one read every step, probe and spec goes through. */
+  private[graft] def storedMeta(spark: SparkSession, table: String): M =
+    readStored(spark, table)._1
 
   private def checkCorpus(entry: String, table: String, m: M, expected: String): Unit =
     require(m.corpusFp == expected,
@@ -142,7 +176,8 @@ abstract class IndexStore[M <: Product with IndexMeta[M]](
 
   /** PUBLISH: `build` returns the meta (epochs default to [0]) and one frame
     * per declared table; data and model writes overlap and `_meta` lands
-    * last, so a torn publish fails every probe's meta open. */
+    * last, into a cleared directory (a table-form or torn leftover of an
+    * earlier index under this name never survives a publish). */
   def publish(spark: SparkSession, table: String)(build: => (M, Map[String, DataFrame])): Unit = {
     MaintenanceLease.clear(spark, table)
     val (m, frames) = build
@@ -152,6 +187,7 @@ abstract class IndexStore[M <: Product with IndexMeta[M]](
         if (t.epochGated) Par.narrowForWrite(df.withColumn("ep", lit(0L))) else df,
         name(table, t), t.key, bucketsOf(t, m))
     })
+    Bucketing.hadoopFs(spark).delete(metaDir(spark, table), true)
     writeMeta(spark, table, m)
   }
 
@@ -162,16 +198,14 @@ abstract class IndexStore[M <: Product with IndexMeta[M]](
     val spark = batch.sparkSession
     val entry = s"append${title}Index"
     MaintenanceLease.withLease(spark, table) {
-      val m = readMeta(spark, table)
+      val m = storedMeta(spark, table)
       val ep = m.nextEp
       val b = prepare(m)
-      // ALLOCATE overlapped with the duplicate check (for LSH it also
-      // shingles the batch; committed rows only: orphans of a torn attempt
-      // must not block its retry); both settle before either is acted on
-      val (_, dup) = Par.both(
-        writeMeta(spark, table, m.withEpochs(m.corpusFp, m.eps, ep + 1L)),
-        b.ids().join(committed(spark, s"${table}_$idTable", m.eps), Seq(idCol),
-          "left_semi").limit(1).count())
+      writeMeta(spark, table, m.withEpochs(m.corpusFp, m.eps, ep + 1L))
+      // the duplicate check (for LSH it also shingles the batch) reads
+      // committed rows only: orphans of a torn attempt must not block its retry
+      val dup = b.ids().join(committed(spark, s"${table}_$idTable", m.eps), Seq(idCol),
+        "left_semi").limit(1).count()
       require(dup == 0,
         s"$entry: batch contains ids already present in index '$table' — append " +
           "would duplicate their probe rows; dedup the batch first")
@@ -179,7 +213,7 @@ abstract class IndexStore[M <: Product with IndexMeta[M]](
       Faults.point(s"$family.append.allocated")
       // ALLOCATOR-COLLISION GUARD: a racer that allocated after our read
       // leaves next_ep != ep+1 — abort before staging a doomed epoch
-      val ne = readMeta(spark, table).nextEp
+      val ne = storedMeta(spark, table).nextEp
       require(ne == ep + 1L,
         s"$entry: allocator collision on '$table' (next_ep=$ne, expected ${ep + 1}) — " +
           "another writer is appending concurrently; index maintenance is " +
@@ -190,9 +224,10 @@ abstract class IndexStore[M <: Product with IndexMeta[M]](
           .format("parquet").saveAsTable(name(table, t))
       })
       Faults.point(s"$family.append.staged")
+      stagedCheck(spark, table, m, ep)
       // PRE-COMMIT GUARD: a racer that committed first left our epoch in eps
       // or bumped next_ep past ours — leave the winner's commit standing
-      val (_, mc) = Par.both(stagedCheck(spark, table, m, ep), readMeta(spark, table))
+      val mc = storedMeta(spark, table)
       require(mc.nextEp == ep + 1L && !mc.eps.contains(ep),
         s"$entry: lost an append race on '$table' (next_ep=${mc.nextEp}, " +
           s"eps=${mc.eps.mkString(",")}, ours=$ep) — NOT committed; index " +
@@ -204,11 +239,11 @@ abstract class IndexStore[M <: Product with IndexMeta[M]](
 
   /** COMPACT: rewrite every gated table at the stored bucket spec, dropping
     * orphaned epochs and moving committed rows to epoch 0 (safe in any crash
-    * order: 0 is always committed), then the strict audit of the post-state
-    * overlapped with the meta normalisation — they touch different tables. */
+    * order: 0 is always committed), then the meta normalisation, then the
+    * strict audit of the post-state. */
   def compact(spark: SparkSession, table: String): Unit =
     MaintenanceLease.withLease(spark, table) {
-      val m = readMeta(spark, table)
+      val m = storedMeta(spark, table)
       val gc: DataFrame => DataFrame =
         df => df.where(col("ep").isin(m.eps: _*)).withColumn("ep", lit(0L))
       Par.all(gated.map { t =>
@@ -216,20 +251,21 @@ abstract class IndexStore[M <: Product with IndexMeta[M]](
           faultTag = s"$family.compact.${t.suffix}")
       })
       val done = m.withEpochs(m.corpusFp, Seq(0L), 1L)
-      Par.both(audit(spark, table, done, strict = true),
-        writeMeta(spark, table, done, faultTag = s"$family.compact.commit"))
+      writeMeta(spark, table, done, faultTag = s"$family.compact.commit")
+      audit(spark, table, done, strict = true)
     }
 
   /** CROSS-SESSION RECOVERY after a restart lost the catalog entries but
-    * not the warehouse directories: re-adopt `_meta` (its spec is the
-    * family constant), check the fingerprint when `expectedCorpusFp` is
-    * given, re-adopt the data tables from the stored layout (which must be
-    * this family's), then certify with the strict audit on the meta already
-    * read. Metadata operations plus one linear audit; nothing is rewritten. */
+    * not the warehouse directories: migrate a table-form `_meta` to the file
+    * form, check the fingerprint when `expectedCorpusFp` is given, re-adopt
+    * the data tables from the stored layout (which must be this family's),
+    * then certify with the strict audit on the meta already read. Metadata
+    * operations plus one linear audit; no data is rewritten. */
   def recover(spark: SparkSession, table: String, expectedCorpusFp: String): Unit = {
     val entry = s"recover${title}Index"
-    require(Bucketing.recoverBucketedTable(spark, s"${table}_meta", metaKey, 1),
-      s"$entry: no surviving _meta directory for index '$table' — nothing to " +
+    migrateLegacy(spark, table)
+    require(healMeta(spark, table),
+      s"$entry: no surviving _meta for index '$table' — nothing to " +
         s"recover; republish via publish${title}Index")
     val (m, stored) = readStored(spark, table)
     if (expectedCorpusFp != null) checkCorpus(entry, table, m, expectedCorpusFp)
@@ -249,17 +285,41 @@ abstract class IndexStore[M <: Product with IndexMeta[M]](
     audit(spark, table, m, strict = true)
   }
 
-  /** Publish only when a table is missing (after healing torn swaps, which
-    * must read as "exists"); an existing index must carry this corpus's
-    * fingerprint and the requested parameters. */
+  /** MIGRATION of the table form earlier warehouses hold (`part-*` parquet
+    * files of a one-row bucketed table): read it once by column name, write
+    * it as the file, then remove the parquet files. A directory that
+    * already holds the file form only loses the parquet leftovers. */
+  private def migrateLegacy(spark: SparkSession, table: String): Unit = {
+    val fs = Bucketing.hadoopFs(spark)
+    val dir = metaDir(spark, table)
+    val parts = if (!fs.exists(dir)) Seq.empty
+      else fs.listStatus(dir).toSeq.map(_.getPath).filter(_.getName.startsWith("part-"))
+    if (parts.nonEmpty) {
+      if (!healMeta(spark, table)) {
+        val legacyMeta = spark.read.parquet(parts.map(_.toString): _*).select(keys.map(col): _*)
+          .collect()
+        require(legacyMeta.length == 1,
+          s"recover${title}Index: table-form _meta of '$table' holds ${legacyMeta.length} rows, expected 1")
+        val (m, stored) = decode(s"index '$table' table-form _meta", legacyMeta.head.json.getBytes("UTF-8"))
+        swapIn(spark, table, encode(m, stored), null)
+      }
+      fs.listStatus(dir).map(_.getPath)
+        .filter(p => p.getName.startsWith("part-") || p.getName == "_SUCCESS")
+        .foreach(fs.delete(_, false))
+    }
+  }
+
+  /** Publish only when a table or the meta file is missing (after healing
+    * torn swaps, which must read as "exists"); an existing index must carry
+    * this corpus's fingerprint and the requested parameters. */
   def ensure(spark: SparkSession, table: String, corpusFp: String, asked: Product)(
       publish: => Unit): Unit = {
     val entry = s"ensure${title}Index"
-    val names = tables.map(name(table, _)) :+ s"${table}_meta"
+    val names = tables.map(name(table, _))
     names.foreach(Bucketing.healIfTorn(spark, _))
-    if (!names.forall(spark.catalog.tableExists)) publish
+    if (!(names.forall(spark.catalog.tableExists) && healMeta(spark, table))) publish
     else {
-      val m = readMeta(spark, table)
+      val m = storedMeta(spark, table)
       checkCorpus(entry, table, m, corpusFp)
       require(params(m) == asked,
         s"$entry: index '$table' exists with $paramNames = ${params(m)} but the " +
@@ -273,7 +333,7 @@ abstract class IndexStore[M <: Product with IndexMeta[M]](
   def probeMeta(spark: SparkSession, table: String, corpusFp: String,
       asked: Option[Product] = None): M = {
     val entry = s"probe${title}Index"
-    val m = readMeta(spark, table)
+    val m = storedMeta(spark, table)
     asked.foreach(a => require(params(m) == a,
       s"$entry: index '$table' was published with $paramNames = ${params(m)} but " +
         s"the caller requested $a"))
@@ -282,12 +342,12 @@ abstract class IndexStore[M <: Product with IndexMeta[M]](
   }
 
   def assertConsistent(spark: SparkSession, table: String, strict: Boolean): Unit =
-    audit(spark, table, readMeta(spark, table), strict)
+    audit(spark, table, storedMeta(spark, table), strict)
 
   /** Committed vs orphan rows and epochs plus the file count of each gated
     * table ([[Bucketing.epochReport]]). */
   def describe(spark: SparkSession, table: String): DataFrame =
-    Bucketing.epochReport(spark, gated.map(name(table, _)), readMeta(spark, table).eps)
+    Bucketing.epochReport(spark, gated.map(name(table, _)), storedMeta(spark, table).eps)
 }
 
 object IndexStore {
@@ -299,7 +359,7 @@ object IndexStore {
   /** A batch prepared for [[IndexStore.append]]: `ids` is the one-column
     * frame the duplicate check joins on the family's id column, `rows` one
     * frame per gated table (without `ep`), and `commit` the family's own
-    * meta update at COMMIT. `ids` runs beside ALLOCATE, `rows` after it. */
+    * meta update at COMMIT. `ids` runs after ALLOCATE, `rows` after it. */
   final case class Batch[M](
       ids: () => DataFrame,
       rows: () => Map[String, DataFrame],
@@ -311,5 +371,89 @@ object IndexStore {
   def committed(spark: SparkSession, table: String, eps: Seq[Long]): DataFrame = {
     Bucketing.healIfTorn(spark, table)
     spark.table(table).where(col("ep").isin(eps: _*))
+  }
+
+  private val Json = new ObjectMapper()
+
+  /** `<warehouse>/<table>_meta`, the directory the table form used too. */
+  private def metaDir(spark: SparkSession, table: String): Path =
+    Bucketing.managedDir(spark, s"${table}_meta")
+
+  private[graft] def metaFile(spark: SparkSession, table: String): Path =
+    new Path(metaDir(spark, table), "meta.json")
+
+  private def sibling(live: Path, ext: String) = new Path(live.getParent, live.getName + ext)
+
+  private def rename(fs: FileSystem, from: Path, to: Path): Unit =
+    require(fs.rename(from, to), s"index _meta swap: rename $from -> $to failed")
+
+  private def readBytes(spark: SparkSession, path: Path): Array[Byte] = {
+    val in = Bucketing.hadoopFs(spark).open(path)
+    try in.readAllBytes() finally in.close()
+  }
+
+  /** Read-path heal of a torn meta swap, NON-DESTRUCTIVE (a writer may be
+    * mid-swap): a missing live file is restored from `.old` (the original),
+    * else from `.tmp` (complete before the swap's first rename). Returns
+    * whether the live file exists. */
+  private def healMeta(spark: SparkSession, table: String): Boolean = {
+    val fs = Bucketing.hadoopFs(spark)
+    val live = metaFile(spark, table)
+    if (!fs.exists(live))
+      Seq(sibling(live, ".old"), sibling(live, ".tmp")).find(fs.exists)
+        .foreach(fs.rename(_, live))
+    fs.exists(live)
+  }
+
+  /** Land `bytes` as the live meta file through the crash-atomic swap (see
+    * STAGED COMMIT); `faultTag`, when non-null, arms `<tag>.staged`,
+    * `<tag>.aside` and `<tag>.renamed`. Maintenance only: heals, then
+    * clears stale `.tmp`/`.old` leftovers of an earlier torn swap. */
+  private def swapIn(spark: SparkSession, table: String, bytes: Array[Byte],
+      faultTag: String): Unit = {
+    def point(w: String): Unit = if (faultTag != null) Faults.point(s"$faultTag.$w")
+    val fs = Bucketing.hadoopFs(spark)
+    val live = metaFile(spark, table)
+    val (tmp, old) = (sibling(live, ".tmp"), sibling(live, ".old"))
+    if (healMeta(spark, table)) Seq(tmp, old).foreach(fs.delete(_, false))
+    val out = fs.create(tmp, true)
+    try out.write(bytes) finally out.close()
+    point("staged")
+    if (fs.exists(live)) {
+      rename(fs, live, old)
+      point("aside")
+      rename(fs, tmp, live)
+      point("renamed")
+      fs.delete(old, false)
+    } else rename(fs, tmp, live)
+  }
+
+  private def toJson(t: DataType, v: Any): JsonNode = (t, v) match {
+    case (IntegerType, i: Int) => IntNode.valueOf(i)
+    case (LongType, l: Long) => LongNode.valueOf(l)
+    case (StringType, s: String) => TextNode.valueOf(s)
+    case (ArrayType(LongType, _), ls: Seq[_]) =>
+      val a = Json.createArrayNode()
+      ls.foreach(l => a.add(l.asInstanceOf[Long]))
+      a
+    case _ => throw new IllegalArgumentException(s"index _meta cannot store $v as ${t.simpleString}")
+  }
+
+  /** One meta value by key, boxed for the case-class constructor. */
+  private def fromJson(what: String, key: String, t: DataType, v: JsonNode): AnyRef = {
+    def long(n: JsonNode) = n.isIntegralNumber && n.canConvertToLong
+    def bad = throw new IllegalStateException(
+      if (v == null) s"$what: field '$key' is missing"
+      else s"$what: field '$key' is not ${t.simpleString} (found ${v.getNodeType} $v)")
+    t match {
+      case IntegerType => if (v != null && v.isIntegralNumber && v.canConvertToInt) Int.box(v.intValue) else bad
+      case LongType => if (v != null && long(v)) Long.box(v.longValue) else bad
+      case StringType => if (v != null && v.isTextual) v.textValue else bad
+      case ArrayType(LongType, _) =>
+        if (v != null && v.isArray && v.elements.asScala.forall(long))
+          v.elements.asScala.map(_.longValue).toVector
+        else bad
+      case _ => throw new IllegalArgumentException(s"index _meta cannot store ${t.simpleString}")
+    }
   }
 }

@@ -11,7 +11,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
   * Lives in `org.apache.spark` for one reason: [[snapshot]] must drain the
   * (async) listener bus before reading the counters, and
   * `SparkContext.listenerBus` is `private[spark]` — the same narrow-bridge
-  * discipline as [[org.apache.spark.sql.GraftShim]].
+  * discipline as [[org.apache.spark.sql.GraftShim]]. The companion's
+  * [[GraftTaskMetrics.drain]] is that bridge, for every listener.
   *
   * The drill uses these to answer "did this kernel spill at 100×?" with a
   * measurement instead of an inference — a kernel whose hash aggregates or
@@ -39,14 +40,14 @@ final class GraftTaskMetrics extends SparkListener {
 
   def reset(sc: SparkContext): Unit = {
     // events from the PREVIOUS window must not leak into this one
-    sc.listenerBus.waitUntilEmpty()
+    GraftTaskMetrics.drain(sc)
     memSpilled.set(0L); diskSpilled.set(0L)
     shuffleWritten.set(0L); peakTaskMem.set(0L)
   }
 
   /** Drain the bus, then report MiB-granular counters (0 MiB = no spill). */
   def snapshot(sc: SparkContext): Map[String, Long] = {
-    sc.listenerBus.waitUntilEmpty()
+    GraftTaskMetrics.drain(sc)
     val mib = 1024L * 1024L
     Map(
       "spill_mem_mb" -> memSpilled.get / mib,
@@ -58,7 +59,7 @@ final class GraftTaskMetrics extends SparkListener {
   /** Byte-granular shuffle-write total for test assertions at spec scale
     * (MiB rounding floors small-but-real shuffles to 0). */
   def shuffleBytes(sc: SparkContext): Long = {
-    sc.listenerBus.waitUntilEmpty()
+    GraftTaskMetrics.drain(sc)
     shuffleWritten.get
   }
 
@@ -67,7 +68,13 @@ final class GraftTaskMetrics extends SparkListener {
     * nonzero ("did it spill at all" must not lose sub-MiB spills to two
     * independent floors; callers convert to MiB once). */
   def spillBytes(sc: SparkContext): Long = {
-    sc.listenerBus.waitUntilEmpty()
+    GraftTaskMetrics.drain(sc)
     memSpilled.get + diskSpilled.get
   }
+}
+
+object GraftTaskMetrics {
+  /** Drains the asynchronous listener bus, so a listener has seen every
+    * event of the work that already returned. */
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -268,7 +268,7 @@ class CompactionSpec extends SparkSpecBase {
     Similarity.appendPqIndex(vecs.where(col("vec_id") % 5 === 0), "vec_id",
       "embedding", tbl, newCorpusFp = "")
     // the append bumped _meta.n_rows to the full corpus count
-    assert(spark.table(s"${tbl}_meta").head().getLong(6) === 40L)
+    assert(Similarity.PqStore.storedMeta(spark, tbl).nRows === 40L)
     // a duplicate batch id is refused at the seam
     val eDup = intercept[IllegalArgumentException] {
       Similarity.appendPqIndex(vecs.limit(1), "vec_id", "embedding", tbl)

@@ -131,7 +131,9 @@ class CrashSweepSpec extends SparkSpecBase {
   }
 
   private def storedFp(table: String): String =
-    s.table(s"${table}_meta").select("corpus_fp").head.getString(0)
+    if (table.startsWith("graft_cw_lsh")) Dedup.LshStore.storedMeta(s, table).corpusFp
+    else if (table.startsWith("graft_cw_ivf")) Similarity.IvfStore.storedMeta(s, table).corpusFp
+    else Similarity.PqStore.storedMeta(s, table).corpusFp
 
   private def dropAll(prefix: String, suffixes: Seq[String]): Unit =
     (suffixes ++ suffixes.flatMap(x => Seq(s"${x}__old", s"${x}__compact")))

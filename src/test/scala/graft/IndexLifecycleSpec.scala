@@ -1,23 +1,19 @@
-package org.apache.spark {
-  /** Drains the asynchronous listener bus so a job counter has seen every
-    * job of the work that already returned. `SparkContext.listenerBus` is
-    * `private[spark]`, hence this package. */
-  object LifecycleBus {
-    def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
-  }
-}
-
-package graft {
+package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.LifecycleBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
+import org.apache.spark.GraftTaskMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.operators.{Dedup, Similarity}
-import graft.sources.Bucketing
+import graft.sources.{Bucketing, IndexStore}
 
 /** Pins the stored-index lifecycle shared by LSH, IVF and PQ
   * ([[graft.sources.IndexStore]]):
@@ -25,16 +21,24 @@ import graft.sources.Bucketing
   *  - the number of Spark jobs each lifecycle operation runs (publish,
   *    append, compact, recover after catalog loss, and building a probe)
   *    never exceeds the figure recorded below for the per-family code the
-  *    shared skeleton replaced; recover runs exactly one job fewer, since
-  *    the `_meta` row it already holds carries the layout;
-  *  - each family's `_meta` schema — column names, types and order — is
-  *    exactly the one earlier warehouses were written with, so a surviving
-  *    warehouse still recovers. */
+  *    shared skeleton replaced, and is exactly the figure of the file-form
+  *    meta: each step runs its data jobs only, and a meta read runs no
+  *    Spark job and no SQL execution;
+  *  - each family's `_meta` file form — keys, order and JSON types — and
+  *    its layout string, so a surviving warehouse still recovers;
+  *  - a warehouse whose `_meta` is the one-row table earlier versions
+  *    wrote still recovers, and the recovery migrates it to the file form;
+  *  - no main source reads a `_meta` through Spark except that migration. */
 class IndexLifecycleSpec extends SparkSpecBase {
 
   private val started = new AtomicInteger(0)
+  private val sqlStarted = new AtomicInteger(0)
   private val listener = new SparkListener {
     override def onJobStart(e: SparkListenerJobStart): Unit = started.incrementAndGet()
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case _: SparkListenerSQLExecutionStart => sqlStarted.incrementAndGet()
+      case _ =>
+    }
   }
 
   override def beforeAll(): Unit = {
@@ -47,14 +51,17 @@ class IndexLifecycleSpec extends SparkSpecBase {
     super.afterAll()
   }
 
-  /** Spark jobs started while `body` ran. */
-  private def jobs(body: => Any): Int = {
-    LifecycleBus.drain(spark.sparkContext)
+  /** Spark jobs and SQL executions started while `body` ran. */
+  private def census(body: => Any): (Int, Int) = {
+    GraftTaskMetrics.drain(spark.sparkContext)
     started.set(0)
+    sqlStarted.set(0)
     body
-    LifecycleBus.drain(spark.sparkContext)
-    started.get
+    GraftTaskMetrics.drain(spark.sparkContext)
+    (started.get, sqlStarted.get)
   }
+
+  private def jobs(body: => Any): Int = census(body)._1
 
   private val suffixes = Seq("_buckets", "_docs", "_assign", "_cents", "_books", "_meta")
 
@@ -116,14 +123,27 @@ class IndexLifecycleSpec extends SparkSpecBase {
     "pq" -> Map("publish" -> 9, "append" -> 12, "compact" -> 7, "recover" -> 9,
       "probe-build" -> 3))
 
+  // Jobs each step runs with the file-form meta: the table-form figures
+  // (lsh 4/15/10/8/2, ivf 8/11/7/7/2, pq 9/12/7/8/3 in the order below)
+  // less their meta jobs — one per meta write, one per meta read, and for
+  // recover also the parquet-footer job of re-adopting the meta table.
+  // LSH append: 15 -> 10 (2 writes, 3 reads).
+  private val after = Map(
+    "lsh" -> Map("publish" -> 3, "append" -> 10, "compact" -> 8, "recover" -> 6,
+      "probe-build" -> 1),
+    "ivf" -> Map("publish" -> 7, "append" -> 6, "compact" -> 5, "recover" -> 5,
+      "probe-build" -> 1),
+    "pq" -> Map("publish" -> 8, "append" -> 7, "compact" -> 5, "recover" -> 6,
+      "probe-build" -> 2))
+
   private def check(family: String, now: Map[String, Int]): Unit =
     before(family).foreach { case (step, was) =>
       assert(now(step) <= was, s"$family $step ran ${now(step)} jobs, was $was")
-      if (step == "recover")
-        assert(now(step) === was - 1, s"$family recover ran ${now(step)} jobs, was $was")
+      assert(now(step) === after(family)(step),
+        s"$family $step ran ${now(step)} jobs, pinned at ${after(family)(step)}")
     }
 
-  test("LSH lifecycle: no step runs more jobs than before; recover runs one fewer") {
+  test("LSH lifecycle: no step runs more jobs than before; each runs its pinned count") {
     val d = docs
     val t = "graft_il_lsh"
     check("lsh", measure(t)(
@@ -136,7 +156,7 @@ class IndexLifecycleSpec extends SparkSpecBase {
         threshold = 0.3, corpusFp = "AB")))
   }
 
-  test("IVF lifecycle: no step runs more jobs than before; recover runs one fewer") {
+  test("IVF lifecycle: no step runs more jobs than before; each runs its pinned count") {
     val v = vecs(60, 8, seed = 31)
     val t = "graft_il_ivf"
     check("ivf", measure(t)(
@@ -150,7 +170,7 @@ class IndexLifecycleSpec extends SparkSpecBase {
         "embedding", t, k = 3, corpusFp = "AB")))
   }
 
-  test("PQ lifecycle: no step runs more jobs than before; recover runs one fewer") {
+  test("PQ lifecycle: no step runs more jobs than before; each runs its pinned count") {
     val v = vecs(64, 16, seed = 37)
     val t = "graft_il_pq"
     check("pq", measure(t)(
@@ -164,7 +184,21 @@ class IndexLifecycleSpec extends SparkSpecBase {
         "embedding", t, k = 3, nprobe = 2, corpusFp = "AB")))
   }
 
-  test("_meta schemas are the ones earlier warehouses were written with") {
+  private def metaJson(table: String): JsonNode =
+    new ObjectMapper().readTree(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(IndexStore.metaFile(spark, table).toUri.getPath)))
+
+  /** Each key of a meta file in order, with its JSON type. */
+  private def jsonForm(table: String): Seq[(String, String)] = {
+    def kind(n: JsonNode): String =
+      if (n.isIntegralNumber) "integer"
+      else if (n.isTextual) "string"
+      else if (n.isArray) n.elements.asScala.map(kind).toSeq.distinct.mkString("array<", "|", ">")
+      else n.getNodeType.toString
+    metaJson(table).fields.asScala.map(e => e.getKey -> kind(e.getValue)).toSeq
+  }
+
+  test("_meta file form: exact keys, order and JSON types per family; layout strings") {
     val d = docs
     val v = vecs(64, 16, seed = 41)
     Seq("graft_il_slsh", "graft_il_sivf", "graft_il_spq").foreach(dropAll)
@@ -173,26 +207,122 @@ class IndexLifecycleSpec extends SparkSpecBase {
       nlist = 4, buckets = 2)
     Similarity.publishPqIndex(v, "vec_id", "embedding", "graft_il_spq", nlist = 4, m = 4,
       codes = 8, buckets = 2)
-    def schema(cols: (String, DataType)*) =
-      StructType(cols.map { case (n, t) => StructField(n, t, nullable = true) })
-    val shared = Seq("corpus_fp" -> StringType, "eps" -> ArrayType(LongType, true),
-      "next_ep" -> LongType, "layout" -> StringType)
-    assert(spark.table("graft_il_slsh_meta").schema === schema(Seq(
-      "shingle_n" -> IntegerType, "num_hashes" -> IntegerType, "bands" -> IntegerType,
-      "buckets" -> IntegerType) ++ shared: _*))
-    assert(spark.table("graft_il_sivf_meta").schema === schema(Seq(
-      "dims" -> IntegerType, "nlist" -> IntegerType, "train_rows" -> IntegerType,
-      "rounds" -> IntegerType, "buckets" -> IntegerType) ++ shared: _*))
-    assert(spark.table("graft_il_spq_meta").schema === schema(Seq(
-      "dims" -> IntegerType, "nlist" -> IntegerType, "m" -> IntegerType,
-      "codes" -> IntegerType, "rounds" -> IntegerType, "buckets" -> IntegerType,
-      "n_rows" -> LongType) ++ shared: _*))
-    assert(spark.table("graft_il_slsh_meta").select("layout").head.getString(0) ===
-      "buckets:bk:2,docs:id:2")
-    assert(spark.table("graft_il_spq_meta").select("layout").head.getString(0) ===
+    val shared = Seq("corpus_fp" -> "string", "eps" -> "array<integer>",
+      "next_ep" -> "integer", "layout" -> "string")
+    assert(jsonForm("graft_il_slsh") === Seq(
+      "shingle_n" -> "integer", "num_hashes" -> "integer", "bands" -> "integer",
+      "buckets" -> "integer") ++ shared)
+    assert(jsonForm("graft_il_sivf") === Seq(
+      "dims" -> "integer", "nlist" -> "integer", "train_rows" -> "integer",
+      "rounds" -> "integer", "buckets" -> "integer") ++ shared)
+    assert(jsonForm("graft_il_spq") === Seq(
+      "dims" -> "integer", "nlist" -> "integer", "m" -> "integer",
+      "codes" -> "integer", "rounds" -> "integer", "buckets" -> "integer",
+      "n_rows" -> "integer") ++ shared)
+    assert(metaJson("graft_il_slsh").get("layout").textValue === "buckets:bk:2,docs:id:2")
+    assert(metaJson("graft_il_spq").get("layout").textValue ===
       "assign:c:2,cents:c:1,books:j:1")
     Seq("graft_il_slsh", "graft_il_sivf", "graft_il_spq").foreach(dropAll)
   }
-}
 
+  test("a meta file with a missing or mistyped key fails loudly, naming the key") {
+    val t = "graft_il_bad"
+    dropAll(t)
+    Dedup.publishLshIndex(docs, "doc_id", "text", t, buckets = 2, corpusFp = "A")
+    val path = IndexStore.metaFile(spark, t)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val good = metaJson(t).asInstanceOf[ObjectNode]
+    def rewrite(edit: ObjectNode => Unit): Unit = {
+      val o = good.deepCopy()
+      edit(o)
+      val out = fs.create(path, true)
+      try out.write(new ObjectMapper().writeValueAsBytes(o)) finally out.close()
+    }
+    rewrite(_.remove("bands"))
+    val missing = intercept[IllegalStateException](Dedup.LshStore.probeMeta(spark, t, "A"))
+    assert(missing.getMessage.contains("field 'bands' is missing"), missing.getMessage)
+    rewrite(_.put("next_ep", "one"))
+    val mistyped = intercept[IllegalStateException](Dedup.LshStore.probeMeta(spark, t, "A"))
+    assert(mistyped.getMessage.contains("field 'next_ep' is not bigint"), mistyped.getMessage)
+    rewrite(_.putArray("eps").add(0L).add("1"))
+    val element = intercept[IllegalStateException](Dedup.LshStore.probeMeta(spark, t, "A"))
+    assert(element.getMessage.contains("field 'eps' is not array<bigint>"), element.getMessage)
+    rewrite(_ => ())
+    assert(Dedup.LshStore.probeMeta(spark, t, "A").bands > 0)
+    dropAll(t)
+  }
+
+  test("a meta read (probeMeta, describe) starts no Spark job and no SQL execution") {
+    val t = "graft_il_read"
+    dropAll(t)
+    Dedup.publishLshIndex(docs, "doc_id", "text", t, buckets = 2, corpusFp = "A")
+    assert(census(Dedup.LshStore.probeMeta(spark, t, "A")) === ((0, 0)))
+    assert(census(Dedup.describeLshIndex(spark, t)) === ((0, 0)))
+    dropAll(t)
+  }
+
+  test("recover migrates a table-form _meta to the file form, once") {
+    val t = "graft_il_legacy"
+    val d = docs
+    dropAll(t)
+    Dedup.publishLshIndex(d.where(col("doc_id") % 4 =!= 0), "doc_id", "text", t,
+      buckets = 2, corpusFp = "A")
+    Dedup.appendLshIndex(d.where(col("doc_id") % 4 === 0), "doc_id", "text", t, "AB")
+    def probe = Dedup.probeLshIndex(spark, d.where(col("doc_id") < 4), "doc_id", "text", t,
+      threshold = 0.3, corpusFp = "AB").collect().map(_.toSeq).toSet
+    val pre = probe
+    // the table form, written as earlier versions wrote it: the meta's
+    // encoder schema under column names plus `layout`, one row bucketed by
+    // its first column through the atomic catalog swap, which also replaces
+    // the file form's directory
+    val m = Dedup.LshStore.storedMeta(spark, t)
+    val metaSchema = StructType(
+      org.apache.spark.sql.Encoders.product[Dedup.LshMeta].schema.fields
+        .map(f => f.copy(name = f.name.replaceAll("([A-Z])", "_$1").toLowerCase)) :+
+        StructField("layout", StringType))
+    Bucketing.saveBucketedAtomic(
+      spark.createDataFrame(
+        java.util.List.of(Row.fromSeq(m.productIterator.toSeq :+ "buckets:bk:2,docs:id:2")),
+        metaSchema),
+      s"${t}_meta", "shingle_n", 1)
+    Seq("_buckets", "_docs", "_meta").foreach(x => Bucketing.simulateCatalogLoss(spark, t + x))
+    val dir = new java.io.File(IndexStore.metaFile(spark, t).toUri.getPath).getParentFile
+    def listing = dir.listFiles().map(f => f.getName -> f.lastModified).toSet
+    assert(listing.exists(_._1.startsWith("part-")) && !listing.exists(_._1 == "meta.json"))
+    Dedup.recoverLshIndex(spark, t, expectedCorpusFp = "AB")
+    assert(probe === pre, "probe after migrating recovery != pre-loss probe")
+    assert(Dedup.LshStore.storedMeta(spark, t) === m)
+    val migrated = listing
+    assert(migrated.exists(_._1 == "meta.json") && !migrated.exists(_._1.startsWith("part-")),
+      s"migrated directory holds ${migrated.map(_._1).mkString(", ")}")
+    val bytes = java.nio.file.Files.readAllBytes(dir.toPath.resolve("meta.json"))
+    Dedup.recoverLshIndex(spark, t, expectedCorpusFp = "AB")
+    assert(listing === migrated, "a second recover changed the meta directory")
+    assert(java.nio.file.Files.readAllBytes(dir.toPath.resolve("meta.json")) === bytes)
+    assert(probe === pre)
+    dropAll(t)
+  }
+
+  test("no main source reads a _meta through spark.table or spark.read, except the migration") {
+    import java.io.File
+    val base = Iterator.iterate(new File(sys.props("user.dir")).getAbsoluteFile)(_.getParentFile)
+      .takeWhile(_ != null).find(d => new File(d, "build.sbt").isFile)
+      .getOrElse(fail(s"no build.sbt above ${sys.props("user.dir")}"))
+    val root = new File(base, "src/main/scala")
+    def files(f: File): Seq[File] =
+      f.listFiles().toSeq.flatMap(c => if (c.isDirectory) files(c) else Seq(c))
+    val sources = files(root).filter(_.getName.endsWith(".scala"))
+    assert(sources.size > 50, s"scan found only ${sources.size} sources under $root")
+    val (read, meta) = ("""\.(table|read)\b""".r, """(?i)(_meta|meta\b)""".r)
+    val hits = for {
+      f <- sources
+      (line, i) <- java.nio.file.Files.readAllLines(f.toPath).asScala.zipWithIndex
+      code = line.trim if !code.startsWith("*") && !code.startsWith("//")
+      if read.findFirstIn(code).isDefined && meta.findFirstIn(code).isDefined
+    } yield s"${root.toPath.relativize(f.toPath)}:${i + 1}: $code"
+    val (allowed, banned) = hits.partition(h =>
+      h.startsWith("graft/sources/IndexStore.scala:") && h.contains("val legacyMeta = spark.read"))
+    assert(allowed.size === 1, s"the table-form migration read is missing:\n${hits.mkString("\n")}")
+    assert(banned.isEmpty, "_meta read through Spark:\n" + banned.mkString("\n"))
+  }
 }

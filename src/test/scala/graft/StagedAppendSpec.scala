@@ -107,7 +107,7 @@ class StagedAppendSpec extends SparkSpecBase {
     // state: orphans are invisible and _meta.n_rows still counts A only
     Similarity.assertPqIndexConsistent(spark, "graft_sc_pq", strict = true)
     Similarity.appendPqIndex(b, "vec_id", "embedding", "graft_sc_pq", "AB")
-    assert(spark.table("graft_sc_pq_meta").head().getLong(6) === all.count())
+    assert(Similarity.PqStore.storedMeta(spark, "graft_sc_pq").nRows === all.count())
     Similarity.publishPqIndex(a, "vec_id", "embedding", "graft_sc_pqc",
       nlist = 4, m = 4, codes = 8, buckets = 2, corpusFp = "A")
     Similarity.appendPqIndex(b, "vec_id", "embedding", "graft_sc_pqc", "AB")
@@ -453,7 +453,7 @@ class StagedAppendSpec extends SparkSpecBase {
     }
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .exists(c => String.valueOf(c.getMessage).contains("text udf failed")), s"wrong failure: $e")
-    org.apache.spark.LifecycleBus.drain(spark.sparkContext)
+    org.apache.spark.GraftTaskMetrics.drain(spark.sparkContext)
     assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty,
       "a job of the failed append was still running after it threw")
     val lease = new org.apache.hadoop.fs.Path(
