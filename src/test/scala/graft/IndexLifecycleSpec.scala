@@ -143,7 +143,7 @@ class IndexLifecycleSpec extends SparkSpecBase {
         s"$family $step ran ${now(step)} jobs, pinned at ${after(family)(step)}")
     }
 
-  test("LSH lifecycle: no step runs more jobs than before; each runs its pinned count") {
+  test("LSH lifecycle: no step runs more jobs than before; exact counts pinned") {
     val d = docs
     val t = "graft_il_lsh"
     check("lsh", measure(t)(
@@ -156,7 +156,7 @@ class IndexLifecycleSpec extends SparkSpecBase {
         threshold = 0.3, corpusFp = "AB")))
   }
 
-  test("IVF lifecycle: no step runs more jobs than before; each runs its pinned count") {
+  test("IVF lifecycle: no step runs more jobs than before; exact counts pinned") {
     val v = vecs(60, 8, seed = 31)
     val t = "graft_il_ivf"
     check("ivf", measure(t)(
@@ -170,7 +170,7 @@ class IndexLifecycleSpec extends SparkSpecBase {
         "embedding", t, k = 3, corpusFp = "AB")))
   }
 
-  test("PQ lifecycle: no step runs more jobs than before; each runs its pinned count") {
+  test("PQ lifecycle: no step runs more jobs than before; exact counts pinned") {
     val v = vecs(64, 16, seed = 37)
     val t = "graft_il_pq"
     check("pq", measure(t)(
@@ -198,7 +198,7 @@ class IndexLifecycleSpec extends SparkSpecBase {
     metaJson(table).fields.asScala.map(e => e.getKey -> kind(e.getValue)).toSeq
   }
 
-  test("_meta file form: exact keys, order and JSON types per family; layout strings") {
+  test("_meta file form: keys, order and JSON types per family; layout strings") {
     val d = docs
     val v = vecs(64, 16, seed = 41)
     Seq("graft_il_slsh", "graft_il_sivf", "graft_il_spq").foreach(dropAll)
