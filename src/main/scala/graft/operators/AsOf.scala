@@ -199,7 +199,11 @@ object AsOf {
     // corpus-sized table this would OOM the driver instead of erroring.
     // Tunable via spark.graft.broadcastAsOf.maxRows for bigger driver heaps.
     // The guard rides on the collect itself: at most maxRows + 1 rows come
-    // back, and one more than maxRows means the side is too big.
+    // back, and one more than maxRows means the side is too big. Collected
+    // through `.rdd` the limit plans as a local limit, one shuffle into a
+    // single partition and the global limit: two jobs at any partition
+    // count, where `collect()` of the limit scans partitions in rounds that
+    // grow fourfold (five jobs at 200 partitions).
     val maxRows = spark.conf
       .getOption("spark.graft.broadcastAsOf.maxRows")
       .map(v => try v.trim.toLong catch {
@@ -216,7 +220,7 @@ object AsOf {
     val projected = right.select(
       col(rightKey).cast("long").as("__k") +: valueCols.map(col): _*)
     val schema = projected.schema
-    val capped = projected.limit(maxRows.toInt + 1).collect()
+    val capped = projected.limit(maxRows.toInt + 1).rdd.collect()
     require(capped.length <= maxRows,
       s"AsOf.broadcastJoin collects the data side to the driver and it has " +
       s"more than $maxRows rows (conf spark.graft.broadcastAsOf.maxRows); " +

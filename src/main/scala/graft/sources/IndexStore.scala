@@ -4,7 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{IntNode, LongNode, TextNode}
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
@@ -67,10 +67,12 @@ trait IndexMeta[M] {
   *     fingerprint — the single visibility flip. Every meta write is a
   *     crash-atomic file swap: write `meta.json.tmp`, rename the live file
   *     to `meta.json.old`, rename the tmp file in, delete `.old`. A kill
-  *     inside it leaves old-or-new meta fully readable: every meta read
-  *     first restores a missing live file from `.old`, else promotes `.tmp`,
-  *     and never deletes either (a writer may be mid-swap); the next meta
-  *     write clears stale leftovers under the single-writer contract.
+  *     inside it leaves old-or-new meta fully readable: while the live file
+  *     is missing a read takes `.old`, else `.tmp`, and reads never rename
+  *     or delete (a writer may be mid-swap); the next meta write, under the
+  *     single-writer contract, restores the live file the same way and
+  *     clears the leftovers. The meta files carry no Hadoop `.crc` side
+  *     file: the decode by key and type is their integrity check.
   * Orphaned epochs are garbage-collected by [[compact]], which rewrites the
   * gated tables keeping committed rows at epoch 0 and resets `eps` to [0].
   *
@@ -156,13 +158,17 @@ abstract class IndexStore[M <: Product with IndexMeta[M]](
       faultTag: String = null): Unit =
     swapIn(spark, table, encode(m, layout(m)), faultTag)
 
-  /** The typed meta and the stored layout string, in one read. */
-  private def readStored(spark: SparkSession, table: String): (M, String) = {
-    val path = metaFile(spark, table)
-    require(healMeta(spark, table),
-      s"index '$table' has no _meta file ($path) — publish it, or recover it " +
-        s"from a surviving warehouse via recover${title}Index")
-    decode(s"index '$table' _meta file $path", readBytes(spark, path))
+  /** The typed meta and the stored layout string, in one read; `missing`
+    * is the failure when no meta file survives. */
+  private def readStored(spark: SparkSession, table: String,
+      missing: => String = null): (M, String) = {
+    val found = readMeta(spark, table)
+    require(found.nonEmpty,
+      if (missing != null) missing
+      else s"index '$table' has no _meta file (${metaFile(spark, table)}) — publish it, " +
+        s"or recover it from a surviving warehouse via recover${title}Index")
+    val (path, bytes) = found.get
+    decode(s"index '$table' _meta file $path", bytes)
   }
 
   /** The stored meta — the one read every step, probe and spec goes through. */
@@ -264,10 +270,9 @@ abstract class IndexStore[M <: Product with IndexMeta[M]](
   def recover(spark: SparkSession, table: String, expectedCorpusFp: String): Unit = {
     val entry = s"recover${title}Index"
     migrateLegacy(spark, table)
-    require(healMeta(spark, table),
+    val (m, stored) = readStored(spark, table,
       s"$entry: no surviving _meta for index '$table' — nothing to " +
         s"recover; republish via publish${title}Index")
-    val (m, stored) = readStored(spark, table)
     if (expectedCorpusFp != null) checkCorpus(entry, table, m, expectedCorpusFp)
     // a foreign layout means the directory belongs to another family or the
     // caller named the wrong table: adopting it under this family's spec
@@ -295,7 +300,7 @@ abstract class IndexStore[M <: Product with IndexMeta[M]](
     val parts = if (!fs.exists(dir)) Seq.empty
       else fs.listStatus(dir).toSeq.map(_.getPath).filter(_.getName.startsWith("part-"))
     if (parts.nonEmpty) {
-      if (!healMeta(spark, table)) {
+      if (readMeta(spark, table).isEmpty) {
         val legacyMeta = spark.read.parquet(parts.map(_.toString): _*).select(keys.map(col): _*)
           .collect()
         require(legacyMeta.length == 1,
@@ -309,15 +314,15 @@ abstract class IndexStore[M <: Product with IndexMeta[M]](
     }
   }
 
-  /** Publish only when a table or the meta file is missing (after healing
-    * torn swaps, which must read as "exists"); an existing index must carry
-    * this corpus's fingerprint and the requested parameters. */
+  /** Publish only when a table or the meta is missing (a torn meta swap
+    * reads as present, see `readMeta`); an existing index must
+    * carry this corpus's fingerprint and the requested parameters. */
   def ensure(spark: SparkSession, table: String, corpusFp: String, asked: Product)(
       publish: => Unit): Unit = {
     val entry = s"ensure${title}Index"
     val names = tables.map(name(table, _))
     names.foreach(Bucketing.healIfTorn(spark, _))
-    if (!(names.forall(spark.catalog.tableExists) && healMeta(spark, table))) publish
+    if (!(names.forall(spark.catalog.tableExists) && readMeta(spark, table).nonEmpty)) publish
     else {
       val m = storedMeta(spark, table)
       checkCorpus(entry, table, m, corpusFp)
@@ -387,35 +392,53 @@ object IndexStore {
   private def rename(fs: FileSystem, from: Path, to: Path): Unit =
     require(fs.rename(from, to), s"index _meta swap: rename $from -> $to failed")
 
-  private def readBytes(spark: SparkSession, path: Path): Array[Byte] = {
-    val in = Bucketing.hadoopFs(spark).open(path)
-    try in.readAllBytes() finally in.close()
+  /** The meta files skip Hadoop's `.crc` side files: the file is tiny, its
+    * decode by key and type is its integrity check, and a meta written by
+    * any other tool must not fail every read on a stale checksum. */
+  private def metaFs(spark: SparkSession): FileSystem = Bucketing.hadoopFs(spark) match {
+    case c: ChecksumFileSystem => c.getRawFileSystem
+    case fs => fs
   }
 
-  /** Read-path heal of a torn meta swap, NON-DESTRUCTIVE (a writer may be
-    * mid-swap): a missing live file is restored from `.old` (the original),
-    * else from `.tmp` (complete before the swap's first rename). Returns
-    * whether the live file exists. */
-  private def healMeta(spark: SparkSession, table: String): Boolean = {
-    val fs = Bucketing.hadoopFs(spark)
+  /** The meta file's path and bytes, or None when no meta survives.
+    * READ-ONLY — probes are unrestricted readers and may run beside a
+    * writer mid-swap, so a read never renames or deletes. While the live
+    * file is missing (between the swap's two renames, or after a kill
+    * there) the meta is the original `.old`, else the `.tmp` that was
+    * complete before the swap's first rename. A candidate that vanishes
+    * under the read (the writer moved on) sends it round again, twice at
+    * most. */
+  private def readMeta(spark: SparkSession, table: String): Option[(Path, Array[Byte])] = {
+    val fs = metaFs(spark)
     val live = metaFile(spark, table)
-    if (!fs.exists(live))
-      Seq(sibling(live, ".old"), sibling(live, ".tmp")).find(fs.exists)
-        .foreach(fs.rename(_, live))
-    fs.exists(live)
+    val candidates = Seq(live, sibling(live, ".old"), sibling(live, ".tmp"))
+    def read(p: Path): Option[(Path, Array[Byte])] =
+      try {
+        val in = fs.open(p)
+        try Some(p -> in.readAllBytes()) finally in.close()
+      } catch { case _: java.io.FileNotFoundException => None }
+    def round(left: Int): Option[(Path, Array[Byte])] =
+      candidates.iterator.map(read).collectFirst { case Some(r) => r } match {
+        case None if left > 0 && candidates.exists(fs.exists) => round(left - 1)
+        case r => r
+      }
+    round(2)
   }
 
   /** Land `bytes` as the live meta file through the crash-atomic swap (see
     * STAGED COMMIT); `faultTag`, when non-null, arms `<tag>.staged`,
-    * `<tag>.aside` and `<tag>.renamed`. Maintenance only: heals, then
-    * clears stale `.tmp`/`.old` leftovers of an earlier torn swap. */
+    * `<tag>.aside` and `<tag>.renamed`. Writers only (single-writer
+    * contract): first repairs a torn earlier swap the way reads see it —
+    * a missing live file is restored from `.old`, else from `.tmp` — then
+    * clears the stale leftovers. */
   private def swapIn(spark: SparkSession, table: String, bytes: Array[Byte],
       faultTag: String): Unit = {
     def point(w: String): Unit = if (faultTag != null) Faults.point(s"$faultTag.$w")
-    val fs = Bucketing.hadoopFs(spark)
+    val fs = metaFs(spark)
     val live = metaFile(spark, table)
     val (tmp, old) = (sibling(live, ".tmp"), sibling(live, ".old"))
-    if (healMeta(spark, table)) Seq(tmp, old).foreach(fs.delete(_, false))
+    if (!fs.exists(live)) Seq(old, tmp).find(fs.exists).foreach(rename(fs, _, live))
+    Seq(tmp, old).foreach(fs.delete(_, false))
     val out = fs.create(tmp, true)
     try out.write(bytes) finally out.close()
     point("staged")

@@ -13,7 +13,7 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.operators.{Dedup, Similarity}
-import graft.sources.{Bucketing, IndexStore}
+import graft.sources.{Bucketing, Faults, IndexStore}
 
 /** Pins the stored-index lifecycle shared by LSH, IVF and PQ
   * ([[graft.sources.IndexStore]]):
@@ -230,13 +230,17 @@ class IndexLifecycleSpec extends SparkSpecBase {
     dropAll(t)
     Dedup.publishLshIndex(docs, "doc_id", "text", t, buckets = 2, corpusFp = "A")
     val path = IndexStore.metaFile(spark, t)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val good = metaJson(t).asInstanceOf[ObjectNode]
+    // a checksummed copy leaves a `.meta.json.crc` the edits below make
+    // stale: the edits are plain file writes, as any other tool makes them
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(path, true)
+    try out.write(new ObjectMapper().writeValueAsBytes(good)) finally out.close()
     def rewrite(edit: ObjectNode => Unit): Unit = {
       val o = good.deepCopy()
       edit(o)
-      val out = fs.create(path, true)
-      try out.write(new ObjectMapper().writeValueAsBytes(o)) finally out.close()
+      java.nio.file.Files.write(java.nio.file.Paths.get(path.toUri.getPath),
+        new ObjectMapper().writeValueAsBytes(o))
     }
     rewrite(_.remove("bands"))
     val missing = intercept[IllegalStateException](Dedup.LshStore.probeMeta(spark, t, "A"))
@@ -249,6 +253,39 @@ class IndexLifecycleSpec extends SparkSpecBase {
     assert(element.getMessage.contains("field 'eps' is not array<bigint>"), element.getMessage)
     rewrite(_ => ())
     assert(Dedup.LshStore.probeMeta(spark, t, "A").bands > 0)
+    dropAll(t)
+  }
+
+  test("a probe between the commit swap's two renames reads the old meta, moving no file") {
+    val t = "graft_il_swap"
+    val d = docs
+    dropAll(t)
+    Dedup.publishLshIndex(d.where(col("doc_id") % 4 =!= 0), "doc_id", "text", t,
+      buckets = 2, corpusFp = "A")
+    def probe(fp: String) = Dedup.probeLshIndex(spark, d.where(col("doc_id") < 8), "doc_id",
+      "text", t, threshold = 0.3, corpusFp = fp).collect().map(_.toSeq).toSet
+    val pre = probe("A")
+    val dir = new java.io.File(IndexStore.metaFile(spark, t).toUri.getPath).getParentFile
+    def names = dir.list().toSet
+    var seen: Option[(Set[String], Set[Seq[Any]], Dedup.LshMeta, Set[String])] = None
+    Faults.actAt = "lsh.append.commit.aside"
+    Faults.action = () => {
+      val before = names
+      val rows = probe("A")
+      seen = Some((before, rows, Dedup.LshStore.storedMeta(spark, t), names))
+    }
+    try Dedup.appendLshIndex(d.where(col("doc_id") % 4 === 0), "doc_id", "text", t, "AB")
+    finally { Faults.actAt = null; Faults.action = null }
+    val (before, mid, midMeta, after) = seen.getOrElse(fail("the .aside hook did not fire"))
+    assert(before === Set("meta.json.old", "meta.json.tmp"))
+    assert(after === before, "a meta read renamed or deleted a file of the writer's swap")
+    assert(mid === pre, "a probe mid-swap != the pre-append probe")
+    assert(midMeta.corpusFp === "A" && midMeta.eps === Seq(0L))
+    val done = Dedup.LshStore.storedMeta(spark, t)
+    assert(done.corpusFp === "AB" && done.eps === Seq(0L, 1L) && done.nextEp === 2L,
+      s"the append's COMMIT was lost: $done")
+    assert(names === Set("meta.json"))
+    assert(probe("AB") !== pre)
     dropAll(t)
   }
 
