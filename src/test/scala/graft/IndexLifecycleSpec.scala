@@ -256,7 +256,7 @@ class IndexLifecycleSpec extends SparkSpecBase {
     dropAll(t)
   }
 
-  test("a probe between the commit swap's two renames reads the old meta, moving no file") {
+  test("a probe mid commit swap reads the old meta and moves no file") {
     val t = "graft_il_swap"
     val d = docs
     dropAll(t)
@@ -340,7 +340,7 @@ class IndexLifecycleSpec extends SparkSpecBase {
     dropAll(t)
   }
 
-  test("no main source reads a _meta through spark.table or spark.read, except the migration") {
+  test("no main source reads a _meta through Spark except the migration") {
     import java.io.File
     val base = Iterator.iterate(new File(sys.props("user.dir")).getAbsoluteFile)(_.getParentFile)
       .takeWhile(_ != null).find(d => new File(d, "build.sbt").isFile)
