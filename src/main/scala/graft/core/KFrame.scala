@@ -110,20 +110,6 @@ final case class KFrame(df: DataFrame, keyCols: Seq[String], ordered: Boolean = 
   /** dropSparseRows (reference src/FrameModule.fs:519-532). */
   def dropSparseRows: KFrame = rowsDense
 
-  /** ColumnsDense — keep only columns with no missing values. Needs one
-    * aggregation pass over column null-counts (distributed; single small row
-    * to the driver — bounded by column count, not data). */
-  def columnsDense: KFrame = {
-    val counts = df.select(
-      (count(lit(1)).as("__n") +:
-        dataCols.map(c => count(col(c)).as(c))): _*).head()
-    val n = counts.getLong(0)
-    val dense = dataCols.zipWithIndex.collect {
-      case (c, i) if counts.getLong(i + 1) == n => c
-    }
-    keyed(df.select((keyCols ++ dense).map(col): _*))
-  }
-
   // ---- arithmetic (reference src/Frame.fs:442-586) ----
 
   /** Apply f to every numeric column; non-numeric columns pass through

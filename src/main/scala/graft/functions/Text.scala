@@ -32,10 +32,6 @@ object Text {
         i => concat_ws(" ", slice(ws, i, lit(n)))))
   }
 
-  /** Punctuation count of a single character (portable replace identity). */
-  def charCount(text: Column, ch: String): Column =
-    length(text) - length(regexp_replace(text, java.util.regex.Pattern.quote(ch), ""))
-
   /** Quality score ∈ [0,1]: penalizes very short docs, rewards moderate
     * average token length and low repetition (distinct-token ratio).
     * Deterministic arithmetic only — exact on any engine. */

@@ -30,15 +30,6 @@ object Vectors {
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (l2Norm(a) * l2Norm(b))
 
-  /** MinHash signature of a string-array column (shingle set): k seeded
-    * 64-bit hashes, each the min over the set — `array<bigint>` of length k.
-    * xxhash64(elem, seed) is the seeded hash family. NOTE: nested HOFs are
-    * interpreted (no codegen) — ~µs per element-lambda — so this form is
-    * O(k·|set|) interpreted calls. Use [[minhashSignatureFast]] in hot paths. */
-  def minhashSignature(shingles: Column, k: Int): Column =
-    transform(sequence(lit(1), lit(k)),
-      seed => array_min(transform(shingles, s => xxhash64(s, seed))))
-
   /** Compiled MinHash kernel: one base hash per shingle, k minhashes derived
     * with a multiply-add hash family (Carter-Wegman style) in a tight loop.
     * A typed Scala UDF: one JVM call per ROW instead of one interpreted
@@ -74,33 +65,6 @@ object Vectors {
       b => struct(b.as("band"),
         xxhash64(concat_ws(",", transform(
           slice(sig, b * rowsPerBand + 1, lit(rowsPerBand)), _.cast("string")))).as("sig")))
-
-  /** Compiled dot product over float arrays (accumulated in double). The HOF
-    * [[dot]] is exact-arithmetic-identical but interpreted; use this in
-    * all-pairs hot paths. */
-  def dotFast: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf { (a: Seq[Float], b: Seq[Float]) =>
-      if (a == null || b == null) 0.0
-      else {
-        var acc = 0.0
-        var i = 0
-        val n = math.min(a.length, b.length)
-        while (i < n) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
-        acc
-      }
-    }
-
-  /** Compiled squared-L2 norm over a float array. */
-  def norm2SqFast: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf { (a: Seq[Float]) =>
-      if (a == null) 0.0
-      else {
-        var acc = 0.0
-        var i = 0
-        while (i < a.length) { acc += a(i).toDouble * a(i).toDouble; i += 1 }
-        acc
-      }
-    }
 
   /** Compiled word n-gram shingling (single-space tokenization), identical
     * output to `array_distinct(Text.shingles(text, n))`. */

@@ -713,12 +713,11 @@ object Dedup {
       .select(col("pos").as("band"), col("col").as("bk"), col("id")),
     "docs" -> base.select(col("id"), col("shs")))
 
-  /** CROSS-SESSION RECOVERY of a published LSH index after a JVM restart
-    * lost the in-memory catalog entries of `_buckets`/`_docs` while their
-    * warehouse directories survived: reads the `_meta` file and re-adopts
-    * each directory as the same MANAGED bucketed table (metadata ops only —
-    * nothing rewritten, O(1) at 100 TB) and certifies the result with the
-    * strict per-doc audit. `expectedCorpusFp`, when non-null, must match
+  /** CROSS-SESSION RECOVERY of a published LSH index after a JVM restart:
+    * reads the `_meta` file, checks its layout and every committed epoch
+    * directory of `_buckets`/`_docs` (nothing rewritten), and certifies the
+    * result with the strict per-doc audit; an index written before epoch
+    * directories is migrated once. `expectedCorpusFp`, when non-null, must match
     * the stored fingerprint. Probes after recovery answer the pre-restart
     * oracle verbatim (q319; RecoverySpec proves it across a REAL
     * SparkContext restart). Contract: [[graft.sources.IndexStore.recover]]. */
@@ -767,7 +766,7 @@ object Dedup {
   /** Self-serve MAINTENANCE REPORT for a published LSH index: per data
     * table, committed vs orphan rows/epochs (orphans = torn-append leftovers
     * awaiting compaction GC) and the small-file count per bucket table —
-    * see [[graft.sources.Bucketing.epochReport]]. Run it before scheduling
+    * see [[graft.sources.IndexStore.describe]]. Run it before scheduling
     * [[compactLshIndex]]; a `files` count far above the bucket spec or a
     * nonzero `rows_orphan` is the signal. */
   def describeLshIndex(spark: org.apache.spark.sql.SparkSession,
@@ -804,15 +803,15 @@ object Dedup {
     * `_docs` at the STORED bucket spec — rows, bucketing, fingerprint and
     * hash-family meta all unchanged, so a probe before and after compaction
     * is row-identical (certified by q276's oracle, shared with q250/q261).
-    * Orphaned epochs are dropped and the STRICT audit runs after the swap —
+    * Orphaned epochs are dropped and the STRICT audit runs after the flip —
     * the table was just rewritten end-to-end anyway, so the maintenance
     * window is the one place the per-doc invariant is cheap relative to the
     * work already done ([[graft.sources.IndexStore.compact]]). */
   def compactLshIndex(spark: org.apache.spark.sql.SparkSession, table: String): Unit =
     LshStore.compact(spark, table)
 
-  /** [[publishLshIndex]] only if the index tables are not already in the
-    * session catalog — the amortize-once discipline ([[graft.sources.Bucketing.ensureBucketed]]):
+  /** [[publishLshIndex]] only if no index is stored under `table` — the
+    * amortize-once discipline ([[graft.sources.Bucketing.ensureBucketed]]):
     * a repeated pipeline (or the bench) pays the corpus hash + write once
     * and every later call times only the probe, which is the production
     * steady state. An existing index must have been published over THIS
@@ -857,8 +856,8 @@ object Dedup {
     override def stagedCheck(spark: org.apache.spark.sql.SparkSession, table: String,
         m: LshMeta, ep: Long): Unit = {
       val (sbRows, sdRows) = Par.both(
-        spark.table(s"${table}_buckets").where(col("ep") === ep).count(),
-        spark.table(s"${table}_docs").where(col("ep") === ep).count())
+        IndexStore.rows(spark, table, "buckets", Seq(ep)).count(),
+        IndexStore.rows(spark, table, "docs", Seq(ep)).count())
       require(sbRows == m.bands.toLong * sdRows,
         s"appendLshIndex: staged batch is incomplete ($sbRows band rows != " +
           s"${m.bands} bands x $sdRows doc rows) — NOT committed; probes are " +
@@ -867,7 +866,7 @@ object Dedup {
 
     def audit(spark: org.apache.spark.sql.SparkSession, table: String, m: LshMeta,
         strict: Boolean): Unit = {
-      def committed(sfx: String) = IndexStore.committed(spark, s"${table}_$sfx", m.eps)
+      def committed(sfx: String) = IndexStore.rows(spark, table, sfx, m.eps)
       if (!strict) {
         // the two whole-table counts touch independent tables — overlapped
         val (bRows, dRows) = Par.both(committed("buckets").count(), committed("docs").count())
@@ -1112,8 +1111,8 @@ object Dedup {
     val m = LshStore.probeMeta(spark, table, corpusFp, Some((shingleN, numHashes, bands)))
     val iBase = shingleBase(incoming, idCol, textCol, shingleN)
     verifiedPairs(bandRows(iBase, numHashes, bands), iBase,
-      IndexStore.committed(spark, s"${table}_buckets", m.eps),
-      IndexStore.committed(spark, s"${table}_docs", m.eps), threshold)
+      IndexStore.rows(spark, table, "buckets", m.eps),
+      IndexStore.rows(spark, table, "docs", m.eps), threshold)
   }
 
   /** WARM-START connected components for a GROWING pair graph — the

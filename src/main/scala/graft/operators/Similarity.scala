@@ -509,7 +509,7 @@ object Similarity {
         round(col("cosine"), 6).as("cosine"))
   }
 
-  /** PUBLISH a sampled-train IVF index as catalog tables — the ANN
+  /** PUBLISH a sampled-train IVF index as bucketed tables — the ANN
     * counterpart of [[graft.operators.Dedup.publishLshIndex]]'s
     * amortize-once layout: the corpus is quantized, sample-trained
     * ([[ivfKnnSampledTrain]]'s md5-ranked `trainRows`) and ASSIGNED once;
@@ -578,12 +578,10 @@ object Similarity {
   /** Collect a model-sized table (`_cents`, `_books`) — a tiny
     * single-bucket scan whose cost is pure job latency, so callers overlap
     * it with the other model collect or the batch quantization
-    * ([[Par.both]]).
-    * Model tables are written once at publish and never swap-maintained:
-    * no heal is needed. */
+    * ([[Par.both]]). */
   private def modelRows(spark: org.apache.spark.sql.SparkSession, table: String,
       sfx: String): Array[Row] =
-    spark.table(s"${table}_$sfx").collect()
+    IndexStore.model(spark, table, sfx).collect()
 
   /** The coarse centroids from collected `_cents` rows (c, d, cv). */
   private def centsOf(rows: Array[Row], nlist: Int, dims: Int): Array[Array[Long]] = {
@@ -592,10 +590,9 @@ object Similarity {
     cents
   }
 
-  /** CROSS-SESSION RECOVERY of a published IVF index — re-adopts the
-    * surviving warehouse directories (`_assign`/`_cents`) under the `_meta`
-    * file's layout as the same managed bucketed tables after a JVM restart
-    * lost the in-memory catalog entries; fingerprint-checked when
+  /** CROSS-SESSION RECOVERY of a published IVF index — checks the
+    * surviving `_meta` file's layout and the epoch directories of
+    * `_assign`/`_cents` after a JVM restart; fingerprint-checked when
     * `expectedCorpusFp` is given; ends with the strict audit. Contract:
     * [[graft.sources.IndexStore.recover]]. */
   def recoverIvfIndex(spark: org.apache.spark.sql.SparkSession, table: String,
@@ -640,7 +637,7 @@ object Similarity {
     val cents = centsOf(modelRows(spark, table, "cents"), meta.nlist, meta.dims)
     // stored-index probe: query batches are small by design — FORCE the
     // broadcast (see broadcastableQueries on why the gate lives elsewhere)
-    ivfRank(IndexStore.committed(spark, s"${table}_assign", meta.eps),
+    ivfRank(IndexStore.rows(spark, table, "assign", meta.eps),
       queries, idCol, vecCol, meta.dims, k,
       probeUdf(cents, nprobe), broadcastQueries = true)
   }
@@ -770,7 +767,7 @@ object Similarity {
     val (cents, bksF) = buildPqModels(rows, meta)
     val quant = graft.functions.Vectors.fixedPointQuant(1024L)
     val probeF = probeUdf(cents, nprobe)
-    val encoded = IndexStore.committed(spark, s"${table}_assign", meta.eps)
+    val encoded = IndexStore.rows(spark, table, "assign", meta.eps)
     val qside = queries
       .where(col(vecCol).isNotNull && size(col(vecCol)) === dims)
       .select(col(idCol).cast("long").as("query_id"), quant(col(vecCol)).as("qq"))
@@ -872,13 +869,13 @@ object Similarity {
     * `_assign` inverted lists at the STORED bucket spec — rows, models,
     * and fingerprint unchanged, so probes before and after are
     * row-identical (q312's oracle, shared with q311). The STRICT audit
-    * runs after the swap ([[graft.sources.IndexStore.compact]]). */
+    * runs after the flip ([[graft.sources.IndexStore.compact]]). */
   def compactPqIndex(spark: org.apache.spark.sql.SparkSession, table: String): Unit =
     PqStore.compact(spark, table)
 
   /** Self-serve maintenance report for a stored IVF index (committed vs
     * orphan rows/epochs in the inverted lists + data-file count) — see
-    * [[graft.sources.Bucketing.epochReport]] /
+    * [[graft.sources.IndexStore.describe]] /
     * [[graft.operators.Dedup.describeLshIndex]]. */
   def describeIvfIndex(spark: org.apache.spark.sql.SparkSession,
       table: String): DataFrame =
@@ -905,7 +902,7 @@ object Similarity {
     * fingerprint unchanged, so probes before and after are row-identical
     * (q277's oracle, shared with q263/q264). The `_cents` table and the
     * `_meta` file are model-sized and never appended, so only the lists
-    * compact; the STRICT audit runs after the swap
+    * compact; the STRICT audit runs after the flip
     * ([[graft.sources.IndexStore.compact]]). */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession, table: String): Unit =
     IvfStore.compact(spark, table)
@@ -917,7 +914,7 @@ object Similarity {
       title: String, nlist: Int, eps: Seq[Long], strict: Boolean,
       pq: Option[(Int, Int, Long)]): Unit = {
     // audit what probes SEE: uncommitted epochs are invisible by design
-    val assign = IndexStore.committed(spark, s"${table}_assign", eps)
+    val assign = IndexStore.rows(spark, table, "assign", eps)
     val badRoute = col("c") < 0 || col("c") >= nlist
     def corrupt(what: String) =
       s"${title.toUpperCase} index '$table' is corrupt: $what — republish via " +

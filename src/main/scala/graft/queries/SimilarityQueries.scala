@@ -493,7 +493,7 @@ object SimilarityQueries extends QueryFamily {
 
   // ---- the COMPACTION leg: append-maintained codes-only inverted lists
   //      rewritten at the STORED bucket spec (rows, models, fingerprint
-  //      unchanged; strict PQ audit post-swap) — probe-identical to
+  //      unchanged; strict PQ audit post-flip) — probe-identical to
   //      q311 (same oracle); file-count reduction + fault injection in
   //      CompactionSpec ----
   Q("q312_pq_index_compact", oracle = ivfPqAppendOracleSql) { (s, dir) =>
@@ -837,24 +837,24 @@ object SimilarityQueries extends QueryFamily {
           "doc_id", "text", tbl, newCorpusFp = lshCorpusFp(dir))
       }
       // compaction drops the orphaned epoch during the rewrite it pays
-      // anyway; the strict post-swap audit proves the committed view
+      // anyway; the strict post-flip audit proves the committed view
       Dedup.compactLshIndex(s, tbl)
       Dedup.probeLshIndex(s, docs.where(col("doc_id") % 7 === 0), "doc_id", "text", tbl,
         corpusFp = publishedFp)
   }
 
   // ---- torn COMPACT through the oracle gate (q314-q317 cover torn
-  //      APPENDs): the compaction's rename-aside swap is killed at its
-  //      worst window — the live bucketed table renamed AWAY, the staged
-  //      copy not yet renamed in — then the compaction is simply retried:
-  //      repairCompacted restores the live name from the complete copy
-  //      that survived, the rewrite re-runs, and the probe answers q261's
+  //      APPENDs): the compaction is killed at its worst window — the
+  //      rewritten epoch complete, the live meta renamed AWAY, the new
+  //      meta not yet renamed in — then the compaction is simply retried:
+  //      reads take the old meta meanwhile, the retry rewrites into a
+  //      fresh epoch and sweeps the torn one, and the probe answers q261's
   //      oracle VERBATIM (compaction rewrites files, never rows, even
   //      across a mid-swap crash) ----
   Q("q318_lsh_torn_compact", oracle =
-      // q318: a compaction killed mid-swap (live table renamed aside, staged
-      // copy not yet in) then retried is probe-identical too — the heal
-      // restores a complete copy and the rewrite never changes rows
+      // q318: a compaction killed mid-swap (live meta renamed aside, new
+      // meta not yet in) then retried is probe-identical too — reads take
+      // the old meta and the rewrite never changes rows
       lshProbeOracleSql) { (s, dir) =>
       val docs = t(s, dir, "documents")
       val tbl = lshIndexTable(dir) + "_tc"
@@ -863,31 +863,29 @@ object SimilarityQueries extends QueryFamily {
         "doc_id", "text", tbl, corpusFp = s"documents[%7!=0,%5!=0]@$dir")
       Dedup.appendLshIndex(corpus.where(col("doc_id") % 5 === 0),
         "doc_id", "text", tbl, newCorpusFp = lshCorpusFp(dir))
-      graft.sources.Faults.tearAt("lsh.compact.buckets.aside") {
+      graft.sources.Faults.tearAt("lsh.compact.commit.aside") {
         Dedup.compactLshIndex(s, tbl)
       }
-      // retry heals first (restore live from the surviving complete copy,
-      // drop the stale staged copy), then compacts both tables + meta and
-      // runs the strict post-swap audit
+      // the retry restores the live meta from `.old`, rewrites both tables
+      // into a fresh epoch, flips the meta, sweeps every other epoch and
+      // runs the strict audit
       Dedup.compactLshIndex(s, tbl)
       Dedup.probeLshIndex(s, docs.where(col("doc_id") % 7 === 0), "doc_id", "text", tbl,
         corpusFp = lshCorpusFp(dir))
   }
 
   // ---- CROSS-SESSION recovery through the oracle gate (the last
-  //      durability seam): publish + append, then erase
-  //      the in-memory catalog entries while keeping the warehouse
-  //      directories (simulateCatalogLoss — byte-identical to what a JVM
-  //      restart leaves), recoverLshIndex re-adopts the directories as
-  //      the same managed bucketed tables (adoption = metadata ops
-  //      only, nothing rewritten; the strict audit is the one linear
-  //      certification pass), and the probe answers q261's
-  //      oracle VERBATIM. RecoverySpec proves the same path across a
-  //      REAL SparkContext restart ----
+  //      durability seam): publish + append, then put every index
+  //      directory through simulateCatalogLoss (the state a JVM restart
+  //      leaves: directories kept, catalog entries gone — the index has
+  //      none), recoverLshIndex reads the meta, checks fingerprint and
+  //      layout and runs the strict audit (nothing rewritten), and the
+  //      probe answers q261's oracle VERBATIM. RecoverySpec proves the
+  //      same path across a REAL SparkContext restart ----
   Q("q319_lsh_index_recover", oracle =
       // q319: recovery after a LOST CATALOG (JVM restart under the in-memory
-      // catalog: directories survive, entries don't) re-adopts the same
-      // bucketed tables — the recovered index probes q261's oracle verbatim
+      // catalog: directories survive, entries don't) certifies the same
+      // epoch directories — the recovered index probes q261's oracle verbatim
       lshProbeOracleSql) { (s, dir) =>
       val docs = t(s, dir, "documents")
       val tbl = lshIndexTable(dir) + "_rec"
@@ -898,8 +896,8 @@ object SimilarityQueries extends QueryFamily {
         "doc_id", "text", tbl, newCorpusFp = lshCorpusFp(dir))
       Seq("_buckets", "_docs", "_meta").foreach(x =>
         graft.sources.Bucketing.simulateCatalogLoss(s, tbl + x))
-      // fingerprint-checked + strict-audited re-adoption from `_meta`'s
-      // self-describing layout
+      // fingerprint- and layout-checked, strict-audited recovery from the
+      // self-describing `_meta`
       Dedup.recoverLshIndex(s, tbl, expectedCorpusFp = lshCorpusFp(dir))
       Dedup.probeLshIndex(s, docs.where(col("doc_id") % 7 === 0), "doc_id", "text", tbl,
         corpusFp = lshCorpusFp(dir))

@@ -183,103 +183,21 @@ object Bucketing {
     new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"))
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Delete `table`'s managed warehouse directory if it exists on disk —
-    * the in-memory catalog is per-session but the managed location isn't,
-    * so a prior session's directory survives as an orphan that collides
-    * with both `saveAsTable` and `ALTER TABLE ... RENAME` into the name. */
-  private def deleteManagedDir(spark: SparkSession, table: String): Unit = {
-    val loc = managedDir(spark, table)
-    val fs = hadoopFs(spark)
-    if (fs.exists(loc)) fs.delete(loc, true)
-  }
-
   /** Save `df` as a bucketed managed table (overwriting), bucketed+sorted by
     * `keyCol` into `buckets` files per partition. */
   def saveBucketed(df: DataFrame, table: String, keyCol: String, buckets: Int): Unit = {
     val spark = df.sparkSession
     // the in-memory catalog is per-session but the managed location isn't:
-    // drop both the entry and any orphaned directory from a prior session
+    // drop both the entry and any orphaned directory from a prior session,
+    // which would collide with `saveAsTable`
     spark.sql(s"DROP TABLE IF EXISTS $table")
-    deleteManagedDir(spark, table)
+    hadoopFs(spark).delete(managedDir(spark, table), true)
     df.write.mode("overwrite")
       .bucketBy(buckets, keyCol)
       .sortBy(keyCol)
       .format("parquet") // managed: lives under spark.sql.warehouse.dir
       .saveAsTable(table)
   }
-
-  /** OVERWRITE a bucketed table ATOMICALLY with respect to crashes: stage
-    * the new contents as `<table>__compact`, then catalog-swap them in via
-    * the same rename-aside sequence as [[compactBucketed]]. [[saveBucketed]]
-    * alone has a destroy window — it DROPs the live table and deletes its
-    * directory BEFORE re-creating, so a crash inside leaves NO copy. Here at
-    * every point at least one COMPLETE catalog-registered copy exists
-    * (either the old contents or the new), and [[repairCompacted]] /
-    * [[healIfTorn]] restores the live name from whichever copy survived —
-    * the write either fully happened or fully didn't. This is the required
-    * path for every data table whose loss is not a cheap rebuild (the index
-    * compactions go through it). The index `_meta` no longer does: it is a
-    * file swapped by the same rename-aside sequence on the filesystem, with
-    * no Spark job ([[IndexStore]]).
-    *
-    * `faultTag`, when non-null, arms three named crash points inside the
-    * swap (`<tag>.staged` after the stage write, `<tag>.aside` after the
-    * live table is renamed away, `<tag>.renamed` after the staged table is
-    * renamed in) so specs/oracle queries can kill the writer INSIDE each
-    * window and prove the old-or-new guarantee. */
-  def saveBucketedAtomic(df: DataFrame, table: String, keyCol: String,
-      buckets: Int, faultTag: String = null): Unit = {
-    val spark = df.sparkSession
-    val tmp = s"${table}__compact"
-    val old = s"${table}__old"
-    // heal any half-finished previous swap first — also clears stale
-    // `__old`/`__compact` leftovers that would collide with the renames
-    repairCompacted(spark, table)
-    saveBucketed(df, tmp, keyCol, buckets)
-    if (faultTag != null) Faults.point(s"$faultTag.staged")
-    if (spark.catalog.tableExists(table)) {
-      spark.sql(s"ALTER TABLE $table RENAME TO $old")
-      if (faultTag != null) Faults.point(s"$faultTag.aside")
-      spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
-      if (faultTag != null) Faults.point(s"$faultTag.renamed")
-      spark.sql(s"DROP TABLE $old")
-    } else {
-      // first write in THIS session: nothing to put aside — but a PRIOR
-      // session's orphaned directory may sit at the target location (the
-      // in-memory catalog died with that JVM, the warehouse didn't), and
-      // RENAME refuses to adopt an existing location. The orphan carries no
-      // catalog entry, so deleting it loses nothing this session can read —
-      // the same contract saveBucketed has always applied on overwrite.
-      deleteManagedDir(spark, table)
-      spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
-    }
-  }
-
-  /** Heal a torn [[saveBucketedAtomic]]/[[compactBucketed]] swap, if (and
-    * only if) the LIVE table is actually missing — on the clean path this
-    * is one in-memory catalog lookup, so READERS of swap-maintained tables
-    * (index probes opening their data tables) call it per-open and a crash
-    * inside a swap is self-healing at the next read, not just at the next
-    * maintenance call.
-    *
-    * NON-DESTRUCTIVE by design (r15 advice): `__old`/`__compact` entries
-    * legitimately exist WHILE a concurrent writer is mid-swap (probes are
-    * unrestricted readers throughout maintenance), so a read-path heal
-    * must never touch them when the live table is present — it would drop
-    * the in-flight writer's staged copy or collide with its renames. When
-    * the live table exists, leftovers are either an in-flight swap (leave
-    * them alone) or stale crash debris, which the next maintenance entry
-    * point clears ([[saveBucketedAtomic]]/[[compactBucketed]] both run
-    * [[repairCompacted]] first, under the single-writer contract). The one
-    * residual read/write race is the writer's instant between rename-aside
-    * and rename-in: a reader healing inside it restores `__old` to the
-    * live name and the writer's rename-in then fails LOUDLY with
-    * TABLE_ALREADY_EXISTS — an abort that leaves the table at its old
-    * committed contents (the staged copy is cleaned up and re-staged on
-    * retry), never corruption or silent loss. */
-  def healIfTorn(spark: SparkSession, table: String): Unit =
-    if (!spark.catalog.tableExists(table))
-      repairCompacted(spark, table)
 
   /** [[saveBucketed]] only if `table` is not already in the session catalog
     * — lets a benchmark (or any repeated pipeline) pay the bucketing write
@@ -295,181 +213,13 @@ object Bucketing {
       keyCol: String): DataFrame =
     spark.table(leftTable).join(spark.table(rightTable), Seq(keyCol))
 
-  /** COMPACT a bucketed table in place: every `mode("append")` write adds
-    * its own file-set per bucket, so an append-maintained table (an LSH/IVF
-    * index) accumulates small files that tax listing and open cost at
-    * scale. Rewrite at the SAME bucket spec, repartitioned by the bucket
-    * hash so each task holds exactly one bucket → one file per bucket;
-    * rows, bucketing, and every downstream plan are unchanged.
-    *
-    * CRASH-SAFE rename-aside swap: stage as `<table>__compact`, rename the
-    * live table aside to `<table>__old`, rename the staged table in, then
-    * drop `__old`. At every point in the sequence at least one COMPLETE
-    * catalog-registered copy of the data exists, and [[repairCompacted]]
-    * (run automatically at the start of every compaction) restores the
-    * live name from whichever complete copy survived a mid-swap crash —
-    * no step ever deletes the only copy. The swap window is still not
-    * concurrency-transparent: a probe racing it fails loudly with
-    * TABLE_OR_VIEW_NOT_FOUND (never reads half-state) — schedule
-    * compaction in the maintenance window that owns the index. (With the
-    * default in-memory catalog a JVM crash also loses the catalog entries
-    * themselves; the directories survive, and [[recoverBucketedTable]]
-    * re-adopts them in a fresh session — including a copy stranded mid-swap
-    * at `__old`/`__compact`. Against a persistent metastore
-    * [[repairCompacted]] recovers automatically.) */
-  def compactBucketed(spark: SparkSession, table: String, keyCol: String,
-      buckets: Int, transform: DataFrame => DataFrame = identity,
-      faultTag: String = null): Unit = {
-    import org.apache.spark.sql.functions.{col, hash, lit, pmod}
-    // heal any half-finished previous swap first, so the live name resolves
-    repairCompacted(spark, table)
-    // co-locate each WRITER bucket (pmod(murmur3(key), n)) into one task:
-    // the bucketed writer emits one file per (task, bucket), so any
-    // partitioning that keeps a bucket's rows together yields exactly
-    // `buckets` files. Repartitioning by the raw key does NOT guarantee
-    // this (task id and bucket id are different functions of the key);
-    // repartitioning BY the bucket-id expression does.
-    // `transform` lets the index compactions GC orphaned (uncommitted)
-    // epochs and normalize the committed ones during the rewrite they
-    // already pay for — identity for plain tables. The stage + swap (and
-    // its `faultTag` crash points) are [[saveBucketedAtomic]]'s.
-    saveBucketedAtomic(
-      transform(spark.table(table))
-        .repartition(buckets, pmod(hash(col(keyCol)), lit(buckets))),
-      table, keyCol, buckets, faultTag)
-  }
-
-  /** REPAIR a [[compactBucketed]] swap that died mid-sequence. Idempotent;
-    * safe to call any time. Rules, in order:
-    *  - live table missing, `__old` present → the crash hit between
-    *    rename-aside and rename-in: restore the ORIGINAL (`__old` → live;
-    *    the staged copy, if complete, is merely a lost optimization);
-    *  - live table missing, only `__compact` present → promote the staged
-    *    copy (it was complete before the rename-aside began);
-    *  - live table present → drop stale `__old`/`__compact` catalog
-    *    entries and orphaned managed directories from older crashes (a
-    *    leftover would collide with the next compaction's renames).
-    * Never deletes a directory unless the live table is in the catalog. */
-  def repairCompacted(spark: SparkSession, table: String): Unit = {
-    val tmp = s"${table}__compact"
-    val old = s"${table}__old"
-    if (!spark.catalog.tableExists(table)) {
-      if (spark.catalog.tableExists(old)) spark.sql(s"ALTER TABLE $old RENAME TO $table")
-      else if (spark.catalog.tableExists(tmp)) spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
-    }
-    if (spark.catalog.tableExists(table)) {
-      Seq(old, tmp).foreach { t =>
-        if (spark.catalog.tableExists(t)) spark.sql(s"DROP TABLE $t")
-        deleteManagedDir(spark, t)
-      }
-    }
-  }
-
-  /** CROSS-SESSION RECOVERY — re-adopt a bucketed managed table whose
-    * catalog entry died with a prior JVM. With the default in-memory
-    * catalog the ENTRY is per-process but the warehouse DIRECTORY is not:
-    * after a restart the parquet files (including the bucket-id suffix in
-    * each file name, which is where Spark's bucketed reader gets bucket
-    * membership from) survive intact under `<warehouse>/<table>`, carrying
-    * everything needed to re-register the table except the bucket spec,
-    * which callers pass back in (the index families store theirs in the
-    * `_meta` file so the whole index is self-describing — see
-    * [[IndexStore.recover]]).
-    *
-    * Two phases, both driver-side filesystem METADATA ops (nothing is
-    * rewritten — recovering a 100 TB index costs two renames + a CREATE):
-    *
-    *  1. DIRECTORY-LEVEL HEAL: the prior JVM may have died mid-swap, so
-    *     the surviving complete copy may sit at `__old` (preferred — the
-    *     original, same precedence as [[repairCompacted]]), at `__compact`
-    *     (complete before any rename began), or at `__adopt` (a recovery
-    *     retry's own aside). "Has data" = contains part- files; the empty
-    *     directory a torn recovery's CREATE left behind never shadows the
-    *     aside copy.
-    *  2. ADOPT: Spark refuses to CREATE a managed table over a non-empty
-    *     location (LOCATION_ALREADY_EXISTS), so the surviving directory is
-    *     renamed aside to `<table>__adopt`, the managed table is created
-    *     EMPTY with the original `CLUSTERED BY (keyCol) SORTED BY (keyCol)
-    *     INTO buckets BUCKETS` spec (schema read from the parquet footers),
-    *     and the data directory is swapped back underneath it.
-    *
-    * The result is a genuinely MANAGED bucketed table — `Bucketed: true`
-    * scans, exchange-free co-located joins, and every later append/compact/
-    * atomic-swap behaves exactly as before the restart (managed RENAME
-    * moves the directory, which the swap protocol relies on). Idempotent
-    * and crash-retryable: every kill window leaves the complete copy at
-    * either the live path or `__adopt`, and a retry picks it up. Recovery
-    * is MAINTENANCE — single-writer, like append/compact. Returns false
-    * when no data directory survives (nothing to recover; republish). */
-  def recoverBucketedTable(spark: SparkSession, table: String, keyCol: String,
-      buckets: Int, faultTag: String = null): Boolean = {
-    val fs = hadoopFs(spark)
-    def hasData(p: org.apache.hadoop.fs.Path): Boolean =
-      fs.exists(p) && fs.listStatus(p).exists(s =>
-        s.isFile && s.getPath.getName.startsWith("part-"))
-    val live = managedDir(spark, table)
-    val adopt = managedDir(spark, s"${table}__adopt")
-    // heal a swap torn in THIS session by RENAME before anything else
-    // (r16 advice, medium): after such a tear the only complete copies can
-    // sit REGISTERED at `__old`/`__compact`, and DROP TABLE on a managed
-    // entry deletes its directory — dropping those entries here would
-    // destroy both copies and then find no survivor. repairCompacted (via
-    // healIfTorn) restores the live name non-destructively and only clears
-    // asides once the live table exists.
-    healIfTorn(spark, table)
-    if (spark.catalog.tableExists(table)) {
-      // already registered THIS session — unless a torn same-session
-      // recovery left an empty shell entry with the data still aside
-      if (!hasData(adopt)) return true
-      spark.sql(s"DROP TABLE $table") // empty shell; its dir is deleted too
-    }
-    // residual stale catalog entries over the aside names would collide
-    // with the renames below. Erase the ENTRY the way a restart would —
-    // directory kept — whenever the directory still holds data (it may be
-    // the only surviving copy); only a dataless entry is dropped outright.
-    Seq(s"${table}__old", s"${table}__compact").foreach { t =>
-      if (spark.catalog.tableExists(t)) {
-        if (hasData(managedDir(spark, t))) eraseEntryKeepDir(spark, t)
-        else spark.sql(s"DROP TABLE $t")
-      }
-    }
-    val survivors = Seq(live, managedDir(spark, s"${table}__old"),
-      managedDir(spark, s"${table}__compact"), adopt)
-    survivors.find(hasData) match {
-      case None => false
-      case Some(src) =>
-        if (src != adopt) {
-          if (fs.exists(adopt)) fs.delete(adopt, true)
-          require(fs.rename(src, adopt),
-            s"recoverBucketedTable: rename $src -> $adopt failed")
-        }
-        if (faultTag != null) Faults.point(s"$faultTag.aside")
-        // clear the losing copies/debris so the CREATE location is free
-        survivors.filterNot(_ == adopt)
-          .foreach(p => if (fs.exists(p)) fs.delete(p, true))
-        if (faultTag != null) Faults.point(s"$faultTag.cleared")
-        val schema = spark.read.parquet(adopt.toString).schema
-        require(schema.fieldNames.contains(keyCol),
-          s"recoverBucketedTable: surviving data for '$table' has no column " +
-            s"'$keyCol' (schema ${schema.simpleString}) — wrong bucket spec?")
-        spark.sql(s"CREATE TABLE $table (${schema.toDDL}) USING parquet " +
-          s"CLUSTERED BY ($keyCol) SORTED BY ($keyCol) INTO $buckets BUCKETS")
-        if (faultTag != null) Faults.point(s"$faultTag.created")
-        fs.delete(live, true) // the empty dir CREATE just made
-        if (faultTag != null) Faults.point(s"$faultTag.freed")
-        require(fs.rename(adopt, live),
-          s"recoverBucketedTable: rename $adopt -> $live failed")
-        true
-    }
-  }
-
   /** Erase a table's in-memory catalog entry while keeping its warehouse
     * directory byte-identical — the state a JVM restart leaves behind
     * (directories survive; the in-memory catalog does not). The dance:
     * move the directory aside so DROP TABLE (which deletes a managed
     * table's location) has nothing to delete, drop the entry, move the
-    * data back. Production use: [[recoverBucketedTable]] clearing a stale
-    * aside ENTRY whose directory may hold the only surviving copy. */
+    * data back. A directory with no catalog entry (a stored index's data
+    * and meta directories) comes back unchanged. */
   private def eraseEntryKeepDir(spark: SparkSession, table: String): Unit = {
     val fs = hadoopFs(spark)
     val live = managedDir(spark, table)
@@ -486,48 +236,6 @@ object Bucketing {
     * the same warehouse) is proven by RecoverySpec. */
   def simulateCatalogLoss(spark: SparkSession, table: String): Unit =
     eraseEntryKeepDir(spark, table)
-
-  /** MAINTENANCE REPORT over epoch-gated bucketed tables (the staged-commit
-    * index layout: every data row carries an `ep`, `eps` is the committed
-    * list from the index's `_meta`): one row per table with committed vs
-    * ORPHAN row counts (epochs staged by a crashed append — invisible to
-    * probes, GC'd by compaction), the orphan epoch count, and the data-file
-    * count (every append adds a file-set per bucket; a file count far above
-    * `buckets` says "compact me"). Self-serve operations: answers "does
-    * this index need maintenance, and how much dead weight is it carrying"
-    * without reading protocol internals. Stale `__old`/`__compact` swap
-    * leftovers are healed on open (the report never shows them — by the
-    * time it reads, [[healIfTorn]] has resolved the swap). Driver-side
-    * file-count lookups are per-table metadata calls; the row counts are
-    * one aggregation per table over the `ep` column. */
-  def epochReport(spark: SparkSession, tables: Seq[String], eps: Seq[Long]): DataFrame = {
-    import org.apache.spark.sql.functions.{coalesce, col, countDistinct, lit, sum, when}
-    tables.map { t =>
-      healIfTorn(spark, t)
-      val committed = col("ep").isin(eps: _*)
-      spark.table(t).agg(
-          sum(when(committed, 1L).otherwise(0L)).as("__rc"),
-          sum(when(!committed, 1L).otherwise(0L)).as("__ro"),
-          countDistinct(when(!committed, col("ep"))).as("__oe"))
-        .select(
-          lit(t).as("table"),
-          coalesce(col("__rc"), lit(0L)).as("rows_committed"),
-          coalesce(col("__ro"), lit(0L)).as("rows_orphan"),
-          col("__oe").as("orphan_epochs"),
-          lit(eps.size.toLong).as("committed_epochs"),
-          lit(dataFileCount(spark, t).toLong).as("files"))
-    }.reduce(_ unionByName _).orderBy(col("table"))
-  }
-
-  /** Files currently backing a managed table's directory (specs assert
-    * compaction actually shrank the count). */
-  def dataFileCount(spark: SparkSession, table: String): Int = {
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir") + "/" + table.toLowerCase)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(loc)) 0
-    else fs.listStatus(loc).count(s => s.isFile && s.getPath.getName.startsWith("part-"))
-  }
 }
 
 /** Hive-style directory partitioning: the OTHER half of the 100 TB layout

@@ -5,9 +5,13 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{IntNode, LongNode, TextNode}
 import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Encoder, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.{DataFrame, Encoder, GraftShim, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.BucketSpec
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex,
+  InsertIntoHadoopFsRelationCommand, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.functions.{coalesce, col, countDistinct, hash, lit, pmod, sum, when}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructType}
 
 import graft.functions.Par
 
@@ -25,44 +29,45 @@ trait IndexMeta[M] {
 
 /** ONE lifecycle for the stored indexes (LSH in [[graft.operators.Dedup]],
   * IVF and IVF+PQ in [[graft.operators.Similarity]]): publish, append,
-  * compact, cross-session recover, ensure, describe, and the committed-rows
-  * view every probe and audit reads. A family declares its tables, its
-  * typed `_meta` case class and a few hooks (audit, parameter identity,
-  * the append's `prepare`, optional staged check); the order of every step,
-  * its overlaps ([[graft.functions.Par]]), guards and crash points live
-  * here once.
+  * compact, cross-session recover, ensure, describe, and the one reader
+  * every probe, audit and duplicate check goes through ([[IndexStore.rows]]).
+  * A family declares its tables, its typed `_meta` case class and a few
+  * hooks (audit, parameter identity, the append's `prepare`, optional staged
+  * check); the order of every step, its overlaps ([[graft.functions.Par]]),
+  * guards and crash points live here once.
   *
-  * STORAGE. An index `t` is the bucketed managed tables `t_<suffix>` its
-  * family declares plus its meta: ONE small JSON file,
+  * STORAGE. An index `t` is its meta plus one directory per declared table,
+  * with no session-catalog entry anywhere. The meta is ONE small JSON file,
   * `<warehouse>/t_meta/meta.json`, written and read through the Hadoop
   * `FileSystem` the [[MaintenanceLease]] uses — no Spark job, no SQL
-  * execution, no catalog entry. The file is one object keyed by column
-  * name (camelCase field `corpusFp` is key `corpus_fp`) in field order,
-  * followed by a `layout` key; it is decoded by key and JSON type, and a
-  * missing or mistyped key fails loudly naming it. `layout` is the index's
-  * own bucket spec, `<suffix>:<key>:<buckets>` per table, derived from the
-  * declaration — a surviving warehouse directory is self-describing, which
-  * is what [[recover]] re-registers from. Epoch-gated tables hold the corpus
-  * rows, bucketed `buckets` ways, every row carrying the epoch `ep` that
-  * staged it; the others are model tables written once at publish into one
-  * bucket. A `t_meta` directory holding `part-*` parquet files instead is
-  * the one-row bucketed table earlier warehouses were written with;
-  * [[recover]] migrates it to the file once.
+  * execution. It is one object keyed by column name (camelCase field
+  * `corpusFp` is key `corpus_fp`) in field order, followed by `layout` and
+  * `schema`; it is decoded by key and JSON type, and a missing or mistyped
+  * key fails loudly naming it. `layout` is the index's own bucket spec,
+  * `<suffix>:<key>:<buckets>` per table, derived from the declaration;
+  * `schema` holds each table's Spark schema. Table `<suffix>` lives under
+  * `<warehouse>/t_<suffix>/` as epoch directories `ep-<n>/`, each one
+  * bucketed parquet write (bucketed and sorted by the table's key). Publish
+  * writes epoch 0 of every table; epoch-gated tables hold the corpus rows,
+  * bucketed `buckets` ways, every row carrying the epoch `ep` it was
+  * written under; the others are model tables written once at publish into
+  * one bucket. A reader builds one bucketed relation over the directories
+  * of the epochs it asks for — the meta, not a catalog, says which rows
+  * exist, so a surviving warehouse is self-describing after a restart.
   *
-  * STAGED COMMIT. Only rows whose `ep` is in `_meta.eps` are visible to
-  * probes, audits and duplicate checks ([[IndexStore.committed]]). An
-  * append reads the stored meta inside the lease and hands it to the
-  * family's `prepare: M => Batch[M]`, which readies the batch (IVF and PQ
-  * collect their stored models there beside the batch quantization; LSH
-  * leaves its shingling to the duplicate check), then runs three ordered
-  * writes:
+  * STAGED COMMIT. Only epochs listed in `_meta.eps` are visible to probes,
+  * audits and duplicate checks. An append reads the stored meta inside the
+  * lease and hands it to the family's `prepare: M => Batch[M]`, which
+  * readies the batch (IVF and PQ collect their stored models there beside
+  * the batch quantization; LSH leaves its shingling to the duplicate
+  * check), then runs three ordered writes:
   *   - ALLOCATE: `_meta` bumps `next_ep` only (a crash after it wastes one
   *     epoch number, nothing else); the committed-rows duplicate check runs
   *     after it;
-  *   - STAGE: the batch rows land in every epoch-gated table carrying the
-  *     fresh epoch — a crash during, between or after these writes leaves
-  *     probes returning exactly the pre-append results, and the retry is
-  *     the repair (it stages under a new epoch);
+  *   - STAGE: the batch rows land as the fresh epoch's directory of every
+  *     epoch-gated table — a crash during, between or after these writes
+  *     leaves probes returning exactly the pre-append results, and the
+  *     retry is the repair (it stages under a new epoch);
   *   - COMMIT: `_meta` lands last with the epoch added to `eps` and the new
   *     fingerprint — the single visibility flip. Every meta write is a
   *     crash-atomic file swap: write `meta.json.tmp`, rename the live file
@@ -73,8 +78,15 @@ trait IndexMeta[M] {
   *     single-writer contract, restores the live file the same way and
   *     clears the leftovers. The meta files carry no Hadoop `.crc` side
   *     file: the decode by key and type is their integrity check.
-  * Orphaned epochs are garbage-collected by [[compact]], which rewrites the
-  * gated tables keeping committed rows at epoch 0 and resets `eps` to [0].
+  * COMPACTION is the same flip: it allocates a fresh epoch, rewrites the
+  * committed rows of every gated table once into that epoch's directory at
+  * the stored bucket spec (one file per bucket), guards like the append's
+  * pre-commit guard, commits `eps` = [that epoch], then deletes every other
+  * epoch directory of the gated tables — the superseded epochs and the
+  * orphans of torn appends. A probe at any point before the flip reads the
+  * old epochs, after it the new one; rows are identical either way. A probe
+  * that listed the superseded epochs and still scans them while the sweep
+  * deletes them fails loudly on the missing files.
   *
   * SINGLE WRITER. Maintenance (append, compact, recover) assumes one writer
   * at a time: the allocator is read-bump-write. Append and compact run
@@ -82,17 +94,16 @@ trait IndexMeta[M] {
   * the window; publish owns the index name and clears a dead writer's
   * lease. The lease is best-effort, so detection stays armed behind it: an
   * append re-reads `_meta` after ALLOCATE (allocator-collision guard) and
-  * before COMMIT (pre-commit guard), and a loser that slipped past the
-  * lease aborts loudly with the index exactly as the winner committed it.
-  * Probes are unrestricted readers throughout.
+  * before COMMIT (pre-commit guard), a compaction before COMMIT, and a
+  * loser that slipped past the lease aborts loudly with the index exactly
+  * as the winner committed it. Probes are unrestricted readers throughout.
   *
   * CRASH POINTS ([[Faults]], `<family>` = lsh | ivf | pq):
   * `<family>.append.allocated` and `<family>.append.staged` between the
   * append's writes; `<family>.append.commit.{staged,aside,renamed}` inside
-  * the commit swap; `<family>.compact.<suffix>.{staged,aside,renamed}`
-  * inside each gated table's compaction swap;
-  * `<family>.compact.commit.{staged,aside,renamed}` inside the meta
-  * normalisation.
+  * the append's commit swap; `<family>.compact.commit.{staged,aside,renamed}`
+  * inside the compaction's commit swap (the rewritten epoch is complete
+  * before `staged`, the sweep runs after `renamed`).
   *
   * A family names its crash points with `family`, its entry points in
   * messages with `title` (`appendLshIndex`), and the duplicate check's
@@ -120,7 +131,6 @@ abstract class IndexStore[M <: Product with IndexMeta[M]](
 
   private val gated = tables.filter(_.epochGated)
   private def bucketsOf(t: Table, m: M) = if (t.epochGated) m.buckets else 1
-  private def name(table: String, t: Table) = s"${table}_${t.suffix}"
 
   private def layout(m: M): String =
     tables.map(t => s"${t.suffix}:${t.key}:${bucketsOf(t, m)}").mkString(",")
@@ -134,34 +144,35 @@ abstract class IndexStore[M <: Product with IndexMeta[M]](
     .getOrElse(throw new IllegalArgumentException(
       s"${enc.clsTag.runtimeClass.getName} has no constructor over its ${fields.length} fields"))
 
-  /** The file form: one JSON object, keys in field order, then `layout`. */
-  private def encode(m: M, layout: String): Array[Byte] = {
+  /** The file form: one JSON object, keys in field order, then `layout`,
+    * then `schema` unless it is empty. */
+  private def encode(s: Stored[M]): Array[Byte] = {
     val o = Json.createObjectNode()
-    keys.zip(types).zip(m.productIterator.toSeq :+ layout).foreach {
+    keys.zip(types).zip(s.m.productIterator.toSeq :+ s.layout).foreach {
       case ((k, t), v) => o.set[JsonNode](k, toJson(t, v))
+    }
+    if (s.schema.nonEmpty) {
+      val so = o.putObject("schema")
+      tables.foreach(t => so.set[JsonNode](t.suffix, Json.readTree(s.schema(t.suffix).json)))
     }
     Json.writeValueAsBytes(o)
   }
 
-  /** The typed meta and the stored layout string, decoded by key. */
-  private def decode(what: String, bytes: Array[Byte]): (M, String) = {
-    val o = try Json.readTree(bytes) catch {
-      case e: java.io.IOException =>
-        throw new IllegalStateException(s"$what is not JSON: ${e.getMessage}", e)
-    }
-    require(o != null && o.isObject, s"$what is not a JSON object")
+  private def decode(what: String, bytes: Array[Byte]): Stored[M] = {
+    val o = parse(what, bytes)
     val vs = keys.zip(types).map { case (k, t) => fromJson(what, k, t, o.get(k)) }
-    (ctor.newInstance(vs.init: _*).asInstanceOf[M], vs.last.asInstanceOf[String])
+    Stored(ctor.newInstance(vs.init: _*).asInstanceOf[M], vs.last.asInstanceOf[String],
+      schemaOf(what, o))
   }
 
-  private def writeMeta(spark: SparkSession, table: String, m: M,
+  private def writeMeta(spark: SparkSession, table: String, s: Stored[M],
       faultTag: String = null): Unit =
-    swapIn(spark, table, encode(m, layout(m)), faultTag)
+    swapIn(spark, table, encode(s), faultTag)
 
-  /** The typed meta and the stored layout string, in one read; `missing`
-    * is the failure when no meta file survives. */
+  /** The decoded meta file, in one read; `missing` is the failure when no
+    * meta file survives. */
   private def readStored(spark: SparkSession, table: String,
-      missing: => String = null): (M, String) = {
+      missing: => String = null): Stored[M] = {
     val found = readMeta(spark, table)
     require(found.nonEmpty,
       if (missing != null) missing
@@ -173,28 +184,49 @@ abstract class IndexStore[M <: Product with IndexMeta[M]](
 
   /** The stored meta — the one read every step, probe and spec goes through. */
   private[graft] def storedMeta(spark: SparkSession, table: String): M =
-    readStored(spark, table)._1
+    readStored(spark, table).m
+
+  /** The stored meta of an index in epoch-directory form, for a writer. */
+  private def current(spark: SparkSession, table: String, entry: String): Stored[M] = {
+    val s = readStored(spark, table)
+    require(s.schema.nonEmpty,
+      s"$entry: index '$table' predates epoch directories — migrate it once via " +
+        s"recover${title}Index")
+    s
+  }
 
   private def checkCorpus(entry: String, table: String, m: M, expected: String): Unit =
     require(m.corpusFp == expected,
       s"$entry: index '$table' was published over corpus '${m.corpusFp}' but the " +
         s"caller expects '$expected'")
 
+  /** Table `t`'s rows of `df` restamped with epoch `ep` and laid out one
+    * task per WRITER bucket (pmod(murmur3(key), n), the bucket id the
+    * writer computes), so the write leaves exactly one file per bucket —
+    * the compaction rewrite and the catalog-era migration. */
+  private def rebucket(df: DataFrame, t: Table, m: M, ep: Long): DataFrame =
+    df.withColumn("ep", lit(ep)).repartition(m.buckets, pmod(hash(col(t.key)), lit(m.buckets)))
+
   /** PUBLISH: `build` returns the meta (epochs default to [0]) and one frame
-    * per declared table; data and model writes overlap and `_meta` lands
-    * last, into a cleared directory (a table-form or torn leftover of an
-    * earlier index under this name never survives a publish). */
+    * per declared table; the meta and every table directory of an earlier
+    * index under this name are deleted (meta first, so a crash mid-publish
+    * leaves no index rather than an old meta over new rows), every table's
+    * epoch 0 is written, overlapped, and `_meta` lands last. */
   def publish(spark: SparkSession, table: String)(build: => (M, Map[String, DataFrame])): Unit = {
     MaintenanceLease.clear(spark, table)
     val (m, frames) = build
-    Par.all(tables.map { t =>
+    val fs = Bucketing.hadoopFs(spark)
+    fs.delete(metaDir(spark, table), true)
+    tables.foreach(t => fs.delete(dataDir(spark, table, t.suffix), true))
+    val stamped = tables.map { t =>
       val df = frames(t.suffix)
-      () => Bucketing.saveBucketed(
-        if (t.epochGated) Par.narrowForWrite(df.withColumn("ep", lit(0L))) else df,
-        name(table, t), t.key, bucketsOf(t, m))
+      t -> (if (t.epochGated) Par.narrowForWrite(df.withColumn("ep", lit(0L))) else df)
+    }
+    Par.all(stamped.map { case (t, df) =>
+      () => land(df, epochDir(spark, table, t.suffix, 0L), t.key, bucketsOf(t, m))
     })
-    Bucketing.hadoopFs(spark).delete(metaDir(spark, table), true)
-    writeMeta(spark, table, m)
+    writeMeta(spark, table,
+      Stored(m, layout(m), stamped.map { case (t, df) => t.suffix -> df.schema.toNullable }.toMap))
   }
 
   /** APPEND under the staged-commit protocol: `prepare` readies the batch
@@ -204,18 +236,19 @@ abstract class IndexStore[M <: Product with IndexMeta[M]](
     val spark = batch.sparkSession
     val entry = s"append${title}Index"
     MaintenanceLease.withLease(spark, table) {
-      val m = storedMeta(spark, table)
+      val s = current(spark, table, entry)
+      val m = s.m
       val ep = m.nextEp
       val b = prepare(m)
-      writeMeta(spark, table, m.withEpochs(m.corpusFp, m.eps, ep + 1L))
+      writeMeta(spark, table, s.copy(m = m.withEpochs(m.corpusFp, m.eps, ep + 1L)))
       // the duplicate check (for LSH it also shingles the batch) reads
       // committed rows only: orphans of a torn attempt must not block its retry
-      val dup = b.ids().join(committed(spark, s"${table}_$idTable", m.eps), Seq(idCol),
-        "left_semi").limit(1).count()
+      val dup = b.ids().join(rows(spark, table, idTable, m.eps), Seq(idCol), "left_semi")
+        .limit(1).count()
       require(dup == 0,
         s"$entry: batch contains ids already present in index '$table' — append " +
           "would duplicate their probe rows; dedup the batch first")
-      val rows = b.rows()
+      val staged = b.rows()
       Faults.point(s"$family.append.allocated")
       // ALLOCATOR-COLLISION GUARD: a racer that allocated after our read
       // leaves next_ep != ep+1 — abort before staging a doomed epoch
@@ -225,9 +258,10 @@ abstract class IndexStore[M <: Product with IndexMeta[M]](
           "another writer is appending concurrently; index maintenance is " +
           "single-writer, retry after it completes")
       Par.all(gated.map { t =>
-        () => Par.narrowForWrite(rows(t.suffix).withColumn("ep", lit(ep)))
-          .write.mode("append").bucketBy(m.buckets, t.key).sortBy(t.key)
-          .format("parquet").saveAsTable(name(table, t))
+        // columns by name and type of the published table
+        val cols = s.schema(t.suffix).fields.map(f => col(f.name).cast(f.dataType))
+        () => land(Par.narrowForWrite(staged(t.suffix).withColumn("ep", lit(ep))).select(cols: _*),
+          epochDir(spark, table, t.suffix, ep), t.key, m.buckets)
       })
       Faults.point(s"$family.append.staged")
       stagedCheck(spark, table, m, ep)
@@ -238,55 +272,62 @@ abstract class IndexStore[M <: Product with IndexMeta[M]](
         s"$entry: lost an append race on '$table' (next_ep=${mc.nextEp}, " +
           s"eps=${mc.eps.mkString(",")}, ours=$ep) — NOT committed; index " +
           "maintenance is single-writer")
-      writeMeta(spark, table, b.commit(m).withEpochs(newCorpusFp, m.eps :+ ep, ep + 1L),
+      writeMeta(spark, table,
+        s.copy(m = b.commit(m).withEpochs(newCorpusFp, m.eps :+ ep, ep + 1L)),
         faultTag = s"$family.append.commit")
     }
   }
 
-  /** COMPACT: rewrite every gated table at the stored bucket spec, dropping
-    * orphaned epochs and moving committed rows to epoch 0 (safe in any crash
-    * order: 0 is always committed), then the meta normalisation, then the
-    * strict audit of the post-state. */
-  def compact(spark: SparkSession, table: String): Unit =
+  /** COMPACT: allocate a fresh epoch, rewrite every gated table's committed
+    * rows into it, commit `eps` = [it], sweep every other epoch directory,
+    * then run the strict audit of the post-state. */
+  def compact(spark: SparkSession, table: String): Unit = {
+    val entry = s"compact${title}Index"
     MaintenanceLease.withLease(spark, table) {
-      val m = storedMeta(spark, table)
-      val gc: DataFrame => DataFrame =
-        df => df.where(col("ep").isin(m.eps: _*)).withColumn("ep", lit(0L))
+      val s = current(spark, table, entry)
+      val m = s.m
+      val ep = m.nextEp
+      writeMeta(spark, table, s.copy(m = m.withEpochs(m.corpusFp, m.eps, ep + 1L)))
       Par.all(gated.map { t =>
-        () => Bucketing.compactBucketed(spark, name(table, t), t.key, m.buckets, gc,
-          faultTag = s"$family.compact.${t.suffix}")
+        () => land(rebucket(rows(spark, table, t.suffix, m.eps), t, m, ep),
+          epochDir(spark, table, t.suffix, ep), t.key, m.buckets)
       })
-      val done = m.withEpochs(m.corpusFp, Seq(0L), 1L)
-      writeMeta(spark, table, done, faultTag = s"$family.compact.commit")
+      val mc = storedMeta(spark, table)
+      require(mc.nextEp == ep + 1L && mc.eps == m.eps,
+        s"$entry: lost a maintenance race on '$table' (next_ep=${mc.nextEp}, " +
+          s"eps=${mc.eps.mkString(",")}, ours=$ep) — NOT committed; index " +
+          "maintenance is single-writer")
+      val done = m.withEpochs(m.corpusFp, Seq(ep), ep + 1L)
+      writeMeta(spark, table, s.copy(m = done), faultTag = s"$family.compact.commit")
+      val fs = Bucketing.hadoopFs(spark)
+      gated.foreach(t => epochDirs(spark, table, t.suffix).foreach {
+        case (e, dir) => if (e != ep) fs.delete(dir, true)
+      })
       audit(spark, table, done, strict = true)
     }
+  }
 
-  /** CROSS-SESSION RECOVERY after a restart lost the catalog entries but
-    * not the warehouse directories: migrate a table-form `_meta` to the file
-    * form, check the fingerprint when `expectedCorpusFp` is given, re-adopt
-    * the data tables from the stored layout (which must be this family's),
-    * then certify with the strict audit on the meta already read. Metadata
-    * operations plus one linear audit; no data is rewritten. */
+  /** CROSS-SESSION RECOVERY after a restart: migrate a table-form `_meta` to
+    * the file form and a catalog-era index to epoch directories, check the
+    * fingerprint when `expectedCorpusFp` is given and the stored layout
+    * (which must be this family's), build every table's relation (each
+    * committed epoch directory must survive), then certify with the strict
+    * audit. Nothing is rewritten unless a migration runs. */
   def recover(spark: SparkSession, table: String, expectedCorpusFp: String): Unit = {
     val entry = s"recover${title}Index"
     migrateLegacy(spark, table)
-    val (m, stored) = readStored(spark, table,
+    val stored = readStored(spark, table,
       s"$entry: no surviving _meta for index '$table' — nothing to " +
         s"recover; republish via publish${title}Index")
-    if (expectedCorpusFp != null) checkCorpus(entry, table, m, expectedCorpusFp)
+    if (expectedCorpusFp != null) checkCorpus(entry, table, stored.m, expectedCorpusFp)
     // a foreign layout means the directory belongs to another family or the
-    // caller named the wrong table: adopting it under this family's spec
+    // caller named the wrong table: reading it under this family's spec
     // would produce silently wrong bucketed joins
-    require(stored == layout(m),
-      s"$entry: '$table' _meta declares layout '$stored' but this family expects " +
-        s"'${layout(m)}' — wrong index family or table name")
-    // the tables' adoptions are independent (disjoint directories and
-    // catalog entries): overlap them, settling all before any rethrow
-    Par.all(tables.map { t =>
-      () => require(
-        Bucketing.recoverBucketedTable(spark, name(table, t), t.key, bucketsOf(t, m)),
-        s"$entry: no surviving directory for '${name(table, t)}' — index data lost; republish")
-    })
+    require(stored.layout == layout(stored.m),
+      s"$entry: '$table' _meta declares layout '${stored.layout}' but this family expects " +
+        s"'${layout(stored.m)}' — wrong index family or table name")
+    val m = migrateCatalogEra(spark, table, stored).m
+    tables.foreach(t => rows(spark, table, t.suffix, if (t.epochGated) m.eps else Seq(0L)))
     audit(spark, table, m, strict = true)
   }
 
@@ -305,8 +346,9 @@ abstract class IndexStore[M <: Product with IndexMeta[M]](
           .collect()
         require(legacyMeta.length == 1,
           s"recover${title}Index: table-form _meta of '$table' holds ${legacyMeta.length} rows, expected 1")
-        val (m, stored) = decode(s"index '$table' table-form _meta", legacyMeta.head.json.getBytes("UTF-8"))
-        swapIn(spark, table, encode(m, stored), null)
+        swapIn(spark, table,
+          encode(decode(s"index '$table' table-form _meta", legacyMeta.head.json.getBytes("UTF-8"))),
+          null)
       }
       fs.listStatus(dir).map(_.getPath)
         .filter(p => p.getName.startsWith("part-") || p.getName == "_SUCCESS")
@@ -314,22 +356,58 @@ abstract class IndexStore[M <: Product with IndexMeta[M]](
     }
   }
 
-  /** Publish only when a table or the meta is missing (a torn meta swap
-    * reads as present, see `readMeta`); an existing index must
-    * carry this corpus's fingerprint and the requested parameters. */
+  /** MIGRATION of a catalog-era index — its meta has no `schema`, each
+    * table's rows are `part-*` files directly under `<warehouse>/t_<suffix>/`:
+    * a compaction-style rewrite of the committed (`ep` in `eps`) rows of
+    * every gated table into fresh epoch `next_ep`, the model tables into
+    * epoch 0, then the meta flip (with the schemas), then the parquet
+    * leftovers are removed. A crash before the flip is retried whole; after
+    * it, only the leftovers are removed. */
+  private def migrateCatalogEra(spark: SparkSession, table: String, s: Stored[M]): Stored[M] = {
+    val fs = Bucketing.hadoopFs(spark)
+    def leftovers(t: Table) = listing(spark, table, t.suffix).map(_.getPath)
+      .filter(p => epochOf(p.getName).isEmpty)
+    val done = if (s.schema.nonEmpty) s else {
+      val m = s.m
+      val ep = m.nextEp
+      val frames = tables.map { t =>
+        val parts = leftovers(t).filter(_.getName.startsWith("part-"))
+        require(parts.nonEmpty,
+          s"recover${title}Index: index '$table' predates epoch directories and " +
+            s"'${table}_${t.suffix}' holds no parquet files to migrate — republish it")
+        val df = spark.read.parquet(parts.map(_.toString): _*)
+        t -> (if (t.epochGated) rebucket(df.where(col("ep").isin(m.eps: _*)), t, m, ep) else df)
+      }
+      Par.all(frames.map { case (t, df) =>
+        () => land(df, epochDir(spark, table, t.suffix, if (t.epochGated) ep else 0L), t.key,
+          bucketsOf(t, m))
+      })
+      val migrated = Stored(m.withEpochs(m.corpusFp, Seq(ep), ep + 1L), s.layout,
+        frames.map { case (t, df) => t.suffix -> df.schema.toNullable }.toMap)
+      writeMeta(spark, table, migrated)
+      migrated
+    }
+    tables.foreach(t => leftovers(t).foreach(fs.delete(_, true)))
+    done
+  }
+
+  /** Publish only when no meta survives, or when the index predates epoch
+    * directories (a catalog-era leftover is rebuilt, not migrated); an
+    * existing index must carry this corpus's fingerprint and the requested
+    * parameters. */
   def ensure(spark: SparkSession, table: String, corpusFp: String, asked: Product)(
       publish: => Unit): Unit = {
     val entry = s"ensure${title}Index"
-    val names = tables.map(name(table, _))
-    names.foreach(Bucketing.healIfTorn(spark, _))
-    if (!(names.forall(spark.catalog.tableExists) && readMeta(spark, table).nonEmpty)) publish
-    else {
-      val m = storedMeta(spark, table)
-      checkCorpus(entry, table, m, corpusFp)
-      require(params(m) == asked,
-        s"$entry: index '$table' exists with $paramNames = ${params(m)} but the " +
-          s"caller requested $asked — drop the tables to retrain, or pass the " +
-          "published params")
+    readMeta(spark, table).map { case (path, bytes) =>
+      decode(s"index '$table' _meta file $path", bytes)
+    }.filter(_.schema.nonEmpty) match {
+      case None => publish
+      case Some(s) =>
+        checkCorpus(entry, table, s.m, corpusFp)
+        require(params(s.m) == asked,
+          s"$entry: index '$table' exists with $paramNames = ${params(s.m)} but the " +
+            s"caller requested $asked — republish to retrain, or pass the " +
+            "published params")
     }
   }
 
@@ -349,10 +427,34 @@ abstract class IndexStore[M <: Product with IndexMeta[M]](
   def assertConsistent(spark: SparkSession, table: String, strict: Boolean): Unit =
     audit(spark, table, storedMeta(spark, table), strict)
 
-  /** Committed vs orphan rows and epochs plus the file count of each gated
-    * table ([[Bucketing.epochReport]]). */
-  def describe(spark: SparkSession, table: String): DataFrame =
-    Bucketing.epochReport(spark, gated.map(name(table, _)), storedMeta(spark, table).eps)
+  /** MAINTENANCE REPORT: one row per gated table (`t_<suffix>`) with
+    * committed vs ORPHAN row counts (epochs staged by a crashed append —
+    * invisible to probes, swept by compaction), the orphan epoch count, the
+    * committed epoch count and the data-file count over every epoch
+    * directory (each append adds a file-set per bucket; a count far above
+    * `buckets` says "compact me"). Building it lists directories and reads
+    * the meta — no Spark job; the row counts are one aggregation per table
+    * over the `ep` column. */
+  def describe(spark: SparkSession, table: String): DataFrame = {
+    val eps = storedMeta(spark, table).eps
+    val committed = col("ep").isin(eps: _*)
+    gated.map { t =>
+      val dirs = epochDirs(spark, table, t.suffix)
+      val files = dirs.values.iterator.map(d => Bucketing.hadoopFs(spark).listStatus(d)
+        .count(f => f.isFile && f.getPath.getName.startsWith("part-"))).sum
+      rows(spark, table, t.suffix, dirs.keys.toSeq.sorted).agg(
+          sum(when(committed, 1L).otherwise(0L)).as("__rc"),
+          sum(when(!committed, 1L).otherwise(0L)).as("__ro"),
+          countDistinct(when(!committed, col("ep"))).as("__oe"))
+        .select(
+          lit(s"${table}_${t.suffix}").as("table"),
+          coalesce(col("__rc"), lit(0L)).as("rows_committed"),
+          coalesce(col("__ro"), lit(0L)).as("rows_orphan"),
+          col("__oe").as("orphan_epochs"),
+          lit(eps.size.toLong).as("committed_epochs"),
+          lit(files.toLong).as("files"))
+    }.reduce(_ unionByName _).orderBy(col("table"))
+  }
 }
 
 object IndexStore {
@@ -370,15 +472,97 @@ object IndexStore {
       rows: () => Map[String, DataFrame],
       commit: M => M = (m: M) => m)
 
-  /** Committed-epoch view of an index data table — what every probe,
-    * audit and duplicate check reads. Each append's files hold one `ep`
-    * value, so parquet statistics skip orphan files wholesale. */
-  def committed(spark: SparkSession, table: String, eps: Seq[Long]): DataFrame = {
-    Bucketing.healIfTorn(spark, table)
-    spark.table(table).where(col("ep").isin(eps: _*))
+  /** THE READER: the rows of index `table`'s data table `suffix` in epochs
+    * `eps` — one bucketed relation over those epoch directories, with the
+    * bucket spec of the stored layout and the stored schema, so a probe
+    * joining on the bucket key plans no exchange on this side. Every epoch
+    * asked for must have its directory; building the relation reads the
+    * meta and lists the directories (no Spark job below Spark's parallel
+    * listing threshold of directories). */
+  def rows(spark: SparkSession, table: String, suffix: String, eps: Seq[Long]): DataFrame = {
+    val (path, bytes) = readMeta(spark, table).getOrElse(throw new IllegalArgumentException(
+      s"index '$table' has no _meta file (${metaFile(spark, table)}) — publish it"))
+    val what = s"index '$table' _meta file $path"
+    val o = parse(what, bytes)
+    val schema = schemaOf(what, o).getOrElse(suffix, throw new IllegalStateException(
+      s"$what has no schema for '$suffix' — an index written before epoch directories " +
+        "is migrated once by its family's recover"))
+    val (key, buckets) = Option(o.get("layout")).map(_.asText).getOrElse("").split(",")
+      .map(_.split(":")).collectFirst { case Array(`suffix`, k, n) => (k, n.toInt) }
+      .getOrElse(throw new IllegalStateException(s"$what: layout names no table '$suffix'"))
+    val dirs = epochDirs(spark, table, suffix)
+    val lost = eps.filterNot(dirs.contains)
+    require(lost.isEmpty,
+      s"index '$table': committed epoch(s) ${lost.mkString(",")} of '${table}_$suffix' have " +
+        "no directory — index data lost; republish")
+    GraftShim.ofRows(spark, LogicalRelation(HadoopFsRelation(
+      new InMemoryFileIndex(spark, eps.map(dirs), Map.empty, Some(schema)), new StructType(),
+      schema, Some(bucketSpec(key, buckets)), new ParquetFileFormat, Map.empty)(spark)))
   }
 
+  /** A model table (written once, at publish, as epoch 0). */
+  def model(spark: SparkSession, table: String, suffix: String): DataFrame =
+    rows(spark, table, suffix, Seq(0L))
+
+  /** The decoded meta file: the typed meta, the stored layout string and
+    * each table's schema (empty for an index written before epoch
+    * directories, whose meta has no `schema` key). */
+  private final case class Stored[M](m: M, layout: String, schema: Map[String, StructType])
+
+  private def bucketSpec(key: String, buckets: Int) = BucketSpec(buckets, Seq(key), Seq(key))
+
+  /** THE WRITER: `df` as the bucketed parquet directory `dir` (replacing
+    * whatever a torn earlier attempt left there), bucketed and sorted by
+    * `key` — the file-format insert `saveAsTable` runs, with no catalog
+    * table. */
+  private[graft] def land(df: DataFrame, dir: Path, key: String, buckets: Int): Unit =
+    GraftShim.ofRows(df.sparkSession, InsertIntoHadoopFsRelationCommand(dir, Map.empty,
+      ifPartitionNotExists = false, Nil, Some(bucketSpec(key, buckets)), new ParquetFileFormat,
+      Map.empty, df.queryExecution.analyzed, SaveMode.Overwrite, None, None, df.columns.toSeq))
+
+  private def dataDir(spark: SparkSession, table: String, suffix: String): Path =
+    Bucketing.managedDir(spark, s"${table}_$suffix")
+
+  private[graft] def epochDir(spark: SparkSession, table: String, suffix: String, ep: Long): Path =
+    new Path(dataDir(spark, table, suffix), s"ep-$ep")
+
+  private def epochOf(name: String): Option[Long] =
+    if (name.startsWith("ep-")) name.stripPrefix("ep-").toLongOption else None
+
+  /** The entries of a table directory (none when it does not exist). */
+  private def listing(spark: SparkSession, table: String, suffix: String) =
+    try Bucketing.hadoopFs(spark).listStatus(dataDir(spark, table, suffix)).toSeq
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
+
+  /** Every epoch directory of a table, committed or not, by epoch. */
+  private def epochDirs(spark: SparkSession, table: String, suffix: String): Map[Long, Path] =
+    listing(spark, table, suffix).filter(_.isDirectory).flatMap { s =>
+      epochOf(s.getPath.getName).map(_ -> s.getPath)
+    }.toMap
+
   private val Json = new ObjectMapper()
+
+  private def parse(what: String, bytes: Array[Byte]): JsonNode = {
+    val o = try Json.readTree(bytes) catch {
+      case e: java.io.IOException =>
+        throw new IllegalStateException(s"$what is not JSON: ${e.getMessage}", e)
+    }
+    require(o != null && o.isObject, s"$what is not a JSON object")
+    o
+  }
+
+  /** The `schema` key: each table's schema by suffix; empty when the key is
+    * absent (an index written before epoch directories). */
+  private def schemaOf(what: String, o: JsonNode): Map[String, StructType] =
+    Option(o.get("schema")).map { v =>
+      def bad = throw new IllegalStateException(
+        s"$what: field 'schema' is not an object of table schemas (found ${v.getNodeType} $v)")
+      if (!v.isObject) bad
+      v.fields.asScala.map { e =>
+        e.getKey -> scala.util.Try(DataType.fromJson(e.getValue.toString)).toOption
+          .collect { case st: StructType => st }.getOrElse(bad)
+      }.toMap
+    }.getOrElse(Map.empty)
 
   /** `<warehouse>/<table>_meta`, the directory the table form used too. */
   private def metaDir(spark: SparkSession, table: String): Path =
@@ -386,6 +570,7 @@ object IndexStore {
 
   private[graft] def metaFile(spark: SparkSession, table: String): Path =
     new Path(metaDir(spark, table), "meta.json")
+
 
   private def sibling(live: Path, ext: String) = new Path(live.getParent, live.getName + ext)
 

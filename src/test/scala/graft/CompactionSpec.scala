@@ -104,89 +104,9 @@ class CompactionSpec extends SparkSpecBase {
     assert(again === got)
   }
 
-  test("compactBucketed: file count shrinks to bucket count, rows + bucketing preserved") {
-    import graft.sources.Bucketing
-    val tbl = "graft_compactspec"
-    val buckets = 4
-    // publish, then three appends — each append leaves its own file-set
-    Bucketing.saveBucketed((0L until 200L).map(i => (i, i * 2)).toDF("id", "v"),
-      tbl, "id", buckets)
-    (1 to 3).foreach { b =>
-      (0L until 100L).map(i => (1000L * b + i, i)).toDF("id", "v")
-        .write.mode("append").bucketBy(buckets, "id").sortBy("id")
-        .format("parquet").saveAsTable(tbl)
-    }
-    val before = Bucketing.dataFileCount(spark, tbl)
-    assert(before > buckets, s"appends produced only $before files — fixture too weak")
-    val rowsBefore = spark.table(tbl).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    Bucketing.compactBucketed(spark, tbl, "id", buckets)
-    val after = Bucketing.dataFileCount(spark, tbl)
-    assert(after === buckets, s"compaction left $after files, expected $buckets")
-    assert(spark.table(tbl).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      === rowsBefore)
-    // bucket metadata survived the catalog swap: a self-join on the bucket
-    // key plans with NO shuffle exchange on either side
-    val joined = spark.table(tbl).join(spark.table(tbl).select(col("id")), Seq("id"))
-    joined.count()
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange hashpartitioning"),
-      s"bucketed self-join re-shuffled after compaction:\n$plan")
-  }
-
-  test("compactBucketed swap is crash-recoverable at every step (fault injection)") {
-    import graft.sources.Bucketing
-    val tbl = "graft_crashspec"
-    val buckets = 2
-    def rows(t: String) = spark.table(t).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    def publish(): Set[(Long, Long)] = {
-      Bucketing.saveBucketed((0L until 50L).map(i => (i, i * 3)).toDF("id", "v"),
-        tbl, "id", buckets)
-      rows(tbl)
-    }
-    // ---- crash AFTER staging, BEFORE rename-aside: live table untouched,
-    // stale __compact entry + dir must not break the next compaction
-    val expect = publish()
-    Bucketing.saveBucketed(
-      spark.table(tbl).repartition(buckets), s"${tbl}__compact", "id", buckets)
-    Bucketing.repairCompacted(spark, tbl)
-    assert(rows(tbl) === expect)
-    assert(!spark.catalog.tableExists(s"${tbl}__compact"))
-    Bucketing.compactBucketed(spark, tbl, "id", buckets) // full run still works
-    assert(rows(tbl) === expect)
-
-    // ---- crash BETWEEN rename-aside and rename-in: the live name is gone,
-    // __old holds the original, __compact holds the staged copy — repair
-    // restores the ORIGINAL under the live name and clears both leftovers
-    publish()
-    Bucketing.saveBucketed(
-      spark.table(tbl).repartition(buckets), s"${tbl}__compact", "id", buckets)
-    spark.sql(s"ALTER TABLE $tbl RENAME TO ${tbl}__old")
-    assert(!spark.catalog.tableExists(tbl))
-    Bucketing.repairCompacted(spark, tbl)
-    assert(rows(tbl) === expect)
-    assert(!spark.catalog.tableExists(s"${tbl}__old"))
-    assert(!spark.catalog.tableExists(s"${tbl}__compact"))
-
-    // ---- crash AFTER rename-in, BEFORE dropping __old: live table already
-    // compacted; repair just clears the stale __old
-    publish()
-    Bucketing.saveBucketed(
-      spark.table(tbl).repartition(buckets), s"${tbl}__compact", "id", buckets)
-    spark.sql(s"ALTER TABLE $tbl RENAME TO ${tbl}__old")
-    spark.sql(s"ALTER TABLE ${tbl}__compact RENAME TO $tbl")
-    Bucketing.repairCompacted(spark, tbl)
-    assert(rows(tbl) === expect)
-    assert(!spark.catalog.tableExists(s"${tbl}__old"))
-    // and the healed table compacts cleanly end-to-end
-    Bucketing.compactBucketed(spark, tbl, "id", buckets)
-    assert(rows(tbl) === expect)
-    assert(Bucketing.dataFileCount(spark, tbl) === buckets)
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-  }
-
   test("compactLshIndex strict audit catches a count-neutral id swap") {
     import graft.operators.Dedup
-    import graft.sources.Bucketing
+    import graft.sources.IndexStore
     val tbl = "graft_strictlsh"
     val docs = (0L until 20L).map(i =>
       (i, s"tok${i % 5} alpha beta gamma delta tok${i % 3} epsilon zeta")).toDF("doc_id", "text")
@@ -197,15 +117,11 @@ class CompactionSpec extends SparkSpecBase {
     // to a phantom id — total rows, per-id row counts (phantom gets exactly
     // `bands` rows) and distinct-id cardinality ALL survive; only the
     // mutual id-subset check can see it
-    val victim = spark.table(s"${tbl}_docs").select(min(col("id"))).head().getLong(0)
-    val corrupted = spark.table(s"${tbl}_buckets")
-      .withColumn("id", when(col("id") === victim, lit(999999L)).otherwise(col("id")))
-      .collect()
-    val schema = spark.table(s"${tbl}_buckets").schema
-    spark.sql(s"DROP TABLE ${tbl}_buckets")
-    spark.createDataFrame(java.util.Arrays.asList(corrupted: _*), schema)
-      .write.bucketBy(2, "bk").sortBy("bk").format("parquet")
-      .saveAsTable(s"${tbl}_buckets")
+    val ep = Dedup.LshStore.storedMeta(spark, tbl).eps.head
+    val victim = IndexStore.rows(spark, tbl, "docs", Seq(ep)).select(min(col("id")))
+      .head().getLong(0)
+    rewriteIndexEpoch(tbl, "buckets", "bk", 2, ep)(
+      _.withColumn("id", when(col("id") === victim, lit(999999L)).otherwise(col("id"))))
     // the count relation still balances — the CHEAP audit passes...
     Dedup.assertLshIndexConsistent(spark, tbl)
     // ...but strict (run standalone and via the compaction seam) throws
@@ -215,8 +131,7 @@ class CompactionSpec extends SparkSpecBase {
     assert(e.getMessage.contains("count-balanced"))
     val e2 = intercept[IllegalArgumentException] { Dedup.compactLshIndex(spark, tbl) }
     assert(e2.getMessage.contains("republish"))
-    Seq("_buckets", "_docs", "_meta").foreach(s =>
-      spark.sql(s"DROP TABLE IF EXISTS $tbl$s"))
+    dropIndex(tbl)
   }
 
   test("compactIvfIndex strict audit catches a duplicated list row") {
@@ -236,9 +151,8 @@ class CompactionSpec extends SparkSpecBase {
     Similarity.compactIvfIndex(spark, tbl) // healthy: strict audit passes
     // duplicate ONE inverted-list row: routing stays legal, counts grow by
     // one — only the distinct-id invariant can see it
-    val dup = spark.table(s"${tbl}_assign").limit(1)
-    dup.write.mode("append").bucketBy(2, "c").sortBy("c")
-      .format("parquet").saveAsTable(s"${tbl}_assign")
+    rewriteIndexEpoch(tbl, "assign", "c", 2,
+      Similarity.IvfStore.storedMeta(spark, tbl).eps.head)(df => df.unionByName(df.limit(1)))
     Similarity.assertIvfIndexConsistent(spark, tbl) // cheap form: still fine
     val e = intercept[IllegalArgumentException] {
       Similarity.assertIvfIndexConsistent(spark, tbl, strict = true)
@@ -246,8 +160,7 @@ class CompactionSpec extends SparkSpecBase {
     assert(e.getMessage.contains("duplicated ids"))
     val e2 = intercept[IllegalArgumentException] { Similarity.compactIvfIndex(spark, tbl) }
     assert(e2.getMessage.contains("republish"))
-    Seq("_assign", "_cents", "_meta").foreach(s =>
-      spark.sql(s"DROP TABLE IF EXISTS $tbl$s"))
+    dropIndex(tbl)
   }
 
   test("compactPqIndex strict audit catches code corruption the cheap audit misses") {
@@ -277,12 +190,8 @@ class CompactionSpec extends SparkSpecBase {
     // healthy: compaction (which runs the strict audit) succeeds, and the
     // appended file sets collapse to at most `buckets` files (one per
     // non-empty writer bucket — both coarse lists may hash to one bucket)
-    def assignFiles(): Int = {
-      val loc = spark.sql(s"DESCRIBE TABLE EXTENDED ${tbl}_assign")
-        .where(col("col_name") === "Location").head().getString(1)
-      new java.io.File(loc.stripPrefix("file:"))
-        .listFiles().count(_.getName.endsWith(".parquet"))
-    }
+    def assignFiles(): Long =
+      Similarity.describePqIndex(spark, tbl).head().getLong(5)
     val preFiles = assignFiles()
     Similarity.compactPqIndex(spark, tbl)
     val files = assignFiles()
@@ -292,17 +201,12 @@ class CompactionSpec extends SparkSpecBase {
     // code — rows, distinct ids, routing range and n_rows ALL survive; an
     // out-of-range code would silently read a wrong codebook row at ADC
     // time, and only the strict code-range invariant can see it
-    val victim = spark.table(s"${tbl}_assign")
+    val ep = Similarity.PqStore.storedMeta(spark, tbl).eps.head
+    val victim = graft.sources.IndexStore.rows(spark, tbl, "assign", Seq(ep))
       .select(min(col("neighbor_id"))).head().getLong(0)
-    val corrupted = spark.table(s"${tbl}_assign")
-      .withColumn("cd", when(col("neighbor_id") === victim,
-        array(lit(99L), lit(0L))).otherwise(col("cd")))
-      .collect()
-    val aSchema = spark.table(s"${tbl}_assign").schema
-    spark.sql(s"DROP TABLE ${tbl}_assign")
-    spark.createDataFrame(java.util.Arrays.asList(corrupted: _*), aSchema)
-      .write.bucketBy(2, "c").sortBy("c").format("parquet")
-      .saveAsTable(s"${tbl}_assign")
+    rewriteIndexEpoch(tbl, "assign", "c", 2, ep)(
+      _.withColumn("cd", when(col("neighbor_id") === victim,
+        array(lit(99L), lit(0L))).otherwise(col("cd"))))
     Similarity.assertPqIndexConsistent(spark, tbl) // cheap form: still fine
     val e = intercept[IllegalArgumentException] {
       Similarity.assertPqIndexConsistent(spark, tbl, strict = true)
@@ -310,8 +214,7 @@ class CompactionSpec extends SparkSpecBase {
     assert(e.getMessage.contains("code array"))
     val e2 = intercept[IllegalArgumentException] { Similarity.compactPqIndex(spark, tbl) }
     assert(e2.getMessage.contains("republish"))
-    Seq("_assign", "_cents", "_books", "_meta").foreach(s =>
-      spark.sql(s"DROP TABLE IF EXISTS $tbl$s"))
+    dropIndex(tbl)
   }
 
   test("strict PQ audit catches a NULL code array (torn-write shape)") {
@@ -331,24 +234,16 @@ class CompactionSpec extends SparkSpecBase {
         Row(i, Seq.fill(8)(rnd.nextFloat()))): _*), schema)
     Similarity.publishPqIndex(vecs, "vec_id", "embedding", tbl,
       nlist = 2, m = 2, codes = 4, rounds = 2, buckets = 2)
-    val victim = spark.table(s"${tbl}_assign")
+    val victim = graft.sources.IndexStore.rows(spark, tbl, "assign", Seq(0L))
       .select(min(col("neighbor_id"))).head().getLong(0)
-    val aSchema = StructType(spark.table(s"${tbl}_assign").schema
-      .map(f => if (f.name == "cd") f.copy(nullable = true) else f))
-    val torn = spark.table(s"${tbl}_assign")
-      .withColumn("cd", when(col("neighbor_id") === victim,
-        lit(null).cast(ArrayType(LongType))).otherwise(col("cd")))
-      .collect()
-    spark.sql(s"DROP TABLE ${tbl}_assign")
-    spark.createDataFrame(java.util.Arrays.asList(torn: _*), aSchema)
-      .write.bucketBy(2, "c").sortBy("c").format("parquet")
-      .saveAsTable(s"${tbl}_assign")
+    rewriteIndexEpoch(tbl, "assign", "c", 2)(
+      _.withColumn("cd", when(col("neighbor_id") === victim,
+        lit(null).cast(ArrayType(LongType))).otherwise(col("cd"))))
     Similarity.assertPqIndexConsistent(spark, tbl) // cheap form: routing fine
     val e = intercept[IllegalArgumentException] {
       Similarity.assertPqIndexConsistent(spark, tbl, strict = true)
     }
     assert(e.getMessage.contains("code array"))
-    Seq("_assign", "_cents", "_books", "_meta").foreach(s =>
-      spark.sql(s"DROP TABLE IF EXISTS $tbl$s"))
+    dropIndex(tbl)
   }
 }

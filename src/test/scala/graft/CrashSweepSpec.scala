@@ -7,16 +7,16 @@ import graft.operators.{Dedup, Similarity}
 import graft.sources.{Bucketing, Faults}
 
 /** CRASH-POINT × RECOVERY SWEEP (r16 verdict #4): RecoverySpec proves
-  * recovery after catalog loss and one torn-swap shape; this suite makes
-  * "idempotent and crash-retryable" a PROVEN PROPERTY by sweeping EVERY
-  * named [[graft.sources.Faults]] crash point in the index-maintenance
-  * protocols — `{lsh,ivf,pq}.append.{allocated,staged}`, the three in-swap
-  * windows of each append COMMIT and each compaction data-table /
-  * meta-commit swap, and [[Bucketing.recoverBucketedTable]]'s own kill
-  * windows — through the SAME certification per cell:
+  * recovery after catalog loss; this suite makes "idempotent and
+  * crash-retryable" a PROVEN PROPERTY by sweeping EVERY named
+  * [[graft.sources.Faults]] crash point in the index-maintenance protocols
+  * — `{lsh,ivf,pq}.append.{allocated,staged}` and the three in-swap windows
+  * of each append COMMIT and each compaction COMMIT — through the SAME
+  * certification per cell:
   *
-  *   tear at the point → lose the catalog (the JVM-restart state:
-  *   entries erased, directories kept) → `recover*Index` → the probe
+  *   tear at the point → lose the catalog (the JVM-restart state: every
+  *   index directory renamed aside and back by
+  *   [[Bucketing.simulateCatalogLoss]]) → `recover*Index` → the probe
   *   answers either the exact OLD state or the exact NEW state (never a
   *   half-state), the stored fingerprint names which → the retry (the
   *   documented repair) drives the index to the untorn sequential
@@ -92,8 +92,8 @@ class CrashSweepSpec extends SparkSpecBase {
           threshold = 0.3, corpusFp = fp)),
         Seq("allocated", "staged", "commit.staged", "commit.aside",
           "commit.renamed").map(w => s"lsh.append.$w"),
-        Seq("buckets", "docs", "commit").flatMap(p =>
-          Seq("staged", "aside", "renamed").map(w => s"lsh.compact.$p.$w")))
+        Seq("lsh.compact.commit.staged", "lsh.compact.commit.aside",
+          "lsh.compact.commit.renamed"))
     case "ivf" =>
       val vv = vecs(64, 16, seed = 31)
       val a = vv.where(col("vec_id") % 4 =!= 0)
@@ -109,8 +109,8 @@ class CrashSweepSpec extends SparkSpecBase {
           t, k = 3, corpusFp = fp)),
         Seq("allocated", "staged", "commit.staged", "commit.aside",
           "commit.renamed").map(w => s"ivf.append.$w"),
-        Seq("assign", "commit").flatMap(p =>
-          Seq("staged", "aside", "renamed").map(w => s"ivf.compact.$p.$w")))
+        Seq("ivf.compact.commit.staged", "ivf.compact.commit.aside",
+          "ivf.compact.commit.renamed"))
     case "pq" =>
       val vv = vecs(64, 16, seed = 31)
       val a = vv.where(col("vec_id") % 4 =!= 0)
@@ -126,8 +126,8 @@ class CrashSweepSpec extends SparkSpecBase {
           t, k = 3, nprobe = 2, corpusFp = fp)),
         Seq("allocated", "staged", "commit.staged", "commit.aside",
           "commit.renamed").map(w => s"pq.append.$w"),
-        Seq("assign", "commit").flatMap(p =>
-          Seq("staged", "aside", "renamed").map(w => s"pq.compact.$p.$w")))
+        Seq("pq.compact.commit.staged", "pq.compact.commit.aside",
+          "pq.compact.commit.renamed"))
   }
 
   private def storedFp(table: String): String =
@@ -135,24 +135,18 @@ class CrashSweepSpec extends SparkSpecBase {
     else if (table.startsWith("graft_cw_ivf")) Similarity.IvfStore.storedMeta(s, table).corpusFp
     else Similarity.PqStore.storedMeta(s, table).corpusFp
 
-  private def dropAll(prefix: String, suffixes: Seq[String]): Unit =
-    (suffixes ++ suffixes.flatMap(x => Seq(s"${x}__old", s"${x}__compact")))
-      .foreach(x => s.sql(s"DROP TABLE IF EXISTS $prefix$x"))
-
-  /** The restart state, applied to whatever survived the tear: EVERY
-    * catalog entry under the index prefix (live tables AND `__old`/
-    * `__compact` swap leftovers) is erased with its directory kept. */
-  private def loseCatalog(prefix: String): Unit =
-    s.catalog.listTables().collect().map(_.name)
-      .filter(_.startsWith(prefix)).sorted
-      .foreach(t => Bucketing.simulateCatalogLoss(s, t))
+  /** The restart state, applied to whatever survived the tear: every
+    * directory of the index (meta and data tables) goes through
+    * [[Bucketing.simulateCatalogLoss]]. */
+  private def loseCatalog(prefix: String, suffixes: Seq[String]): Unit =
+    suffixes.foreach(x => Bucketing.simulateCatalogLoss(s, prefix + x))
 
   Seq("lsh", "ivf", "pq").foreach { famName =>
     test(s"crash sweep [$famName]: every maintenance crash point × catalog loss × recover — probe is old-or-new, the retry reaches the untorn control") {
       val fam = mkFamily(famName)
       val ctl = s"graft_cw_${fam.name}_ctl"
       val idx = s"graft_cw_${fam.name}_idx"
-      dropAll(ctl, fam.suffixes)
+      dropIndex(ctl)
       fam.publishA(ctl)
       val preProbe = fam.probe(ctl, "A")
       fam.appendB(ctl, "AB")
@@ -161,7 +155,7 @@ class CrashSweepSpec extends SparkSpecBase {
         "fixture too weak to distinguish the old state from the new")
 
       for (point <- fam.appendPoints) {
-        dropAll(idx, fam.suffixes)
+        dropIndex(idx)
         fam.publishA(idx)
         Faults.failAt = point
         try {
@@ -169,7 +163,7 @@ class CrashSweepSpec extends SparkSpecBase {
           assert(e.getMessage.contains("injected fault"),
             s"$point: wrong failure: ${e.getMessage}")
         } finally Faults.failAt = null
-        loseCatalog(idx)
+        loseCatalog(idx, fam.suffixes)
         fam.recover(idx)
         val fp = storedFp(idx)
         assert(fp == "A" || fp == "AB",
@@ -185,7 +179,7 @@ class CrashSweepSpec extends SparkSpecBase {
       }
 
       for (point <- fam.compactPoints) {
-        dropAll(idx, fam.suffixes)
+        dropIndex(idx)
         fam.publishA(idx)
         fam.appendB(idx, "AB")
         Faults.failAt = point
@@ -194,7 +188,7 @@ class CrashSweepSpec extends SparkSpecBase {
           assert(e.getMessage.contains("injected fault"),
             s"$point: wrong failure: ${e.getMessage}")
         } finally Faults.failAt = null
-        loseCatalog(idx)
+        loseCatalog(idx, fam.suffixes)
         fam.recover(idx)
         assert(storedFp(idx) === "AB",
           s"$point: compaction must never change the corpus fingerprint")
@@ -204,62 +198,8 @@ class CrashSweepSpec extends SparkSpecBase {
         assert(fam.probe(idx, "AB") === postProbe,
           s"$point: probe after the retried compact changed rows")
       }
-      dropAll(idx, fam.suffixes)
-      dropAll(ctl, fam.suffixes)
+      dropIndex(idx)
+      dropIndex(ctl)
     }
-  }
-
-  test("recoverBucketedTable: killed inside every recovery window — the retry still adopts the surviving copy") {
-    val sess = s
-    import sess.implicits._
-    val t = "graft_cw_rb"
-    val expect = (0L until 40L).map(_ * 3).sum
-    for (w <- Seq("aside", "cleared", "created", "freed")) {
-      s.sql(s"DROP TABLE IF EXISTS $t")
-      Bucketing.saveBucketed(
-        (0L until 40L).map(i => (i, i * 3)).toDF("id", "v"), t, "id", 2)
-      Bucketing.simulateCatalogLoss(s, t)
-      Faults.failAt = s"rb.rec.$w"
-      try intercept[RuntimeException] {
-        Bucketing.recoverBucketedTable(s, t, "id", 2, faultTag = "rb.rec")
-      } finally Faults.failAt = null
-      assert(Bucketing.recoverBucketedTable(s, t, "id", 2, faultTag = "rb.rec"),
-        s"$w: retry after a torn recovery found no survivor")
-      assert(s.table(t).agg(sum($"v")).head.getLong(0) === expect,
-        s"$w: recovered contents drifted")
-    }
-    s.sql(s"DROP TABLE IF EXISTS $t")
-  }
-
-  test("recoverBucketedTable: a SAME-SESSION torn swap is healed by rename, never destroyed by DROP (r16 advice, medium)") {
-    val sess = s
-    import sess.implicits._
-    val t = "graft_cw_torn"
-    // at `.renamed` the new contents are already live — old-or-new, with
-    // the swap protocol's precedence (live first, then __old the original)
-    for ((w, expectOld) <- Seq("staged" -> true, "aside" -> true, "renamed" -> false)) {
-      (Seq("") ++ Seq("__old", "__compact")).foreach(x =>
-        s.sql(s"DROP TABLE IF EXISTS $t$x"))
-      Bucketing.saveBucketed(
-        (0L until 40L).map(i => (i, i * 3)).toDF("id", "v"), t, "id", 2)
-      Faults.failAt = s"tw.$w"
-      try intercept[RuntimeException] {
-        Bucketing.saveBucketedAtomic(
-          (0L until 40L).map(i => (i, i * 5)).toDF("id", "v"), t, "id", 2,
-          faultTag = "tw")
-      } finally Faults.failAt = null
-      // recovery called IN the tearing session: the only complete copies
-      // can sit REGISTERED at the aside names — recover must adopt by
-      // rename, never DROP those entries (DROP deletes a managed dir)
-      assert(Bucketing.recoverBucketedTable(s, t, "id", 2),
-        s"$w: recovery destroyed the surviving copies")
-      val got = s.table(t).agg(sum($"v")).head.getLong(0)
-      val expect =
-        if (expectOld) (0L until 40L).map(_ * 3).sum
-        else (0L until 40L).map(_ * 5).sum
-      assert(got === expect, s"$w: wrong copy adopted")
-    }
-    (Seq("") ++ Seq("__old", "__compact")).foreach(x =>
-      s.sql(s"DROP TABLE IF EXISTS $t$x"))
   }
 }

@@ -111,10 +111,14 @@ class EmptyInputSpec extends SparkSpecBase {
       .toDF("doc_id", "text")
     Dedup.publishLshIndex(corpus, "doc_id", "text", "graft_lshspec_eapp", buckets = 2,
       corpusFp = "v1")
-    val before = spark.table("graft_lshspec_eapp_buckets").count()
+    // every stored band row, committed or not
+    def stored = Dedup.describeLshIndex(spark, "graft_lshspec_eapp")
+      .where(col("table") === "graft_lshspec_eapp_buckets")
+      .select(col("rows_committed") + col("rows_orphan")).head().getLong(0)
+    val before = stored
     Dedup.appendLshIndex(emptyDocs, "doc_id", "text", "graft_lshspec_eapp",
       newCorpusFp = "v2")
-    assert(spark.table("graft_lshspec_eapp_buckets").count() === before)
+    assert(stored === before)
     // probe under the bumped fingerprint still works (quiet ingest tick)
     assert(Dedup.probeLshIndex(spark,
       Seq((9L, "a b c d e f g")).toDF("doc_id", "text"),
@@ -126,11 +130,13 @@ class EmptyInputSpec extends SparkSpecBase {
     val vecs = (0L until 24L).map(i => (i, Seq.fill(8)(rnd.nextFloat()))).toDF("vec_id", "embedding")
     operators.Similarity.publishIvfIndex(vecs, "vec_id", "embedding",
       "graft_ivfspec_eapp", trainRows = 16, nlist = 2, buckets = 2, corpusFp = "v1")
-    val before = spark.table("graft_ivfspec_eapp_assign").count()
+    def stored = operators.Similarity.describeIvfIndex(spark, "graft_ivfspec_eapp")
+      .select(col("rows_committed") + col("rows_orphan")).head().getLong(0)
+    val before = stored
     val emptyVecs = Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding")
     operators.Similarity.appendIvfIndex(emptyVecs, "vec_id", "embedding",
       "graft_ivfspec_eapp", newCorpusFp = "v2")
-    assert(spark.table("graft_ivfspec_eapp_assign").count() === before)
+    assert(stored === before)
     assert(operators.Similarity.probeIvfIndex(spark, vecs.where(col("vec_id") < 2),
       "vec_id", "embedding", "graft_ivfspec_eapp", k = 2, corpusFp = "v2").count() >= 1)
   }

@@ -27,8 +27,10 @@ import graft.sources.{Bucketing, Faults, IndexStore}
   *  - each family's `_meta` file form — keys, order and JSON types — and
   *    its layout string, so a surviving warehouse still recovers;
   *  - a warehouse whose `_meta` is the one-row table earlier versions
-  *    wrote still recovers, and the recovery migrates it to the file form;
-  *  - no main source reads a `_meta` through Spark except that migration. */
+  *    wrote, or whose data tables are the catalog-era `part-*` layout,
+  *    still recovers, and the recovery migrates it once;
+  *  - no main source reads a `_meta` through Spark except that migration,
+  *    and the index store and the LSH/IVF/PQ paths call no catalog API. */
 class IndexLifecycleSpec extends SparkSpecBase {
 
   private val started = new AtomicInteger(0)
@@ -65,11 +67,13 @@ class IndexLifecycleSpec extends SparkSpecBase {
 
   private val suffixes = Seq("_buckets", "_docs", "_assign", "_cents", "_books", "_meta")
 
-  private def dropAll(table: String): Unit =
-    suffixes.foreach(s => spark.sql(s"DROP TABLE IF EXISTS $table$s"))
+  private def dropAll(table: String): Unit = dropIndex(table)
+
+  private def warehouse = new java.io.File(
+    new java.net.URI(spark.conf.get("spark.sql.warehouse.dir")).getPath)
 
   private def loseCatalog(table: String): Unit =
-    suffixes.filter(s => spark.catalog.tableExists(table + s))
+    suffixes.filter(s => new java.io.File(warehouse, table + s).isDirectory)
       .foreach(s => Bucketing.simulateCatalogLoss(spark, table + s))
 
   private def docs: DataFrame = {
@@ -123,17 +127,19 @@ class IndexLifecycleSpec extends SparkSpecBase {
     "pq" -> Map("publish" -> 9, "append" -> 12, "compact" -> 7, "recover" -> 9,
       "probe-build" -> 3))
 
-  // Jobs each step runs with the file-form meta: the table-form figures
-  // (lsh 4/15/10/8/2, ivf 8/11/7/7/2, pq 9/12/7/8/3 in the order below)
-  // less their meta jobs — one per meta write, one per meta read, and for
-  // recover also the parquet-footer job of re-adopting the meta table.
-  // LSH append: 15 -> 10 (2 writes, 3 reads).
+  // Jobs each step runs with the file-form meta and epoch directories: the
+  // table-form figures (lsh 4/15/10/8/2, ivf 8/11/7/7/2, pq 9/12/7/8/3 in
+  // the order below) less their meta jobs — one per meta write, one per
+  // meta read, and for recover also the parquet-footer job of re-adopting
+  // the meta table; LSH append: 15 -> 10 (2 writes, 3 reads). Recover then
+  // lost the schema-inference job of re-adopting each data table (lsh 6 ->
+  // 4, ivf 5 -> 3, pq 6 -> 3): it is the strict audit alone.
   private val after = Map(
-    "lsh" -> Map("publish" -> 3, "append" -> 10, "compact" -> 8, "recover" -> 6,
+    "lsh" -> Map("publish" -> 3, "append" -> 10, "compact" -> 8, "recover" -> 4,
       "probe-build" -> 1),
-    "ivf" -> Map("publish" -> 7, "append" -> 6, "compact" -> 5, "recover" -> 5,
+    "ivf" -> Map("publish" -> 7, "append" -> 6, "compact" -> 5, "recover" -> 3,
       "probe-build" -> 1),
-    "pq" -> Map("publish" -> 8, "append" -> 7, "compact" -> 5, "recover" -> 6,
+    "pq" -> Map("publish" -> 8, "append" -> 7, "compact" -> 5, "recover" -> 3,
       "probe-build" -> 2))
 
   private def check(family: String, now: Map[String, Int]): Unit =
@@ -208,7 +214,7 @@ class IndexLifecycleSpec extends SparkSpecBase {
     Similarity.publishPqIndex(v, "vec_id", "embedding", "graft_il_spq", nlist = 4, m = 4,
       codes = 8, buckets = 2)
     val shared = Seq("corpus_fp" -> "string", "eps" -> "array<integer>",
-      "next_ep" -> "integer", "layout" -> "string")
+      "next_ep" -> "integer", "layout" -> "string", "schema" -> "OBJECT")
     assert(jsonForm("graft_il_slsh") === Seq(
       "shingle_n" -> "integer", "num_hashes" -> "integer", "bands" -> "integer",
       "buckets" -> "integer") ++ shared)
@@ -222,6 +228,14 @@ class IndexLifecycleSpec extends SparkSpecBase {
     assert(metaJson("graft_il_slsh").get("layout").textValue === "buckets:bk:2,docs:id:2")
     assert(metaJson("graft_il_spq").get("layout").textValue ===
       "assign:c:2,cents:c:1,books:j:1")
+    // `schema`: each table's Spark schema by suffix, in declaration order
+    def schemaOf(t: String, sfx: String) =
+      DataType.fromJson(metaJson(t).get("schema").get(sfx).toString).asInstanceOf[StructType]
+    assert(metaJson("graft_il_spq").get("schema").fieldNames.asScala.toSeq ===
+      Seq("assign", "cents", "books"))
+    assert(schemaOf("graft_il_slsh", "buckets").fieldNames.toSeq === Seq("band", "bk", "id", "ep"))
+    assert(schemaOf("graft_il_slsh", "docs").fieldNames.toSeq === Seq("id", "shs", "ep"))
+    assert(schemaOf("graft_il_sivf", "cents").fieldNames.toSeq === Seq("c", "d", "cv"))
     Seq("graft_il_slsh", "graft_il_sivf", "graft_il_spq").foreach(dropAll)
   }
 
@@ -298,49 +312,96 @@ class IndexLifecycleSpec extends SparkSpecBase {
     dropAll(t)
   }
 
-  test("recover migrates a table-form _meta to the file form, once") {
-    val t = "graft_il_legacy"
+  /** Rewrite LSH index `t` as the catalog-era layout held it: each table's
+    * rows of `eps` (committed and orphan) as `part-*` files directly under
+    * its directory, written as a managed bucketed table whose entry is then
+    * lost, and `meta` (the file form without `schema`, or the table form)
+    * for its meta. */
+  private def toCatalogEra(t: String, eps: Seq[Long], tableFormMeta: Boolean): Unit = {
+    for ((sfx, key) <- Seq("buckets" -> "bk", "docs" -> "id")) {
+      val df = IndexStore.rows(spark, t, sfx, eps)
+      val rows = df.collect()
+      Bucketing.saveBucketed(spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema),
+        s"${t}_$sfx", key, 2)
+      Bucketing.simulateCatalogLoss(spark, s"${t}_$sfx")
+    }
+    val meta = metaJson(t).asInstanceOf[ObjectNode]
+    meta.remove("schema")
+    val path = IndexStore.metaFile(spark, t)
+    if (tableFormMeta) {
+      // the table form: the meta's encoder schema under column names plus
+      // `layout`, one row bucketed by its first column
+      val m = Dedup.LshStore.storedMeta(spark, t)
+      val metaSchema = StructType(
+        org.apache.spark.sql.Encoders.product[Dedup.LshMeta].schema.fields
+          .map(f => f.copy(name = f.name.replaceAll("([A-Z])", "_$1").toLowerCase)) :+
+          StructField("layout", StringType))
+      Bucketing.saveBucketed(
+        spark.createDataFrame(
+          java.util.List.of(Row.fromSeq(m.productIterator.toSeq :+ meta.get("layout").textValue)),
+          metaSchema),
+        s"${t}_meta", "shingle_n", 1)
+      Bucketing.simulateCatalogLoss(spark, s"${t}_meta")
+    } else java.nio.file.Files.write(java.nio.file.Paths.get(path.toUri.getPath),
+      new ObjectMapper().writeValueAsBytes(meta))
+  }
+
+  /** Publish A, tear an append of B at `staged` (orphan epoch 1), append B
+    * (epoch 2), rewrite it catalog-era, recover twice: the first recover
+    * migrates — committed rows only, into one fresh epoch — and the second
+    * changes nothing. */
+  private def migrationCase(t: String, tableFormMeta: Boolean): Unit = {
     val d = docs
     dropAll(t)
     Dedup.publishLshIndex(d.where(col("doc_id") % 4 =!= 0), "doc_id", "text", t,
       buckets = 2, corpusFp = "A")
+    Faults.tearAt("lsh.append.staged") {
+      Dedup.appendLshIndex(d.where(col("doc_id") % 4 === 0), "doc_id", "text", t, "AB")
+    }
     Dedup.appendLshIndex(d.where(col("doc_id") % 4 === 0), "doc_id", "text", t, "AB")
     def probe = Dedup.probeLshIndex(spark, d.where(col("doc_id") < 4), "doc_id", "text", t,
       threshold = 0.3, corpusFp = "AB").collect().map(_.toSeq).toSet
     val pre = probe
-    // the table form, written as earlier versions wrote it: the meta's
-    // encoder schema under column names plus `layout`, one row bucketed by
-    // its first column through the atomic catalog swap, which also replaces
-    // the file form's directory
     val m = Dedup.LshStore.storedMeta(spark, t)
-    val metaSchema = StructType(
-      org.apache.spark.sql.Encoders.product[Dedup.LshMeta].schema.fields
-        .map(f => f.copy(name = f.name.replaceAll("([A-Z])", "_$1").toLowerCase)) :+
-        StructField("layout", StringType))
-    Bucketing.saveBucketedAtomic(
-      spark.createDataFrame(
-        java.util.List.of(Row.fromSeq(m.productIterator.toSeq :+ "buckets:bk:2,docs:id:2")),
-        metaSchema),
-      s"${t}_meta", "shingle_n", 1)
-    Seq("_buckets", "_docs", "_meta").foreach(x => Bucketing.simulateCatalogLoss(spark, t + x))
-    val dir = new java.io.File(IndexStore.metaFile(spark, t).toUri.getPath).getParentFile
-    def listing = dir.listFiles().map(f => f.getName -> f.lastModified).toSet
-    assert(listing.exists(_._1.startsWith("part-")) && !listing.exists(_._1 == "meta.json"))
+    assert(m.eps === Seq(0L, 2L) && m.nextEp === 3L)
+    toCatalogEra(t, Seq(0L, 1L, 2L), tableFormMeta)
+    def listing = suffixes.flatMap { x =>
+      val dir = new java.io.File(warehouse, t + x)
+      Option(dir.listFiles()).toSeq.flatten.map(f => s"$x/${f.getName}" -> f.lastModified)
+    }.toSet
+    assert(listing.exists(_._1.startsWith("_buckets/part-")) &&
+      listing.exists(_._1.startsWith("_docs/part-")))
+    assert(listing.exists(_._1 == "_meta/meta.json") === !tableFormMeta)
     Dedup.recoverLshIndex(spark, t, expectedCorpusFp = "AB")
-    assert(probe === pre, "probe after migrating recovery != pre-loss probe")
-    assert(Dedup.LshStore.storedMeta(spark, t) === m)
+    assert(probe === pre, "probe after migrating recovery != pre-migration probe")
+    assert(Dedup.LshStore.storedMeta(spark, t) === m.copy(eps = Seq(3L), nextEp = 4L))
     val migrated = listing
-    assert(migrated.exists(_._1 == "meta.json") && !migrated.exists(_._1.startsWith("part-")),
-      s"migrated directory holds ${migrated.map(_._1).mkString(", ")}")
-    val bytes = java.nio.file.Files.readAllBytes(dir.toPath.resolve("meta.json"))
+    assert(migrated.map(_._1).filterNot(_.startsWith("_meta/")) ===
+      Set("_buckets/ep-3", "_docs/ep-3"), s"migrated directories hold ${migrated.map(_._1)}")
+    assert(migrated.map(_._1).filter(_.startsWith("_meta/")) === Set("_meta/meta.json"))
+    Dedup.describeLshIndex(spark, t).collect().foreach { r =>
+      assert(r.getLong(2) === 0L, s"${r.getString(0)}: the migration kept orphan rows")
+    }
+    val bytes = java.nio.file.Files.readAllBytes(warehouse.toPath.resolve(s"${t}_meta/meta.json"))
     Dedup.recoverLshIndex(spark, t, expectedCorpusFp = "AB")
-    assert(listing === migrated, "a second recover changed the meta directory")
-    assert(java.nio.file.Files.readAllBytes(dir.toPath.resolve("meta.json")) === bytes)
+    assert(listing === migrated, "a second recover changed the index directories")
+    assert(java.nio.file.Files.readAllBytes(
+      warehouse.toPath.resolve(s"${t}_meta/meta.json")) === bytes)
     assert(probe === pre)
     dropAll(t)
   }
 
-  test("no main source reads a _meta through Spark except the migration") {
+  test("recover migrates a table-form _meta to the file form, once") {
+    migrationCase("graft_il_legacy", tableFormMeta = true)
+  }
+
+  test("recover migrates a catalog-era index to epoch directories, once") {
+    migrationCase("graft_il_catera", tableFormMeta = false)
+  }
+
+  /** `src/main/scala` and every non-comment line of its sources, with its
+    * path and line number. */
+  private lazy val (mainRoot, mainLines) = {
     import java.io.File
     val base = Iterator.iterate(new File(sys.props("user.dir")).getAbsoluteFile)(_.getParentFile)
       .takeWhile(_ != null).find(d => new File(d, "build.sbt").isFile)
@@ -350,16 +411,35 @@ class IndexLifecycleSpec extends SparkSpecBase {
       f.listFiles().toSeq.flatMap(c => if (c.isDirectory) files(c) else Seq(c))
     val sources = files(root).filter(_.getName.endsWith(".scala"))
     assert(sources.size > 50, s"scan found only ${sources.size} sources under $root")
-    val (read, meta) = ("""\.(table|read)\b""".r, """(?i)(_meta|meta\b)""".r)
-    val hits = for {
+    (root, for {
       f <- sources
       (line, i) <- java.nio.file.Files.readAllLines(f.toPath).asScala.zipWithIndex
-      code = line.trim if !code.startsWith("*") && !code.startsWith("//")
+      code = line.trim if !code.startsWith("*") && !code.startsWith("//") && !code.startsWith("/*")
+    } yield (root.toPath.relativize(f.toPath).toString, i + 1, code))
+  }
+
+  test("no main source reads a _meta through Spark except the migration") {
+    val (read, meta) = ("""\.(table|read)\b""".r, """(?i)(_meta|meta\b)""".r)
+    val hits = for {
+      (f, n, code) <- mainLines
       if read.findFirstIn(code).isDefined && meta.findFirstIn(code).isDefined
-    } yield s"${root.toPath.relativize(f.toPath)}:${i + 1}: $code"
+    } yield s"$f:$n: $code"
     val (allowed, banned) = hits.partition(h =>
       h.startsWith("graft/sources/IndexStore.scala:") && h.contains("val legacyMeta = spark.read"))
     assert(allowed.size === 1, s"the table-form migration read is missing:\n${hits.mkString("\n")}")
     assert(banned.isEmpty, "_meta read through Spark:\n" + banned.mkString("\n"))
+  }
+
+  test("the index store and the LSH/IVF/PQ paths never touch the session catalog") {
+    val catalogApi = """saveAsTable|\.table\(|\bcatalog\.|\bsql\(""".r
+    val paths = Seq("graft/sources/IndexStore.scala", "graft/operators/Dedup.scala",
+      "graft/operators/Similarity.scala")
+    val scanned = mainLines.filter(l => paths.contains(l._1))
+    assert(scanned.map(_._1).distinct.sorted === paths.sorted, s"scan missed a source under $mainRoot")
+    val hits = for {
+      (f, n, code) <- scanned if !code.startsWith("import ")
+      if catalogApi.findFirstIn(code).isDefined
+    } yield s"$f:$n: $code"
+    assert(hits.isEmpty, "session-catalog call on the index path:\n" + hits.mkString("\n"))
   }
 }

@@ -37,9 +37,7 @@ class LeaseSpec extends SparkSpecBase {
         StructField("text", StringType, nullable = false))))
   }
 
-  private def dropAll(prefix: String): Unit =
-    Seq("_buckets", "_docs", "_meta").foreach(s =>
-      spark.sql(s"DROP TABLE IF EXISTS $prefix$s"))
+  private def dropAll(prefix: String): Unit = dropIndex(prefix)
 
   override def afterAll(): Unit = {
     spark.conf.unset("spark.graft.lease.waitMs")

@@ -1176,9 +1176,10 @@ class PipelineSpec extends SparkSpecBase {
     Dedup.publishLshIndex(a.union(b), "doc_id", "text", "graft_lshspec_full", buckets = 2,
       corpusFp = "ab")
     // table-level: appended index rows == republished index rows
-    def rows(t: String) = spark.table(t).collect()
+    def rows(t: String) = graft.sources.IndexStore.rows(spark, t, "buckets",
+        Dedup.LshStore.storedMeta(spark, t).eps).collect()
       .map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSet
-    assert(rows("graft_lshspec_app_buckets") === rows("graft_lshspec_full_buckets"))
+    assert(rows("graft_lshspec_app") === rows("graft_lshspec_full"))
     // probe-level: identical reports under the SAME fingerprint
     def probe(t: String) = Dedup
       .probeLshIndex(spark, incoming, "doc_id", "text", t, corpusFp = "ab")
@@ -1214,11 +1215,11 @@ class PipelineSpec extends SparkSpecBase {
         corpusFp = "t")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     // compaction: fewer files, identical probe
-    val filesBefore =
-      graft.sources.Bucketing.dataFileCount(spark, "graft_lshspec_torn_buckets")
+    def files = Dedup.describeLshIndex(spark, "graft_lshspec_torn")
+      .where(col("table") === "graft_lshspec_torn_buckets").head().getLong(5)
+    val filesBefore = files
     Dedup.compactLshIndex(spark, "graft_lshspec_torn")
-    assert(graft.sources.Bucketing.dataFileCount(spark, "graft_lshspec_torn_buckets")
-      <= filesBefore)
+    assert(files <= filesBefore)
     val afterProbe = Dedup
       .probeLshIndex(spark, incoming, "doc_id", "text", "graft_lshspec_torn",
         corpusFp = "t")
@@ -1226,10 +1227,10 @@ class PipelineSpec extends SparkSpecBase {
     assert(afterProbe === beforeProbe)
     // simulate the tear: band rows appended for an id with no _docs row —
     // the invariant the consistency assert exists to catch
-    spark.table("graft_lshspec_torn_buckets").limit(1)
-      .withColumn("id", lit(999L))
-      .write.mode("append").bucketBy(2, "bk").sortBy("bk")
-      .format("parquet").saveAsTable("graft_lshspec_torn_buckets")
+    rewriteIndexEpoch("graft_lshspec_torn", "buckets", "bk", 2,
+      ep = Dedup.LshStore.storedMeta(spark, "graft_lshspec_torn").eps.head) { df =>
+      df.unionByName(df.limit(1).withColumn("id", lit(999L)))
+    }
     val e = intercept[IllegalArgumentException] {
       Dedup.assertLshIndexConsistent(spark, "graft_lshspec_torn")
     }
@@ -1248,12 +1249,8 @@ class PipelineSpec extends SparkSpecBase {
     // count-balanced tear: doc 3's band rows are rewritten onto doc 1's id —
     // total bucket rows unchanged (the cheap relation holds), but doc 1 now
     // has 2x bands rows and doc 3 has none
-    spark.table("graft_lshspec_strict_buckets")
-      .withColumn("id", when(col("id") === 3L, 1L).otherwise(col("id")))
-      .write.mode("overwrite").bucketBy(2, "bk").sortBy("bk")
-      .format("parquet").saveAsTable("graft_lshspec_strict_buckets2")
-    spark.sql("DROP TABLE graft_lshspec_strict_buckets")
-    spark.sql("ALTER TABLE graft_lshspec_strict_buckets2 RENAME TO graft_lshspec_strict_buckets")
+    rewriteIndexEpoch("graft_lshspec_strict", "buckets", "bk", 2)(
+      _.withColumn("id", when(col("id") === 3L, 1L).otherwise(col("id"))))
     Dedup.assertLshIndexConsistent(spark, "graft_lshspec_strict") // cheap check passes
     val e = intercept[IllegalArgumentException] {
       Dedup.assertLshIndexConsistent(spark, "graft_lshspec_strict", strict = true)
@@ -1277,9 +1274,8 @@ class PipelineSpec extends SparkSpecBase {
     Dedup.assertLshIndexConsistent(spark, "graft_lshspec_dupdoc", strict = true) // healthy
     // duplicate doc 2's _docs row — band rows untouched, so every id still
     // has exactly `bands` band rows; only the docs-side census can see it
-    spark.table("graft_lshspec_dupdoc_docs").where(col("id") === 2L)
-      .write.mode("append").bucketBy(2, "id").sortBy("id")
-      .format("parquet").saveAsTable("graft_lshspec_dupdoc_docs")
+    rewriteIndexEpoch("graft_lshspec_dupdoc", "docs", "id", 2)(df =>
+      df.unionByName(df.where(col("id") === 2L)))
     val e = intercept[IllegalArgumentException] {
       Dedup.assertLshIndexConsistent(spark, "graft_lshspec_dupdoc", strict = true)
     }

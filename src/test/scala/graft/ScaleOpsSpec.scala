@@ -655,8 +655,7 @@ class ScaleOpsSpec extends SparkSpecBase {
       assert(planOf(probed).contains("BroadcastHashJoin"))
     } finally {
       spark.conf.unset("spark.graft.ann.queryBroadcastBytes")
-      Seq("_assign", "_cents", "_meta").foreach(s =>
-        spark.sql(s"DROP TABLE IF EXISTS graft_bgate$s"))
+      dropIndex("graft_bgate")
     }
   }
 

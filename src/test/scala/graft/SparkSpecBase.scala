@@ -19,6 +19,28 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
       java.util.Arrays.asList(rows.map(r => Row(r._1, r._2)): _*), schema)
   }
 
+  /** Delete every directory a stored index `index` may hold under the
+    * warehouse (meta, data tables, lease) — index tables have no catalog
+    * entry to drop. */
+  def dropIndex(index: String): Unit = {
+    val sess = SparkSpecBase.session
+    val dir = new org.apache.hadoop.fs.Path(sess.conf.get("spark.sql.warehouse.dir"))
+    val fs = dir.getFileSystem(sess.sparkContext.hadoopConfiguration)
+    Seq("_assign", "_cents", "_books", "_meta", "_buckets", "_docs", "__lease").foreach(x =>
+      fs.delete(new org.apache.hadoop.fs.Path(dir, (index + x).toLowerCase), true))
+  }
+
+  /** Corruption fixtures for the index audits: replace epoch `ep` of
+    * stored-index table `<index>_<suffix>` (bucketed by `key` into
+    * `buckets`) with `edit` of its rows. */
+  def rewriteIndexEpoch(index: String, suffix: String, key: String, buckets: Int,
+      ep: Long = 0L)(edit: DataFrame => DataFrame): Unit = {
+    val df = edit(graft.sources.IndexStore.rows(spark, index, suffix, Seq(ep)))
+    val rows = df.collect()
+    graft.sources.IndexStore.land(spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema),
+      graft.sources.IndexStore.epochDir(spark, index, suffix, ep), key, buckets)
+  }
+
   /** Collect a (k, v) frame to a sorted Seq of (Long, Option[Double]). */
   def collectKV(df: DataFrame, k: String = "k", v: String = "v"): Seq[(Long, Option[Double])] =
     df.select(k, v).collect().toSeq

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.operators.{Dedup, Similarity}
-import graft.sources.Faults
+import graft.sources.{Faults, IndexStore}
 
 /** STAGED-COMMIT index appends (r13 verdict item #2): a crash at ANY point
   * before the final `_meta` commit write must leave probes returning
@@ -20,12 +20,16 @@ class StagedAppendSpec extends SparkSpecBase {
     super.afterAll()
   }
 
-  private def dropAll(prefix: String): Unit =
-    Seq("_assign", "_cents", "_books", "_meta", "_buckets", "_docs").foreach(s =>
-      spark.sql(s"DROP TABLE IF EXISTS $prefix$s"))
+  private def dropAll(prefix: String): Unit = dropIndex(prefix)
 
   private def rowsOf(df: DataFrame): Set[Seq[Any]] =
     df.collect().map(_.toSeq).toSet
+
+  /** (committed, orphan) rows of one data table from a describe report. */
+  private def census(report: DataFrame, table: String): (Long, Long) = {
+    val r = report.where(col("table") === table).head()
+    (r.getLong(1), r.getLong(2))
+  }
 
   // -------- vector fixtures (IVF / PQ) --------
   private def vecs(n: Int, dims: Int, seed: Int): DataFrame = {
@@ -64,7 +68,8 @@ class StagedAppendSpec extends SparkSpecBase {
       Similarity.appendIvfIndex(b, "vec_id", "embedding", "graft_sc_ivf", "AB")
     }
     Faults.failAt = null
-    val rawAfterTear = spark.table("graft_sc_ivf_assign").count()
+    def ivfCensus = census(Similarity.describeIvfIndex(spark, "graft_sc_ivf"), "graft_sc_ivf_assign")
+    val rawAfterTear = ivfCensus._1 + ivfCensus._2
     assert(probe("graft_sc_ivf", "A") === pre, "staged-crash changed probe results")
     Similarity.assertIvfIndexConsistent(spark, "graft_sc_ivf", strict = true)
     // retry succeeds (orphans never block it) and matches an untorn control
@@ -76,12 +81,13 @@ class StagedAppendSpec extends SparkSpecBase {
     assert(healed === probe("graft_sc_ivfc", "AB"), "retried index != untorn control")
     assert(healed !== pre)
     // compaction GCs the orphaned epoch rows and preserves the probe
-    assert(spark.table("graft_sc_ivf_assign").count() === rawAfterTear + b.count())
+    assert(ivfCensus._1 + ivfCensus._2 === rawAfterTear + b.count())
     Similarity.compactIvfIndex(spark, "graft_sc_ivf")
-    assert(spark.table("graft_sc_ivf_assign").count() === all.count(),
-      "compaction did not GC the orphaned epoch")
-    assert(rowsOf(spark.table("graft_sc_ivf_assign").select(col("ep")).distinct())
-      === Set(Seq(0L)))
+    assert(ivfCensus === ((all.count(), 0L)), "compaction did not GC the orphaned epoch")
+    val eps = Similarity.IvfStore.storedMeta(spark, "graft_sc_ivf").eps
+    assert(eps.size === 1, s"compaction left committed epochs $eps")
+    assert(rowsOf(IndexStore.rows(spark, "graft_sc_ivf", "assign", eps).select(col("ep")).distinct())
+      === Set(Seq(eps.head)))
     assert(probe("graft_sc_ivf", "AB") === healed)
     dropAll("graft_sc_ivf"); dropAll("graft_sc_ivfc")
   }
@@ -114,8 +120,8 @@ class StagedAppendSpec extends SparkSpecBase {
     val healed = probe("graft_sc_pq", "AB")
     assert(healed === probe("graft_sc_pqc", "AB"), "retried index != untorn control")
     Similarity.compactPqIndex(spark, "graft_sc_pq")
-    assert(spark.table("graft_sc_pq_assign").count() === all.count(),
-      "compaction did not GC the orphaned epoch")
+    assert(census(Similarity.describePqIndex(spark, "graft_sc_pq"), "graft_sc_pq_assign")
+      === ((all.count(), 0L)), "compaction did not GC the orphaned epoch")
     assert(probe("graft_sc_pq", "AB") === healed)
     dropAll("graft_sc_pq"); dropAll("graft_sc_pqc")
   }
@@ -160,9 +166,10 @@ class StagedAppendSpec extends SparkSpecBase {
     // pipeline is per-doc deterministic) — the control is a fresh publish
     assert(healed === probe("graft_sc_lshc", "AB"), "retried index != fresh publish")
     assert(healed !== pre)
-    val rawDocs = spark.table("graft_sc_lsh_docs").count()
+    def lshDocsCensus = census(Dedup.describeLshIndex(spark, "graft_sc_lsh"), "graft_sc_lsh_docs")
+    val rawDocs = lshDocsCensus._1 + lshDocsCensus._2
     Dedup.compactLshIndex(spark, "graft_sc_lsh")
-    assert(spark.table("graft_sc_lsh_docs").count() < rawDocs,
+    assert(lshDocsCensus._1 + lshDocsCensus._2 < rawDocs,
       "compaction did not GC the orphaned epoch")
     assert(probe("graft_sc_lsh", "AB") === healed)
     dropAll("graft_sc_lsh"); dropAll("graft_sc_lshc")
@@ -349,7 +356,7 @@ class StagedAppendSpec extends SparkSpecBase {
     } finally spark.conf.set("spark.graft.lease.enabled", "true")
   }
 
-  test("LSH compact: kill inside the data-table rename swap and inside the compact meta commit — probes self-heal, retry completes") {
+  test("LSH compact: probes at every crash point read the pre-compaction rows") {
     val docs = lshDocs
     val a = docs.where(col("doc_id") % 4 =!= 0)
     val b = docs.where(col("doc_id") % 4 === 0)
@@ -362,19 +369,21 @@ class StagedAppendSpec extends SparkSpecBase {
     Dedup.appendLshIndex(b, "doc_id", "text", "graft_tc_lsh", "AB")
     val pre = probe("AB")
     for (point <- Seq(
-        "lsh.compact.buckets.staged",
-        "lsh.compact.buckets.aside",   // worst window: live table renamed away
-        "lsh.compact.buckets.renamed",
-        "lsh.compact.commit.aside")) { // meta commit swap's worst window
+        "lsh.compact.commit.staged",    // rewritten epoch complete, live meta untouched
+        "lsh.compact.commit.aside",     // worst window: live meta renamed away
+        "lsh.compact.commit.renamed")) { // new meta in, superseded epochs not yet swept
+      // a probe racing the writer AT the crash point, then the writer dies there
+      var mid: Option[Set[Seq[Any]]] = None
+      Faults.actAt = point
+      Faults.action = () => mid = Some(probe("AB"))
       Faults.failAt = point
-      intercept[RuntimeException] { Dedup.compactLshIndex(spark, "graft_tc_lsh") }
-      Faults.failAt = null
-      // probes SELF-HEAL (committedLsh/readLshMeta restore the live name
-      // from whichever complete copy survived) and see identical rows
+      try intercept[RuntimeException] { Dedup.compactLshIndex(spark, "graft_tc_lsh") }
+      finally { Faults.failAt = null; Faults.actAt = null; Faults.action = null }
+      assert(mid === Some(pre), s"$point: a probe at the crash point != pre")
       assert(probe("AB") === pre, s"$point: probe after torn compact != pre")
-      // retrying the compaction heals first, then completes
+      // the retry completes the compaction on whatever the tear left
       Dedup.compactLshIndex(spark, "graft_tc_lsh")
-      assert(probe("AB") === pre, s"$point: probe after healed compact != pre")
+      assert(probe("AB") === pre, s"$point: probe after the retried compact != pre")
       Dedup.assertLshIndexConsistent(spark, "graft_tc_lsh", strict = true)
     }
     dropAll("graft_tc_lsh")
@@ -406,8 +415,9 @@ class StagedAppendSpec extends SparkSpecBase {
     Dedup.compactLshIndex(spark, "graft_dx_lsh")
     val rep2 = byTable(Dedup.describeLshIndex(spark, "graft_dx_lsh"))
     assert(rep2.values.forall(_.getLong(2) === 0L), "compaction left orphan rows")
-    assert(rep2("graft_dx_lsh_buckets").getLong(5) === 2L,
-      s"compaction should leave one file per bucket (was $filesBefore)")
+    for (t <- Seq("graft_dx_lsh_buckets", "graft_dx_lsh_docs"))
+      assert(rep2(t).getLong(5) === 2L,
+        s"$t: compaction should leave one file per bucket (buckets had $filesBefore)")
     dropAll("graft_dx_lsh")
     // IVF: same story over the inverted lists
     val all = vecs(60, 8, seed = 47)
