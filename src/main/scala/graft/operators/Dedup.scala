@@ -746,10 +746,10 @@ object Dedup {
       textCol: String,
       table: String,
       newCorpusFp: String = ""): Unit =
-    LshStore.append(batch, table, newCorpusFp) { m =>
+    LshStore.append(batch, table, newCorpusFp) { s =>
       // shingled by the duplicate check, which overlaps ALLOCATE
-      lazy val base = shingleBaseBanded(batch, idCol, textCol, m.shingleN,
-        m.numHashes, m.bands)
+      lazy val base = shingleBaseBanded(batch, idCol, textCol, s.m.shingleN,
+        s.m.numHashes, s.m.bands)
       IndexStore.Batch(() => base.select(col("id")), () => lshRows(base))
     }
 
@@ -854,19 +854,20 @@ object Dedup {
       * (bands × docs rows) is the invariant the index-wide audit proves,
       * checked on exactly the rows about to become visible. */
     override def stagedCheck(spark: org.apache.spark.sql.SparkSession, table: String,
-        m: LshMeta, ep: Long): Unit = {
+        s: IndexStore.Stored[LshMeta], ep: Long): Unit = {
       val (sbRows, sdRows) = Par.both(
-        IndexStore.rows(spark, table, "buckets", Seq(ep)).count(),
-        IndexStore.rows(spark, table, "docs", Seq(ep)).count())
-      require(sbRows == m.bands.toLong * sdRows,
+        rowsAt(spark, table, s, "buckets", Seq(ep)).count(),
+        rowsAt(spark, table, s, "docs", Seq(ep)).count())
+      require(sbRows == s.m.bands.toLong * sdRows,
         s"appendLshIndex: staged batch is incomplete ($sbRows band rows != " +
-          s"${m.bands} bands x $sdRows doc rows) — NOT committed; probes are " +
+          s"${s.m.bands} bands x $sdRows doc rows) — NOT committed; probes are " +
           "unaffected, retry the append")
     }
 
-    def audit(spark: org.apache.spark.sql.SparkSession, table: String, m: LshMeta,
-        strict: Boolean): Unit = {
-      def committed(sfx: String) = IndexStore.rows(spark, table, sfx, m.eps)
+    def audit(spark: org.apache.spark.sql.SparkSession, table: String,
+        s: IndexStore.Stored[LshMeta], strict: Boolean): Unit = {
+      val m = s.m
+      def committed(sfx: String) = rows(spark, table, s, sfx)
       if (!strict) {
         // the two whole-table counts touch independent tables — overlapped
         val (bRows, dRows) = Par.both(committed("buckets").count(), committed("docs").count())
@@ -1108,11 +1109,11 @@ object Dedup {
     // and the probe would return a silently near-empty report. The corpus
     // fingerprint catches the OTHER silent-wrong case: same hash family,
     // same table name, different corpus subset behind it.
-    val m = LshStore.probeMeta(spark, table, corpusFp, Some((shingleN, numHashes, bands)))
+    val s = LshStore.probeMeta(spark, table, corpusFp, Some((shingleN, numHashes, bands)))
     val iBase = shingleBase(incoming, idCol, textCol, shingleN)
     verifiedPairs(bandRows(iBase, numHashes, bands), iBase,
-      IndexStore.rows(spark, table, "buckets", m.eps),
-      IndexStore.rows(spark, table, "docs", m.eps), threshold)
+      LshStore.rows(spark, table, s, "buckets"), LshStore.rows(spark, table, s, "docs"),
+      threshold)
   }
 
   /** WARM-START connected components for a GROWING pair graph — the

@@ -575,14 +575,6 @@ object Similarity {
       .toDF("c", "d", "cv")
   }
 
-  /** Collect a model-sized table (`_cents`, `_books`) — a tiny
-    * single-bucket scan whose cost is pure job latency, so callers overlap
-    * it with the other model collect or the batch quantization
-    * ([[Par.both]]). */
-  private def modelRows(spark: org.apache.spark.sql.SparkSession, table: String,
-      sfx: String): Array[Row] =
-    IndexStore.model(spark, table, sfx).collect()
-
   /** The coarse centroids from collected `_cents` rows (c, d, cv). */
   private def centsOf(rows: Array[Row], nlist: Int, dims: Int): Array[Array[Long]] = {
     val cents = Array.fill(nlist)(new Array[Long](dims))
@@ -633,12 +625,12 @@ object Similarity {
       k: Int,
       nprobe: Int = 2,
       corpusFp: String = ""): DataFrame = {
-    val meta = IvfStore.probeMeta(spark, table, corpusFp)
-    val cents = centsOf(modelRows(spark, table, "cents"), meta.nlist, meta.dims)
+    val s = IvfStore.probeMeta(spark, table, corpusFp)
+    val cents = centsOf(IvfStore.rows(spark, table, s, "cents").collect(), s.m.nlist, s.m.dims)
     // stored-index probe: query batches are small by design — FORCE the
     // broadcast (see broadcastableQueries on why the gate lives elsewhere)
-    ivfRank(IndexStore.rows(spark, table, "assign", meta.eps),
-      queries, idCol, vecCol, meta.dims, k,
+    ivfRank(IvfStore.rows(spark, table, s, "assign"),
+      queries, idCol, vecCol, s.m.dims, k,
       probeUdf(cents, nprobe), broadcastQueries = true)
   }
 
@@ -661,9 +653,12 @@ object Similarity {
       vecCol: String,
       table: String,
       newCorpusFp: String = ""): Unit =
-    IvfStore.append(batch, table, newCorpusFp) { meta =>
+    IvfStore.append(batch, table, newCorpusFp) { s =>
+      val meta = s.m
+      // the model collect is pure job latency: overlapped with the quantization
       val (centsRows, (qdf, bdims)) = Par.both(
-        modelRows(batch.sparkSession, table, "cents"), quantizedBase(batch, idCol, vecCol))
+        IvfStore.rows(batch.sparkSession, table, s, "cents").collect(),
+        quantizedBase(batch, idCol, vecCol))
       require(bdims == meta.dims || bdims == 0,
         s"appendIvfIndex: batch dimension $bdims != index '$table' dimension ${meta.dims}")
       val cents = centsOf(centsRows, meta.nlist, meta.dims)
@@ -760,14 +755,15 @@ object Similarity {
       k: Int,
       nprobe: Int = 2,
       corpusFp: String = ""): DataFrame = {
-    val meta = PqStore.probeMeta(spark, table, corpusFp)
-    val rows = pqModelRows(spark, table)
+    val s = PqStore.probeMeta(spark, table, corpusFp)
+    val meta = s.m
+    val rows = pqModelRows(spark, table, s)
     val (dims, nlist, m, codes) = (meta.dims, meta.nlist, meta.m, meta.codes)
     val sub = dims / m
     val (cents, bksF) = buildPqModels(rows, meta)
     val quant = graft.functions.Vectors.fixedPointQuant(1024L)
     val probeF = probeUdf(cents, nprobe)
-    val encoded = IndexStore.rows(spark, table, "assign", meta.eps)
+    val encoded = PqStore.rows(spark, table, s, "assign")
     val qside = queries
       .where(col(vecCol).isNotNull && size(col(vecCol)) === dims)
       .select(col(idCol).cast("long").as("query_id"), quant(col(vecCol)).as("qq"))
@@ -821,8 +817,9 @@ object Similarity {
       vecCol: String,
       table: String,
       newCorpusFp: String = ""): Unit =
-    PqStore.append(batch, table, newCorpusFp) { meta =>
-      val (rows, (qdf, bdims, bN)) = Par.both(pqModelRows(batch.sparkSession, table),
+    PqStore.append(batch, table, newCorpusFp) { s =>
+      val meta = s.m
+      val (rows, (qdf, bdims, bN)) = Par.both(pqModelRows(batch.sparkSession, table, s),
         quantizedBaseCounted(batch, idCol, vecCol))
       require(bdims == meta.dims || bdims == 0,
         s"appendPqIndex: batch dimension $bdims != index '$table' dimension ${meta.dims}")
@@ -833,10 +830,12 @@ object Similarity {
     }
 
   /** The `_cents` and `_books` rows of a stored PQ index, collected
-    * overlapped. */
-  private def pqModelRows(spark: org.apache.spark.sql.SparkSession,
-      table: String): (Array[Row], Array[Row]) =
-    Par.both(modelRows(spark, table, "cents"), modelRows(spark, table, "books"))
+    * overlapped: each is a tiny single-bucket scan whose cost is pure job
+    * latency. */
+  private def pqModelRows(spark: org.apache.spark.sql.SparkSession, table: String,
+      s: IndexStore.Stored[PqMeta]): (Array[Row], Array[Row]) =
+    Par.both(PqStore.rows(spark, table, s, "cents").collect(),
+      PqStore.rows(spark, table, s, "books").collect())
 
   /** Assemble the driver-side PQ model arrays from the collected rows. */
   private def buildPqModels(
@@ -910,11 +909,8 @@ object Similarity {
   /** The IVF/PQ audit over the committed `_assign` lists (see
     * [[assertIvfIndexConsistent]] / [[assertPqIndexConsistent]]); `pq`
     * carries (m, codes, n_rows) for the PQ-only invariants. */
-  private def auditLists(spark: org.apache.spark.sql.SparkSession, table: String,
-      title: String, nlist: Int, eps: Seq[Long], strict: Boolean,
-      pq: Option[(Int, Int, Long)]): Unit = {
-    // audit what probes SEE: uncommitted epochs are invisible by design
-    val assign = IndexStore.rows(spark, table, "assign", eps)
+  private def auditLists(table: String, title: String, nlist: Int, assign: DataFrame,
+      strict: Boolean, pq: Option[(Int, Int, Long)]): Unit = {
     val badRoute = col("c") < 0 || col("c") >= nlist
     def corrupt(what: String) =
       s"${title.toUpperCase} index '$table' is corrupt: $what — republish via " +
@@ -979,9 +975,10 @@ object Similarity {
       Encoders.product[IvfMeta]) {
     def params(m: IvfMeta): Product = (m.nlist, m.trainRows, m.rounds, m.buckets)
     val paramNames = "(nlist, train_rows, rounds, buckets)"
-    def audit(spark: org.apache.spark.sql.SparkSession, table: String, m: IvfMeta,
-        strict: Boolean): Unit =
-      auditLists(spark, table, "Ivf", m.nlist, m.eps, strict, pq = None)
+    // audit what probes SEE: uncommitted epochs are invisible by design
+    def audit(spark: org.apache.spark.sql.SparkSession, table: String,
+        s: IndexStore.Stored[IvfMeta], strict: Boolean): Unit =
+      auditLists(table, "Ivf", s.m.nlist, rows(spark, table, s, "assign"), strict, pq = None)
   }
 
   /** The IVF+PQ family of [[graft.sources.IndexStore]]: epoch-gated
@@ -991,10 +988,10 @@ object Similarity {
       idTable = "assign", idCol = "neighbor_id")(Encoders.product[PqMeta]) {
     def params(m: PqMeta): Product = (m.nlist, m.m, m.codes, m.rounds, m.buckets)
     val paramNames = "(nlist, m, codes, rounds, buckets)"
-    def audit(spark: org.apache.spark.sql.SparkSession, table: String, m: PqMeta,
-        strict: Boolean): Unit =
-      auditLists(spark, table, "Pq", m.nlist, m.eps, strict,
-        pq = Some((m.m, m.codes, m.nRows)))
+    def audit(spark: org.apache.spark.sql.SparkSession, table: String,
+        s: IndexStore.Stored[PqMeta], strict: Boolean): Unit =
+      auditLists(table, "Pq", s.m.nlist, rows(spark, table, s, "assign"), strict,
+        pq = Some((s.m.m, s.m.codes, s.m.nRows)))
   }
 
   /** SQL-PORTABLE product quantization: the fixed-point treatment of

@@ -494,8 +494,9 @@ object SimilarityQueries extends QueryFamily {
   // ---- the COMPACTION leg: append-maintained codes-only inverted lists
   //      rewritten at the STORED bucket spec (rows, models, fingerprint
   //      unchanged; strict PQ audit post-flip) — probe-identical to
-  //      q311 (same oracle); file-count reduction + fault injection in
-  //      CompactionSpec ----
+  //      q311 (same oracle); one file per bucket after compaction in
+  //      StagedAppendSpec's describe case, probes at every compaction
+  //      crash point in StagedAppendSpec, crash sweep in CrashSweepSpec ----
   Q("q312_pq_index_compact", oracle = ivfPqAppendOracleSql) { (s, dir) =>
       val e = t(s, dir, "embeddings")
       val tbl = pqIndexTable(dir) + "_cmp"

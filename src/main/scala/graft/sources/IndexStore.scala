@@ -4,13 +4,13 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{IntNode, LongNode, TextNode}
-import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Encoder, GraftShim, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.BucketSpec
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InMemoryFileIndex,
-  InsertIntoHadoopFsRelationCommand, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation,
+  InMemoryFileIndex, InsertIntoHadoopFsRelationCommand, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.functions.{coalesce, col, countDistinct, hash, lit, pmod, sum, when}
+import org.apache.spark.sql.functions.{col, count, hash, lit, pmod, when}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType, StructType}
 
 import graft.functions.Par
@@ -30,7 +30,7 @@ trait IndexMeta[M] {
 /** ONE lifecycle for the stored indexes (LSH in [[graft.operators.Dedup]],
   * IVF and IVF+PQ in [[graft.operators.Similarity]]): publish, append,
   * compact, cross-session recover, ensure, describe, and the one reader
-  * every probe, audit and duplicate check goes through ([[IndexStore.rows]]).
+  * every probe, audit and duplicate check goes through ([[rowsAt]]).
   * A family declares its tables, its typed `_meta` case class and a few
   * hooks (audit, parameter identity, the append's `prepare`, optional staged
   * check); the order of every step, its overlaps ([[graft.functions.Par]]),
@@ -49,11 +49,12 @@ trait IndexMeta[M] {
   * `<warehouse>/t_<suffix>/` as epoch directories `ep-<n>/`, each one
   * bucketed parquet write (bucketed and sorted by the table's key). Publish
   * writes epoch 0 of every table; epoch-gated tables hold the corpus rows,
-  * bucketed `buckets` ways, every row carrying the epoch `ep` it was
-  * written under; the others are model tables written once at publish into
-  * one bucket. A reader builds one bucketed relation over the directories
-  * of the epochs it asks for — the meta, not a catalog, says which rows
-  * exist, so a surviving warehouse is self-describing after a restart.
+  * bucketed `buckets` ways; the others are model tables written once at
+  * publish into one bucket. A row's epoch is its directory, not a column.
+  * A reader builds one bucketed relation over the directories of the epochs
+  * it asks for, under the meta it decoded — the meta, not a catalog, says
+  * which rows exist, so a surviving warehouse is self-describing after a
+  * restart.
   *
   * STAGED COMMIT. Only epochs listed in `_meta.eps` are visible to probes,
   * audits and duplicate checks. An append reads the stored meta inside the
@@ -85,8 +86,8 @@ trait IndexMeta[M] {
   * epoch directory of the gated tables — the superseded epochs and the
   * orphans of torn appends. A probe at any point before the flip reads the
   * old epochs, after it the new one; rows are identical either way. A probe
-  * that listed the superseded epochs and still scans them while the sweep
-  * deletes them fails loudly on the missing files.
+  * that read the old meta and lists or scans after the sweep fails loudly:
+  * on the missing files, or naming the concurrent compaction — retry it.
   *
   * SINGLE WRITER. Maintenance (append, compact, recover) assumes one writer
   * at a time: the allocator is read-bump-write. Append and compact run
@@ -118,8 +119,8 @@ abstract class IndexStore[M <: Product with IndexMeta[M]](
 
   /** The strict audit proves the family's full invariant; the cheap one is
     * what a caller can afford outside a maintenance window. Both read only
-    * the committed rows of `m.eps`. */
-  def audit(spark: SparkSession, table: String, m: M, strict: Boolean): Unit
+    * the committed rows of `s.m.eps`. */
+  def audit(spark: SparkSession, table: String, s: Stored[M], strict: Boolean): Unit
 
   /** The stored parameters a caller must match to reuse the index. */
   def params(m: M): Product
@@ -127,7 +128,7 @@ abstract class IndexStore[M <: Product with IndexMeta[M]](
 
   /** Extra completeness check on epoch `ep`'s staged rows, run before the
     * commit's pre-commit guard read. */
-  def stagedCheck(spark: SparkSession, table: String, m: M, ep: Long): Unit = ()
+  def stagedCheck(spark: SparkSession, table: String, s: Stored[M], ep: Long): Unit = ()
 
   private val gated = tables.filter(_.epochGated)
   private def bucketsOf(t: Table, m: M) = if (t.epochGated) m.buckets else 1
@@ -169,9 +170,10 @@ abstract class IndexStore[M <: Product with IndexMeta[M]](
       faultTag: String = null): Unit =
     swapIn(spark, table, encode(s), faultTag)
 
-  /** The decoded meta file, in one read; `missing` is the failure when no
-    * meta file survives. */
-  private def readStored(spark: SparkSession, table: String,
+  /** The decoded meta file, in one read — the one read every step and
+    * probe goes through, and what [[rows]] reads under; `missing` is the
+    * failure when no meta file survives. */
+  private[graft] def readStored(spark: SparkSession, table: String,
       missing: => String = null): Stored[M] = {
     val found = readMeta(spark, table)
     require(found.nonEmpty,
@@ -182,7 +184,6 @@ abstract class IndexStore[M <: Product with IndexMeta[M]](
     decode(s"index '$table' _meta file $path", bytes)
   }
 
-  /** The stored meta — the one read every step, probe and spec goes through. */
   private[graft] def storedMeta(spark: SparkSession, table: String): M =
     readStored(spark, table).m
 
@@ -200,12 +201,12 @@ abstract class IndexStore[M <: Product with IndexMeta[M]](
       s"$entry: index '$table' was published over corpus '${m.corpusFp}' but the " +
         s"caller expects '$expected'")
 
-  /** Table `t`'s rows of `df` restamped with epoch `ep` and laid out one
-    * task per WRITER bucket (pmod(murmur3(key), n), the bucket id the
-    * writer computes), so the write leaves exactly one file per bucket —
-    * the compaction rewrite and the catalog-era migration. */
-  private def rebucket(df: DataFrame, t: Table, m: M, ep: Long): DataFrame =
-    df.withColumn("ep", lit(ep)).repartition(m.buckets, pmod(hash(col(t.key)), lit(m.buckets)))
+  /** Table `t`'s rows of `df` laid out one task per WRITER bucket
+    * (pmod(murmur3(key), n), the bucket id the writer computes), so the
+    * write leaves exactly one file per bucket — the compaction rewrite and
+    * the catalog-era migration. */
+  private def rebucket(df: DataFrame, t: Table, m: M): DataFrame =
+    df.repartition(m.buckets, pmod(hash(col(t.key)), lit(m.buckets)))
 
   /** PUBLISH: `build` returns the meta (epochs default to [0]) and one frame
     * per declared table; the meta and every table directory of an earlier
@@ -218,32 +219,32 @@ abstract class IndexStore[M <: Product with IndexMeta[M]](
     val fs = Bucketing.hadoopFs(spark)
     fs.delete(metaDir(spark, table), true)
     tables.foreach(t => fs.delete(dataDir(spark, table, t.suffix), true))
-    val stamped = tables.map { t =>
+    val written = tables.map { t =>
       val df = frames(t.suffix)
-      t -> (if (t.epochGated) Par.narrowForWrite(df.withColumn("ep", lit(0L))) else df)
+      t -> (if (t.epochGated) Par.narrowForWrite(df) else df)
     }
-    Par.all(stamped.map { case (t, df) =>
+    Par.all(written.map { case (t, df) =>
       () => land(df, epochDir(spark, table, t.suffix, 0L), t.key, bucketsOf(t, m))
     })
     writeMeta(spark, table,
-      Stored(m, layout(m), stamped.map { case (t, df) => t.suffix -> df.schema.toNullable }.toMap))
+      Stored(m, layout(m), written.map { case (t, df) => t.suffix -> df.schema.toNullable }.toMap))
   }
 
   /** APPEND under the staged-commit protocol: `prepare` readies the batch
-    * under the stored meta inside the lease, before ALLOCATE. */
+    * under the decoded stored meta inside the lease, before ALLOCATE. */
   def append(batch: DataFrame, table: String, newCorpusFp: String)(
-      prepare: M => Batch[M]): Unit = {
+      prepare: Stored[M] => Batch[M]): Unit = {
     val spark = batch.sparkSession
     val entry = s"append${title}Index"
     MaintenanceLease.withLease(spark, table) {
       val s = current(spark, table, entry)
       val m = s.m
       val ep = m.nextEp
-      val b = prepare(m)
+      val b = prepare(s)
       writeMeta(spark, table, s.copy(m = m.withEpochs(m.corpusFp, m.eps, ep + 1L)))
       // the duplicate check (for LSH it also shingles the batch) reads
       // committed rows only: orphans of a torn attempt must not block its retry
-      val dup = b.ids().join(rows(spark, table, idTable, m.eps), Seq(idCol), "left_semi")
+      val dup = b.ids().join(rows(spark, table, s, idTable), Seq(idCol), "left_semi")
         .limit(1).count()
       require(dup == 0,
         s"$entry: batch contains ids already present in index '$table' — append " +
@@ -260,11 +261,11 @@ abstract class IndexStore[M <: Product with IndexMeta[M]](
       Par.all(gated.map { t =>
         // columns by name and type of the published table
         val cols = s.schema(t.suffix).fields.map(f => col(f.name).cast(f.dataType))
-        () => land(Par.narrowForWrite(staged(t.suffix).withColumn("ep", lit(ep))).select(cols: _*),
+        () => land(Par.narrowForWrite(staged(t.suffix)).select(cols: _*),
           epochDir(spark, table, t.suffix, ep), t.key, m.buckets)
       })
       Faults.point(s"$family.append.staged")
-      stagedCheck(spark, table, m, ep)
+      stagedCheck(spark, table, s, ep)
       // PRE-COMMIT GUARD: a racer that committed first left our epoch in eps
       // or bumped next_ep past ours — leave the winner's commit standing
       val mc = storedMeta(spark, table)
@@ -289,7 +290,7 @@ abstract class IndexStore[M <: Product with IndexMeta[M]](
       val ep = m.nextEp
       writeMeta(spark, table, s.copy(m = m.withEpochs(m.corpusFp, m.eps, ep + 1L)))
       Par.all(gated.map { t =>
-        () => land(rebucket(rows(spark, table, t.suffix, m.eps), t, m, ep),
+        () => land(rebucket(rows(spark, table, s, t.suffix), t, m),
           epochDir(spark, table, t.suffix, ep), t.key, m.buckets)
       })
       val mc = storedMeta(spark, table)
@@ -297,8 +298,8 @@ abstract class IndexStore[M <: Product with IndexMeta[M]](
         s"$entry: lost a maintenance race on '$table' (next_ep=${mc.nextEp}, " +
           s"eps=${mc.eps.mkString(",")}, ours=$ep) — NOT committed; index " +
           "maintenance is single-writer")
-      val done = m.withEpochs(m.corpusFp, Seq(ep), ep + 1L)
-      writeMeta(spark, table, s.copy(m = done), faultTag = s"$family.compact.commit")
+      val done = s.copy(m = m.withEpochs(m.corpusFp, Seq(ep), ep + 1L))
+      writeMeta(spark, table, done, faultTag = s"$family.compact.commit")
       val fs = Bucketing.hadoopFs(spark)
       gated.foreach(t => epochDirs(spark, table, t.suffix).foreach {
         case (e, dir) => if (e != ep) fs.delete(dir, true)
@@ -326,9 +327,9 @@ abstract class IndexStore[M <: Product with IndexMeta[M]](
     require(stored.layout == layout(stored.m),
       s"$entry: '$table' _meta declares layout '${stored.layout}' but this family expects " +
         s"'${layout(stored.m)}' — wrong index family or table name")
-    val m = migrateCatalogEra(spark, table, stored).m
-    tables.foreach(t => rows(spark, table, t.suffix, if (t.epochGated) m.eps else Seq(0L)))
-    audit(spark, table, m, strict = true)
+    val s = migrateCatalogEra(spark, table, stored)
+    tables.foreach(t => rows(spark, table, s, t.suffix))
+    audit(spark, table, s, strict = true)
   }
 
   /** MIGRATION of the table form earlier warehouses hold (`part-*` parquet
@@ -357,9 +358,10 @@ abstract class IndexStore[M <: Product with IndexMeta[M]](
   }
 
   /** MIGRATION of a catalog-era index — its meta has no `schema`, each
-    * table's rows are `part-*` files directly under `<warehouse>/t_<suffix>/`:
-    * a compaction-style rewrite of the committed (`ep` in `eps`) rows of
-    * every gated table into fresh epoch `next_ep`, the model tables into
+    * table's rows are `part-*` files directly under `<warehouse>/t_<suffix>/`,
+    * the gated tables' rows stamped with an `ep` column: a compaction-style
+    * rewrite of the committed (`ep` in `eps`) rows of every gated table,
+    * without that column, into fresh epoch `next_ep`, the model tables into
     * epoch 0, then the meta flip (with the schemas), then the parquet
     * leftovers are removed. A crash before the flip is retried whole; after
     * it, only the leftovers are removed. */
@@ -376,7 +378,8 @@ abstract class IndexStore[M <: Product with IndexMeta[M]](
           s"recover${title}Index: index '$table' predates epoch directories and " +
             s"'${table}_${t.suffix}' holds no parquet files to migrate — republish it")
         val df = spark.read.parquet(parts.map(_.toString): _*)
-        t -> (if (t.epochGated) rebucket(df.where(col("ep").isin(m.eps: _*)), t, m, ep) else df)
+        t -> (if (t.epochGated) rebucket(df.where(col("ep").isin(m.eps: _*)).drop("ep"), t, m)
+          else df)
       }
       Par.all(frames.map { case (t, df) =>
         () => land(df, epochDir(spark, table, t.suffix, if (t.epochGated) ep else 0L), t.key,
@@ -411,48 +414,94 @@ abstract class IndexStore[M <: Product with IndexMeta[M]](
     }
   }
 
-  /** The meta a probe runs under, after its fingerprint (and, when given,
-    * parameter) check. */
+  /** The decoded meta a probe runs under, after its fingerprint (and, when
+    * given, parameter) check. */
   def probeMeta(spark: SparkSession, table: String, corpusFp: String,
-      asked: Option[Product] = None): M = {
+      asked: Option[Product] = None): Stored[M] = {
     val entry = s"probe${title}Index"
-    val m = storedMeta(spark, table)
-    asked.foreach(a => require(params(m) == a,
-      s"$entry: index '$table' was published with $paramNames = ${params(m)} but " +
+    val s = readStored(spark, table)
+    asked.foreach(a => require(params(s.m) == a,
+      s"$entry: index '$table' was published with $paramNames = ${params(s.m)} but " +
         s"the caller requested $a"))
-    checkCorpus(entry, table, m, corpusFp)
-    m
+    checkCorpus(entry, table, s.m, corpusFp)
+    s
   }
 
   def assertConsistent(spark: SparkSession, table: String, strict: Boolean): Unit =
-    audit(spark, table, storedMeta(spark, table), strict)
+    audit(spark, table, readStored(spark, table), strict)
+
+  /** The committed rows of data table `suffix` under the decoded meta `s`
+    * (a model table's one epoch, 0). */
+  def rows(spark: SparkSession, table: String, s: Stored[M], suffix: String): DataFrame =
+    rowsAt(spark, table, s, suffix, if (declared(suffix).epochGated) s.m.eps else Seq(0L))
+
+  /** THE READER: the rows of data table `suffix` in epochs `eps` under the
+    * decoded meta `s` — one bucketed relation over those epoch directories,
+    * with the table's declared key, its bucket count and the stored schema,
+    * so a probe joining on the bucket key plans no exchange on this side.
+    * Its files are listed on the driver ([[epochFiles]]), so building it
+    * starts no Spark job however many epochs it spans. Every epoch asked
+    * for must have its directory; a missing one fails loudly, naming a
+    * concurrent compaction when the live meta no longer commits it. */
+  private[graft] def rowsAt(spark: SparkSession, table: String, s: Stored[M], suffix: String,
+      eps: Seq[Long]): DataFrame = {
+    val dirs = epochDirs(spark, table, suffix)
+    val listed = eps.flatMap(e => epochFiles(spark, dirs, e).map(e -> _)).toMap
+    val lost = eps.filterNot(listed.contains)
+    require(lost.isEmpty,
+      s"index '$table': epoch(s) ${lost.mkString(",")} of '${table}_$suffix' " +
+        (if (lost.exists(readStored(spark, table).m.eps.contains))
+          "are committed but have no directory — index data lost; republish"
+        else "are no longer committed — the index was compacted while this read was " +
+          "planned; retry it"))
+    relation(spark, table, s, declared(suffix), eps.map(listed))
+  }
+
+  private def declared(suffix: String): Table = tables.find(_.suffix == suffix).getOrElse(
+    throw new IllegalArgumentException(s"the $family index declares no table '$suffix'"))
+
+  /** One bucketed relation over the listed epoch directories of table `t`. */
+  private def relation(spark: SparkSession, table: String, s: Stored[M], t: Table,
+      dirs: Seq[(Path, Array[FileStatus])]): DataFrame = {
+    val schema = s.schema.getOrElse(t.suffix, throw new IllegalStateException(
+      s"index '$table' has no stored schema for '${t.suffix}' — an index written before " +
+        s"epoch directories is migrated once by recover${title}Index"))
+    val files = dirs.toMap
+    // the listing is handed to the file index: it lists nothing itself
+    val listed = new FileStatusCache {
+      override def getLeafFiles(dir: Path): Option[Array[FileStatus]] = files.get(dir)
+      def putLeafFiles(dir: Path, leaves: Array[FileStatus]): Unit = ()
+      def invalidateAll(): Unit = ()
+    }
+    GraftShim.ofRows(spark, LogicalRelation(HadoopFsRelation(
+      new InMemoryFileIndex(spark, dirs.map(_._1), Map.empty, Some(schema), listed),
+      new StructType(), schema, Some(bucketSpec(t.key, bucketsOf(t, s.m))),
+      new ParquetFileFormat, Map.empty)(spark)))
+  }
 
   /** MAINTENANCE REPORT: one row per gated table (`t_<suffix>`) with
-    * committed vs ORPHAN row counts (epochs staged by a crashed append —
-    * invisible to probes, swept by compaction), the orphan epoch count, the
-    * committed epoch count and the data-file count over every epoch
-    * directory (each append adds a file-set per bucket; a count far above
-    * `buckets` says "compact me"). Building it lists directories and reads
-    * the meta — no Spark job; the row counts are one aggregation per table
-    * over the `ep` column. */
+    * committed vs ORPHAN row counts (epoch directories staged by a crashed
+    * append — invisible to probes, swept by compaction), the orphan epoch
+    * count, the committed epoch count and the data-file count over every
+    * epoch directory (each append adds a file-set per bucket; a count far
+    * above `buckets` says "compact me"). Building it lists directories and
+    * reads the meta — no Spark job; the row counts are one aggregation per
+    * table over its committed and its orphan epoch directories. */
   def describe(spark: SparkSession, table: String): DataFrame = {
-    val eps = storedMeta(spark, table).eps
-    val committed = col("ep").isin(eps: _*)
+    val s = readStored(spark, table)
     gated.map { t =>
       val dirs = epochDirs(spark, table, t.suffix)
-      val files = dirs.values.iterator.map(d => Bucketing.hadoopFs(spark).listStatus(d)
-        .count(f => f.isFile && f.getPath.getName.startsWith("part-"))).sum
-      rows(spark, table, t.suffix, dirs.keys.toSeq.sorted).agg(
-          sum(when(committed, 1L).otherwise(0L)).as("__rc"),
-          sum(when(!committed, 1L).otherwise(0L)).as("__ro"),
-          countDistinct(when(!committed, col("ep"))).as("__oe"))
-        .select(
+      val listed = dirs.keys.flatMap(e => epochFiles(spark, dirs, e).map(e -> _)).toMap
+      val (committed, orphan) = listed.keys.toSeq.sorted.partition(s.m.eps.contains)
+      def tagged(eps: Seq[Long], c: Boolean) =
+        relation(spark, table, s, t, eps.map(listed)).select(lit(c).as("__c"))
+      tagged(committed, c = true).unionByName(tagged(orphan, c = false)).agg(
           lit(s"${table}_${t.suffix}").as("table"),
-          coalesce(col("__rc"), lit(0L)).as("rows_committed"),
-          coalesce(col("__ro"), lit(0L)).as("rows_orphan"),
-          col("__oe").as("orphan_epochs"),
-          lit(eps.size.toLong).as("committed_epochs"),
-          lit(files.toLong).as("files"))
+          count(when(col("__c"), 1)).as("rows_committed"),
+          count(when(!col("__c"), 1)).as("rows_orphan"),
+          lit(orphan.size.toLong).as("orphan_epochs"),
+          lit(s.m.eps.size.toLong).as("committed_epochs"),
+          lit(listed.values.map(_._2.length.toLong).sum).as("files"))
     }.reduce(_ unionByName _).orderBy(col("table"))
   }
 }
@@ -465,49 +514,17 @@ object IndexStore {
 
   /** A batch prepared for [[IndexStore.append]]: `ids` is the one-column
     * frame the duplicate check joins on the family's id column, `rows` one
-    * frame per gated table (without `ep`), and `commit` the family's own
-    * meta update at COMMIT. `ids` runs after ALLOCATE, `rows` after it. */
+    * frame per gated table, and `commit` the family's own meta update at
+    * COMMIT. `ids` runs after ALLOCATE, `rows` after it. */
   final case class Batch[M](
       ids: () => DataFrame,
       rows: () => Map[String, DataFrame],
       commit: M => M = (m: M) => m)
 
-  /** THE READER: the rows of index `table`'s data table `suffix` in epochs
-    * `eps` — one bucketed relation over those epoch directories, with the
-    * bucket spec of the stored layout and the stored schema, so a probe
-    * joining on the bucket key plans no exchange on this side. Every epoch
-    * asked for must have its directory; building the relation reads the
-    * meta and lists the directories (no Spark job below Spark's parallel
-    * listing threshold of directories). */
-  def rows(spark: SparkSession, table: String, suffix: String, eps: Seq[Long]): DataFrame = {
-    val (path, bytes) = readMeta(spark, table).getOrElse(throw new IllegalArgumentException(
-      s"index '$table' has no _meta file (${metaFile(spark, table)}) — publish it"))
-    val what = s"index '$table' _meta file $path"
-    val o = parse(what, bytes)
-    val schema = schemaOf(what, o).getOrElse(suffix, throw new IllegalStateException(
-      s"$what has no schema for '$suffix' — an index written before epoch directories " +
-        "is migrated once by its family's recover"))
-    val (key, buckets) = Option(o.get("layout")).map(_.asText).getOrElse("").split(",")
-      .map(_.split(":")).collectFirst { case Array(`suffix`, k, n) => (k, n.toInt) }
-      .getOrElse(throw new IllegalStateException(s"$what: layout names no table '$suffix'"))
-    val dirs = epochDirs(spark, table, suffix)
-    val lost = eps.filterNot(dirs.contains)
-    require(lost.isEmpty,
-      s"index '$table': committed epoch(s) ${lost.mkString(",")} of '${table}_$suffix' have " +
-        "no directory — index data lost; republish")
-    GraftShim.ofRows(spark, LogicalRelation(HadoopFsRelation(
-      new InMemoryFileIndex(spark, eps.map(dirs), Map.empty, Some(schema)), new StructType(),
-      schema, Some(bucketSpec(key, buckets)), new ParquetFileFormat, Map.empty)(spark)))
-  }
-
-  /** A model table (written once, at publish, as epoch 0). */
-  def model(spark: SparkSession, table: String, suffix: String): DataFrame =
-    rows(spark, table, suffix, Seq(0L))
-
   /** The decoded meta file: the typed meta, the stored layout string and
     * each table's schema (empty for an index written before epoch
     * directories, whose meta has no `schema` key). */
-  private final case class Stored[M](m: M, layout: String, schema: Map[String, StructType])
+  private[graft] final case class Stored[M](m: M, layout: String, schema: Map[String, StructType])
 
   private def bucketSpec(key: String, buckets: Int) = BucketSpec(buckets, Seq(key), Seq(key))
 
@@ -540,6 +557,18 @@ object IndexStore {
       epochOf(s.getPath.getName).map(_ -> s.getPath)
     }.toMap
 
+  /** Epoch `e`'s directory among `dirs` with its data files, listed on the
+    * driver by one plain `listStatus` (a located listing would stat every
+    * file for its permissions); None once it is gone (a compaction swept
+    * it). The files of a torn write's `_temporary` tree are no data files. */
+  private def epochFiles(spark: SparkSession, dirs: Map[Long, Path],
+      e: Long): Option[(Path, Array[FileStatus])] =
+    dirs.get(e).flatMap { d =>
+      try Some(d -> Bucketing.hadoopFs(spark).listStatus(d)
+        .filter(f => f.isFile && f.getPath.getName.startsWith("part-")))
+      catch { case _: java.io.FileNotFoundException => None }
+    }
+
   private val Json = new ObjectMapper()
 
   private def parse(what: String, bytes: Array[Byte]): JsonNode = {
@@ -570,7 +599,6 @@ object IndexStore {
 
   private[graft] def metaFile(spark: SparkSession, table: String): Path =
     new Path(metaDir(spark, table), "meta.json")
-
 
   private def sibling(live: Path, ext: String) = new Path(live.getParent, live.getName + ext)
 

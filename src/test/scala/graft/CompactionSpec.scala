@@ -106,7 +106,6 @@ class CompactionSpec extends SparkSpecBase {
 
   test("compactLshIndex strict audit catches a count-neutral id swap") {
     import graft.operators.Dedup
-    import graft.sources.IndexStore
     val tbl = "graft_strictlsh"
     val docs = (0L until 20L).map(i =>
       (i, s"tok${i % 5} alpha beta gamma delta tok${i % 3} epsilon zeta")).toDF("doc_id", "text")
@@ -118,9 +117,9 @@ class CompactionSpec extends SparkSpecBase {
     // `bands` rows) and distinct-id cardinality ALL survive; only the
     // mutual id-subset check can see it
     val ep = Dedup.LshStore.storedMeta(spark, tbl).eps.head
-    val victim = IndexStore.rows(spark, tbl, "docs", Seq(ep)).select(min(col("id")))
+    val victim = indexRows(Dedup.LshStore, tbl, "docs", Seq(ep)).select(min(col("id")))
       .head().getLong(0)
-    rewriteIndexEpoch(tbl, "buckets", "bk", 2, ep)(
+    rewriteIndexEpoch(Dedup.LshStore, tbl, "buckets", "bk", 2, ep)(
       _.withColumn("id", when(col("id") === victim, lit(999999L)).otherwise(col("id"))))
     // the count relation still balances — the CHEAP audit passes...
     Dedup.assertLshIndexConsistent(spark, tbl)
@@ -151,7 +150,7 @@ class CompactionSpec extends SparkSpecBase {
     Similarity.compactIvfIndex(spark, tbl) // healthy: strict audit passes
     // duplicate ONE inverted-list row: routing stays legal, counts grow by
     // one — only the distinct-id invariant can see it
-    rewriteIndexEpoch(tbl, "assign", "c", 2,
+    rewriteIndexEpoch(Similarity.IvfStore, tbl, "assign", "c", 2,
       Similarity.IvfStore.storedMeta(spark, tbl).eps.head)(df => df.unionByName(df.limit(1)))
     Similarity.assertIvfIndexConsistent(spark, tbl) // cheap form: still fine
     val e = intercept[IllegalArgumentException] {
@@ -202,9 +201,9 @@ class CompactionSpec extends SparkSpecBase {
     // out-of-range code would silently read a wrong codebook row at ADC
     // time, and only the strict code-range invariant can see it
     val ep = Similarity.PqStore.storedMeta(spark, tbl).eps.head
-    val victim = graft.sources.IndexStore.rows(spark, tbl, "assign", Seq(ep))
+    val victim = indexRows(Similarity.PqStore, tbl, "assign", Seq(ep))
       .select(min(col("neighbor_id"))).head().getLong(0)
-    rewriteIndexEpoch(tbl, "assign", "c", 2, ep)(
+    rewriteIndexEpoch(Similarity.PqStore, tbl, "assign", "c", 2, ep)(
       _.withColumn("cd", when(col("neighbor_id") === victim,
         array(lit(99L), lit(0L))).otherwise(col("cd"))))
     Similarity.assertPqIndexConsistent(spark, tbl) // cheap form: still fine
@@ -234,9 +233,9 @@ class CompactionSpec extends SparkSpecBase {
         Row(i, Seq.fill(8)(rnd.nextFloat()))): _*), schema)
     Similarity.publishPqIndex(vecs, "vec_id", "embedding", tbl,
       nlist = 2, m = 2, codes = 4, rounds = 2, buckets = 2)
-    val victim = graft.sources.IndexStore.rows(spark, tbl, "assign", Seq(0L))
+    val victim = indexRows(Similarity.PqStore, tbl, "assign", Seq(0L))
       .select(min(col("neighbor_id"))).head().getLong(0)
-    rewriteIndexEpoch(tbl, "assign", "c", 2)(
+    rewriteIndexEpoch(Similarity.PqStore, tbl, "assign", "c", 2)(
       _.withColumn("cd", when(col("neighbor_id") === victim,
         lit(null).cast(ArrayType(LongType))).otherwise(col("cd"))))
     Similarity.assertPqIndexConsistent(spark, tbl) // cheap form: routing fine

@@ -233,8 +233,8 @@ class IndexLifecycleSpec extends SparkSpecBase {
       DataType.fromJson(metaJson(t).get("schema").get(sfx).toString).asInstanceOf[StructType]
     assert(metaJson("graft_il_spq").get("schema").fieldNames.asScala.toSeq ===
       Seq("assign", "cents", "books"))
-    assert(schemaOf("graft_il_slsh", "buckets").fieldNames.toSeq === Seq("band", "bk", "id", "ep"))
-    assert(schemaOf("graft_il_slsh", "docs").fieldNames.toSeq === Seq("id", "shs", "ep"))
+    assert(schemaOf("graft_il_slsh", "buckets").fieldNames.toSeq === Seq("band", "bk", "id"))
+    assert(schemaOf("graft_il_slsh", "docs").fieldNames.toSeq === Seq("id", "shs"))
     assert(schemaOf("graft_il_sivf", "cents").fieldNames.toSeq === Seq("c", "d", "cv"))
     Seq("graft_il_slsh", "graft_il_sivf", "graft_il_spq").foreach(dropAll)
   }
@@ -266,7 +266,7 @@ class IndexLifecycleSpec extends SparkSpecBase {
     val element = intercept[IllegalStateException](Dedup.LshStore.probeMeta(spark, t, "A"))
     assert(element.getMessage.contains("field 'eps' is not array<bigint>"), element.getMessage)
     rewrite(_ => ())
-    assert(Dedup.LshStore.probeMeta(spark, t, "A").bands > 0)
+    assert(Dedup.LshStore.probeMeta(spark, t, "A").m.bands > 0)
     dropAll(t)
   }
 
@@ -312,14 +312,64 @@ class IndexLifecycleSpec extends SparkSpecBase {
     dropAll(t)
   }
 
+  test("index reads list their epoch directories on the driver, in no Spark job") {
+    // Spark lists a file index's root paths in a job above this threshold;
+    // at 1, a relation over two epochs that listed itself would start one
+    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    val t = "graft_il_list"
+    val d = docs
+    dropAll(t)
+    Dedup.publishLshIndex(d.where(col("doc_id") % 4 =!= 0), "doc_id", "text", t,
+      buckets = 2, corpusFp = "A")
+    Dedup.appendLshIndex(d.where(col("doc_id") % 4 === 0), "doc_id", "text", t, "AB")
+    assert(Dedup.LshStore.storedMeta(spark, t).eps === Seq(0L, 1L))
+    val was = spark.conf.getOption(key)
+    spark.conf.set(key, "1")
+    try {
+      assert(census(Dedup.describeLshIndex(spark, t)) === ((0, 0)))
+      // the pinned probe-build count of the one-epoch index
+      assert(jobs(Dedup.probeLshIndex(spark, d.where(col("doc_id") < 4), "doc_id", "text", t,
+        threshold = 0.3, corpusFp = "AB")) === after("lsh")("probe-build"))
+    } finally was.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    dropAll(t)
+  }
+
+  test("a read of a swept epoch names the compaction; a lost committed one says republish") {
+    val t = "graft_il_swept"
+    val d = docs
+    dropAll(t)
+    Dedup.publishLshIndex(d.where(col("doc_id") % 4 =!= 0), "doc_id", "text", t,
+      buckets = 2, corpusFp = "A")
+    Dedup.appendLshIndex(d.where(col("doc_id") % 4 === 0), "doc_id", "text", t, "AB")
+    // a probe that decoded the meta before a compaction and builds after it
+    val old = Dedup.LshStore.readStored(spark, t)
+    Dedup.compactLshIndex(spark, t)
+    val e = intercept[IllegalArgumentException] {
+      Dedup.LshStore.rows(spark, t, old, "docs")
+    }
+    assert(e.getMessage.contains("epoch(s) 0,1 of 'graft_il_swept_docs' are no longer " +
+      "committed — the index was compacted while this read was planned; retry it"))
+    assert(Dedup.LshStore.storedMeta(spark, t).eps === Seq(2L))
+    assert(org.apache.hadoop.fs.FileUtil.fullyDelete(
+      new java.io.File(warehouse, s"${t}_docs/ep-2")))
+    val lost = intercept[IllegalArgumentException] {
+      Dedup.probeLshIndex(spark, d.where(col("doc_id") < 4), "doc_id", "text", t,
+        threshold = 0.3, corpusFp = "AB")
+    }
+    assert(lost.getMessage.contains("epoch(s) 2 of 'graft_il_swept_docs' are committed but " +
+      "have no directory — index data lost; republish"))
+    dropAll(t)
+  }
+
   /** Rewrite LSH index `t` as the catalog-era layout held it: each table's
-    * rows of `eps` (committed and orphan) as `part-*` files directly under
-    * its directory, written as a managed bucketed table whose entry is then
-    * lost, and `meta` (the file form without `schema`, or the table form)
-    * for its meta. */
+    * rows of `eps` (committed and orphan), each stamped with its epoch in
+    * an `ep` column, as `part-*` files directly under its directory, written
+    * as a managed bucketed table whose entry is then lost, and `meta` (the
+    * file form without `schema`, or the table form) for its meta. */
   private def toCatalogEra(t: String, eps: Seq[Long], tableFormMeta: Boolean): Unit = {
     for ((sfx, key) <- Seq("buckets" -> "bk", "docs" -> "id")) {
-      val df = IndexStore.rows(spark, t, sfx, eps)
+      val df = eps.map(e => indexRows(Dedup.LshStore, t, sfx, Seq(e)).withColumn("ep", lit(e)))
+        .reduce(_ unionByName _)
       val rows = df.collect()
       Bucketing.saveBucketed(spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema),
         s"${t}_$sfx", key, 2)

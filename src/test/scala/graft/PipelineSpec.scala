@@ -1176,7 +1176,7 @@ class PipelineSpec extends SparkSpecBase {
     Dedup.publishLshIndex(a.union(b), "doc_id", "text", "graft_lshspec_full", buckets = 2,
       corpusFp = "ab")
     // table-level: appended index rows == republished index rows
-    def rows(t: String) = graft.sources.IndexStore.rows(spark, t, "buckets",
+    def rows(t: String) = indexRows(Dedup.LshStore, t, "buckets",
         Dedup.LshStore.storedMeta(spark, t).eps).collect()
       .map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSet
     assert(rows("graft_lshspec_app") === rows("graft_lshspec_full"))
@@ -1227,7 +1227,7 @@ class PipelineSpec extends SparkSpecBase {
     assert(afterProbe === beforeProbe)
     // simulate the tear: band rows appended for an id with no _docs row —
     // the invariant the consistency assert exists to catch
-    rewriteIndexEpoch("graft_lshspec_torn", "buckets", "bk", 2,
+    rewriteIndexEpoch(Dedup.LshStore, "graft_lshspec_torn", "buckets", "bk", 2,
       ep = Dedup.LshStore.storedMeta(spark, "graft_lshspec_torn").eps.head) { df =>
       df.unionByName(df.limit(1).withColumn("id", lit(999L)))
     }
@@ -1249,7 +1249,7 @@ class PipelineSpec extends SparkSpecBase {
     // count-balanced tear: doc 3's band rows are rewritten onto doc 1's id —
     // total bucket rows unchanged (the cheap relation holds), but doc 1 now
     // has 2x bands rows and doc 3 has none
-    rewriteIndexEpoch("graft_lshspec_strict", "buckets", "bk", 2)(
+    rewriteIndexEpoch(Dedup.LshStore, "graft_lshspec_strict", "buckets", "bk", 2)(
       _.withColumn("id", when(col("id") === 3L, 1L).otherwise(col("id"))))
     Dedup.assertLshIndexConsistent(spark, "graft_lshspec_strict") // cheap check passes
     val e = intercept[IllegalArgumentException] {
@@ -1274,7 +1274,7 @@ class PipelineSpec extends SparkSpecBase {
     Dedup.assertLshIndexConsistent(spark, "graft_lshspec_dupdoc", strict = true) // healthy
     // duplicate doc 2's _docs row — band rows untouched, so every id still
     // has exactly `bands` band rows; only the docs-side census can see it
-    rewriteIndexEpoch("graft_lshspec_dupdoc", "docs", "id", 2)(df =>
+    rewriteIndexEpoch(Dedup.LshStore, "graft_lshspec_dupdoc", "docs", "id", 2)(df =>
       df.unionByName(df.where(col("id") === 2L)))
     val e = intercept[IllegalArgumentException] {
       Dedup.assertLshIndexConsistent(spark, "graft_lshspec_dupdoc", strict = true)

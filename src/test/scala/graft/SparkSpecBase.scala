@@ -30,12 +30,20 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
       fs.delete(new org.apache.hadoop.fs.Path(dir, (index + x).toLowerCase), true))
   }
 
+  /** The rows of stored-index table `<index>_<suffix>` in epochs `eps`,
+    * read through `store`'s reader under the index's stored meta. */
+  def indexRows[M <: Product with graft.sources.IndexMeta[M]](
+      store: graft.sources.IndexStore[M], index: String, suffix: String,
+      eps: Seq[Long]): DataFrame =
+    store.rowsAt(spark, index, store.readStored(spark, index), suffix, eps)
+
   /** Corruption fixtures for the index audits: replace epoch `ep` of
     * stored-index table `<index>_<suffix>` (bucketed by `key` into
     * `buckets`) with `edit` of its rows. */
-  def rewriteIndexEpoch(index: String, suffix: String, key: String, buckets: Int,
-      ep: Long = 0L)(edit: DataFrame => DataFrame): Unit = {
-    val df = edit(graft.sources.IndexStore.rows(spark, index, suffix, Seq(ep)))
+  def rewriteIndexEpoch[M <: Product with graft.sources.IndexMeta[M]](
+      store: graft.sources.IndexStore[M], index: String, suffix: String, key: String,
+      buckets: Int, ep: Long = 0L)(edit: DataFrame => DataFrame): Unit = {
+    val df = edit(indexRows(store, index, suffix, Seq(ep)))
     val rows = df.collect()
     graft.sources.IndexStore.land(spark.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema),
       graft.sources.IndexStore.epochDir(spark, index, suffix, ep), key, buckets)
