@@ -334,7 +334,7 @@ class IndexLifecycleSpec extends SparkSpecBase {
     dropAll(t)
   }
 
-  test("a read of a swept epoch names the compaction; a lost committed one says republish") {
+  test("a read of a swept epoch names the compaction; a lost one says republish") {
     val t = "graft_il_swept"
     val d = docs
     dropAll(t)
